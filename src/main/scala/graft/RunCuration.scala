@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.{CurationJob, DocGen}
 
 /** The curation-chain `spark-submit` entry point — the one-command
@@ -34,17 +32,8 @@ import graft.pipeline.{CurationJob, DocGen}
   */
 object RunCuration {
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
-    require(args.length % 2 == 0,
-      s"odd argument count — every --flag needs a value: ${args.mkString(" ")}")
-    args.sliding(2, 2).map {
-      case Array(k, v) if k.startsWith("--") && !v.startsWith("--") => k.drop(2) -> v
-      case Array(k, v) => sys.error(s"malformed pair '$k $v' — expected --flag value")
-    }.toMap
-  }
-
   def main(args: Array[String]): Unit = {
-    val opts = parseArgs(args)
+    val opts = Submit.parseArgs(args)
     val input = opts.getOrElse("input", sys.error("--input required"))
     val output = opts.getOrElse("output", sys.error("--output required"))
     val runId = opts.getOrElse("run-id",
@@ -89,26 +78,16 @@ object RunCuration {
       gopherQuality = gopherQuality,
       version = opts.getOrElse("version-tag", CurationJob.Version))
 
-    val builder = SparkSession.builder()
-      .appName("graft-curation")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "100000")
-      // stage handoffs are compact snappy text parquet with HEAVY per-row
-      // CPU downstream (shingling, n-gram counting): the 128 MB default
-      // split would hand a 2M-doc corpus to ~a dozen tasks and starve the
-      // session (measured: 26 of 32 cores parked in the neardup stage).
-      // Small splits keep every core fed; the scheduler amortizes the
-      // extra task overhead. Tunable at the CLI: a corpus with a
-      // different bytes-per-row/CPU shape can need a larger split
-      // without an 8x task-count tax
-      .config("spark.sql.files.maxPartitionBytes",
-        opts.getOrElse("max-partition-bytes", "16m"))
-    if (!sys.props.contains("spark.master") && !sys.env.contains("MASTER"))
-      builder.master("local[*]")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // stage handoffs are compact snappy text parquet with HEAVY per-row
+    // CPU downstream (shingling, n-gram counting): the 128 MB default
+    // split would hand a 2M-doc corpus to ~a dozen tasks and starve the
+    // session (measured: 26 of 32 cores parked in the neardup stage).
+    // Small splits keep every core fed; the scheduler amortizes the
+    // extra task overhead. Tunable at the CLI: a corpus with a
+    // different bytes-per-row/CPU shape can need a larger split
+    // without an 8x task-count tax
+    val spark = Submit.session("graft-curation",
+      "spark.sql.files.maxPartitionBytes" -> opts.getOrElse("max-partition-bytes", "16m"))
 
     val docs =
       if (input.startsWith("synth:"))
@@ -128,14 +107,10 @@ object RunCuration {
       testId = CurationJob.inputIdentity(spark, opts.getOrElse("test", "")))
     val sec = (System.nanoTime() - t0) / 1e9
 
-    val stageJson = stages.map(s =>
-      s"""{"stage":"${CurationJob.esc(s.stage)}","rows":${s.rows},""" +
-        s""""resumed":${s.resumed},"sec":${f"${s.sec}%.2f"}}""")
-      .mkString("[", ",", "]")
-    println(
-      s"""{"job":"graft-curation","runId":"${CurationJob.esc(runId)}",""" +
-        s""""input":"${CurationJob.esc(input)}","stages":$stageJson,""" +
-        s""""sec":${f"$sec%.2f"}}""")
+    println(Submit.summary(
+      "job" -> "graft-curation", "runId" -> runId, "input" -> input,
+      "stages" -> stages.map(s => s.copy(sec = Submit.seconds(s.sec))),
+      "sec" -> Submit.seconds(sec)))
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.{Checkpoint, TranscriptGen}
 import graft.schema.Turn
 
@@ -18,18 +16,8 @@ import graft.schema.Turn
   */
 object RunExtraction {
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
-    require(args.length % 2 == 0,
-      s"odd argument count — every --flag needs a value: ${args.mkString(" ")}")
-    args.sliding(2, 2).map {
-      case Array(k, v) if k.startsWith("--") && !v.startsWith("--") => k.drop(2) -> v
-      case Array(k, v) =>
-        sys.error(s"malformed pair '$k $v' — expected --flag value")
-    }.toMap
-  }
-
   def main(args: Array[String]): Unit = {
-    val opts = parseArgs(args)
+    val opts = Submit.parseArgs(args)
     val input = opts.getOrElse("input", sys.error("--input required"))
     val output = opts.getOrElse("output", sys.error("--output required"))
     val buckets = opts.getOrElse("buckets", "64").toInt
@@ -43,20 +31,7 @@ object RunExtraction {
     val ttlMs = opts.get("ttl-days")
       .map(_.toDouble * 24 * 3600 * 1000).map(_.toLong).getOrElse(Long.MaxValue)
 
-    val builder = SparkSession.builder()
-      .appName("graft-extraction")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // keep doc-level collect_list aggregations in hash mode (the 128-
-      // groups-per-partition default silently degrades to sort-based)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "100000")
-    // spark-submit supplies spark.master via system properties; fall back
-    // to local[*] only when launched as a bare JVM (tests, scripts)
-    if (!sys.props.contains("spark.master") && !sys.env.contains("MASTER"))
-      builder.master("local[*]")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Submit.session("graft-extraction")
     import spark.implicits._
 
     val turns =
@@ -73,13 +48,11 @@ object RunExtraction {
       configHash = configHash, ttlMs = ttlMs)
     val sec = (System.nanoTime() - t0) / 1e9
 
-    val rows = committed.map(_.rows).sum
-    val bytes = committed.map(_.bytes).sum
-    println(
-      s"""{"job":"graft-extraction","runId":"$runId","input":"$input",""" +
-        s""""buckets":$buckets,"resumed_buckets":$preDone,""" +
-        s""""committed_buckets":${committed.size},"rows":$rows,"bytes":$bytes,""" +
-        s""""sec":${f"$sec%.2f"}}""")
+    println(Submit.summary(
+      "job" -> "graft-extraction", "runId" -> runId, "input" -> input,
+      "buckets" -> buckets, "resumed_buckets" -> preDone,
+      "committed_buckets" -> committed.size, "rows" -> committed.map(_.rows).sum,
+      "bytes" -> committed.map(_.bytes).sum, "sec" -> Submit.seconds(sec)))
     spark.stop()
   }
 }

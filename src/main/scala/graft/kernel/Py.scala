@@ -26,8 +26,6 @@ object Py {
 
   def compile(regex: String): Pattern = Pattern.compile(regex, UFLAGS)
   def compileI(regex: String): Pattern = Pattern.compile(regex, IFLAGS)
-  def compileIM(regex: String): Pattern =
-    Pattern.compile(regex, IFLAGS | Pattern.MULTILINE)
 
   /** Python str.isspace() — true for Unicode space separators plus the
     * control-ish whitespace CPython recognizes (\t\n\v\f\r FS GS RS US NEL).

@@ -105,9 +105,6 @@ object Curation {
     df.where(hashBucket(keyCol, 1000) < permille)
   }
 
-  def deterministicSampleSql(keyExpr: String, permille: Int): String =
-    s"${hashBucketSql(keyExpr, 1000)} < $permille"
-
   /** Deterministic STRATIFIED sampling: per-stratum permille rates (e.g.
     * downsample the dominant language, keep the long tail whole) — the
     * curation move for rebalancing a training mix. Strata not listed keep

@@ -32,16 +32,13 @@ object TextAnalysis {
   def distinctTokenCount(text: Column): Column = size(array_distinct(tokens(text)))
 
   // Small marker-word inventories per language. Counting OCCURRENCES (not
-  // set-intersect) keeps Spark `filter` and DuckDB `list_filter` in exact
+  // set-intersect) keeps Spark and DuckDB's `list_filter` in exact
   // agreement.
   val markers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "to", "in", "is", "it", "that"),
     "pt" -> Seq("de", "que", "não", "uma", "para", "com", "por", "mais"),
     "es" -> Seq("el", "la", "los", "las", "una", "pero", "como", "más"),
     "de" -> Seq("der", "die", "das", "und", "nicht", "ein", "ist", "mit"))
-
-  def markerHits(text: Column, words: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isin(words: _*)))
 
   /** n-gram/stopword language-ID heuristic: argmax of marker hits with a
     * minimum-evidence threshold of 2, ties broken by inventory order;

@@ -37,7 +37,9 @@ object Backup {
       // captured — incremental selection compares against the chain's
       // accumulated identities, so a bucket recommitted within the same
       // millisecond as a previous backup's watermark is still picked up
-      bucketIdentities: Seq[(Int, String)] = Seq.empty)
+      bucketIdentities: Seq[BucketIdentity] = Seq.empty)
+
+  final case class BucketIdentity(k: Int, id: String)
 
   /** The change-detection key for a committed bucket. */
   private def bucketIdentity(m: Checkpoint.Manifest): String =
@@ -50,23 +52,6 @@ object Backup {
       corruptFiles: Seq[String], // md5 mismatches (restore is aborted)
       ok: Boolean)
 
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-
-  private def manifestJson(m: BackupManifest): String = {
-    val files = m.files.map(f =>
-      s"""{"relPath":"${esc(f.relPath)}","md5":"${f.md5}","bytes":${f.bytes}}""")
-      .mkString("[", ",", "]")
-    val ids = m.bucketIdentities.map { case (k, id) =>
-      s"""{"k":$k,"id":"${esc(id)}"}"""
-    }.mkString("[", ",", "]")
-    s"""{"backupId":"${esc(m.backupId)}","sourceDir":"${esc(m.sourceDir)}",""" +
-      s""""mode":"${m.mode}","createdAtEpochMs":${m.createdAtEpochMs},""" +
-      s""""watermarkEpochMs":${m.watermarkEpochMs},""" +
-      s""""buckets":${m.buckets.mkString("[", ",", "]")},""" +
-      s""""bucketIdentities":$ids,"files":$files}"""
-  }
-
   /** Read a backup's manifest. Returns None when the manifest is absent,
     * UNPARSEABLE (one corrupt/truncated backup.json must not brick
     * listBackups and with it every backup/cleanup on the shared
@@ -78,41 +63,20 @@ object Backup {
     */
   def readBackupManifest(backupDir: String, backupId: String): Option[BackupManifest] = {
     val path = s"$backupDir/$backupId/backup.json"
-    val s = Fs.readString(path).getOrElse(return None)
-    import org.json4s._
-    val j =
-      try org.json4s.jackson.JsonMethods.parse(s)
+    val m =
+      try Fs.readJson[BackupManifest](path)
       catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[backup] skipping unparseable manifest $path: $e")
           return None
       }
-    val declared = (j \ "backupId") match { case JString(x) => x; case _ => "" }
-    if (declared != backupId) {
-      System.err.println(s"[backup] skipping $path: declared backupId " +
-        s"'$declared' does not match directory name '$backupId'")
-      return None
+    m.filter { b =>
+      val matches = b.backupId == backupId
+      if (!matches)
+        System.err.println(s"[backup] skipping $path: declared backupId " +
+          s"'${b.backupId}' does not match directory name '$backupId'")
+      matches
     }
-    def str(v: JValue): String = v match { case JString(x) => x; case _ => "" }
-    def lng(v: JValue): Long = v match {
-      case JInt(i) => i.toLong; case JLong(i) => i; case _ => 0L
-    }
-    val files = (j \ "files") match {
-      case JArray(xs) => xs.map(f =>
-        BackupFile(str(f \ "relPath"), str(f \ "md5"), lng(f \ "bytes")))
-      case _ => Nil
-    }
-    val buckets = (j \ "buckets") match {
-      case JArray(xs) => xs.map(lng(_).toInt)
-      case _ => Nil
-    }
-    val ids = (j \ "bucketIdentities") match {
-      case JArray(xs) => xs.map(x => (lng(x \ "k").toInt, str(x \ "id")))
-      case _ => Nil
-    }
-    Some(BackupManifest(str(j \ "backupId"), str(j \ "sourceDir"),
-      str(j \ "mode"), lng(j \ "createdAtEpochMs"), lng(j \ "watermarkEpochMs"),
-      buckets, files, ids))
   }
 
   def listBackups(backupDir: String): Seq[BackupManifest] =
@@ -131,7 +95,8 @@ object Backup {
   private def backedUpIdentities(
       backupDir: String, sourceDir: String): Map[Int, String] =
     listBackups(backupDir).filter(_.sourceDir == sourceDir)
-      .foldLeft(Map.empty[Int, String])((acc, m) => acc ++ m.bucketIdentities)
+      .foldLeft(Map.empty[Int, String])((acc, m) =>
+        acc ++ m.bucketIdentities.map(b => b.k -> b.id))
 
   /** Create a backup of the checkpoint store at `outDir`.
     *
@@ -179,8 +144,7 @@ object Backup {
     selected.foreach { case (k, _) =>
       // each bucket = its manifest file + its data directory
       val parts = Seq(
-        s"$outDir/manifests/part-$k.json",
-        s"$outDir/data/part_id=$k")
+        Checkpoint.manifestPath(outDir, k), Checkpoint.bucketDir(outDir, k))
       parts.filter(Fs.exists).foreach { p =>
         Fs.listFilesRecursive(p).foreach { f =>
           val rel = Fs.relativize(outDir, f)
@@ -200,9 +164,9 @@ object Backup {
     val manifest = BackupManifest(backupId, outDir,
       if (incremental) "incremental" else "full",
       nowMs, newWm, selected.map(_._1), files.toSeq,
-      selected.map { case (k, m) => (k, bucketIdentity(m)) })
+      selected.map { case (k, m) => BucketIdentity(k, bucketIdentity(m)) })
     if (selected.isEmpty) { Fs.deleteTree(stage); return manifest }
-    Fs.writeAtomic(s"$stage/backup.json", manifestJson(manifest))
+    Fs.writeJson(s"$stage/backup.json", manifest)
     val finalDir = s"$backupDir/$backupId"
     Fs.deleteTree(finalDir)
     Fs.renameOverwrite(stage, finalDir)
@@ -231,8 +195,8 @@ object Backup {
     // manifest (layering an incremental over a full must not merge two
     // generations' part files into one directory)
     m.buckets.foreach { k =>
-      Fs.deleteTree(s"$targetDir/data/part_id=$k")
-      Fs.deleteIfExists(s"$targetDir/manifests/part-$k.json")
+      Fs.deleteTree(Checkpoint.bucketDir(targetDir, k))
+      Fs.deleteIfExists(Checkpoint.manifestPath(targetDir, k))
     }
     // DATA files first, checkpoint manifests LAST — the store's own
     // commit discipline (manifest present ⇒ data durable). A crash

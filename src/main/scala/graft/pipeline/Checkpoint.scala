@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.schema.{ExtractedTurn, Turn}
+import graft.schema.Turn
 
 /** Checkpointed, resumable extraction — the Iceberg-snapshot stand-in
   * (SURVEY.md §7.0: no Iceberg jars in the sandbox).
@@ -17,9 +17,12 @@ import graft.schema.{ExtractedTurn, Turn}
   *
   * A bucket is `pmod(hash(conv_id), numBuckets)` so every conversation
   * lands wholly in one bucket (resume never splits a conversation).
-  * Manifests are committed via tmp-file + atomic rename AFTER the bucket
-  * group's data is fully written; a crash mid-group leaves no manifest and
-  * the group is recomputed on resume. Completed buckets are skipped by a
+  * Each bucket group's turns run through [[ExtractionJob.extract]] — the
+  * one extraction path, salted spread included — and the output's
+  * `part_id` is derived again from `conv_id`. Manifests are committed via
+  * tmp-file + atomic rename AFTER the bucket group's data is fully
+  * written; a crash mid-group leaves no manifest and the group is
+  * recomputed on resume. Completed buckets are skipped by a
   * bucket-level predicate (cheaper than the row-level left_anti join for
   * partition-granularity resume; the join form is only needed for row-level
   * caching, which the reference does per document = per conversation =
@@ -51,36 +54,25 @@ object Checkpoint {
 
   // manifest I/O rides the Hadoop FileSystem seam ([[Fs]]) so the store
   // works on HDFS/object storage, not just a local disk
-  private def manifestPath(outDir: String, partId: Int): String =
+  private[pipeline] def manifestPath(outDir: String, partId: Int): String =
     s"$outDir/manifests/part-$partId.json"
 
   private def dataDir(outDir: String): String = s"$outDir/data"
 
-  def writeManifest(outDir: String, m: Manifest): Unit = {
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val json =
-      s"""{"partId":${m.partId},"rows":${m.rows},"bytes":${m.bytes},""" +
-        s""""runId":"${esc(m.runId)}","committedAtEpochMs":${m.committedAtEpochMs},""" +
-        s""""lineage":"${esc(m.lineage)}","configHash":"${esc(m.configHash)}",""" +
-        s""""numBuckets":${m.numBuckets}}"""
-    Fs.writeAtomic(manifestPath(outDir, m.partId), json)
-  }
+  private[pipeline] def bucketDir(outDir: String, partId: Int): String =
+    s"${dataDir(outDir)}/part_id=$partId"
 
-  def readManifest(outDir: String, partId: Int): Option[Manifest] = {
-    Fs.readString(manifestPath(outDir, partId)).map { s =>
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(s)
-      def l(f: String): Long = (j \ f) match {
-        case JInt(i) => i.toLong; case JLong(i) => i; case _ => 0L
-      }
-      def str(f: String): String = (j \ f) match {
-        case JString(v) => v; case _ => ""
-      }
-      Manifest(l("partId").toInt, l("rows"), l("bytes"), str("runId"),
-        l("committedAtEpochMs"), str("lineage"), str("configHash"),
-        l("numBuckets").toInt)
-    }
-  }
+  /** The bucket a conversation lands in. Staging, the group filter and the
+    * output's `part_id` all place rows by this one expression.
+    */
+  private def bucketOf(numBuckets: Int): Column =
+    pmod(hash(col("conv_id")), lit(numBuckets))
+
+  def writeManifest(outDir: String, m: Manifest): Unit =
+    Fs.writeJson(manifestPath(outDir, m.partId), m)
+
+  def readManifest(outDir: String, partId: Int): Option[Manifest] =
+    Fs.readJson[Manifest](manifestPath(outDir, partId))
 
   /** Fail loudly when a committed manifest was written under a different
     * bucket count: the placement mod changed, so "resume" would silently
@@ -162,8 +154,7 @@ object Checkpoint {
     val staged: Option[DataFrame] =
       if (groups.length <= 1) None
       else {
-        val all = turns
-          .withColumn("part_id", pmod(hash(col("conv_id")), lit(numBuckets)))
+        val all = turns.withColumn("part_id", bucketOf(numBuckets))
         val subset =
           if (todo.size == numBuckets) all
           else all.where(col("part_id").isin(todo: _*))
@@ -171,43 +162,22 @@ object Checkpoint {
         Some(spark.read.option("basePath", staging).parquet(staging))
       }
 
+    import spark.implicits._
     groups.foreach { group =>
-      val withBucket = staged match {
-        case Some(src) => src.where(col("part_id").isin(group: _*))
-        case None => turns
-          .withColumn("part_id", pmod(hash(col("conv_id")), lit(numBuckets)))
-          .where(col("part_id").isin(group: _*))
+      val groupTurns: Dataset[Turn] = staged match {
+        case Some(src) =>
+          src.where(col("part_id").isin(group: _*)).drop("part_id").as[Turn]
+        case None => turns.where(bucketOf(numBuckets).isin(group: _*))
       }
-      // salted spread of giant conversations across tasks (the analog of
-      // the reference's 50-page PDF split); without it a conversation
-      // clustered into one input split serializes through one task.
-      // EXPLICIT partition count: a bare repartition(cols…) is AQE-
-      // coalescible, and byte-based coalescing is blind to kernel CPU
-      // cost — it merges the salted spread back into one task (see
-      // ExtractionJob.extract). REPARTITION_BY_NUM is coalesce-immune.
-      val spread =
-        if (saltBuckets > 1)
-          withBucket.repartition(spark.sparkContext.defaultParallelism * 4,
-            col("conv_id"), pmod(hash(col("turn_idx")), lit(saltBuckets)))
-        else withBucket
-      import spark.implicits._
-      val bucketed = spread.as[TurnWithBucket]
-      val extracted = bucketed.mapPartitions { it =>
-        val kernel = new graft.kernel.TextKernel
-        it.map { tb =>
-          val e = ExtractionJob.processTurn(kernel, tb.toTurn)
-          ExtractedWithBucket(e, tb.part_id)
-        }
-      }
-      // flatten: one parquet dir per bucket via dynamic partition write,
-      // observing per-bucket row counts during the write itself
+      // one parquet dir per bucket via dynamic partition write, observing
+      // per-bucket row counts during the write itself
       val obs = org.apache.spark.sql.Observation(s"ckpt-$runId-${group.head}")
-      val flat = extracted
-        .select(col("e.*"), col("part_id"))
+      val extracted = ExtractionJob.extract(groupTurns, saltBuckets)
+        .withColumn("part_id", bucketOf(numBuckets))
       val rowCountAggs = group.map(k =>
         coalesce(sum(when(col("part_id") === k, 1L).otherwise(0L)), lit(0L))
           .as(s"rows_$k"))
-      flat.observe(obs, rowCountAggs.head, rowCountAggs.tail: _*)
+      extracted.observe(obs, rowCountAggs.head, rowCountAggs.tail: _*)
         .write
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -216,7 +186,7 @@ object Checkpoint {
       val rowCounts = obs.get // blocks until the write (the action) finishes
       // data for the whole group is durable; now commit each bucket
       group.foreach { k =>
-        val dir = s"${dataDir(outDir)}/part_id=$k"
+        val dir = bucketDir(outDir, k)
         val rows = rowCounts.get(s"rows_$k") match {
           case Some(n: Long) => n
           case Some(n: Number) => n.longValue()
@@ -264,7 +234,7 @@ object Checkpoint {
       })
       .filter(m => configHash.forall(_ == m.configHash))
     val dirs = done.flatMap { m =>
-      val dir = s"${dataDir(outDir)}/part_id=${m.partId}"
+      val dir = bucketDir(outDir, m.partId)
       if (Fs.exists(dir)) Some(dir)
       else if (m.rows == 0L) None // 0-row buckets legitimately have no dir
       else throw new IllegalStateException(
@@ -275,11 +245,4 @@ object Checkpoint {
     if (dirs.isEmpty) spark.emptyDataFrame
     else spark.read.option("basePath", dataDir(outDir)).parquet(dirs: _*)
   }
-
-  final case class TurnWithBucket(
-      conv_id: String, turn_idx: Int, role: String, text: String,
-      tool: String, ts: java.sql.Timestamp, part_id: Int) {
-    def toTurn: Turn = Turn(conv_id, turn_idx, role, text, tool, ts)
-  }
-  final case class ExtractedWithBucket(e: ExtractedTurn, part_id: Int)
 }

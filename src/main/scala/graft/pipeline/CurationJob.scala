@@ -95,9 +95,6 @@ object CurationJob {
       .digest(s.getBytes(StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
 
-  private[graft] def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-
   /** Content-sensitive identity of an input path for resume keying: the
     * order-independent combination of every file's (path, length,
     * mtime). Appending/replacing files under the same --input path
@@ -136,28 +133,11 @@ object CurationJob {
     }
   }
 
-  def writeStageManifest(outDir: String, m: StageManifest): Unit = {
-    val json =
-      s"""{"stage":"${esc(m.stage)}","rows":${m.rows},"bytes":${m.bytes},""" +
-        s""""runId":"${esc(m.runId)}","committedAtEpochMs":${m.committedAtEpochMs},""" +
-        s""""configHash":"${esc(m.configHash)}","upstreamId":"${esc(m.upstreamId)}",""" +
-        s""""lineage":"${esc(m.lineage)}"}"""
-    Fs.writeAtomic(manifestPath(outDir, m.stage), json)
-  }
+  def writeStageManifest(outDir: String, m: StageManifest): Unit =
+    Fs.writeJson(manifestPath(outDir, m.stage), m)
 
-  def readStageManifest(outDir: String, stage: String): Option[StageManifest] = {
-    Fs.readString(manifestPath(outDir, stage)).map { s =>
-      import org.json4s._
-      val j = org.json4s.jackson.JsonMethods.parse(s)
-      def str(f: String): String = (j \ f) match { case JString(v) => v; case _ => "" }
-      def lng(f: String): Long = (j \ f) match {
-        case JInt(i) => i.toLong; case JLong(i) => i; case _ => 0L
-      }
-      StageManifest(str("stage"), lng("rows"), lng("bytes"), str("runId"),
-        lng("committedAtEpochMs"), str("configHash"), str("upstreamId"),
-        str("lineage"))
-    }
-  }
+  def readStageManifest(outDir: String, stage: String): Option[StageManifest] =
+    Fs.readJson[StageManifest](manifestPath(outDir, stage))
 
   /** Run (or resume) one stage. `compute` is only evaluated on a miss. */
   private def runStage(

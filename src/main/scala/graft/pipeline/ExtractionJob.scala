@@ -40,6 +40,9 @@ object ExtractionJob {
     * conversation salted into several byte-small partitions gets merged
     * straight back into one task (observed at test scale: 8 salts
     * coalesced to 1 partition). REPARTITION_BY_NUM is coalesce-immune.
+    *
+    * This is the only place the salted spread and the pooled kernel loop
+    * live: [[Checkpoint.run]] runs each bucket group through it.
     */
   def extract(turns: Dataset[Turn], saltBuckets: Int = 0): Dataset[ExtractedTurn] = {
     val spark = turns.sparkSession

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Options, Path => HPath}
 import org.apache.spark.sql.SparkSession
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
 /** Filesystem seam for every manifest/metadata file the pipeline tier
   * writes (Checkpoint, CurationJob, Backup) — the Hadoop `FileSystem`
@@ -105,6 +107,23 @@ object Fs {
       finally in.close()
     }
   }
+
+  // The one JSON codec for every manifest and summary line: case classes
+  // map field-for-field (declaration order on write, constructor defaults
+  // for fields an older writer did not know), and strings are fully
+  // escaped — control characters included.
+  private implicit val formats: Formats = DefaultFormats
+
+  def toJson(value: AnyRef): String = Serialization.write(value)
+
+  /** Write `value` as JSON at `dest` via [[writeAtomic]]. */
+  def writeJson(dest: String, value: AnyRef): Unit = writeAtomic(dest, toJson(value))
+
+  /** Read the JSON at `path` as an `A`; None if absent. Throws on
+    * malformed JSON or a missing field that has no default.
+    */
+  def readJson[A: Manifest](path: String): Option[A] =
+    readString(path).map(Serialization.read[A](_))
 
   /** Total bytes of regular files under `dir` (recursive; 0 if absent).
     * One recursive listing — on object stores this is a flat LIST call,

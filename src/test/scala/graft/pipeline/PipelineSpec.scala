@@ -323,6 +323,104 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalStateException] { Checkpoint.readResult(spark, outDir, 4) }
   }
 
+  test("manifests round-trip control characters, quotes and backslashes") {
+    val outDir = fsTmp("graft-manifest-codec")
+    val odd = "a\nb\tc \"q\" back\\slash \u0001"
+    val m = Checkpoint.Manifest(3, 10L, 2048L, s"run-$odd", 1234L, s"input=$odd",
+      configHash = odd, numBuckets = 8)
+    Checkpoint.writeManifest(outDir, m)
+    assert(Checkpoint.readManifest(outDir, 3).contains(m))
+    // resume reads every manifest: one odd lineage must not make the
+    // store unreadable
+    assert(Checkpoint.validBuckets(outDir, 8, odd) == Seq(3))
+    val s = CurationJob.StageManifest("gates", 7L, 99L, s"rc-$odd", 5678L,
+      configHash = odd, upstreamId = s"clean@$odd", lineage = s"lineage $odd")
+    CurationJob.writeStageManifest(outDir, s)
+    assert(CurationJob.readStageManifest(outDir, "gates").contains(s))
+  }
+
+  test("manifests and backup.json in the string-built format still read back") {
+    val outDir = fsTmp("graft-manifest-legacy")
+    // a checkpoint manifest from before configHash/numBuckets existed
+    Fs.writeAtomic(s"$outDir/manifests/part-2.json",
+      """{"partId":2,"rows":41,"bytes":5120,"runId":"r1",""" +
+        """"committedAtEpochMs":1700000000000,"lineage":"input=synth:40"}""")
+    assert(Checkpoint.readManifest(outDir, 2).contains(Checkpoint.Manifest(
+      2, 41L, 5120L, "r1", 1700000000000L, "input=synth:40", "", 0)))
+    Fs.writeAtomic(s"$outDir/manifests/part-3.json",
+      """{"partId":3,"rows":7,"bytes":900,"runId":"r\"2","committedAtEpochMs":1700000000001,""" +
+        """"lineage":"input=a\\b","configHash":"graft-kernel-r2","numBuckets":4}""")
+    assert(Checkpoint.readManifest(outDir, 3).contains(Checkpoint.Manifest(
+      3, 7L, 900L, "r\"2", 1700000000001L, "input=a\\b", "graft-kernel-r2", 4)))
+    Fs.writeAtomic(s"$outDir/stages/exact/manifest.json",
+      """{"stage":"exact","rows":12,"bytes":3456,"runId":"rc1",""" +
+        """"committedAtEpochMs":1700000000002,"configHash":"9f1c",""" +
+        """"upstreamId":"gates@rc1@1700000000001@15","lineage":"exact fingerprint dedup"}""")
+    assert(CurationJob.readStageManifest(outDir, "exact").contains(CurationJob.StageManifest(
+      "exact", 12L, 3456L, "rc1", 1700000000002L, "9f1c",
+      "gates@rc1@1700000000001@15", "exact fingerprint dedup")))
+
+    val backupDir = fsTmp("graft-backup-legacy")
+    Fs.writeAtomic(s"$backupDir/b1/backup.json",
+      """{"backupId":"b1","sourceDir":"file:/tmp/store","mode":"incremental",""" +
+        """"createdAtEpochMs":1700000000500,"watermarkEpochMs":1700000000001,""" +
+        """"buckets":[2,3],"bucketIdentities":[{"k":2,"id":"r1@1700000000000@41@5120"},""" +
+        """{"k":3,"id":"r\"2@1700000000001@7@900"}],"files":[""" +
+        """{"relPath":"manifests/part-2.json","md5":"0123456789abcdef0123456789abcdef","bytes":180},""" +
+        """{"relPath":"data/part_id=2/part-00000.snappy.parquet",""" +
+        """"md5":"fedcba9876543210fedcba9876543210","bytes":5120}]}""")
+    assert(Backup.readBackupManifest(backupDir, "b1").contains(Backup.BackupManifest(
+      "b1", "file:/tmp/store", "incremental", 1700000000500L, 1700000000001L, Seq(2, 3),
+      Seq(
+        Backup.BackupFile("manifests/part-2.json", "0123456789abcdef0123456789abcdef", 180L),
+        Backup.BackupFile("data/part_id=2/part-00000.snappy.parquet",
+          "fedcba9876543210fedcba9876543210", 5120L)),
+      Seq(Backup.BucketIdentity(2, "r1@1700000000000@41@5120"),
+        Backup.BucketIdentity(3, "r\"2@1700000000001@7@900")))))
+  }
+
+  test("readResult reads a store mixing all-nullable and required-column buckets") {
+    import org.apache.spark.sql.functions.{col, hash, pmod, lit}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.Type.Repetition
+    val sp = spark; import sp.implicits._
+    val outDir = fsTmp("graft-ckpt-mixed")
+    val ds = TranscriptGen.dataset(spark, 20)
+    val numBuckets = 4
+    val committed = Checkpoint.run(ds, outDir, numBuckets, runId = "new")
+    val k = committed.filter(_.rows > 0).head.partId
+    // rewrite bucket k the way the struct-flattening writer did: every
+    // top-level column nullable, so primitives land as `optional`
+    ds.where(pmod(hash(col("conv_id")), lit(numBuckets)) === k).as[Turn]
+      .mapPartitions { it =>
+        val kernel = new TextKernel
+        it.map(t => PipelineSpec.WithBucket(ExtractionJob.processTurn(kernel, t), k))
+      }
+      .select(col("e.*"), col("part_id"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("part_id").parquet(s"$outDir/data")
+    def turnIdxRepetition(bucket: Int): Repetition = {
+      val file = Fs.listFilesRecursive(s"$outDir/data/part_id=$bucket")
+        .find(_.endsWith(".parquet")).get
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        Fs.hpath(file), spark.sparkContext.hadoopConfiguration))
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        schema.getType(schema.getFieldIndex("turn_idx")).getRepetition
+      } finally reader.close()
+    }
+    val other = committed.filter(m => m.rows > 0 && m.partId != k).head.partId
+    assert(turnIdxRepetition(k) == Repetition.OPTIONAL)
+    assert(turnIdxRepetition(other) == Repetition.REQUIRED)
+
+    def norm(rows: Seq[ExtractedTurn]) = rows.sortBy(e => (e.conv_id, e.turn_idx))
+    val read = Checkpoint.readResult(spark, outDir, numBuckets)
+      .drop("part_id").as[ExtractedTurn].collect().toSeq
+    assert(read.size == TranscriptGen.totalTurns(20))
+    assert(norm(read) == norm(ExtractionJob.extract(ds).collect().toSeq))
+  }
+
   test("backup: corrupt/id-mismatched manifests are skipped, stale staging reaped") {
     val outDir = fsTmp("graft-bk-guard")
     val backupDir = fsTmp("graft-bk-guard-dst")
@@ -669,4 +767,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       rows.map(e => (e.conv_id, e.turn_idx, e.text_clean)).sortBy(r => (r._1, r._2)).toSeq
     assert(norm(a) == norm(b))
   }
+}
+
+object PipelineSpec {
+  /** A bucket row in the shape the struct-flattening checkpoint writer used. */
+  final case class WithBucket(e: ExtractedTurn, part_id: Int)
 }
