@@ -367,13 +367,14 @@ final class TextKernel {
     // ASCII spaces (the normal state after cleanText) AND (b) no word's
     // stripNonWord(lower(word)) equals a correction key. (b) is proven by
     // folding each word's ASCII chars in place against the key table
-    // (keys are pure ASCII, so a word containing any non-ASCII WORD char
-    // can never match; non-ASCII caseless non-word chars are exactly what
-    // stripNonWord removes). Constructs the proof can't cover cheaply —
-    // a cased non-ASCII non-word char, whose lowercase form the slow path
-    // would strip differently — fall through to the loop. 96% of bench
-    // turns take this path: no splitWs array, no per-word lower/strip
-    // allocations, no mkString rebuild.
+    // (keys are pure ASCII, so a word containing a non-ASCII WORD char
+    // whose lowercase is non-ASCII can never match; non-ASCII caseless
+    // non-word chars are exactly what stripNonWord removes). Constructs
+    // the proof can't cover cheaply — a cased non-ASCII non-word char,
+    // whose lowercase form the slow path would strip differently, or a
+    // non-ASCII word char that lowercases to ASCII — fall through to the
+    // loop. 96% of bench turns take this path: no splitWs array, no
+    // per-word lower/strip allocations, no mkString rebuild.
     locally {
       val n = text.length
       var i = 0
@@ -418,8 +419,12 @@ final class TextKernel {
             }
           } else {
             val cp = text.codePointAt(i)
-            if (isWordCp(cp)) cantMatch = true // non-ASCII word char ≠ ASCII key
-            else if (Character.toLowerCase(cp) != cp) ok = false // cased oddity
+            if (isWordCp(cp)) {
+              // lower() can fold a non-ASCII word char to ASCII (K U+212A
+              // → k, İ U+0130 → i + U+0307): only the slow path is exact
+              if (Character.toLowerCase(cp) < 128) ok = false
+              else cantMatch = true // its lowercase stays non-ASCII ≠ key
+            } else if (Character.toLowerCase(cp) != cp) ok = false // cased oddity
             else if (isPySpace(c)) ok = false // non-ASCII whitespace
             i += Character.charCount(cp)
           }
@@ -477,24 +482,25 @@ final class TextKernel {
     // regex contains a mandatory contiguous \d{n} group, so a text whose
     // longest digit run is shorter provably has no match — a stronger
     // necessary condition than hasDigit that skips the regex scan for
-    // most short-number text (\d and isDigit are both Unicode Nd)
+    // most short-number text. Counted by code point: \d and
+    // Character.isDigit(cp) are both Unicode Nd, astral digits included.
     var digitRun = 0
     var maxDigitRun = 0
     var digitCount = 0
     var i = 0
     while (i < text0.length) {
-      val c = text0.charAt(i)
-      if (Character.isDigit(c)) {
+      val cp = text0.codePointAt(i)
+      if (Character.isDigit(cp)) {
         hasDigit = true
         digitCount += 1
         digitRun += 1
         if (digitRun > maxDigitRun) maxDigitRun = digitRun
       } else {
         digitRun = 0
-        if (c == ':') hasColon = true
-        else if (c == '@') hasAt = true
+        if (cp == ':') hasColon = true
+        else if (cp == '@') hasAt = true
       }
-      i += 1
+      i += Character.charCount(cp)
     }
     val hasCurrency = hasDigit && text0.contains("R$")
     val hasHttp = hasColon && text0.contains("http")
@@ -507,30 +513,12 @@ final class TextKernel {
     // digitCount is invariant under the in-loop rewrites and every
     // mutated run is a (possibly split) piece of an original run.
     //
-    // Digit-run ANCHORS for the seven digit-opening patterns: positions of
-    // each maximal digit run's first digit in the CURRENT text (recomputed
-    // lazily after a formatter mutation, since positions shift). See
-    // findAllDigitAnchored for why attempts only at these anchors (plus a
-    // preceding '(') are exhaustive.
+    // Digit-run ANCHORS for the seven digit-opening patterns
+    // ([[digitRunStarts]] of the CURRENT text, recomputed lazily after a
+    // formatter mutation, since positions shift). See findAllDigitAnchored
+    // for why attempts only at these anchors (plus a preceding '(') are
+    // exhaustive.
     var runStarts: Array[Int] = null
-    var nRuns = 0
-    def anchors(): Unit = if (runStarts == null) {
-      var cap = 8
-      var rs = new Array[Int](cap)
-      var k = 0
-      var j = 0
-      var prevDigit = false
-      while (j < text.length) {
-        val d = Character.isDigit(text.charAt(j))
-        if (d && !prevDigit) {
-          if (k == cap) { cap *= 2; rs = java.util.Arrays.copyOf(rs, cap) }
-          rs(k) = j; k += 1
-        }
-        prevDigit = d
-        j += 1
-      }
-      runStarts = rs; nRuns = k
-    }
     patternTable.foreach { cfg =>
       val feasible = cfg.name match {
         case "time"     => hasColon && digitCount >= 3 // \d{1,2}:\d{2}
@@ -549,8 +537,8 @@ final class TextKernel {
       val matches =
         if (!feasible) Nil
         else if (digitOpening) {
-          anchors()
-          findAllDigitAnchored(cfg.regex, text, runStarts, nRuns,
+          if (runStarts == null) runStarts = digitRunStarts(text)
+          findAllDigitAnchored(cfg.regex, text, runStarts,
             parenPrefix = cfg.name == "phone")
         } else findAll(cfg.regex, text)
       if (matches.nonEmpty) {
@@ -603,7 +591,7 @@ final class TextKernel {
     * Equality with the generic engine is pinned by KernelPropertySpec.
     */
   private[kernel] def findAllDigitAnchored(
-      p: Pattern, text: String, runStarts: Array[Int], nRuns: Int,
+      p: Pattern, text: String, runStarts: Array[Int],
       parenPrefix: Boolean): List[String] = {
     val out = ListBuffer.empty[String]
     val m = p.matcher(text)
@@ -621,7 +609,7 @@ final class TextKernel {
       else out += (1 to g).map(i => Option(m.group(i)).getOrElse("")).mkString
     var lastEnd = 0
     var r = 0
-    while (r < nRuns) {
+    while (r < runStarts.length) {
       val rs = runStarts(r)
       if (rs >= lastEnd) {
         var matched = false
@@ -637,6 +625,24 @@ final class TextKernel {
       r += 1
     }
     out.toList
+  }
+
+  /** UTF-16 offset of each maximal digit run's first digit, walking by
+    * code point so astral Nd digits (`\d` matches code points) start and
+    * continue runs.
+    */
+  private[kernel] def digitRunStarts(text: String): Array[Int] = {
+    val rs = Array.newBuilder[Int]
+    var prevDigit = false
+    var i = 0
+    while (i < text.length) {
+      val cp = text.codePointAt(i)
+      val d = Character.isDigit(cp)
+      if (d && !prevDigit) rs += i
+      prevDigit = d
+      i += Character.charCount(cp)
+    }
+    rs.result()
   }
 
   /** `sub(pNonWord, "", s)` without the regex machinery for PURE-ASCII
@@ -682,117 +688,97 @@ final class TextKernel {
     */
   private def isWordCp(cp: Int): Boolean = Py.isUWordCp(cp)
 
-  /** _correct_abbreviations (text_processor.py:438-459). */
-  def correctAbbreviations(text0: String): (String, Int) = {
-    // Fast path: find which abbreviations occur in the input; the
-    // reference's per-abbreviation loop then runs only for those.
-    // Identical semantics because (a) an absent abbreviation's findall is
-    // a no-op in the reference too, and (b) no expansion introduces a
-    // \b-word equal to a LATER abbreviation (table property, asserted by
-    // KernelPropertySpec), so presence never changes mid-loop.
-    //
-    // Presence scan: for ASCII-lowercase keys, indexOf passes over a
-    // single lowercased copy + a manual `\b` check (exact `\w` via
-    // isWordCp) — measured ~10x cheaper than the 30-literal alternation
-    // regex scan this replaces. Length-changing case mappings (e.g.
-    // U+0130) would misalign positions, so those rare texts fall back to
-    // the alternation regex.
-    val present = new java.util.HashSet[String]()
-    val lowered = if (abbrevKeysAsciiLower) lower(text0) else null
-    if (lowered != null && lowered.length == text0.length && isAscii(lowered)) {
-      // pure-ASCII text: a \b-bounded occurrence of an all-letter key is
-      // exactly a maximal [a-z0-9_] run equal to the key (ASCII \w), so
-      // ONE scan over the word runs replaces the 30 per-key indexOf
-      // passes. Runs longer than the longest key can't match and aren't
-      // even materialized.
-      var i = 0
-      val n = lowered.length
-      @inline def w(c: Char): Boolean =
-        (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '_' ||
-          (c >= 'A' && c <= 'Z') // lowered, but cheap to keep exact \w
-      while (i < n) {
-        while (i < n && !w(lowered.charAt(i))) i += 1
-        val start = i
-        while (i < n && w(lowered.charAt(i))) i += 1
-        if (i - start <= abbrevMaxKeyLen) {
-          val run = lowered.substring(start, i)
-          if (abbrevKeySet.contains(run)) present.add(run)
-        }
-      }
-    } else if (lowered != null && lowered.length == text0.length) {
-      abbreviations.foreach { case (a, _) =>
-        var idx = lowered.indexOf(a)
-        var found = false
-        while (!found && idx >= 0) {
-          val beforeOk = idx == 0 || !isWordCp(lowered.codePointBefore(idx))
-          val end = idx + a.length
-          val afterOk = end >= lowered.length || !isWordCp(lowered.codePointAt(end))
-          if (beforeOk && afterOk) found = true
-          else idx = lowered.indexOf(a, idx + 1)
-        }
-        if (found) present.add(a)
-      }
-    } else {
-      val pm = abbrevAlternation.matcher(text0)
-      while (pm.find()) present.add(lower(pm.group()))
+  /** _correct_abbreviations (text_processor.py:438-459): for each table
+    * key in order, `findall(\bKEY\b, re.I)` over the current text, then one
+    * whole-text `sub(\bm\b, repl(m))` per match. The same bytes from one
+    * walk over the input, one replay per distinct match and one rebuild:
+    *
+    *   - a `\b`-bounded occurrence of an all-word-char key is exactly a
+    *     maximal `\w` run, and the engine's case-insensitive literal test
+    *     is toLowerCase(toUpperCase(cp)) per code point — so a run whose
+    *     fold ([[foreachFoldedRun]]) is a key is a match of that key,
+    *     anomalous folds (K U+212A, ſ U+017F, İ U+0130, ı U+0131) included;
+    *   - a substitution rewrites only runs equal to its match, and the
+    *     non-word chars between input runs never change, so every run of
+    *     the evolving text lies inside the rewrite of one input run. No
+    *     expansion holds a run folding to a LATER key
+    *     ([[abbreviationPrefilterSafe]]), so each key's findall over the
+    *     evolving text is exactly that key's runs in the input;
+    *   - every occurrence of a run therefore goes through its key's whole
+    *     match list, in order, on its own: replaying the list on the run
+    *     alone gives its final text, including self-re-matching
+    *     expansions (`"dr dr"` → `"dr.. dr.."`).
+    *
+    * `corrections` is the number of runs matched, like the reference's
+    * one increment per findall match. Pinned against the verbatim
+    * findall/sub loop by KernelPropertySpec.
+    */
+  def correctAbbreviations(text: String): (String, Int) = {
+    final class Hit(val run: String, val repl: String, val key: Int) {
+      var out: String = run
     }
-    if (present.isEmpty) return (text0, 0)
-
-    var text = text0
-    var corrections = 0
-    abbreviations.foreach { case (abbrev, fullForm) =>
-      if (present.contains(abbrev)) {
-        val matches = scanAbbrevMatches(text, abbrev)
-        matches.foreach { m =>
-          val replacement =
-            if (isUpperStr(m)) upper(fullForm)
-            else if (isTitleStr(m)) fullForm
+    val occurrences = ListBuffer.empty[(Int, Hit)]
+    val distinct = new java.util.HashMap[String, Hit]()
+    val byKey = new Array[ListBuffer[Hit]](abbreviations.length) // match lists
+    foreachFoldedRun(text, abbrevMaxKeyLen) { (start, end, fold) =>
+      val key = abbrevKeyIndex.getOrDefault(fold, -1)
+      if (key >= 0) {
+        val run = text.substring(start, end)
+        var h = distinct.get(run)
+        if (h == null) {
+          val fullForm = abbreviations(key)._2
+          val repl =
+            if (isUpperStr(run)) upper(fullForm)
+            else if (isTitleStr(run)) fullForm
             else lower(fullForm)
-          text = replaceWordBounded(text, m, replacement)
-          corrections += 1
+          h = new Hit(run, repl, key)
+          distinct.put(run, h)
         }
+        occurrences += start -> h
+        if (byKey(key) == null) byKey(key) = ListBuffer.empty
+        byKey(key) += h
       }
     }
-    (text, corrections)
+    if (occurrences.isEmpty) return (text, 0)
+    distinct.values.forEach { h =>
+      byKey(h.key).foreach(m => h.out = replaceWordBounded(h.out, m.run, m.repl))
+    }
+    val sb = new java.lang.StringBuilder(text.length + 4 * occurrences.size)
+    var from = 0
+    occurrences.foreach { case (start, h) =>
+      sb.append(text, from, start).append(h.out)
+      from = start + h.run.length
+    }
+    sb.append(text, from, text.length)
+    (sb.toString, occurrences.size)
   }
 
-  /** `findAll(compileI("\bKEY\b"), text)` for an ASCII-lowercase key,
-    * without the regex engine: a `\b`-bounded occurrence of an all-word-
-    * char literal is exactly a maximal `\w` run (no boundary can fall
-    * inside a run), so one code-point walk over the runs suffices. Run
-    * chars compare via Java's own UNICODE_CASE literal fold —
-    * toLowerCase(toUpperCase(cp)) — so the anomalous folds the engine
-    * accepts (K U+212A→k, ſ U+017F→s, İ U+0130/ı U+0131→i) match here
-    * too. Same strings, same order, same duplicates (pinned vs the
-    * verbatim regex by KernelPropertySpec).
+  /** Calls `f(start, end, fold)` for each maximal `\w` run of `s` whose
+    * fold is at most `maxFold` chars long, in text order. The fold maps
+    * every code point to toLowerCase(toUpperCase(cp)), the regex engine's
+    * CASE_INSENSITIVE|UNICODE_CASE literal comparison.
     */
-  private[kernel] def scanAbbrevMatches(text: String, key: String): List[String] = {
-    val out = ListBuffer.empty[String]
+  private def foreachFoldedRun(s: String, maxFold: Int)(f: (Int, Int, String) => Unit): Unit = {
+    val fold = new java.lang.StringBuilder
+    val n = s.length
     var i = 0
-    val n = text.length
     while (i < n) {
-      val cp = text.codePointAt(i)
+      val cp = s.codePointAt(i)
       if (isWordCp(cp)) {
         val start = i
-        var ok = true
-        var ki = 0
+        fold.setLength(0)
         var cont = true
         while (cont && i < n) {
-          val c = text.codePointAt(i)
+          val c = s.codePointAt(i)
           if (isWordCp(c)) {
-            if (ok) {
-              if (ki >= key.length ||
-                Character.toLowerCase(Character.toUpperCase(c)) != key.charAt(ki).toInt)
-                ok = false
-            }
-            ki += 1
+            if (fold.length <= maxFold)
+              fold.appendCodePoint(Character.toLowerCase(Character.toUpperCase(c)))
             i += Character.charCount(c)
           } else cont = false
         }
-        if (ok && ki == key.length) out += text.substring(start, i)
+        if (fold.length <= maxFold) f(start, i, fold.toString)
       } else i += Character.charCount(cp)
     }
-    out.toList
   }
 
   /** `subLiteral(compile("\b" + quote(m) + "\b"), repl, text)` for an
@@ -820,43 +806,25 @@ final class TextKernel {
     sb.toString
   }
 
-  /** abbreviation presence prefilter: one case-insensitive alternation
-    * (fallback path for texts with length-changing case mappings)
-    */
-  private val abbrevAlternation: Pattern =
-    compileI(abbreviations.map(a => Pattern.quote(a._1))
-      .mkString("""\b(?:""", "|", """)\b"""))
-
-  /** indexOf presence scan requires keys where per-char lowercase equality
-    * coincides with the regex engine's case folding — true for ASCII
-    * lowercase keys (the whole table; asserted here so a future non-ASCII
-    * key silently reverts to the alternation path instead of miscomparing)
-    */
-  private val abbrevKeysAsciiLower: Boolean =
-    abbreviations.forall { case (a, _) =>
-      a.nonEmpty && a.forall(c => c < 128 && !Character.isUpperCase(c))
-    }
-  private val abbrevKeySet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    abbreviations.foreach { case (a, _) => s.add(a) }
-    s
+  private val abbrevKeyIndex: java.util.HashMap[String, Int] = {
+    val m = new java.util.HashMap[String, Int]()
+    abbreviations.zipWithIndex.foreach { case ((a, _), i) => m.put(a, i) }
+    m
   }
   private val abbrevMaxKeyLen: Int = abbreviations.map(_._1.length).max
-  private def isAscii(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) { if (s.charAt(i) >= 128) return false; i += 1 }
-    true
-  }
 
-  /** The safety property behind the abbreviation prefilter: no expansion
-    * contains a word equal (case-insensitively) to an abbreviation that
-    * appears LATER in the table. Exposed for the property test.
+  /** The premise of [[correctAbbreviations]]'s one walk: no expansion, in
+    * any of the three case forms the stage writes, holds a `\w` run whose
+    * fold (the walk's own, [[foreachFoldedRun]]) is a key LATER in the
+    * table. Asserted by KernelPropertySpec.
     */
   private[kernel] def abbreviationPrefilterSafe: Boolean =
     abbreviations.zipWithIndex.forall { case ((_, fullForm), i) =>
-      val words = fullForm.split("""[^\p{L}\p{N}_]+""").filter(_.nonEmpty)
-        .map(w => lower(w)).toSet
-      abbreviations.drop(i + 1).forall { case (later, _) => !words.contains(later) }
+      val folds = scala.collection.mutable.Set.empty[String]
+      Seq(upper(fullForm), fullForm, lower(fullForm)).foreach { form =>
+        foreachFoldedRun(form, Int.MaxValue)((_, _, fold) => folds += fold)
+      }
+      abbreviations.drop(i + 1).forall { case (later, _) => !folds.contains(later) }
     }
 
   /** _format_text (text_processor.py:461-483). */

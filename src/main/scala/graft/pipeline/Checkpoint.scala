@@ -149,7 +149,9 @@ object Checkpoint {
     // completion and at the start of the next run); a crash mid-run leaves
     // only this scratch, never corrupt store state. Single-group runs —
     // the common incremental resume — keep the direct zero-copy path.
-    val staging = s"$outDir/.input-staged"
+    // The name is plain: Spark's file listing skips and warns about
+    // `.`/`_`-prefixed paths, and it sits outside `data/`.
+    val staging = s"$outDir/staged-input"
     Fs.deleteTree(staging)
     val staged: Option[DataFrame] =
       if (groups.length <= 1) None

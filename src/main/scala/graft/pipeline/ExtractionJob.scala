@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.kernel.{DocType, SpanTemplates, TextKernel}
+import graft.kernel.{DocType, Py, SpanTemplates, TextKernel}
 import graft.schema.{ExtractedTurn, Span, Turn}
 
 /** The core extraction pipeline:
@@ -59,40 +61,50 @@ object ExtractionJob {
     }
   }
 
-  /** Pure per-row transform — exposed for oracle tests. */
-  def processTurn(kernel: TextKernel, t: Turn): ExtractedTurn = {
-    kernel.processSafe(t.text) match {
-      case Some(res) =>
-        val tpl = SpanTemplates.identify(res.text)
-        val spans = tpl.map(_.extractFields(res.text)).getOrElse(Seq.empty)
-          .map(f => Span(f.name, f.value, f.confidence, f.start, f.end, f.raw))
-        ExtractedTurn(
-          conv_id = t.conv_id, turn_idx = t.turn_idx, role = t.role,
-          tool = t.tool,
-          text_clean = res.text,
-          doc_type = DocType.classify(res.text),
-          template = tpl.map(_.name),
-          spans = spans,
-          patterns = res.metrics.patternsFound.map { case (k, v) => k -> v },
-          conf_delta = res.metrics.confidenceImprovement,
-          original_length = res.metrics.originalLength,
-          processed_length = res.metrics.processedLength,
-          words_corrected = res.metrics.wordsCorrected,
-          patterns_detected = res.metrics.patternsDetected,
-          success = true, error_message = None)
-      case None =>
-        ExtractedTurn(
-          conv_id = t.conv_id, turn_idx = t.turn_idx, role = t.role,
-          tool = t.tool,
-          text_clean = "", doc_type = DocType.Generic, template = None,
-          spans = Seq.empty, patterns = Map.empty,
-          conf_delta = 0.0,
-          original_length = if (t.text == null) 0 else t.text.length,
-          processed_length = 0, words_corrected = 0, patterns_detected = 0,
-          success = false,
-          error_message = Some("empty or null text"))
+  /** Pure per-row transform — exposed for oracle tests. A turn the kernel
+    * cannot process becomes one `success = false` row instead of a failed
+    * task: empty or null text, or any non-fatal exception, whose class name
+    * is the `error_message` (the reference's `OCRResult.success` /
+    * `error_message` contract).
+    */
+  def processTurn(kernel: TextKernel, t: Turn): ExtractedTurn =
+    try {
+      kernel.processSafe(t.text) match {
+        case Some(res) =>
+          val tpl = SpanTemplates.identify(res.text)
+          val spans = tpl.map(_.extractFields(res.text)).getOrElse(Seq.empty)
+            .map(f => Span(f.name, f.value, f.confidence, f.start, f.end, f.raw))
+          ExtractedTurn(
+            conv_id = t.conv_id, turn_idx = t.turn_idx, role = t.role,
+            tool = t.tool,
+            text_clean = res.text,
+            doc_type = DocType.classify(res.text),
+            template = tpl.map(_.name),
+            spans = spans,
+            patterns = res.metrics.patternsFound.map { case (k, v) => k -> v },
+            conf_delta = res.metrics.confidenceImprovement,
+            original_length = res.metrics.originalLength,
+            processed_length = res.metrics.processedLength,
+            words_corrected = res.metrics.wordsCorrected,
+            patterns_detected = res.metrics.patternsDetected,
+            success = true, error_message = None)
+        case None => failedTurn(t, "empty or null text")
+      }
+    } catch {
+      case NonFatal(e) => failedTurn(t, e.getClass.getName)
     }
-  }
+
+  private def failedTurn(t: Turn, error: String): ExtractedTurn =
+    ExtractedTurn(
+      conv_id = t.conv_id, turn_idx = t.turn_idx, role = t.role,
+      tool = t.tool,
+      text_clean = "", doc_type = DocType.Generic, template = None,
+      spans = Seq.empty, patterns = Map.empty,
+      conf_delta = 0.0,
+      original_length = if (t.text == null) 0 else Py.pyLen(t.text),
+      processed_length = 0, words_corrected = 0, patterns_detected = 0,
+      success = false,
+      error_message = Some(error))
 
   /** Extraction with job metrics attached via `Observation` — the Spark
     * form of the reference's running stats (SURVEY.md A4/A6;

@@ -1,9 +1,11 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
 import java.time.{DayOfWeek, Instant, ZonedDateTime, ZoneId, ZoneOffset}
 import java.time.temporal.TemporalAdjusters
+
+import scala.collection.immutable.ListMap
+
+import graft.pipeline.Fs
 
 /** Interval/daily/weekly job scheduling — the engine-shaped analog of the
   * reference's automation scheduler (/root/reference/src/automation/
@@ -16,9 +18,10 @@ import java.time.temporal.TemporalAdjusters
   *     the Spark analog of the reference's "process the watched folder
   *     now") or a [[graft.pipeline.CurationJob]] resume (idempotent by
   *     construction, so an extra tick is harmless);
-  *   - the RUNNER owns only last-run state, persisted as JSON via atomic
-  *     rename, so a restarted scheduler resumes where it left off (the
-  *     reference keeps next_execution in its config store,
+  *   - the RUNNER owns only last-run state, persisted as a JSON object
+  *     `{"name":epochMs}` through [[graft.pipeline.Fs]] (atomic rename,
+  *     any Hadoop filesystem), so a restarted scheduler resumes where it
+  *     left off (the reference keeps next_execution in its config store,
   *     scheduler.py:95-116).
   *
   * Catch-up semantics mirror the reference: when several periods elapsed
@@ -77,19 +80,11 @@ object Scheduler {
     * immediately, scheduler.py:118-128).
     */
   final class Runner(
-      jobs: Seq[Job], startMs: Long, stateFile: Option[Path] = None) {
+      jobs: Seq[Job], startMs: Long, stateFile: Option[String] = None) {
     require(jobs.map(_.name).distinct.size == jobs.size, "job names must be unique")
-    // names are persisted as raw JSON keys — constrain instead of escaping
-    require(jobs.forall(_.name.matches("[A-Za-z0-9._-]+")),
-      "job names must match [A-Za-z0-9._-]+ (they key the persisted state)")
 
     private val lastRun = scala.collection.mutable.Map.empty[String, Long]
-    stateFile.filter(Files.exists(_)).foreach { p =>
-      val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(s).foreach { m =>
-        lastRun(m.group(1)) = m.group(2).toLong
-      }
-    }
+    stateFile.flatMap(Fs.readJson[Map[String, Long]]).foreach(lastRun ++= _)
 
     private def anchor(j: Job): Long = lastRun.getOrElse(j.name, startMs)
 
@@ -135,14 +130,7 @@ object Scheduler {
     }
 
     private def persist(): Unit = stateFile.foreach { p =>
-      if (p.getParent != null) Files.createDirectories(p.getParent)
-      val json = lastRun.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }
-        .mkString("{", ",", "}")
-      val tmp = p.resolveSibling("." + p.getFileName.toString + ".tmp")
-      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      Fs.writeJson(p, ListMap(lastRun.toSeq.sortBy(_._1): _*))
     }
 
     /** Production convenience loop (scheduler.py:437-466's

@@ -154,17 +154,8 @@ class KernelPropertySpec extends AnyFunSuite {
       ("""\b\d{7}-?\d{2}\.\d{4}\.\d{1}\.\d{2}\.\d{4}\b""", true)) // paren-driving a paren-less pattern must be harmless too
       .map { case (r, paren) => (Py.compile(r), paren) }
     val kernel = new TextKernel
-    def runs(t: String): (Array[Int], Int) = {
-      val rs = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var prev = false
-      var i = 0
-      while (i < t.length) {
-        val d = Character.isDigit(t.charAt(i))
-        if (d && !prev) rs += i
-        prev = d; i += 1
-      }
-      (rs.toArray, rs.length)
-    }
+    // U+1D7D8 MATHEMATICAL DOUBLE-STRUCK DIGIT ZERO: an astral Nd digit
+    val z = new String(Character.toChars(0x1D7D8))
     val adversarial = Seq(
       "", "123.456.789-09", "x123.456.789-09y", "123456789012345678901234",
       "(11) 98765-4321", "a(11)98765-4321", " (11 98765-4321", "((11) 91234-5678",
@@ -173,40 +164,82 @@ class KernelPropertySpec extends AnyFunSuite {
       "٣٤٥ ١٢:٣٤ unicode digits", "1٢3 mixed-digit run",
       "00000000000", "000.000.000-00", "end digits 123", "123 start digits",
       "dots.1.2.3.4.5 colons:1:2:3", "(((((((", "()()() (1) (12)3456-7890",
-      "12:34", "1:23", ":123:", "x:12:34:x")
+      "12:34", "1:23", ":123:", "x:12:34:x",
+      z * 5 + "-" + z * 3, "12345-678 " + z * 5 + "-" + z * 3,
+      "(" + z * 2 + ") " + z * 5 + "-" + z * 4, "1" + z + "2" + z + "3" + z)
     (adversarial ++ corpus).foreach { t =>
-      val (rs, k) = runs(t)
+      val rs = kernel.digitRunStarts(t)
       table.foreach { case (p, paren) =>
-        assert(kernel.findAllDigitAnchored(p, t, rs, k, paren) == Py.findAll(p, t),
+        assert(kernel.findAllDigitAnchored(p, t, rs, paren) == Py.findAll(p, t),
           s"anchored findAll diverged for ${p.pattern} on: ${t.take(80)}")
       }
     }
+    // the stage's own feasibility counts see astral digits too: the cep
+    // regex finds one match in the first text and two in the second
+    val cep = table(2)._1
+    Seq(z * 5 + "-" + z * 3, "12345-678 " + z * 5 + "-" + z * 3).foreach { t =>
+      val found = kernel.detectAndFormatPatterns(t)._2.get("cep").map(_.toList)
+      assert(found.contains(Py.findAll(cep, t)), s"cep diverged on: $t")
+    }
   }
 
-  test("abbreviation match scanner and bounded replace match the regex engine") {
+  /** The reference's `_correct_abbreviations` loop (text_processor.py:
+    * 438-459) verbatim on the regex engine, table copied from the kernel:
+    * per key, findall(\bKEY\b, re.I) over the current text, then one
+    * whole-text sub(\bm\b) per match.
+    */
+  private def abbreviationLoop(t0: String): (String, Int) = {
     import java.util.regex.Pattern
-    val kernel = new TextKernel
-    val keys = Seq("dr", "dra", "sr", "sra", "ltda", "sa", "cia", "prof",
-      "profa", "av", "r", "al", "tv", "pca", "est", "rod", "km", "n", "art",
-      "inc", "par", "cf", "fl", "fls", "p", "pp", "obs", "ref", "anexo",
-      "apendice")
-    val adversarial = Seq(
-      "", "dr", "dr.", "Dr. Silva", "DR", "dR", "a_dr", "dr_a", "pedro",
-      "adr dra drax", "dr dr dr", "o sr. e a sra.", "km 42 KM KKm",
-      "ſr ſa", "İnc ınc inc", "n Nº nº", "ǅr",
-      "r. r, r; R", "p.p pp p_p", "av av. AV Av", "ação dr ação",
-      "日本語 dr 漢字", "a‍dr zwj-run", "combining dr̃ tilde",
-      "𝔡r astral", "_r r_ _r_", "x.r.y", "(r) [r] {r}")
-    val texts = adversarial ++ corpus
-    texts.foreach { t =>
-      keys.foreach { key =>
-        val rx = Py.compileI("""\b""" + Pattern.quote(key) + """\b""")
-        assert(kernel.scanAbbrevMatches(t, key) == Py.findAll(rx, t),
-          s"abbrev scanner diverged for '$key' on: ${t.take(80)}")
+    val table = Seq(
+      "dr" -> "Dr.", "dra" -> "Dra.", "sr" -> "Sr.", "sra" -> "Sra.",
+      "ltda" -> "Ltda.", "sa" -> "S.A.", "cia" -> "Cia.", "prof" -> "Prof.",
+      "profa" -> "Profa.", "av" -> "Av.", "r" -> "R.", "al" -> "Al.",
+      "tv" -> "Tv.", "pca" -> "Pça.", "est" -> "Est.", "rod" -> "Rod.",
+      "km" -> "Km.", "n" -> "Nº", "art" -> "Art.", "inc" -> "Inc.",
+      "par" -> "Par.", "cf" -> "Cf.", "fl" -> "Fl.", "fls" -> "Fls.",
+      "p" -> "P.", "pp" -> "Pp.", "obs" -> "Obs.", "ref" -> "Ref.",
+      "anexo" -> "Anexo", "apendice" -> "Apêndice")
+    var text = t0
+    var corrections = 0
+    table.foreach { case (key, fullForm) =>
+      Py.findAll(Py.compileI("""\b""" + Pattern.quote(key) + """\b"""), text).foreach { m =>
+        val repl =
+          if (Py.isUpperStr(m)) Py.upper(fullForm)
+          else if (Py.isTitleStr(m)) fullForm
+          else Py.lower(fullForm)
+        text = Py.subLiteral(Py.compile("""\b""" + Pattern.quote(m) + """\b"""), repl, text)
+        corrections += 1
       }
     }
+    (text, corrections)
+  }
+
+  test("abbreviation stage and bounded replace match the verbatim loop") {
+    import java.util.regex.Pattern
+    val kernel = new TextKernel
+    val adversarial = Seq(
+      "", "dr", "dr.", "Dr. Silva", "DR", "dR", "a_dr", "dr_a", "pedro",
+      "adr dra drax", "dr dr dr", "o sr. e a sra.", "km 42 KM KKm",
+      "ſr ſa", "İnc ınc inc", "n Nº nº", "ǅr", "ſr ınc İnc",
+      "dR dr Dr DR dr", "r R r. R.", "p pp P PP p", "\u212Am \u212AM km",
+      "r. r, r; R", "p.p pp p_p", "av av. AV Av", "ação dr ação",
+      "日本語 dr 漢字", "a‍dr zwj-run", "combining dr̃ tilde",
+      "𝔡r astral", "_r r_ _r_", "x.r.y", "(r) [r] {r}",
+      "apendice Apendice APENDICE anexo sa S.A. pca Pça",
+      "R$ 1.000,00 " * 250)
+    // stages 1-4 first, as process() feeds this stage, and generator turns
+    val staged = corpus.map { t =>
+      val s2 = kernel.correctConfusedCharacters(kernel.cleanText(t))._1
+      kernel.detectAndFormatPatterns(kernel.correctSpelling(s2)._1)._1
+    }
+    val generated = (0 until 200).map(t => graft.pipeline.TranscriptGen.turnText(7L, t))
+    val texts = adversarial ++ corpus ++ staged ++ generated
+    texts.foreach { t =>
+      assert(kernel.correctAbbreviations(t) == abbreviationLoop(t),
+        s"abbreviation stage diverged on: ${t.take(80)}")
+    }
     // bounded replace vs the verbatim case-sensitive \bm\b subLiteral
-    val ms = Seq("dr", "Dr", "DR", "r", "Km", "KKm", "anexo", "Nº")
+    val ms = Seq("dr", "Dr", "DR", "r", "Km", "KKm", "anexo", "Nº")
     texts.foreach { t =>
       ms.foreach { m =>
         val rx = Py.compile("""\b""" + Pattern.quote(m) + """\b""")
@@ -214,6 +247,24 @@ class KernelPropertySpec extends AnyFunSuite {
           s"bounded replace diverged for '$m' on: ${t.take(80)}")
       }
     }
+  }
+
+  test("abbreviation stage on a 1.5M-char turn finishes within a generous bound") {
+    // 16,000 generator turns joined by newlines; the per-match whole-text
+    // rewrite this stage used to do took minutes on such a turn
+    val sb = new java.lang.StringBuilder
+    (0 until 16000).foreach { t =>
+      if (t > 0) sb.append('\n')
+      sb.append(graft.pipeline.TranscriptGen.turnText(7L, t))
+    }
+    val text = sb.toString
+    assert(text.length > 1000000)
+    val kernel = new TextKernel
+    val t0 = System.nanoTime()
+    val (out, corrections) = kernel.correctAbbreviations(text)
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(corrections > 0 && out.length > text.length)
+    assert(seconds < 5.0, f"correctAbbreviations took $seconds%.1f s on ${text.length} chars")
   }
 
   test("correctSpelling's no-op fast path matches the split-join reference") {
@@ -253,7 +304,7 @@ class KernelPropertySpec extends AnyFunSuite {
       "İ voce", "ſ nao", "voce nao", "l 0 O I S G B g", "l. (0)",
       "informacao", "informacaoo", "…voce…", "🙂voce", "a_b c-d e.f",
       "rn cl li nn oo ii", "RN Cl lI", "x\nvoce", "٣ voce", "ǅvoce",
-      "K km", "0̀ combining-on-digit", "word " * 30)
+      "K km", "\u212A km", "\u212Akm", "İi İI ii", "voce \u212A", "0̀ combining-on-digit", "word " * 30)
     (adversarial ++ corpus).foreach { t =>
       assert(kernel.correctSpelling(t) == ref(t),
         s"correctSpelling fast path diverged on: ${t.take(80)}")
@@ -369,7 +420,8 @@ class KernelPropertySpec extends AnyFunSuite {
 
   test("abbreviation prefilter safety: no expansion creates a later abbreviation") {
     assert(new TextKernel().abbreviationPrefilterSafe,
-      "table property violated — the alternation prefilter would change semantics")
+      "an expansion holds a word whose fold is a later key: the abbreviation " +
+        "stage's one walk over its input would miss that key's new matches")
   }
 
   test("Py case predicates follow CPython: titlecase chars are cased but not upper") {

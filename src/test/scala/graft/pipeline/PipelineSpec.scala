@@ -115,6 +115,19 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!out(2).success)
   }
 
+  test("error rows: a turn whose processing throws becomes one success=false row") {
+    val ts = java.sql.Timestamp.from(java.time.Instant.EPOCH)
+    val turn = Turn("c9", 3, "user", "texto \uD83D\uDE42 valido aqui", "", ts)
+    // a null kernel makes the per-turn transform throw
+    val row = ExtractionJob.processTurn(null, turn)
+    assert(!row.success)
+    assert(row.error_message.contains(classOf[NullPointerException].getName))
+    assert(row.conv_id == "c9" && row.turn_idx == 3 && row.text_clean == "")
+    // lengths are code points (19 here, 20 UTF-16 units), as on a success row
+    assert(row.original_length == 19 && row.spans.isEmpty)
+    assert(ExtractionJob.processTurn(new TextKernel, turn).original_length == 19)
+  }
+
   test("salting invariance: output independent of salt bucket count") {
     val sp = spark; import sp.implicits._
     val ds = TranscriptGen.dataset(spark, 25)
@@ -309,7 +322,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Checkpoint.readResult(spark, outDir, 8).count() ==
       TranscriptGen.totalTurns(10))
     // the multi-group run's input staging scratch never outlives the run
-    assert(!Fs.exists(s"$outDir/.input-staged"))
+    assert(!Fs.exists(s"$outDir/staged-input"))
   }
 
   test("checkpoint: committed manifest over a missing data dir fails readResult loudly") {

@@ -65,23 +65,43 @@ class SchedulerSpec extends AnyFunSuite {
   }
 
   test("runner state survives restart via the persisted last-run file") {
-    val state = Files.createTempDirectory("graft-sched").resolve("state.json")
+    val state = Files.createTempDirectory("graft-sched").resolve("state.json").toString
     var runs = 0
+    // a name that must be escaped as a JSON key
+    val name = "nightly \"full\" run"
     def mk() = new Runner(
-      Seq(Job("j", Interval(10 * Min), () => runs += 1)),
+      Seq(Job(name, Interval(10 * Min), () => runs += 1)),
       startMs = t0, stateFile = Some(state))
 
     val r1 = mk()
-    assert(r1.runPending(t0 + 10 * Min) == Seq("j") && runs == 1)
+    assert(r1.runPending(t0 + 10 * Min) == Seq(name) && runs == 1)
     // restart: a new runner over the same state file must NOT re-run the
     // tick that already ran, and must schedule from the persisted last run
     val r2 = mk()
     assert(r2.runPending(t0 + 15 * Min).isEmpty, "restart must not replay")
-    assert(r2.runPending(t0 + 20 * Min) == Seq("j") && runs == 2)
+    assert(r2.runPending(t0 + 20 * Min) == Seq(name) && runs == 2)
+  }
+
+  test("a literal {name: epochMs} state file reads back and keeps its shape") {
+    val dir = Files.createTempDirectory("graft-sched-literal")
+    val state = dir.resolve("state.json")
+    Files.write(state, s"""{"a":${t0 + 10 * Min},"b":$t0}""".getBytes("UTF-8"))
+    val r = new Runner(Seq(
+      Job("a", Interval(10 * Min), () => ()),
+      Job("b", Interval(10 * Min), () => ()),
+      Job("c", Interval(10 * Min), () => ())),
+      startMs = t0 - 5 * Min, stateFile = Some(state.toString))
+    val byName = r.due(Long.MaxValue).map(j => j.name -> r.nextDue(j)).toMap
+    assert(byName == Map(
+      "a" -> (t0 + 20 * Min), "b" -> (t0 + 10 * Min), "c" -> (t0 + 5 * Min)))
+    // and the file it writes back keeps that shape, keys sorted
+    assert(r.runPending(t0 + 10 * Min) == Seq("b", "c"))
+    val written = new String(Files.readAllBytes(state), "UTF-8")
+    assert(written == s"""{"a":${t0 + 10 * Min},"b":${t0 + 10 * Min},"c":${t0 + 10 * Min}}""")
   }
 
   test("a failing job is isolated: later jobs run, successes persist, the failure retries") {
-    val state = Files.createTempDirectory("graft-sched-fail").resolve("state.json")
+    val state = Files.createTempDirectory("graft-sched-fail").resolve("state.json").toString
     var aRuns = 0; var bAttempts = 0; var cRuns = 0
     var bFail = true
     def mk() = new Runner(Seq(
