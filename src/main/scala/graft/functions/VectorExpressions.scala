@@ -244,10 +244,6 @@ object VectorFunctions {
     ExpressionUtils.column(
       DotProduct(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  def dotConst(a: Column, q: Array[Float]): Column =
-    ExpressionUtils.column(
-      DotProduct(ExpressionUtils.expression(a), floatArrayLit(q)))
-
   def lshBucket(v: Column, planes: Array[Array[Double]]): Column =
     ExpressionUtils.column(LshBucket(ExpressionUtils.expression(v), planes))
 

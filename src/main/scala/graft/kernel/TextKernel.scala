@@ -132,15 +132,12 @@ final class TextKernel {
   private val pNonWord = compile("""[^\w]""")
   private val pStartPunct = compile("""^[^\w]*""")
   private val pEndPunct = compile("""[^\w]*$""")
-  private val pSpaceBeforePunct = compile("""\s+([.,;:!?])""")
-  private val pPunctSpace = compile("""([.,;:!?])\s*""")
   private val pSpaceQuote = compile("""\s+\"""")
   private val pQuoteSpace = compile("""\"\s+""")
   private val pSpaceOpenParen = compile("""\s+\(""")
   private val pOpenParenSpace = compile("""\(\s+""")
   private val pSpaceCloseParen = compile("""\s+\)""")
   private val pCloseParenSpace = compile("""\)\s+""")
-  private val pTripleBreak = compile("""\n\s*\n\s*\n""")
   // Single-char confusion probes. The reference's regexes are
   // `\b\w*X\w*\b` (digit→alpha) and `\b\d*X\d*\b` (alpha→digit); `\b`
   // can never fall INSIDE a maximal `\w` run, so a match is always a
@@ -846,7 +843,6 @@ final class TextKernel {
     var hasQuote = false
     var hasOpen = false
     var hasClose = false
-    var hasNl = false
     val n = text0.length
     var i = 0
     while (i < n) {
@@ -863,7 +859,6 @@ final class TextKernel {
         case '"' => hasQuote = true
         case '(' => hasOpen = true
         case ')' => hasClose = true
-        case '\n' => hasNl = true
         case _ =>
       }
       i += 1
@@ -912,9 +907,9 @@ final class TextKernel {
       text = subLiteral(pSpaceCloseParen, ")", text)
       text = subLiteral(pCloseParenSpace, ") ", text)
     }
-    text = collapseWs(text)
-    if (hasNl) text = subLiteral(pTripleBreak, "\n\n", text)
-    strip(text)
+    // the reference's last sub, `\n\s*\n\s*\n` → "\n\n", runs after this
+    // collapse has turned every `\s` run into one space: it never matches
+    strip(collapseWs(text))
   }
 
   /** `sub(pWs, " ", text)` with an exact no-op fast path: when every

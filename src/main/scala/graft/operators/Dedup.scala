@@ -43,13 +43,11 @@ object Dedup {
     sm64(h)
   }
 
-  /** word k-shingles of lowercased whitespace-tokenized text */
-  def shingles(text: String, k: Int): Set[Long] = shinglesArray(text, k).toSet
-
-  /** [[shingles]] as a DISTINCT, sorted primitive array — the hot form for
-    * the dedup operators' mapPartitions passes. Hash values are IDENTICAL
-    * to [[shingles]]/[[hash64]] (FNV-1a over the UTF-8 bytes of the
-    * space-joined window, finalized with splitmix64) but computed
+  /** word k-shingles of lowercased whitespace-tokenized text, as a
+    * DISTINCT, sorted primitive array — the hot form for the dedup
+    * operators' mapPartitions passes. Hash values are IDENTICAL to
+    * [[hash64]] of each space-joined window (FNV-1a over its UTF-8 bytes,
+    * finalized with splitmix64) but computed
     * incrementally from per-token byte arrays: no per-window String,
     * no per-window UTF-8 encoder run over already-encoded tokens, no boxed
     * Set[Long] — the three dominant allocations of the old sliding/mkString
@@ -98,10 +96,6 @@ object Dedup {
     if (w == out.length) out else java.util.Arrays.copyOf(out, w)
   }
 
-  def jaccard(a: Set[Long], b: Set[Long]): Double =
-    if (a.isEmpty && b.isEmpty) 1.0
-    else (a intersect b).size.toDouble / (a union b).size
-
   // ---------- MinHash + LSH ----------
 
   /** `verifyPruneMinBytes`: the verify step's candidate semi-join prune is
@@ -115,15 +109,8 @@ object Dedup {
       threshold: Double = 0.6, maxBucket: Int = 64,
       verifyPruneMinBytes: Long = 64L << 20)
 
-  def minHashSignature(sh: Set[Long], numHashes: Int): Array[Long] = {
-    val a = new Array[Long](sh.size)
-    var i = 0
-    sh.foreach { h => a(i) = h; i += 1 }
-    minHashSignature(a, numHashes)
-  }
-
-  /** [[minHashSignature]] over a distinct primitive array (order never
-    * matters: the fold is a per-hash min). The hot form.
+  /** MinHash signature over a distinct shingle array (order never
+    * matters: the fold is a per-hash min).
     */
   def minHashSignature(sh: Array[Long], numHashes: Int): Array[Long] = {
     val sig = Array.fill(numHashes)(Long.MaxValue)
@@ -152,7 +139,7 @@ object Dedup {
     * cast to null — silently collapsing every document into one null
     * group (ANSI off) or crashing mid-job (ANSI on) — so reject it
     * eagerly with advice instead. UUID-keyed corpora: derive a surrogate
-    * (e.g. `xxhash64(id)`) or use the string-keyed streaming operator.
+    * (e.g. `xxhash64(id)`) first.
     */
   private[operators] def requireIntegralId(df: DataFrame, idCol: String): Unit = {
     import org.apache.spark.sql.types._
@@ -167,10 +154,7 @@ object Dedup {
       "derive a numeric surrogate (e.g. xxhash64(id)) first")
   }
 
-  /** LSH band keys: FNV-seed fold of each band's signature rows — shared
-    * by the batch pair generation and the streaming suppression so both
-    * agree on what "same bucket" means.
-    */
+  /** LSH band keys: FNV-seed fold of each band's signature rows. */
   def bandKeys(sig: Array[Long], bands: Int): Array[Long] = {
     val rowsPerBand = sig.length / bands
     Array.tabulate(bands) { b =>
@@ -301,21 +285,6 @@ object Dedup {
           .otherwise(common.cast("double") / union.cast("double")))
       .where(col("jaccard") >= p.threshold)
       .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Exact-Jaccard brute force for tests (O(n²) — small inputs only). */
-  def bruteForceJaccardPairs(
-      docs: Seq[(Long, String)], shingleSize: Int, threshold: Double): Seq[(Long, Long, Double)] = {
-    val sh = docs.map { case (id, t) => id -> shingles(t, shingleSize) }
-    for {
-      i <- sh.indices
-      j <- (i + 1) until sh.size
-      ja = jaccard(sh(i)._2, sh(j)._2)
-      if ja >= threshold
-    } yield {
-      val (a, b) = (math.min(sh(i)._1, sh(j)._1), math.max(sh(i)._1, sh(j)._1))
-      (a, b, ja)
-    }
   }
 
   // ---------- SimHash ----------

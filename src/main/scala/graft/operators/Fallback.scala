@@ -14,22 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the expensive second engine runs ONLY on the routed slice
   * (the whole point at 100 TB: the expensive engine sees the ~tail, not
-  * the corpus). Two forms:
-  *
-  *   - [[onePass]] — for engines that are pure column expressions: one
-  *     scan, no union; `CASE WHEN` evaluates the second engine's
-  *     expressions lazily per row, so fallback work happens only on
-  *     routed rows. Prefer this whenever both engines are columnar.
-  *   - [[twoPass]] — the materialized-split form for engines that need a
-  *     real second stage (a pooled-kernel `mapPartitions`, an external
-  *     service). NOTE: the kept/fallback branches are complementary
-  *     FILTERS over the first pass, and the routing predicate (computed
-  *     quality) is not pushable — `twoPass` scans the source twice. When
-  *     the input lineage is expensive, use [[twoPassCached]], which
-  *     persists pass 1 and hands back a release handle (the
-  *     `SearchIndex.IndexTables` pattern) so the caller can drop the
-  *     cache after the consuming action — no operator-internal persist is
-  *     ever unreachable.
+  * the corpus). [[twoPass]] splits the first pass into complementary
+  * kept/fallback FILTERS and unions them; the routing predicate (computed
+  * quality) is not pushable, so the source is scanned twice.
   *
   * Output schema adds `result_text`, `quality`, `engine`, `route`.
   */
@@ -44,70 +31,20 @@ object Fallback {
       result: Column => Column,
       quality: Column => Column)
 
-  /** Single-scan form for COLUMN-expressible engines: `when` evaluates the
-    * second engine's expressions only on rows whose first-pass quality
-    * misses the threshold (CaseWhen short-circuits per row in codegen) —
-    * reference routing semantics with exactly one pass over the corpus.
-    */
-  def onePass(
-      df: DataFrame, textCol: String,
-      first: Engine, second: Engine,
-      qualityThreshold: Double = 0.7): DataFrame = {
-    val t1 = first.result(col(textCol))
-    val q1 = coalesce(first.quality(t1), lit(0.0))
-    val t2 = second.result(col(textCol))
-    val q2 = coalesce(second.quality(t2), lit(0.0))
-    val kept = q1 >= qualityThreshold
-    val use2 = q2 >= qualityThreshold || q2 > q1
-    df
-      .withColumn("result_text", when(kept, t1).otherwise(when(use2, t2).otherwise(t1)))
-      .withColumn("quality", when(kept, q1).otherwise(when(use2, q2).otherwise(q1)))
-      .withColumn("engine", when(kept, lit(first.name))
-        .otherwise(when(use2, lit(second.name)).otherwise(lit(first.name))))
-      .withColumn("route", when(kept, lit("kept")).otherwise(lit("fallback")))
-  }
-
   /** DETERMINISM REQUIREMENT: the kept and fallback branches are two
     * independent scans that each re-evaluate `first` and the routing
     * predicate — with a non-deterministic engine/quality expression (or a
     * source mutating between scans) a row near the threshold can land in
-    * BOTH branches or in neither. Use [[twoPassCached]] (materialized
-    * first pass) for non-deterministic engines or unstable sources.
+    * BOTH branches or in neither, so engines must be deterministic and the
+    * source stable.
     */
   def twoPass(
       df: DataFrame, textCol: String,
       first: Engine, second: Engine,
-      qualityThreshold: Double = 0.7): DataFrame =
-    routed(df, textCol, first, second, qualityThreshold) {
-      raw => (raw, () => ())
-    }.df
-
-  /** [[twoPass]] with the first pass persisted. Returns the routed frame
-    * plus a `release()` the caller invokes after the consuming action —
-    * the persisted first pass is otherwise unreachable (a local val), and
-    * `spark.catalog.clearCache()` is exactly the global hammer the cache
-    * lifecycle discipline forbids.
-    */
-  final case class Routed(df: DataFrame, release: () => Unit)
-
-  def twoPassCached(
-      df: DataFrame, textCol: String,
-      first: Engine, second: Engine,
-      qualityThreshold: Double = 0.7): Routed =
-    routed(df, textCol, first, second, qualityThreshold) { raw =>
-      val cached = raw.persist()
-      (cached, () => { cached.unpersist(blocking = true); () })
-    }
-
-  private def routed(
-      df: DataFrame, textCol: String,
-      first: Engine, second: Engine,
-      qualityThreshold: Double)(
-      hold: DataFrame => (DataFrame, () => Unit)): Routed = {
-    val pass1raw = df
+      qualityThreshold: Double = 0.7): DataFrame = {
+    val pass1 = df
       .withColumn("__t1", first.result(col(textCol)))
       .withColumn("__q1", coalesce(first.quality(col("__t1")), lit(0.0)))
-    val (pass1, release) = hold(pass1raw)
 
     // quality acceptable: keep the first engine's result, second engine
     // never runs for these rows (multi_engine.py:185-188 `break`)
@@ -132,7 +69,7 @@ object Fallback {
       .withColumn("route", lit("fallback"))
       .drop("__t2", "__q2", "__use2")
 
-    Routed(kept.unionByName(fallback).drop("__t1", "__q1"), release)
+    kept.unionByName(fallback).drop("__t1", "__q1")
   }
 
   /** Parallel multi-engine best-of-N (multi_engine.py:222-280): the
@@ -153,7 +90,7 @@ object Fallback {
     * per step, doubling the tree per engine.
     *
     * Output adds `result_text`, `quality`, `engine` (same contract as
-    * [[onePass]]/[[twoPass]], minus `route`, which is a fallback concept).
+    * [[twoPass]], minus `route`, which is a fallback concept).
     */
   def bestOfN(df: DataFrame, textCol: String, engines: Seq[Engine]): DataFrame = {
     require(engines.nonEmpty, "bestOfN needs at least one engine")
@@ -167,7 +104,7 @@ object Fallback {
     }
     val best = if (entries.sizeIs == 1) entries.head else greatest(entries: _*)
     // withColumn (not select(col("*"), ...)): REPLACES pre-existing
-    // result_text/quality/engine columns like onePass/twoPass do — the
+    // result_text/quality/engine columns like twoPass does — the
     // select form appended duplicates and made every downstream
     // col("quality") an AMBIGUOUS_REFERENCE when chained after them
     df.withColumn("__best", best)
@@ -175,29 +112,6 @@ object Fallback {
       .withColumn("quality", col("__best.q"))
       .withColumn("engine", col("__best.engine"))
       .drop("__best")
-  }
-
-  /** Historical-quality engine ordering (multi_engine.py:282-306):
-    * preferred engines first (in their given order), then the rest sorted
-    * by average historical quality DESCENDING (ties by name for
-    * determinism; the reference's key is the running average in
-    * `_get_engine_average_quality`). `history` is any (engine, quality)
-    * log — e.g. the output of previous [[bestOfN]]/[[twoPass]] runs — and
-    * the aggregate collects exactly one tiny row per engine.
-    */
-  def orderByHistory(
-      engines: Seq[Engine], history: DataFrame,
-      engineCol: String = "engine", qualityCol: String = "quality",
-      preferred: Seq[String] = Seq.empty): Seq[Engine] = {
-    val avgQ = history
-      .groupBy(col(engineCol).cast("string").as("e"))
-      .agg(avg(col(qualityCol)).as("q"))
-      .collect()
-      .filterNot(r => r.isNullAt(0) || r.isNullAt(1)) // all-null history = no history
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val (pref, rest) = engines.partition(e => preferred.contains(e.name))
-    pref.sortBy(e => preferred.indexOf(e.name)) ++
-      rest.sortBy(e => (-avgQ.getOrElse(e.name, 0.0), e.name))
   }
 
   /** The reference's content-quality component (multi_engine.py:44-50):

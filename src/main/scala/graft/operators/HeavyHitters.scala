@@ -2,14 +2,11 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Approximate heavy hitters via the Space-Saving sketch (Metwally et al.,
   * "Efficient Computation of Frequent and Top-k Elements in Data Streams",
-  * ICDT 2005) as a typed Spark `Aggregator` — the custom-TypedColumn tier
-  * of the build rules (scalar/agg functions Spark lacks).
+  * ICDT 2005): one mutable sketch per partition, merged in a fixed tree.
   *
   * Guarantees: a SINGLE sketch with `capacity` counters captures any item
   * with true frequency > N/capacity, overestimating each count by at most
@@ -25,8 +22,8 @@ import org.apache.spark.sql.functions.udaf
   */
 object HeavyHitters extends Serializable {
 
-  /** counter: item → (count, error). Buffer kept as parallel sequences for
-    * a stable Encoder.
+  /** counter: item → (count, error), as parallel sequences — the form a
+    * partition's sketch travels in between merge rounds.
     */
   final case class Sketch(items: Seq[String], counts: Seq[Long], errors: Seq[Long])
 
@@ -85,35 +82,7 @@ object HeavyHitters extends Serializable {
     b
   }
 
-  final class SpaceSaving(capacity: Int) extends Aggregator[String, Sketch, Seq[HeavyHitter]] {
-    def zero: Sketch = Sketch(Seq.empty, Seq.empty, Seq.empty)
-    def reduce(buf: Sketch, item: String): Sketch = {
-      val b = fromSketch(buf, capacity)
-      if (item != null) b.add(item)
-      b.toSketch
-    }
-    def merge(a: Sketch, b: Sketch): Sketch = {
-      val ba = fromSketch(a, capacity)
-      ba.mergeIn(fromSketch(b, capacity))
-      ba.toSketch
-    }
-    def finish(s: Sketch): Seq[HeavyHitter] =
-      s.items.indices.map(i => HeavyHitter(s.items(i), s.counts(i), s.errors(i)))
-    def bufferEncoder: Encoder[Sketch] = Encoders.product[Sketch]
-    def outputEncoder: Encoder[Seq[HeavyHitter]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[HeavyHitter]]()
-  }
-
-  /** Column form (composable in any agg): `df.agg(HeavyHitters.topK(c, 64))`.
-    * NOTE: the SQL-aggregation path re-encodes the buffer per input row
-    * (O(capacity)/row) — fine for composition over pre-aggregated data; for
-    * raw streams use [[heavyHitters]], which builds one mutable sketch per
-    * partition and merges the tiny partials.
-    */
-  def topK(column: Column, capacity: Int): Column =
-    udaf(new SpaceSaving(capacity)).apply(column)
-
-  /** Efficient path: one mutable sketch per partition (narrow pass), then a
+  /** One mutable sketch per partition (narrow pass), then a
     * LOGARITHMIC merge of the ≤numPartitions tiny sketches in a FIXED
     * binary tree over partition indices — the shape that scales to 10^12
     * rows: at 10^5 tasks a driver-side linear merge would serialize 10^5

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns for training-data pipelines: image/audio/video as
-  * opaque `binary` columns with typed metadata, plus decode /
-  * feature-extract / resize / frame-sample stages.
+  * opaque `binary` columns with typed metadata, plus a decode /
+  * feature-extract stage.
   *
   * The Spark-side plumbing — schema, partition-preserving narrow maps,
   * pooled per-partition decoder instances, batched decode shape — is real
@@ -141,43 +141,5 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Resize STUB: keeps every k-th byte (deterministic downsample) and
-    * rewrites metadata — the schema/lineage shape of a real resize.
-    */
-  def resize(media: Dataset[MediaRow], factor: Int): Dataset[MediaRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    require(factor >= 1)
-    media.mapPartitions(_.map { r =>
-      // null/empty payloads pass through as empty (the decoders' convention);
-      // the old tabulate(max(1, 0/factor)) indexed payload(0) on empty input
-      val src = if (r.payload == null) Array.emptyByteArray else r.payload
-      val out =
-        if (src.isEmpty) src
-        else Array.tabulate(math.max(1, src.length / factor))(i => src(i * factor))
-      r.copy(payload = out,
-        meta = r.meta.copy(
-          width = math.max(1, r.meta.width / factor),
-          height = math.max(1, r.meta.height / factor),
-          n_bytes = out.length.toLong))
-    })
-  }
-
-  /** Frame sampling STUB (video analog): split the payload into `n` equal
-    * byte windows → ARRAY<BINARY> frames, then `posexplode` to rows.
-    */
-  def frameSample(media: DataFrame, n: Int): DataFrame = {
-    require(n >= 1)
-    val frames = transform(sequence(lit(0), lit(n - 1)), i => {
-      val len = octet_length(col("payload"))
-      val width = greatest((len / n).cast("int"), lit(1))
-      // substr on binary is positional like on strings (1-based)
-      substr(col("payload"), (i * width + 1).cast("int"), width)
-    })
-    media
-      .select(col("*"), posexplode(frames).as(Seq("frame_idx", "frame")))
-      .drop("payload")
   }
 }

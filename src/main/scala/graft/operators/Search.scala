@@ -78,25 +78,4 @@ object Search {
       .where(col("score") > 0)
       .orderBy(col("score").desc, col("id"))
       .limit(topN)
-
-  /** Search over sub-units (e.g. chunks of a doc): dedupe by `docCol`
-    * keeping the best-scoring unit (search_manager.py:364-369), then global
-    * rank — the reference's exact result-merging semantics (W4).
-    */
-  def searchDedup(
-      units: DataFrame, docCol: String, unitCol: String, textCol: String,
-      term: String, topN: Int): DataFrame = {
-    val scored = units.select(
-      col(docCol).as("doc_id"), col(unitCol).as("unit_id"),
-      occurrences(col(textCol), term).as("score"))
-      .where(col("score") > 0)
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("unit_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .drop("rn")
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(topN)
-  }
 }

@@ -419,8 +419,8 @@ object Similarity {
     * assumes JOB-atomic commit visibility (Spark's default committer): a
     * committer that exposes task output mid-job (e.g. v2 on some object
     * stores) could leave a crashed append's id half-indexed, and the
-    * anti-join would then skip it on replay — run compaction's
-    * dropDuplicates or a rebuild to repair. Returns rows appended.
+    * anti-join would then skip it on replay — rebuild the index to
+    * repair. Returns rows appended.
     */
   def appendToLshIndex(
       newDf: DataFrame, idCol: String, vecCol: String, path: String,
@@ -449,102 +449,6 @@ object Similarity {
       case n: Long => n; case n: Number => n.longValue(); case _ => 0L
     }
   }
-
-  final case class CompactionReport(
-      partitionsCompacted: Int, filesBefore: Long, filesAfter: Long)
-
-  /** Compact the small files an incremental index accumulates: every
-    * [[appendToLshIndex]]/[[appendToIvfIndex]] call adds new parquet
-    * files per touched partition (append never rewrites, so appends stay
-    * O(new)), and after many appends a query's partition-pruned read
-    * degrades into many tiny file opens. Partitions holding more than
-    * `maxFilesPerPartition` data files are rewritten to ONE file each
-    * (repartition on the partition columns → one shuffle task owns each
-    * partition value); partitions at or under the threshold are not
-    * touched, so compaction cost is O(overgrown partitions), not O(index).
-    * The reference's SQLite upsert keeps its index compact implicitly
-    * (search_manager.py:151-268); a parquet index needs this explicit
-    * maintenance pass.
-    *
-    * Swap order is crash-safe for readers of THIS index's query paths:
-    * the compacted file is moved INTO the partition directory first and
-    * the old files are deleted after, so a crash mid-swap leaves
-    * duplicate rows, never missing rows — and both [[lshTopKIndexed]]
-    * and [[ivfTopKIndexed]] `dropDuplicates("id")`, so transient
-    * duplication does not change any query result; re-running
-    * compactIndex heals it (the partition is over threshold again, and
-    * the rewrite drops exact full-row duplicates — precisely what a
-    * crashed swap leaves — so the heal removes them rather than baking
-    * them into the compacted file).
-    * Not safe under CONCURRENT appends to the same partition (run it
-    * from the maintenance schedule, like any VACUUM).
-    */
-  def compactIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      partitionCols: Seq[String],
-      maxFilesPerPartition: Int = 4): CompactionReport = {
-    require(partitionCols.nonEmpty, "an index is partitioned; none given")
-    import graft.pipeline.Fs
-    def isData(name: String): Boolean =
-      !name.startsWith(".") && !name.startsWith("_")
-    // leaf partition directories: descend exactly one "col=value" level
-    // per partition column
-    def leaves(dir: String, depth: Int): Seq[String] =
-      if (depth == 0) Seq(dir)
-      else Fs.listDirNames(dir).filter(_.contains("="))
-        .flatMap(d => leaves(s"$dir/$d", depth - 1))
-    val parts = leaves(path, partitionCols.size)
-    val withCounts = parts.map { d =>
-      d -> Fs.listFilesRecursive(d).filter(f => isData(f.split('/').last))
-    }
-    val overgrown = withCounts.filter(_._2.size > maxFilesPerPartition)
-    val before = withCounts.map(_._2.size.toLong).sum
-    if (overgrown.isEmpty) return CompactionReport(0, before, before)
-
-    val scratch = s"$path/.compact-${java.util.UUID.randomUUID().toString.take(8)}"
-    try {
-      spark.read.option("basePath", path)
-        .parquet(overgrown.map(_._1): _*)
-        .dropDuplicates()
-        .repartition(partitionCols.map(col): _*)
-        .write.mode("overwrite")
-        .partitionBy(partitionCols: _*)
-        .parquet(scratch)
-      overgrown.foreach { case (dir, oldFiles) =>
-        val rel = Fs.relativize(path, dir)
-        val replacements = Fs.listFilesRecursive(s"$scratch/$rel")
-          .filter(f => isData(f.split('/').last))
-        // NEVER delete originals a replacement did not land for: an empty
-        // scratch partition (e.g. a partition value that does not
-        // round-trip read-infer-rewrite, like an externally-written
-        // zero-padded bucket=05) would otherwise silently destroy the
-        // partition's rows behind a green CompactionReport
-        require(replacements.nonEmpty,
-          s"compaction produced no replacement files for partition $rel — " +
-            "aborting before deleting originals (partition values must " +
-            "round-trip Spark's read-infer-rewrite)")
-        replacements.foreach { nf =>
-          Fs.renameOverwrite(nf, s"$dir/compact-${nf.split('/').last}")
-        }
-        oldFiles.foreach(Fs.deleteIfExists)
-      }
-    } finally Fs.deleteTree(scratch)
-    val after = parts.map(d =>
-      Fs.listFilesRecursive(d).count(f => isData(f.split('/').last)).toLong).sum
-    CompactionReport(overgrown.size, before, after)
-  }
-
-  /** [[compactIndex]] with the LSH index's (table, bucket) layout. */
-  def compactLshIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      maxFilesPerPartition: Int = 4): CompactionReport =
-    compactIndex(spark, path, Seq("table", "bucket"), maxFilesPerPartition)
-
-  /** [[compactIndex]] with the IVF index's (ivf_list) layout. */
-  def compactIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      maxFilesPerPartition: Int = 4): CompactionReport =
-    compactIndex(spark, path, Seq("ivf_list"), maxFilesPerPartition)
 
   /** Approximate top-k over a materialized index (from [[buildLshIndex]],
     * typically read back from [[writeLshIndex]]'s layout): the candidate

@@ -173,53 +173,6 @@ object TextAnalysis {
       .otherwise(least(alnum.cast("double") / length(noSpace).cast("double"), lit(1.0)))
   }
 
-  /** Preprocessing recommender (SURVEY.md Q6; quality_detector.py:467-501)
-    * — the reference's threshold rules as an array-building when-ladder.
-    * `noiseLevel`/`contrast` take the text-domain analogs (e.g.
-    * punctuation-density, distinct-token ratio); thresholds mirror the
-    * reference's 'good' bands (noise > 20 → denoise, contrast < 60 →
-    * enhance, quality_detector.py:108-111), rescaled by the caller.
-    */
-  def preprocessingRecommendations(
-      quality: Column, docType: Column,
-      noiseLevel: Column, contrast: Column,
-      noiseGood: Double = 20.0, contrastGood: Double = 60.0): Column =
-    array_compact(array(
-      when(noiseLevel > noiseGood, lit("noise_reduction")),
-      when(contrast < contrastGood, lit("contrast_enhancement")),
-      when(quality.isin("poor", "very_poor"), lit("binarization")),
-      when(quality === "very_poor", lit("sharpening")),
-      when(docType === "handwritten", lit("gentle_processing"))
-        .when(docType === "form", lit("structure_preservation"))
-        .when(docType === "table", lit("line_enhancement"))))
-
-  /** Engine suggester (SURVEY.md Q6; quality_detector.py:503-525): the
-    * quality×doc-type → engine ladder, verbatim.
-    */
-  def suggestEngine(quality: Column, docType: Column): Column =
-    when(quality === "excellent",
-      when(docType === "printed", lit("tesseract_local")).otherwise(lit("google_cloud")))
-      .when(quality === "good",
-        when(docType === "handwritten", lit("azure_cloud")).otherwise(lit("tesseract_local")))
-      .when(quality === "fair", lit("azure_cloud"))
-      .otherwise(lit("google_cloud"))
-
-  /** Word-level confidence filter (SURVEY.md P2;
-    * tesseract_engine.py:302-334): keep words of a
-    * ARRAY<STRUCT<..., confidence DOUBLE, ...>> column meeting the
-    * threshold — a codegen `filter` over the nested array, no explode.
-    */
-  def filterWordsByConfidence(words: Column, threshold: Double): Column =
-    filter(words, w => w.getField("confidence") >= lit(threshold))
-
-  /** Quality-based routing predicate (SURVEY.md P3/P7;
-    * OCR_Enhanced_Hybrid_v1.py:999-1022, config default threshold 0.75):
-    * rows at/above the confidence threshold keep the fast-path result;
-    * the rest are routed to the fallback strategy.
-    */
-  def routeByQuality(confidence: Column, threshold: Double = 0.75): Column =
-    when(confidence >= threshold, lit("local")).otherwise(lit("fallback"))
-
   /** BPE-style pre-tokenization count — the GPT-2 pre-tokenizer's regex
     * family (Radford et al. 2019; simplified to the lookahead-free core so
     * Java regex and RE2 agree): a token is an optional leading space plus

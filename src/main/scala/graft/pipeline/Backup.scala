@@ -7,8 +7,7 @@ package graft.pipeline
   * since the last completed backup for the same source (:342-417), every
   * file carries an md5 (:166-177), restore extracts a named backup into a
   * target path (:659-691) — here with integrity VALIDATION (hash + parse +
-  * completeness) instead of blind extraction, and retention cleanup
-  * (:523-555).
+  * completeness) instead of blind extraction.
   *
   * Scale shape: all metadata decisions are made from the tiny per-bucket
   * manifests; file bytes are streamed copy+hash. The store layout
@@ -54,11 +53,11 @@ object Backup {
 
   /** Read a backup's manifest. Returns None when the manifest is absent,
     * UNPARSEABLE (one corrupt/truncated backup.json must not brick
-    * listBackups and with it every backup/cleanup on the shared
-    * backupDir), or when its DECLARED backupId differs from the directory
-    * name — a hand-copied `b1-old` dir whose manifest still says `b1`
-    * would otherwise alias two directories under one id, confusing
-    * retention keep/delete and restore reporting. Such entries are
+    * listBackups and with it every backup on the shared backupDir), or
+    * when its DECLARED backupId differs from the directory name — a
+    * hand-copied `b1-old` dir whose manifest still says `b1` would
+    * otherwise alias two directories under one id, confusing incremental
+    * selection and restore reporting. Such entries are
     * treated as absent and surfaced on stderr.
     */
   def readBackupManifest(backupDir: String, backupId: String): Option[BackupManifest] = {
@@ -210,56 +209,5 @@ object Backup {
       bytes += f.bytes
     }
     RestoreReport(backupId, m.files.size, bytes, Seq.empty, ok = true)
-  }
-
-  /** Retention cleanup (backup_manager.py:523-555): delete backups older
-    * than `retentionMs`, always keeping the most recent one AND every
-    * backup a kept incremental depends on. An incremental restores by
-    * layering over everything back to (and including) its nearest earlier
-    * FULL backup of the same source — deleting any link of that chain
-    * would make the kept incrementals unrestorable, so the chain is
-    * protected regardless of age (the reference's cleanup has exactly
-    * this base-deletion hazard; closed here). Returns deleted ids.
-    */
-  def cleanupOldBackups(
-      backupDir: String, retentionMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] = {
-    val all = listBackups(backupDir)
-    if (all.isEmpty) return Seq.empty
-    val keep = scala.collection.mutable.Set.empty[String]
-    // "always keep the most recent" is PER SOURCE: with two checkpoint
-    // stores sharing one backupDir, a source whose backups are all past
-    // retention must not lose its only copy just because the OTHER source
-    // has a newer backup
-    all.groupBy(_.sourceDir).values.foreach(chain =>
-      keep += chain.maxBy(_.createdAtEpochMs).backupId)
-    all.foreach(m =>
-      if ((nowMs - m.createdAtEpochMs) <= retentionMs) keep += m.backupId)
-    // chain closure per source: walk kept incrementals back to their full
-    all.groupBy(_.sourceDir).values.foreach { chain =>
-      val sorted = chain.sortBy(_.createdAtEpochMs).toIndexedSeq
-      sorted.indices.reverse.foreach { i =>
-        if (keep.contains(sorted(i).backupId) && sorted(i).mode == "incremental") {
-          var j = i - 1
-          var foundFull = false
-          while (j >= 0 && !foundFull) {
-            keep += sorted(j).backupId
-            foundFull = sorted(j).mode == "full"
-            j -= 1
-          }
-        }
-      }
-    }
-    val doomed = all.filterNot(m => keep.contains(m.backupId))
-    doomed.foreach(m => Fs.deleteTree(s"$backupDir/${m.backupId}"))
-    // stale staging dirs: a crashed backup leaves .<id>.tmp (potentially
-    // store-sized file bytes) that no listing shows and only an exact-id
-    // retry would replace — reap those older than the retention window
-    // (mtime-aged, so an in-flight backup running concurrently is safe)
-    Fs.listDirNames(backupDir)
-      .filter(d => d.startsWith(".") && d.endsWith(".tmp"))
-      .filter(d => (nowMs - Fs.mtime(s"$backupDir/$d")) > retentionMs)
-      .foreach(d => Fs.deleteTree(s"$backupDir/$d"))
-    doomed.map(_.backupId)
   }
 }

@@ -90,9 +90,6 @@ object Checkpoint {
           "resuming would drop or duplicate conversations; rebucket into a " +
           "fresh outDir instead")
 
-  def completedBuckets(outDir: String, numBuckets: Int): Seq[Int] =
-    (0 until numBuckets).filter(k => Fs.exists(manifestPath(outDir, k)))
-
   /** Buckets whose manifest is VALID for this run: committed, config hash
     * matches, and (if a TTL is set) not expired — the reference cache's
     * staleness semantics (cache_manager.py:119-170: key = content hash +

@@ -168,63 +168,6 @@ object ExtractionJob {
         max(col("turn_idx")).as("last_turn"))
   }
 
-  /** Scale-path assembly via secondary sort: repartition by conv_id, sort
-    * each partition by (conv_id, turn_idx) — Spark's EXTERNAL sort, spill-
-    * friendly — then stream-group per partition. Unlike `assemble`'s
-    * collect_list (whole conversation as one in-memory array buffer), peak
-    * task memory here is one conversation's OUTPUT text, which is the
-    * floor for any string-assembly. Preferred at 10^12-turn scale / for
-    * million-turn conversations; results identical to `assemble`
-    * (equality-tested).
-    */
-  final case class Asm(
-      conv_id: String, n_turns: Long, full_text: String,
-      avg_conf_delta: Double, total_patterns: Long,
-      first_turn: Int, last_turn: Int)
-
-  def assembleSorted(extracted: Dataset[ExtractedTurn]): DataFrame = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
-    extracted
-      .where(col("success"))
-      .select(col("conv_id"), col("turn_idx"), col("text_clean"),
-        col("conf_delta"), col("patterns_detected"))
-      .as[(String, Int, String, Double, Int)]
-      // deliberately AQE-coalescible (unlike extract's salted shuffle):
-      // merging whole shuffle partitions keeps each conversation intact,
-      // and the per-task memory floor (one conversation's output) is
-      // unchanged — byte-based coalescing is the right sizing here
-      .repartition(col("conv_id"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-      .mapPartitions { it =>
-        new Iterator[Asm] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Asm = {
-            val (cid, _, _, _, _) = buf.head
-            val sb = new java.lang.StringBuilder
-            var n = 0L
-            var confSum = 0.0
-            var patterns = 0L
-            var first = Int.MaxValue
-            var last = Int.MinValue
-            while (buf.hasNext && buf.head._1 == cid) {
-              val (_, idx, text, conf, pats) = buf.next()
-              if (n > 0) sb.append("\n\n")
-              sb.append(text)
-              n += 1
-              confSum += conf
-              patterns += pats
-              if (idx < first) first = idx
-              if (idx > last) last = idx
-            }
-            Asm(cid, n, sb.toString, confSum / n, patterns, first, last)
-          }
-        }
-      }
-      .toDF()
-  }
-
   /** Doc-level classification over the assembled text (the reference
     * classifies whole documents: xml_output_generator.py:66-119).
     * mapPartitions over Rows (schema-generic) instead of a per-row UDF —

@@ -208,10 +208,4 @@ object Fs {
     require(c.startsWith(b + "/"), s"$child is not under $base")
     c.substring(b.length + 1)
   }
-
-  /** Modification time (epoch ms) of a path, 0 if absent. */
-  def mtime(s: String): Long = {
-    val p = hpath(s); val fs = fsOf(p)
-    if (fs.exists(p)) fs.getFileStatus(p).getModificationTime else 0L
-  }
 }

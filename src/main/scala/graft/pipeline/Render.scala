@@ -124,10 +124,9 @@ object Render {
     *
     * Same one-hash-aggregation shape as [[markdown]] (map-side partials
     * via the ordered-concat kernel) + a narrow per-row byte assembly.
-    * Returns (conv_id, num_pages, pdf_bytes, pdf) — keep the binary
-    * COLUMN as the scale-path artifact (parquet of PDFs, like the
-    * engine's other multimodal binary columns); the per-file sink below
-    * is the reference-UX mirror.
+    * Returns (conv_id, num_pages, pdf_bytes, pdf) — the binary COLUMN is
+    * the artifact (parquet of PDFs, like the engine's other multimodal
+    * binary columns), not one small file per conversation.
     */
   def searchablePdf(
       extracted: Dataset[ExtractedTurn],
@@ -146,65 +145,5 @@ object Render {
         (cid, graft.kernel.PdfDoc.numPages(doc, charsPerPage), pdf.length.toLong, pdf)
       })
       .toDF("conv_id", "num_pages", "pdf_bytes", "pdf")
-  }
-
-  /** Path-safe filename base: the reference's `nome_base` is a real file
-    * basename; conv_ids are arbitrary strings, so non-[A-Za-z0-9._-]
-    * chars are replaced and a short content suffix keeps sanitized names
-    * collision-free.
-    */
-  private[graft] def fileBase(convId: String): String = {
-    val safe = convId.map(c =>
-      if (c.isLetterOrDigit || c == '.' || c == '_' || c == '-') c else '_')
-    if (safe == convId) safe
-    else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(convId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString.take(8)
-      s"$safe-$md"
-    }
-  }
-
-  /** Write one `<conv_id>_pesquisavel.pdf` per conversation under `dir`
-    * (the reference's filename contract, Hybrid_v1.py:1464), through the
-    * Hadoop FileSystem API from the executors (driver fs.* settings are
-    * replicated into the task-side Configuration, so object-store creds
-    * flow through). Returns the number of files written.
-    *
-    * Scale note: one small file per conversation is the reference's
-    * human-consumption UX — right for moderate corpora; at web scale keep
-    * the [[searchablePdf]] binary column and write parquet instead.
-    */
-  def writeSearchablePdfFiles(pdfs: DataFrame, dir: String): Long = {
-    val spark = pdfs.sparkSession
-    import spark.implicits._
-    val confEntries: Array[(String, String)] = {
-      val c = spark.sparkContext.hadoopConfiguration
-      val it = c.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); buf += e.getKey -> e.getValue }
-      buf.toArray
-    }
-    Fs.mkdirs(dir)
-    pdfs.select(col("conv_id"), col("pdf"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confEntries.foreach { case (k, v) => conf.set(k, v) }
-        val base = new org.apache.hadoop.fs.Path(dir)
-        val fs = base.getFileSystem(conf)
-        it.map { case (cid, bytes) =>
-          val p = new org.apache.hadoop.fs.Path(base, s"${fileBase(cid)}_pesquisavel.pdf")
-          val out = fs.create(p, true)
-          try out.write(bytes) finally out.close()
-          1L
-        }
-      }
-      .toDF("n")
-      .agg(sum(col("n")))
-      .first() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
   }
 }

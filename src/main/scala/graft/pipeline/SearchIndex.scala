@@ -64,17 +64,4 @@ object SearchIndex {
 
     IndexTables(conversations, turns, chunks, ok.toDF())
   }
-
-  /** The searchable-sink join shape (SURVEY.md S7/J1): align extracted text
-    * back to the original rows — `extracted ⋈ source on (conv_id,
-    * turn_idx)`. On a cluster both sides share the same hash partitioning
-    * when written bucketed by conv_id, making this a co-located join.
-    */
-  def joinBack(extracted: Dataset[ExtractedTurn], source: Dataset[graft.schema.Turn]): DataFrame =
-    source.toDF()
-      .join(
-        extracted.toDF().select(
-          col("conv_id"), col("turn_idx"), col("text_clean"),
-          col("doc_type"), col("spans"), col("success")),
-        Seq("conv_id", "turn_idx"), "left")
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.pipeline.ExtractionJob
@@ -71,16 +71,6 @@ object StreamingExtract {
     q.awaitTermination()
   }
 
-  /** Event-time windowed rollup with a watermark — late turns beyond the
-    * watermark are dropped; state is bounded (the streaming analog of
-    * q09_events_daily).
-    */
-  def turnsPerHour(turns: Dataset[Turn], watermark: String = "2 hours"): DataFrame =
-    turns
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("role"))
-      .agg(count(lit(1)).as("n_turns"))
-
   /** Gap-based sessionization via the built-in `session_window` — one
     * definition serving BATCH (events table, q31 oracle) and STREAMING
     * (watermark bounds state; closed sessions emit in append mode once
@@ -102,159 +92,5 @@ object StreamingExtract {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_rows"))
-  }
-
-  /** Streaming exact dedup across micro-batches — the training-data dedup
-    * stage on a live feed. Spark-first: compose the built-in streaming
-    * `dropDuplicatesWithinWatermark` over the content fingerprint (state-
-    * store-backed, so a duplicate arriving in a LATER micro-batch is
-    * dropped too), with the watermark bounding state: fingerprints older
-    * than the watermark are evicted, which is what makes this run forever
-    * on an unbounded feed. Exactly the columnar fingerprint the batch
-    * [[graft.operators.Dedup.exact]] keys on, so batch and streaming
-    * dedup agree on what "same document" means.
-    */
-  def dedupTurns(turns: Dataset[Turn], watermark: String = "24 hours"): DataFrame =
-    turns.toDF()
-      .withColumn("fp", graft.operators.TextAnalysis.fingerprint(col("text")))
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("fp")
-      .drop("fp") // internal dedup key — output keeps the Turn shape
-
-  /** Streaming NEAR-duplicate suppression — the streaming mirror of the
-    * batch MinHash+LSH candidate generation
-    * ([[graft.operators.Dedup.minHashNearDups]], same shingle → signature
-    * → band-key pipeline via [[graft.operators.Dedup.bandKeys]]): each
-    * document explodes to its `p.bands` (band, key) rows, and the built-in
-    * `dropDuplicatesWithinWatermark` keyed on (band, key) keeps only rows
-    * whose bucket is FRESH within the watermark (state-store-backed, state
-    * bounded by eviction). A document is emitted as NOVEL iff ALL its
-    * bands are fresh; a document sharing ANY band bucket with an earlier
-    * one — exactly the batch operator's candidate-pair condition — is
-    * suppressed. For a near-dup at Jaccard s the suppression probability
-    * is the standard LSH S-curve 1-(1-s^r)^b. Streaming has no second
-    * verify pass, so suppression is candidate-level (documented trade:
-    * bucket-collision false positives suppress; astronomically rare for
-    * 64-bit band keys on non-near documents).
-    *
-    * KNOWN LIMIT of the strict default (`minFreshBands = p.bands`): when a
-    * near-dup cluster's members ALL first arrive within one micro-batch,
-    * the cluster's fresh band buckets can split across members so that no
-    * single member keeps all of its bands — the whole cluster then emits
-    * ZERO documents, original included. Emission is at-MOST-once per
-    * cluster, not at-least-once. A consumer that needs representation for
-    * same-batch cluster arrivals can lower `minFreshBands` (e.g. to
-    * `p.bands / 2`): a member that grabbed the majority of a 2-way split
-    * still emits. The trade is false novelty — a genuine near-dup of
-    * week-old content whose buckets were watermark-evicted, or a partial
-    * overlap, can clear a low threshold. There is no threshold that
-    * guarantees exactly-one per cluster without a second (stateful join)
-    * pass; for exact-once cluster representatives run the batch
-    * [[graft.operators.Dedup.minHashNearDups]] + cluster resolution over
-    * the drained output instead.
-    *
-    * Output (append mode, emitted when the watermark passes the window):
-    * (id, window_start, n_fresh_bands) for novel documents only; `id` is
-    * the source id cast to string (total for any id type).
-    */
-  def nearDupNovel(
-      docs: DataFrame, idCol: String, textCol: String, tsCol: String,
-      watermark: String = "1 hour", windowLength: String = "10 minutes",
-      p: graft.operators.Dedup.MinHashParams =
-        graft.operators.Dedup.MinHashParams(),
-      minFreshBands: Int = -1): DataFrame = {
-    require(p.numHashes % p.bands == 0, "bands must divide numHashes")
-    val freshGate = if (minFreshBands < 0) p.bands else minFreshBands
-    require(freshGate >= 1 && freshGate <= p.bands,
-      s"minFreshBands must be in [1, ${p.bands}]")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import graft.operators.Dedup
-    // id rides as STRING: cast-to-string is total for every input type,
-    // where a long cast would crash ANSI streams on UUID-keyed feeds (or,
-    // ANSI off, null-pool every document into one group)
-    val base = docs.select(
-      col(idCol).cast("string").as("id"),
-      col(textCol).as("text"),
-      col(tsCol).cast("timestamp").as("ts"))
-      .as[(String, String, java.sql.Timestamp)]
-    val banded = base.mapPartitions(_.flatMap { case (id, text, ts) =>
-      val sh = Dedup.shingles(Option(text).getOrElse(""), p.shingleSize)
-      val sig = Dedup.minHashSignature(sh, p.numHashes)
-      val ks = Dedup.bandKeys(sig, p.bands)
-      ks.indices.iterator.map(b => (id, ts, b, ks(b)))
-    }).toDF("id", "ts", "band", "key")
-    banded
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("band", "key")
-      .groupBy(window(col("ts"), windowLength), col("id"))
-      .agg(count(lit(1)).as("n_fresh_bands"))
-      .where(col("n_fresh_bands") >= freshGate)
-      .select(col("id"), col("window.start").as("window_start"),
-        col("n_fresh_bands"))
-  }
-
-  /** Running per-conversation progress via custom keyed state
-    * (`mapGroupsWithState`) — the streaming counterpart of conversation
-    * assembly: as turns arrive, track counts/high-water turn_idx without
-    * re-aggregating history.
-    *
-    * State is BOUNDED: a conversation whose newest turn is `idleGapMs`
-    * behind the advancing WATERMARK has its state evicted after one final
-    * snapshot emit — on an unbounded feed of ever-new conv_ids, NoTimeout
-    * state would grow monotonically until the state store OOMs.
-    * EventTimeTimeout (not ProcessingTimeTimeout) on purpose: processing-
-    * time timeouts make the engine schedule no-data micro-batches forever
-    * to evaluate them, so `processAllAvailable` never quiesces and a
-    * drained stream still burns a core; event-time timeouts fire only
-    * when real data advances the watermark. A conversation that resumes
-    * after eviction restarts its counters (documented trade: progress is
-    * a monitoring signal, not the system of record — the durable
-    * per-turn output is).
-    */
-  final case class ConvProgress(
-      conv_id: String, n_turns: Long, max_turn_idx: Int, n_tool_turns: Long)
-
-  def conversationProgress(
-      turns: Dataset[Turn],
-      watermark: String = "24 hours",
-      idleGapMs: Long = 30L * 60 * 1000): Dataset[ConvProgress] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    turns
-      .withWatermark("ts", watermark)
-      .groupByKey(_.conv_id)
-      .mapGroupsWithState(GroupStateTimeout.EventTimeTimeout) {
-        (id: String, it: Iterator[Turn], state: GroupState[ConvProgress]) =>
-          if (state.hasTimedOut) {
-            // final snapshot, then evict — bounded state on endless feeds
-            val last = state.get
-            state.remove()
-            last
-          } else {
-            val prev = state.getOption.getOrElse(ConvProgress(id, 0L, -1, 0L))
-            var n = prev.n_turns
-            var mx = prev.max_turn_idx
-            var tools = prev.n_tool_turns
-            var newestMs = Long.MinValue
-            it.foreach { t =>
-              n += 1
-              if (t.turn_idx > mx) mx = t.turn_idx
-              if (t.role == "tool") tools += 1
-              if (t.ts != null && t.ts.getTime > newestMs) newestMs = t.ts.getTime
-            }
-            val next = ConvProgress(id, n, mx, tools)
-            state.update(next)
-            // evict once the watermark passes newest-turn + idle gap; the
-            // timeout timestamp must sit strictly beyond the current
-            // watermark, so clamp up when this group's data is older
-            val wm = state.getCurrentWatermarkMs()
-            val target = math.max(
-              if (newestMs == Long.MinValue) wm + idleGapMs else newestMs + idleGapMs,
-              wm + 1)
-            state.setTimeoutTimestamp(target)
-            next
-          }
-      }
   }
 }

@@ -41,7 +41,7 @@ class VectorFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       col("id"),
       VectorFunctions.cosineConst(col("v"), q).as("c_native"),
       Similarity.cosineWithConst(col("v"), q).as("c_hof"),
-      VectorFunctions.dotConst(col("v"), q).as("d_native"),
+      VectorFunctions.dot(col("v"), lit(q)).as("d_native"),
       Similarity.dotWithConst(col("v"), q).as("d_hof"))
       .collect()
     rows.foreach { r =>

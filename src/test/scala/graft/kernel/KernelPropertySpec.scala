@@ -102,7 +102,9 @@ class KernelPropertySpec extends AnyFunSuite {
       "end with quote. \"", "(a. b)", "( a.b )", "\"a\" . b", "a...",
       "x.  ", "x. .", "tab.\tb", "nbsp. b", "a.b. c.d.", "á. ç.",
       "12:34", "12:34:56", "123.456.789-09", "a . . b", "a \t. b",
-      ". . ", "a.\t\n.b", ",;:!?.", " , ; ", "R$ 1.500,00", "x:  :y")
+      ". . ", "a.\t\n.b", ",;:!?.", " , ; ", "R$ 1.500,00", "x:  :y",
+      // triple breaks: the reference's last sub runs after the collapse
+      "a\n\n\nb", "a\n \n\t\nb", "\n\n\n", "a.\n\n\n(b)")
     (edges ++ corpus).foreach { t =>
       assert(kernel.formatText(t) == ref(t),
         s"formatText fast path diverged on: ${t.take(80)}")

@@ -226,28 +226,4 @@ class PdfSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(id1 == id2 && java.util.Arrays.equals(b1, b2))
     }
   }
-
-  test("writeSearchablePdfFiles: reference filename contract through the Fs surface") {
-    import graft.pipeline.{ExtractionJob, Render, TranscriptGen}
-    val dir = java.nio.file.Files.createTempDirectory("graft-pdf-sink").toString
-    val pdfs = Render.searchablePdf(ExtractionJob.extract(TranscriptGen.dataset(spark, 12)))
-    val written = Render.writeSearchablePdfFiles(pdfs, s"file://$dir")
-    assert(written == 12L)
-    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".pdf"))
-    assert(files.length == 12 && files.forall(_.getName.endsWith("_pesquisavel.pdf")))
-    // file bytes equal the column bytes for a spot-checked conversation
-    val row = pdfs.orderBy(col("conv_id")).select("conv_id", "pdf").first()
-    val expect = row.getAs[Array[Byte]](1)
-    val onDisk = java.nio.file.Files.readAllBytes(
-      new java.io.File(dir, s"${row.getString(0)}_pesquisavel.pdf").toPath)
-    assert(java.util.Arrays.equals(expect, onDisk))
-    parsePdf(onDisk)
-  }
-
-  test("fileBase: path-safe and collision-free for sanitized ids") {
-    import graft.pipeline.Render
-    assert(Render.fileBase("conv-00042") == "conv-00042")
-    val a = Render.fileBase("a/b"); val b = Render.fileBase("a:b")
-    assert(a.startsWith("a_b-") && b.startsWith("a_b-") && a != b)
-  }
 }

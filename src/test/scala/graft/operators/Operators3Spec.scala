@@ -90,15 +90,6 @@ class Operators3Spec extends AnyFunSuite with BeforeAndAfterAll {
         graft.pipeline.TranscriptGen.dataset(sp, 5))
       val idx = graft.pipeline.SearchIndex.build(extracted, persistSource = false)
       assert(idx.chunks.count() > 0 && idx.conversations.count() > 0) }
-    checked("Fallback.twoPassCached — persist is held by a handle, released here") {
-      val first = Fallback.Engine("fast", t => t,
-        t => when(length(t) > 300, 1.0).otherwise(0.1))
-      val second = Fallback.Engine("slow", t => upper(t), _ => lit(0.9))
-      val r = Fallback.twoPassCached(df, "text", first, second, 0.7)
-      assert(r.df.count() == df.count())
-      assert(sp.sparkContext.getPersistentRDDs.nonEmpty,
-        "twoPassCached must actually persist the first pass")
-      r.release() }
   }
 
   test("minhash without persist: shingle recompute is bounded, no cartesian, no cache") {
@@ -376,25 +367,6 @@ class Operators3Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Seq((1L, "c", 0.9), (2L, "a", 0.7), (3L, "a", 0.1)))
   }
 
-  test("orderByHistory: preferred first, then average historical quality desc") {
-    val sp = spark; import sp.implicits._
-    val history = Seq(
-      ("a", 0.2), ("a", 0.4),   // avg 0.3
-      ("b", 0.9), ("b", 0.7),   // avg 0.8
-      ("c", 0.5)).toDF("engine", "quality")
-    def e(n: String) = Fallback.Engine(n, identity, _ => lit(0.0))
-    val engines = Seq(e("a"), e("b"), e("c"), e("d")) // d: no history -> 0.0
-    val ordered = Fallback.orderByHistory(engines, history).map(_.name)
-    assert(ordered == Seq("b", "c", "a", "d"))
-    val withPref = Fallback.orderByHistory(engines, history, preferred = Seq("d", "a")).map(_.name)
-    assert(withPref == Seq("d", "a", "b", "c"))
-    // all-null history for an engine = no history (avg aggregates to null)
-    val nullHist = Seq(("b", Some(0.9)), ("c", None), ("c", None))
-      .toDF("engine", "quality")
-    val orderedN = Fallback.orderByHistory(engines, nullHist).map(_.name)
-    assert(orderedN == Seq("b", "a", "c", "d"))
-  }
-
   // ---------- x19 fast path equality ----------
 
   test("topNgramCharFractions234 is output-identical to the per-n general path") {
@@ -515,7 +487,7 @@ class Operators3Spec extends AnyFunSuite with BeforeAndAfterAll {
       .select(when(union === 0, lit(1.0))
         .otherwise(common.cast("double") / union.cast("double")))
       .collect().map(_.getDouble(0)).toSeq
-    val expJ = setPairs.map { case (a, b) => Dedup.jaccard(a.toSet, b.toSet) }
+    val expJ = setPairs.map { case (a, b) => DedupOracle.jaccard(a.toSet, b.toSet) }
     gotJ.zip(expJ).foreach { case (g, e) => assert(math.abs(g - e) < 1e-15) }
   }
 }

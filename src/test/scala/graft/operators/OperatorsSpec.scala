@@ -42,7 +42,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = Dedup.minHashNearDups(df, "doc_id", "text", p)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(x => (x._1, x._2)).toSeq
-    val expected = Dedup.bruteForceJaccardPairs(corpus, p.shingleSize, p.threshold)
+    val expected = DedupOracle.bruteForceJaccardPairs(corpus, p.shingleSize, p.threshold)
       .sortBy(x => (x._1, x._2))
     // LSH at 16 bands x 4 rows has >99.9% recall at jaccard>=0.9;
     // planted pairs are ~0.93 — all must be found, and every reported pair
@@ -52,9 +52,9 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(expectedHigh.subsetOf(gotPairs),
       s"missing high-sim pairs: ${expectedHigh -- gotPairs}")
     got.foreach { case (a, b, j) =>
-      val bf = Dedup.jaccard(
-        Dedup.shingles(corpus.find(_._1 == a).get._2, p.shingleSize),
-        Dedup.shingles(corpus.find(_._1 == b).get._2, p.shingleSize))
+      val bf = DedupOracle.jaccard(
+        DedupOracle.shingles(corpus.find(_._1 == a).get._2, p.shingleSize),
+        DedupOracle.shingles(corpus.find(_._1 == b).get._2, p.shingleSize))
       assert(math.abs(bf - j) < 1e-12)
       assert(j >= p.threshold)
     }

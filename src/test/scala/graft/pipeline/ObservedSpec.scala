@@ -44,28 +44,6 @@ class ObservedSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty, "unpersist must release the cache")
   }
 
-  test("assembleSorted (secondary-sort streaming) equals assemble (collect_list) exactly") {
-    val sp = spark; import sp.implicits._
-    import org.apache.spark.sql.functions._
-    val extracted = ExtractionJob.extract(
-      TranscriptGen.dataset(spark, 25).orderBy(rand(11)).as[graft.schema.Turn])
-    def snap(df: org.apache.spark.sql.DataFrame) = df
-      .select("conv_id", "n_turns", "full_text", "total_patterns", "first_turn", "last_turn")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3), r.getInt(4), r.getInt(5)))
-      .sortBy(_._1).toSeq
-    val viaAgg = snap(ExtractionJob.assemble(extracted)
-      .withColumn("total_patterns", col("total_patterns").cast("long")))
-    val viaSort = snap(ExtractionJob.assembleSorted(extracted))
-    assert(viaAgg == viaSort)
-    // avg compared with tolerance (different summation orders)
-    val a1 = ExtractionJob.assemble(extracted).select("conv_id", "avg_conf_delta")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val a2 = ExtractionJob.assembleSorted(extracted).select("conv_id", "avg_conf_delta")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    a1.foreach { case (k, v) => assert(math.abs(v - a2(k)) < 1e-9) }
-  }
-
   test("extractObserved: metrics collected during the consuming action match ground truth") {
     val sp = spark; import sp.implicits._
     val turns = TranscriptGen.dataset(spark, 12)

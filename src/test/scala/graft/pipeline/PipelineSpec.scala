@@ -206,7 +206,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(2, 5).foreach { k =>
       Fs.deleteIfExists(s"$outDir/manifests/part-$k.json")
     }
-    assert(Checkpoint.completedBuckets(outDir, numBuckets).size == numBuckets - 2)
 
     // resume run: only buckets 2 and 5 recomputed
     val run2 = Checkpoint.run(ds, outDir, numBuckets, runId = "run-2", groupSize = 3)
@@ -448,15 +447,16 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Fs.mkdirs(s"$backupDir/b1-old")
     Fs.copyFile(s"$backupDir/b1/backup.json", s"$backupDir/b1-old/backup.json")
     assert(Backup.listBackups(backupDir).map(_.backupId) == Seq("b1"))
-    // a crashed backup's .tmp staging dir is reaped once past retention
-    Fs.mkdirs(s"$backupDir/.dead.tmp/files")
-    Backup.cleanupOldBackups(backupDir, retentionMs = 1000L,
-      nowMs = System.currentTimeMillis() + 10000L)
-    assert(!Fs.exists(s"$backupDir/.dead.tmp"))
-    assert(Fs.exists(s"$backupDir/b1"), "most recent backup per source is always kept")
+    // a crashed backup's .tmp staging dir is invisible to the listing and
+    // reaped when its id is retried
+    Fs.mkdirs(s"$backupDir/.b2.tmp/files/stale")
+    assert(Backup.listBackups(backupDir).map(_.backupId) == Seq("b1"))
+    Backup.backup(outDir, 4, backupDir, "b2")
+    assert(!Fs.exists(s"$backupDir/.b2.tmp"))
+    assert(Backup.listBackups(backupDir).map(_.backupId) == Seq("b1", "b2"))
   }
 
-  test("backup/restore: full + incremental watermarks, hash validation, retention") {
+  test("backup/restore: full + incremental watermarks, hash validation, id reuse") {
     val outDir = fsTmp("graft-bk-src")
     val backupDir = fsTmp("graft-bk-dst")
     val ds = TranscriptGen.dataset(spark, 30)
@@ -507,22 +507,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!rBad.ok && rBad.corruptFiles.nonEmpty && rBad.filesRestored == 0)
     assert(!Fs.exists(s"$badDir/data"), "corrupt restore must write nothing")
 
-    // retention with chain protection: while the newest backup is the
-    // INCREMENTAL b3, its full base b1 must survive any window — deleting
-    // it would make b3 unrestorable
-    val deleted0 = Backup.cleanupOldBackups(backupDir, retentionMs = 0L,
-      nowMs = System.currentTimeMillis() + 100000)
-    assert(deleted0.isEmpty,
-      s"b1 is the full base of kept incremental b3 — must survive, deleted $deleted0")
-    assert(Backup.listBackups(backupDir).map(_.backupId).sorted == Seq("b1", "b3"))
-
-    // a fresh FULL backup supersedes the chain: now b1 AND b3 are deletable
     val b4 = Backup.backup(outDir, numBuckets, backupDir, "b4")
     assert(b4.mode == "full" && b4.buckets.sorted == (0 until numBuckets))
-    val deleted1 = Backup.cleanupOldBackups(backupDir, retentionMs = 0L,
-      nowMs = System.currentTimeMillis() + 100000)
-    assert(deleted1.sorted == Seq("b1", "b3"))
-    assert(Backup.listBackups(backupDir).map(_.backupId) == Seq("b4"))
 
     // reusing an id must FAIL, not silently replace a chain link; explicit
     // overwrite is the escape hatch
@@ -532,21 +518,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Backup.backup(outDir, numBuckets, backupDir, "b4",
       overwrite = true).mode == "full")
 
-    // per-source retention: a SECOND checkpoint store sharing this
-    // backupDir must keep its own most recent backup even when its only
-    // backup is past retention and the other source has a newer one —
-    // "keep the newest" is per sourceDir, not global
-    val outDir2 = fsTmp("graft-bk-src2")
-    Checkpoint.run(TranscriptGen.dataset(spark, 10), outDir2, numBuckets,
-      runId = "s1", groupSize = 4)
-    val c1 = Backup.backup(outDir2, numBuckets, backupDir, "c1",
-      nowMs = System.currentTimeMillis() - 1000000L)
-    assert(c1.buckets.nonEmpty)
-    val deleted2 = Backup.cleanupOldBackups(backupDir, retentionMs = 0L,
-      nowMs = System.currentTimeMillis() + 100000)
-    assert(deleted2.isEmpty,
-      s"c1 is its source's only backup — must survive, deleted $deleted2")
-    assert(Backup.listBackups(backupDir).map(_.backupId).sorted == Seq("b4", "c1"))
   }
 
   test("curation chain: stage lineage counts, resume, downstream-only invalidation, decontam") {
