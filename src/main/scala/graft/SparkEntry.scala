@@ -209,7 +209,7 @@ object SparkEntry {
 
     // ---- quality scoring ----
     "q13_quality" -> ((s, dir) => {
-      // factored qualityBucket: tokenize once, derive the three integer
+      // quality bucket: tokenize once, derive the three integer
       // features, then the ladder (which references each feature several
       // times) reads cheap attributes instead of re-splitting the text
       t(s, dir, "documents")

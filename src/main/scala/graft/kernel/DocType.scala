@@ -13,10 +13,9 @@ import java.util.regex.Pattern
 object DocType {
   import Py._
 
-  private def ps(rs: String*): Seq[Pattern] = rs.map(compile)
-
-  private val families: Seq[(String, Seq[Pattern])] = Seq(
-    "manifestacao_processual" -> ps(
+  /** Pattern sources per family, verbatim from the reference. */
+  private[kernel] val families: Seq[(String, Seq[String])] = Seq(
+    "manifestacao_processual" -> Seq(
       """manifestação""",
       """excelentíssimo""",
       """meritíssimo""",
@@ -25,7 +24,7 @@ object DocType {
       """requerido""",
       """vara.*cível""",
       """tribunal.*justiça"""),
-    "relatorio_administrador" -> ps(
+    "relatorio_administrador" -> Seq(
       """relatório.*administrador""",
       """recuperação.*judicial""",
       """administrador.*judicial""",
@@ -33,7 +32,7 @@ object DocType {
       """passivo.*ativo""",
       """oab.*\d+""",
       """irresignação"""),
-    "quadro_credores" -> ps(
+    "quadro_credores" -> Seq(
       """quadro.*geral.*credores""",
       """classificação.*credor""",
       """garantia.*real""",
@@ -58,9 +57,37 @@ object DocType {
     if (lits.isEmpty) "" else lits.maxBy(_.length)
   }
 
+  /** `s1.*s2(.*sk)*` as `(?m)^(?>.*?s1)(?>.*?s2)….*sk`: the same lines
+    * match, in time linear in the text. The verbatim form retries `.*`
+    * from every occurrence of `s1` to the end of its line, which is
+    * quadratic when `s1` recurs and the rest never follows. The rewrite
+    * tries each line once, from its start, committed to the earliest
+    * occurrence of each segment in turn. That is exact because every
+    * segment but the last has a fixed length, so an earlier end never
+    * rules out a later match. `.` and multiline `^` share Java's line
+    * terminators, so a line means the same to both forms.
+    */
+  private def linear(src: String): String = {
+    val segs = src.split("""\.\*""", -1)
+    if (segs.length == 1) src
+    else {
+      require(segs.init.forall(s => !s.exists("*+?{|(".contains(_))),
+        s"not a fixed-length middle segment in $src")
+      segs.init.map(s => s"(?>.*?$s)").mkString("(?m)^", "", ".*" + segs.last)
+    }
+  }
+
   private val familiesWithLits: Seq[(String, Seq[(Pattern, String)])] =
-    families.map { case (name, pats) =>
-      name -> pats.map(p => (p, requiredLiteral(p.pattern())))
+    families.map { case (name, srcs) =>
+      name -> srcs.map(src => (compile(linear(src)), requiredLiteral(src)))
+    }
+
+  /** Hits per family, in family order. */
+  private[kernel] def scores(lowered: String): Seq[(String, Int)] =
+    familiesWithLits.map { case (name, pats) =>
+      name -> pats.count { case (p, lit) =>
+        (lit.isEmpty || lowered.contains(lit)) && p.matcher(lowered).find()
+      }
     }
 
   def classify(text: String): String = {
@@ -68,14 +95,9 @@ object DocType {
     // convention, like Sections/Chunker): a null text row reaching
     // classifyConversations must not kill the task
     if (text == null) return Generic
-    val lowered = lower(text)
-    val scores = familiesWithLits.map { case (name, pats) =>
-      name -> pats.count { case (p, lit) =>
-        (lit.isEmpty || lowered.contains(lit)) && p.matcher(lowered).find()
-      }
-    }
-    val maxScore = scores.map(_._2).max
-    if (maxScore >= 2) scores.find(_._2 == maxScore).get._1
+    val hits = scores(lower(text))
+    val maxScore = hits.map(_._2).max
+    if (maxScore >= 2) hits.find(_._2 == maxScore).get._1
     else Generic
   }
 }

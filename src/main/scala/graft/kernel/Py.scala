@@ -31,7 +31,8 @@ object Py {
     * control-ish whitespace CPython recognizes (\t\n\v\f\r FS GS RS US NEL).
     */
   def isPySpace(c: Char): Boolean =
-    if (c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r' ||
+    if (c > ' ' && c < '\u0085') false // printable ASCII and C1 below NEL
+    else if (c == ' ' || c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r' ||
         (c >= '\u001c' && c <= '\u001f') || c == '\u0085') true
     else {
       val t = Character.getType(c)

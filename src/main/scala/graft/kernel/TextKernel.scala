@@ -126,18 +126,9 @@ final class TextKernel {
       None))
 
   // precompiled patterns for the cleanup stages
-  private val pWs = compile("""\s+""")
-  private val pMultiBreak = compile("""\n\s*\n""")
-  private val pMidWordBreak = compile("""([a-z])\n([a-z])""")
   private val pNonWord = compile("""[^\w]""")
   private val pStartPunct = compile("""^[^\w]*""")
   private val pEndPunct = compile("""[^\w]*$""")
-  private val pSpaceQuote = compile("""\s+\"""")
-  private val pQuoteSpace = compile("""\"\s+""")
-  private val pSpaceOpenParen = compile("""\s+\(""")
-  private val pOpenParenSpace = compile("""\(\s+""")
-  private val pSpaceCloseParen = compile("""\s+\)""")
-  private val pCloseParenSpace = compile("""\)\s+""")
   // Single-char confusion probes. The reference's regexes are
   // `\b\w*X\w*\b` (digit→alpha) and `\b\d*X\d*\b` (alpha→digit); `\b`
   // can never fall INSIDE a maximal `\w` run, so a match is always a
@@ -250,68 +241,53 @@ final class TextKernel {
   def processSafe(text: String): Option[KernelResult] =
     if (text == null || text.isEmpty) None else Some(process(text))
 
-  /** _clean_text (text_processor.py:315-330). */
-  def cleanText(text0: String): String = {
-    // FAST PATH (exact no-op proof): when the text contains no Category-C
-    // codepoint, no whitespace other than single interior ASCII spaces,
-    // and no edge space, every stage below is the identity — the category
-    // filter keeps everything, `\s+`→" " rewrites each single-space run
-    // to itself (Java \s under UNICODE_CHARACTER_CLASS is exactly the
-    // isPySpace set: \t \n \x0B \f \r \x1C-\x1F \x85 + Zs/Zl/Zp), strip
-    // finds no edge whitespace, and the \n-anchored subs see no \n. One
-    // branchy scan replaces four regex passes + a rebuild on the common
-    // already-clean row.
-    locally {
-      var i = 0
-      var clean = true
-      var prevSpace = false
-      while (clean && i < text0.length) {
-        val c = text0.charAt(i)
-        if (c == ' ') {
-          if (prevSpace || i == 0 || i == text0.length - 1) clean = false
-          prevSpace = true
-        } else if (c < 128) {
-          // ASCII shortcut: below U+0080 the only Category-C code points
-          // are the C0 controls and DEL, and the only isPySpace chars are
-          // \t \n \x0B \f \r \x1C-\x1F (all < 0x20) — one comparison
-          // replaces the isPySpace call + getType lookup on the hot path
-          prevSpace = false
-          if (c < 0x20 || c == 0x7F) clean = false
-        } else {
-          prevSpace = false
-          if (Py.isPySpace(c)) clean = false
-          else {
-            val t = Character.getType(c)
-            if (t == Character.CONTROL || t == Character.FORMAT ||
-              t == Character.SURROGATE || t == Character.PRIVATE_USE ||
-              t == Character.UNASSIGNED) clean = false
-          }
-        }
-        i += 1
-      }
-      if (clean) return text0
-    }
-    // iterate CODE POINTS, not UTF-16 units: Python's unicodedata.category
-    // sees an astral char (e.g. an emoji, category So) as one codepoint;
-    // charAt-wise iteration would see two SURROGATE (Cs) halves and
-    // wrongly strip it
-    val sb = new StringBuilder(text0.length)
+  /** _clean_text (text_processor.py:315-330), as one exact pass.
+    *
+    * The reference drops every Unicode category-C code point except `\n`
+    * and `\t`, collapses `\s+` to " ", strips, and then runs
+    * `\n\s*\n` → "\n\n" and `([a-z])\n([a-z])` → `\1 \2`. The collapse
+    * has already turned every `\n` into a space, so those two subs never
+    * match. What is left: drop the category-C code points (walking by code
+    * point, so a lone surrogate goes and an astral character stays), turn
+    * each whitespace run between two kept characters into one " ", and drop
+    * edge whitespace. A dropped control character does not split a run:
+    * "a \u0001 b" becomes "a b". Whitespace is Python's `str.isspace`; Java
+    * `\s` lacks U+001C-U+001F, but those are category C and never reach the
+    * collapse. The copy starts at the first character that changes, so
+    * clean input comes back as the same instance. Pinned against the
+    * verbatim sub chain by KernelPropertySpec.
+    */
+  def cleanText(text: String): String = {
+    val out = new Rewrite(text)
+    var started = false
+    var space = false // a whitespace run follows the last kept character
     var i = 0
-    while (i < text0.length) {
-      val cp = text0.codePointAt(i)
-      val t = Character.getType(cp)
-      val isCategoryC = t == Character.CONTROL || t == Character.FORMAT ||
-        t == Character.SURROGATE || t == Character.PRIVATE_USE ||
-        t == Character.UNASSIGNED
-      if (!isCategoryC || cp == '\n'.toInt || cp == '\t'.toInt) sb.appendAll(Character.toChars(cp))
-      i += Character.charCount(cp)
+    while (i < text.length) {
+      val c = text.charAt(i)
+      var next = i + 1
+      var keep = true
+      if (c < 0x80) {
+        // below U+0080 category C is the C0 controls and DEL, and the only
+        // whitespace that survives the filter is ' ', '\t' and '\n'
+        if (c == ' ' || c == '\t' || c == '\n') { keep = false; space = started }
+        else if (c < 0x20 || c == 0x7F) keep = false
+      } else {
+        val cp = text.codePointAt(i)
+        next = i + Character.charCount(cp)
+        val t = Character.getType(cp)
+        if (t == Character.CONTROL || t == Character.FORMAT ||
+          t == Character.SURROGATE || t == Character.PRIVATE_USE ||
+          t == Character.UNASSIGNED) keep = false
+        else if (isPySpace(c)) { keep = false; space = started }
+      }
+      if (keep) {
+        out.keep(i, next, space)
+        started = true
+        space = false
+      }
+      i = next
     }
-    var text = sb.toString
-    text = collapseWs(text)
-    text = strip(text)
-    text = subLiteral(pMultiBreak, "\n\n", text)
-    text = sub(pMidWordBreak, """\1 \2""", text)
-    text
+    out.result
   }
 
   /** _correct_confused_characters (text_processor.py:332-365). */
@@ -824,139 +800,49 @@ final class TextKernel {
       abbreviations.drop(i + 1).forall { case (later, _) => !folds.contains(later) }
     }
 
-  /** _format_text (text_processor.py:461-483). */
-  def formatText(text0: String): String = {
-    // literal prefilters: each sub's pattern requires the indicated char,
-    // so absence proves the sub is a no-op (semantics unchanged). For the
-    // punctuation pair the scan also proves the exact NO-OP case: both
-    // subs rewrite to the input when no whitespace precedes any punct
-    // (sub 1) and every punct is followed by exactly " " + non-space
-    // (sub 2 replaces punct + \s* with punct + " "). A punct as the LAST
-    // char is no-op-ELIGIBLE even though sub 2 would append a trailing
-    // space there: that space is consumed by none of the later subs
-    // (their patterns need a char after the whitespace, or rewrite
-    // "X space" back to itself), survives collapseWs as a single run,
-    // and the final strip removes it — both paths end identical
-    // (property-tested against the sub-only reference implementation).
-    var hasPunct = false
-    var punctNoop = true
-    var hasQuote = false
-    var hasOpen = false
-    var hasClose = false
-    val n = text0.length
-    var i = 0
-    while (i < n) {
-      (text0.charAt(i): @annotation.switch) match {
-        case '.' | ',' | ';' | ':' | '!' | '?' =>
-          hasPunct = true
-          if (punctNoop) {
-            if (i > 0 && isPySpace(text0.charAt(i - 1))) punctNoop = false
-            else if (i < n - 1) {
-              if (text0.charAt(i + 1) != ' ') punctNoop = false
-              else if (i + 2 < n && isPySpace(text0.charAt(i + 2))) punctNoop = false
-            }
-          }
-        case '"' => hasQuote = true
-        case '(' => hasOpen = true
-        case ')' => hasClose = true
-        case _ =>
-      }
-      i += 1
-    }
-    var text = text0
-    if (hasPunct && !punctNoop) {
-      // Fused equivalent of the two sequential subs, one pass, no regex:
-      //   sub 1 (`\s+([.,;:!?])` → `\1`) drops every maximal whitespace
-      //   run immediately followed by a punct (no match can start or end
-      //   mid-run, and the punct char class never overlaps `\s`);
-      //   sub 2 (`([.,;:!?])\s*` → `\1 `) then rewrites every punct plus
-      //   its trailing whitespace run to punct + one space.
-      // A run between two puncts is dropped by sub 1 and the gap rewritten
-      // by sub 2 — here the punct branch emits "p " and skips the run, and
-      // the next punct is handled on its own turn, producing the identical
-      // ". . " shape. Pinned against the verbatim sub-only reference by
-      // KernelPropertySpec.
-      @inline def isP(c: Char) =
-        c == '.' || c == ',' || c == ';' || c == ':' || c == '!' || c == '?'
-      val sb = new java.lang.StringBuilder(n + 8)
-      var j = 0
-      while (j < n) {
-        val c = text0.charAt(j)
-        if (isPySpace(c)) {
-          var k = j + 1
-          while (k < n && isPySpace(text0.charAt(k))) k += 1
-          if (!(k < n && isP(text0.charAt(k)))) sb.append(text0, j, k)
-          j = k
-        } else if (isP(c)) {
-          sb.append(c).append(' ')
-          j += 1
-          while (j < n && isPySpace(text0.charAt(j))) j += 1
-        } else { sb.append(c); j += 1 }
-      }
-      text = sb.toString
-    }
-    if (hasQuote) {
-      text = subLiteral(pSpaceQuote, " \"", text)
-      text = subLiteral(pQuoteSpace, "\" ", text)
-    }
-    if (hasOpen) {
-      text = subLiteral(pSpaceOpenParen, " (", text)
-      text = subLiteral(pOpenParenSpace, "(", text)
-    }
-    if (hasClose) {
-      text = subLiteral(pSpaceCloseParen, ")", text)
-      text = subLiteral(pCloseParenSpace, ") ", text)
-    }
-    // the reference's last sub, `\n\s*\n\s*\n` → "\n\n", runs after this
-    // collapse has turned every `\s` run into one space: it never matches
-    strip(collapseWs(text))
-  }
-
-  /** `sub(pWs, " ", text)` with an exact no-op fast path: when every
-    * whitespace char is a single interior ASCII space, each `\s+` run is
-    * a lone " " rewritten to itself (isPySpace is exactly Java `\s` under
-    * UNICODE_CHARACTER_CLASS), so the regex pass and its allocation are
-    * skipped. Runs on every formatText call, hence worth the scan.
+  /** _format_text (text_processor.py:461-483), as one exact pass.
+    *
+    * The reference runs `\s+([.,;:!?])` → `\1`, `([.,;:!?])\s*` → `\1 `,
+    * six quote/paren subs, `\s+` → " ", `\n\s*\n\s*\n` → "\n\n" and a
+    * strip. The last sub never matches: the collapse before it has turned
+    * every `\n` into a space. The collapse also absorbs `\s+"`, `"\s+`,
+    * `\s+\(` and `\)\s+`, which only map a non-empty run to " ". What is
+    * left decides, for two consecutive non-whitespace characters `a` and
+    * `b` with a whitespace run `r` (maybe empty) between them, whether one
+    * " " goes between: iff `a` is punctuation or (`r` is non-empty and `b`
+    * is not punctuation), and `a` is not '(' and `b` is not ')'. Edge
+    * whitespace goes. Whitespace is Python's `str.isspace`, as in the
+    * reference. Pinned against the verbatim sub chain by KernelPropertySpec.
     */
-  private def collapseWs(text: String): String = {
+  def formatText(text: String): String = {
+    @inline def isPunct(c: Char) =
+      c == '.' || c == ',' || c == ';' || c == ':' || c == '!' || c == '?'
+    val out = new Rewrite(text)
+    var prev = -1 // index of the last non-whitespace character
     var i = 0
-    var prevSpace = false
     while (i < text.length) {
       val c = text.charAt(i)
-      if (c == ' ') {
-        if (prevSpace) return subLiteral(pWs, " ", text)
-        prevSpace = true
-      } else {
-        prevSpace = false
-        if (isPySpace(c)) return subLiteral(pWs, " ", text)
+      if (!isPySpace(c)) {
+        val space = prev >= 0 && {
+          val a = text.charAt(prev)
+          (isPunct(a) || (i > prev + 1 && !isPunct(c))) && a != '(' && c != ')'
+        }
+        out.keep(i, i + 1, space)
+        prev = i
       }
       i += 1
     }
-    text
+    out.result
   }
 
   private val keepShortSet = Set(".", "!", "?", ":", ";")
 
   /** _validate_consistency (text_processor.py:485-496). */
-  def validateConsistency(text: String): String = {
-    // FAST PATH: with no '\n' there is exactly one line, and with no edge
-    // whitespace strip is the identity — the filter then either keeps the
-    // whole text (returned as-is, no split/rebuild) or drops it. This is
-    // the steady state: formatText's whitespace collapse precedes this
-    // stage, so multi-line input only survives via the \n\n escape.
-    // (n > 4 implies > 2 code points even if every one is astral.)
-    val n = text.length
-    if (n > 0 && text.indexOf('\n') < 0 &&
-      !Py.isPySpace(text.charAt(0)) && !Py.isPySpace(text.charAt(n - 1))) {
-      val keep = n > 4 || text.codePointCount(0, n) > 2 ||
-        keepShortSet.contains(text)
-      return if (keep) text else ""
-    }
+  def validateConsistency(text: String): String =
     splitOn(text, '\n')
       .map(strip)
       .filter(l => pyLen(l) > 2 || keepShortSet.contains(l))
       .mkString("\n")
-  }
 
   /** _estimate_confidence_improvement (text_processor.py:498-511). */
   def estimateConfidenceImprovement(
@@ -1077,4 +963,28 @@ object Validators {
       else pDomain.matcher(domain).lookingAt()
     }
   }
+}
+
+/** The output of a pass that keeps some of `text`'s characters in order,
+  * each optionally preceded by one " ". No copy is made until the output
+  * departs from the input, so a pass that changes nothing returns `text`
+  * itself.
+  */
+private final class Rewrite(text: String) {
+  private var sb: java.lang.StringBuilder = null
+  private var kept = 0 // while sb == null, the output so far is text[0, kept)
+
+  /** Appends `text[i, next)`, preceded by one " " if `space`. */
+  def keep(i: Int, next: Int, space: Boolean): Unit = {
+    if (sb == null) {
+      val same = if (space) kept == i - 1 && text.charAt(kept) == ' ' else kept == i
+      if (same) { kept = next; return }
+      sb = new java.lang.StringBuilder(text.length + 16).append(text, 0, kept)
+    }
+    if (space) sb.append(' ')
+    sb.append(text, i, next)
+  }
+
+  /** `substring(0, length)` is `text` itself. */
+  def result: String = if (sb != null) sb.toString else text.substring(0, kept)
 }

@@ -26,11 +26,6 @@ object TextAnalysis {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** distinct-token ratio denominator-safe; returned as exact ints for
-    * oracle parity (ratios recomputed by consumers)
-    */
-  def distinctTokenCount(text: Column): Column = size(array_distinct(tokens(text)))
-
   // Small marker-word inventories per language. Counting OCCURRENCES (not
   // set-intersect) keeps Spark and DuckDB's `list_filter` in exact
   // agreement.
@@ -103,16 +98,10 @@ object TextAnalysis {
   /** Heuristic quality bucket over exact integer features — the text-domain
     * analog of the reference's image-quality ladder
     * (quality_detector.py:331-380: score thresholds 0.8/0.6/0.4/0.2 →
-    * excellent/good/fair/poor/very_poor).
-    */
-  def qualityBucket(text: Column): Column =
-    qualityBucketOf(length(text), tokenCount(text), distinctTokenCount(text))
-
-  /** The bucket ladder over pre-projected integer features — project
-    * (length, tokenCount, distinctTokenCount) once and feed them here when
-    * several consumers share the tokenization (the ladder references each
-    * feature several times, so inlined text features re-split per
-    * reference).
+    * excellent/good/fair/poor/very_poor). Project the features (length,
+    * token count, distinct token count) once and feed them here: the
+    * ladder references each feature several times, so inlined text
+    * features would re-split per reference.
     */
   def qualityBucketOf(nChars: Column, nTokens: Column, nDistinct: Column): Column = {
     // integer-arithmetic score: 0..10, exact in any engine

@@ -7,11 +7,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** No public API that only tests call: every public `def`, `class`,
-  * `object` or `trait` in `src/main` must be referenced from `src/main`,
-  * the `.sc` scripts in `tools` or `perfbench/scala` — a reference from
-  * `src/test` alone means the code runs in no job, query, tool script or
-  * benchmark.
+/** No public API that only tests call, and none that nothing calls: every
+  * public `def`, `class`, `object` or `trait` in `src/main` must be
+  * referenced from `src/main`, the `.sc` scripts in `tools` or
+  * `perfbench/scala` — a name referenced from `src/test` alone, or from
+  * nowhere, runs in no job, query, tool script or benchmark.
   *
   * A name is checked only when it occurs in exactly one `src/main` file,
   * so a reference can be attributed to its definition without a compiler.
@@ -29,7 +29,7 @@ class ApiSurfaceSpec extends AnyFunSuite {
     // documented library features no job runs yet
     "Backup", "Daily", "Weekly", "loop",
     "cosineTopK", "nearestCentroids", "appendToLshIndex", "appendToIvfIndex",
-    "langId", "qualityBucket", "deterministicSample", "ImageIODecoder")
+    "langId", "deterministicSample", "ImageIODecoder")
 
   private def scalaFiles(dir: String, ext: String): Seq[Path] = {
     val root = Paths.get(dir)
@@ -109,19 +109,19 @@ class ApiSurfaceSpec extends AnyFunSuite {
           m.group(1).contains("protected") || m.group(1).contains("override"))
         .map(m => m.group(2) -> file)
     }.distinct
-    val testOnly = publicDefs.collect {
+    val unused = publicDefs.collect {
       case (name, file)
           if !allowed(name) &&
             main.values.count(occurrences(_, name) > 0) == 1 &&
             occurrences(main(file), name) ==
               Definition.findAllMatchIn(main(file)).count(_.group(2) == name) &&
-            !production.exists(occurrences(_, name) > 0) &&
-            tests.exists(occurrences(_, name) > 0) =>
-        s"${file.getFileName}: $name"
+            !production.exists(occurrences(_, name) > 0) =>
+        val from = if (tests.exists(occurrences(_, name) > 0)) "only from src/test" else "from nowhere"
+        s"${file.getFileName}: $name (referenced $from)"
     }.sorted
-    if (testOnly.nonEmpty)
-      fail("public API referenced only from src/test (wire it into a job or delete it):\n  " +
-        testOnly.mkString("\n  "))
+    if (unused.nonEmpty)
+      fail("public API no production code references (wire it into a job or delete it):\n  " +
+        unused.mkString("\n  "))
   }
 
   test("comment stripping keeps code and literals, drops comments") {

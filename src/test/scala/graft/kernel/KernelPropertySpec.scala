@@ -68,19 +68,72 @@ class KernelPropertySpec extends AnyFunSuite {
     assert(t3 == "o ação 1 123. 456. 789-09 dr. . .")
   }
 
-  test("formatText's punct no-op fast path matches the sub-only reference") {
-    // the original formatText body with UNCONDITIONAL subs — the ground
-    // truth the fast path must reproduce byte-for-byte (patterns verbatim)
-    val pWs = Py.compile("""\s+""")
-    val pSpaceBeforePunct = Py.compile("""\s+([.,;:!?])""")
-    val pPunctSpace = Py.compile("""([.,;:!?])\s*""")
-    val pSpaceQuote = Py.compile("""\s+\"""")
-    val pQuoteSpace = Py.compile("""\"\s+""")
-    val pSpaceOpenParen = Py.compile("""\s+\(""")
-    val pOpenParenSpace = Py.compile("""\(\s+""")
-    val pSpaceCloseParen = Py.compile("""\s+\)""")
-    val pCloseParenSpace = Py.compile("""\)\s+""")
-    val pTripleBreak = Py.compile("""\n\s*\n\s*\n""")
+  // Python's `\s` and `str.isspace`; Java's `\s` under
+  // UNICODE_CHARACTER_CLASS lacks U+001C-U+001F
+  private val pyWs = """[\s\x1C-\x1F]"""
+
+  // short random strings over whitespace, punctuation, quotes, parens and
+  // control/format characters — where the whitespace stages' rules live
+  private val wsSamples: Seq[String] = {
+    val alphabet = "ab.,;:!?\"() \t\n\u0001\u000B\r\u001C\u001F\u0085\u00A0\u2003\u200B\u2028"
+    val rnd = new scala.util.Random(7)
+    (0 until 20000).map(_ => Seq.fill(rnd.nextInt(13))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+  }
+
+  test("cleanText matches the verbatim filter and sub chain") {
+    // the reference's body: category-C filter by code point (keep \n \t),
+    // then the four subs and the strip, patterns verbatim
+    val pWs = Py.compile(pyWs + "+")
+    val pMultiBreak = Py.compile("\n" + pyWs + "*\n")
+    val pMidWordBreak = Py.compile("""([a-z])\n([a-z])""")
+    def ref(t0: String): String = {
+      val kept = t0.codePoints().toArray.filter { cp =>
+        val t = Character.getType(cp)
+        cp == '\n' || cp == '\t' ||
+        !(t == Character.CONTROL || t == Character.FORMAT || t == Character.SURROGATE ||
+          t == Character.PRIVATE_USE || t == Character.UNASSIGNED)
+      }
+      var text = new String(kept, 0, kept.length)
+      text = Py.subLiteral(pWs, " ", text)
+      text = Py.strip(text)
+      text = Py.subLiteral(pMultiBreak, "\n\n", text)
+      Py.sub(pMidWordBreak, """\1 \2""", text)
+    }
+    // isPySpace is exactly the references' whitespace class
+    val ws = Py.compile(pyWs)
+    (0 to 0xFFFF).foreach { c =>
+      assert(Py.isPySpace(c.toChar) == ws.matcher(c.toChar.toString).matches(),
+        f"isPySpace diverged at U+$c%04X")
+    }
+    val kernel = new TextKernel
+    val edges = Seq(
+      "", " ", "a\u0001b", "a\u007Fb", "ab cd", "a \u0001 b", "a\u0001 \u0001b",
+      "\u0001 a", "a \u0001", "a\n\nb", "a\nb", "a \n \n b", "\ta\t", "a\r\nb",
+      "a\u000B\u000Cb", "a\u001Cb", "a\u0085b", "a\u00A0\u2003b", "a\u200Bb",
+      "a\u2028b", "a\u2029\u2029b", "\uD800", "a\uDC00b", "\uDC00\uD800", "🙂 🙂",
+      "a \uD83D b", "\uE000x", "\u0378", "ação  日本語")
+    (edges ++ wsSamples ++ corpus).foreach { t =>
+      val got = kernel.cleanText(t)
+      assert(got == ref(t), s"cleanText diverged on: ${t.take(80)}")
+      assert(kernel.cleanText(got) eq got, s"clean input was copied: ${got.take(80)}")
+    }
+    assert(kernel.cleanText("a\u0001b") == "ab")
+    assert(kernel.cleanText("a\u007Fb") == "ab")
+    assert(kernel.cleanText("ab cd") == "ab cd")
+  }
+
+  test("formatText matches the verbatim sub chain") {
+    // the reference's body with every sub unconditional, patterns verbatim
+    val pWs = Py.compile(pyWs + "+")
+    val pSpaceBeforePunct = Py.compile(pyWs + "+([.,;:!?])")
+    val pPunctSpace = Py.compile("([.,;:!?])" + pyWs + "*")
+    val pSpaceQuote = Py.compile(pyWs + "+\"")
+    val pQuoteSpace = Py.compile("\"" + pyWs + "+")
+    val pSpaceOpenParen = Py.compile(pyWs + "+\\(")
+    val pOpenParenSpace = Py.compile("\\(" + pyWs + "+")
+    val pSpaceCloseParen = Py.compile(pyWs + "+\\)")
+    val pCloseParenSpace = Py.compile("\\)" + pyWs + "+")
+    val pTripleBreak = Py.compile("\n" + pyWs + "*\n" + pyWs + "*\n")
     def ref(t0: String): String = {
       var text = t0
       text = Py.sub(pSpaceBeforePunct, """\1""", text)
@@ -100,14 +153,19 @@ class KernelPropertySpec extends AnyFunSuite {
       "", ".", ". ", "a.", "a. ", "a.b", "a. b", "a.  b", "a .b", "a . b",
       "a.\nb", "a..", "a.. b", "a,;x", "a, b. c! d? e: f; g.",
       "end with quote. \"", "(a. b)", "( a.b )", "\"a\" . b", "a...",
-      "x.  ", "x. .", "tab.\tb", "nbsp. b", "a.b. c.d.", "á. ç.",
+      "x.  ", "x. .", "tab.\tb", "nbsp.\u00A0b", "a.b. c.d.", "á. ç.",
       "12:34", "12:34:56", "123.456.789-09", "a . . b", "a \t. b",
       ". . ", "a.\t\n.b", ",;:!?.", " , ; ", "R$ 1.500,00", "x:  :y",
+      "( )", "()", "(.)", "( . )", ".(", ") (", "a ( b ) c", "\" \"", "a\"b",
       // triple breaks: the reference's last sub runs after the collapse
-      "a\n\n\nb", "a\n \n\t\nb", "\n\n\n", "a.\n\n\n(b)")
-    (edges ++ corpus).foreach { t =>
-      assert(kernel.formatText(t) == ref(t),
-        s"formatText fast path diverged on: ${t.take(80)}")
+      "a\n\n\nb", "a\n \n\t\nb", "\n\n\n", "a.\n\n\n(b)",
+      // U+001C-U+001F: whitespace to Python, not to Java's \s
+      "a\u001C.", "(\u001Fa\u001E)", "x\u001D\"y")
+    val cleaned = corpus.map(kernel.cleanText)
+    (edges ++ wsSamples ++ corpus ++ cleaned).foreach { t =>
+      val got = kernel.formatText(t)
+      assert(got == ref(t), s"formatText diverged on: ${t.take(80)}")
+      assert(kernel.formatText(got) eq got, s"formatted input was copied: ${got.take(80)}")
     }
   }
 
@@ -331,29 +389,6 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("validateConsistency fast path matches the split-strip-filter reference") {
-    val keepShort = Set(".", "!", "?", ":", ";")
-    def ref(text: String): String =
-      Py.splitOn(text, '\n').map(Py.strip)
-        .filter(l => Py.pyLen(l) > 2 || keepShort.contains(l))
-        .mkString("\n")
-    val kernel = new TextKernel
-    val edges = Seq(
-      "", ".", "!", "?", ":", ";", ",", "ab", "abc", "ab.", "a b",
-      " abc", "abc ", " . ", ".\n.", "a\nb\nc", "long line here",
-      "🙂🙂", "🙂🙂🙂", "a ", " a", "x\ny lines", "tab\tend\t",
-      "\n", "\n\n", "a\n", "\na")
-    (edges ++ corpus).foreach { t =>
-      assert(kernel.validateConsistency(t) == ref(t),
-        s"validateConsistency fast path diverged on: ${t.take(80)}")
-    }
-    // cleanText's ASCII shortcut: C0 controls and DEL must still force the
-    // rebuild path (i.e. get stripped), printable ASCII must not
-    assert(kernel.cleanText("a\u0001b") == "ab")
-    assert(kernel.cleanText("a\u007Fb") == "ab")
-    assert(kernel.cleanText("ab cd") == "ab cd")
-  }
-
   test("identify's literal prefilter is a sound necessary condition") {
     // the parser derives the expected literals for the inventory's shapes
     assert(SpanTemplates.requiredLiteralCI("""nota\s+fiscal""") == "fiscal")
@@ -447,6 +482,43 @@ class KernelPropertySpec extends AnyFunSuite {
   test("DocType.classify degrades null to the generic family (kernel null convention)") {
     assert(DocType.classify(null) == DocType.Generic)
     assert(DocType.classify("") == DocType.Generic)
+  }
+
+  test("DocType.classify's family scores match the verbatim patterns") {
+    val verbatim = DocType.families.map { case (name, srcs) => name -> srcs.map(Py.compile) }
+    def ref(lowered: String): Seq[(String, Int)] =
+      verbatim.map { case (name, ps) => name -> ps.count(_.matcher(lowered).find()) }
+    // every pattern's segments, split and recombined across line
+    // terminators (Java's `.` stops at \n, \r, U+0085, U+2028, U+2029)
+    val words = DocType.families.flatMap(_._2).flatMap(_.split("""\.\*""")).map {
+      case "n[uú]mero" => "número"
+      case """\d+""" => "42"
+      case w => w
+    }.distinct :+ "numero"
+    val seps = Seq(" ", "", "x", "\n", "\r", "\r\n", "\u0085", "\u2028", "\u2029", " 7 ")
+    val rnd = new scala.util.Random(11)
+    val texts = (0 until 3000).map { _ =>
+      Seq.fill(1 + rnd.nextInt(7))(
+        words(rnd.nextInt(words.length)) + seps(rnd.nextInt(seps.length))).mkString
+    } ++ Seq("processo\r\nnúmero", "processo número", "oab\u2028 1", "oab x 1",
+      "quadro\ngeral credores", "quadro geral\u0085credores", "quadro credores geral",
+      "garantiareal", "valor crédito\nvalor", "vara cível tribunal justiça")
+    texts.foreach { t =>
+      val lowered = Py.lower(t)
+      assert(DocType.scores(lowered) == ref(lowered), s"DocType scores diverged on: $t")
+    }
+  }
+
+  test("DocType.classify is linear on a recurring first segment with no second") {
+    // the verbatim `processo.*n[uú]mero` retried `.*` to the end of the
+    // line from every "processo": 70 s on this input on a 4-vCPU VM
+    Seq("processo ", "tribunal ").foreach { w =>
+      val text = w * 32000
+      val t0 = System.nanoTime()
+      assert(DocType.classify(text) == DocType.Generic)
+      val seconds = (System.nanoTime() - t0) / 1e9
+      assert(seconds < 1.0, f"classify took $seconds%.2f s on ${text.length} chars of '$w'")
+    }
   }
 
   test("sections/row-extractors never throw and produce well-formed output") {
