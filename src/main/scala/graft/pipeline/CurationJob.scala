@@ -108,22 +108,19 @@ object CurationJob {
     * an identity even if the files changed between them — exactly the
     * stale resume the fingerprint exists to prevent (and a job that
     * cannot list its input cannot read it either).
+    *
+    * The listing goes through [[Fs]], like every manifest read, so it
+    * uses the active session's Hadoop configuration.
     */
   def inputIdentity(spark: SparkSession, input: String): String = {
     if (input.isEmpty || !input.contains("/")) return input
     try {
-      val p = new org.apache.hadoop.fs.Path(input)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var acc = 0L
-      var n = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        acc ^= TranscriptGen.sm64(f.getPath.toString.hashCode.toLong ^
+      val files = Fs.fileStatuses(input)
+      val h = files.foldLeft(0L) { (acc, f) =>
+        acc ^ TranscriptGen.sm64(f.getPath.toString.hashCode.toLong ^
           (f.getLen * 0x9E3779B97F4A7C15L) ^ f.getModificationTime)
-        n += 1
       }
-      s"$input@n=$n,h=${java.lang.Long.toHexString(acc)}"
+      s"$input@n=${files.size},h=${java.lang.Long.toHexString(h)}"
     } catch {
       case scala.util.control.NonFatal(e) =>
         throw new java.io.IOException(

@@ -3,7 +3,7 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Options, Path => HPath}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, FileUtil, Options, Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
@@ -16,12 +16,20 @@ import org.json4s.jackson.Serialization
   * src/utils/cache_manager.py:79-97 assumed one local disk; a Spark
   * deployment cannot).
   *
-  * Commit semantics by filesystem:
-  *   - HDFS / local `file://`: `writeAtomic` is tmp + atomic rename
-  *     (`FileContext.rename(OVERWRITE)`), the strongest form — a reader
-  *     sees the old manifest or the new one, never a partial file.
-  *   - Object stores without an `AbstractFileSystem` binding (e.g. s3a):
-  *     falls back to delete + rename (copy-based on S3). The window only
+  * Commit semantics by filesystem — `writeAtomic` writes a tmp file
+  * next to `dest`, then renames it into place:
+  *   - `dest` absent (the first commit of a bucket or stage): a plain
+  *     `FileSystem.rename`, atomic on HDFS and under POSIX `rename(2)`.
+  *     It fails rather than replaces when `dest` appeared meanwhile, and
+  *     then the overwrite rename below takes over.
+  *   - `dest` present (a stale manifest re-committed): HDFS / local
+  *     `file://` use `FileContext.rename(OVERWRITE)`, so a reader sees the
+  *     old manifest or the new one, never a partial file. It is kept off
+  *     the first-commit path because it reads the link status of both
+  *     paths and of their `.crc` sidecars, and on a local filesystem
+  *     without `libhadoop` each such read forks a process.
+  *   - Object stores without an `AbstractFileSystem` binding (e.g. s3a)
+  *     replace by delete + rename (copy-based on S3). The window only
   *     ever exposes "manifest ABSENT", and every reader here treats a
   *     missing manifest as "not committed → recompute", so crash safety
   *     degrades gracefully: worst case is recomputing a completed stage,
@@ -29,6 +37,13 @@ import org.json4s.jackson.Serialization
   *     object, so a manifest is still never read half-written; for
   *     exactly-once commit markers on S3 use conditional-put via a
   *     committer — documented, out of engine scope.)
+  *
+  * Listings walk `listStatus` one directory at a time instead of
+  * `listFiles(p, true)`: the latter wraps every file in a
+  * `LocatedFileStatus`, whose constructor reads the permission, owner and
+  * group — on a local filesystem without `libhadoop` one forked `ls` per
+  * file. The walk yields the same files in the same order (depth-first,
+  * checksum sidecars skipped by the checksummed filesystem's listing).
   *
   * Paths are plain strings (optionally scheme-qualified, e.g.
   * `file:///tmp/x`, `hdfs://nn/x`); the Hadoop configuration comes from
@@ -50,10 +65,12 @@ object Fs {
 
   def mkdirs(s: String): Unit = { val p = hpath(s); fsOf(p).mkdirs(p) }
 
-  def isDirectory(s: String): Boolean = {
-    val p = hpath(s); val fs = fsOf(p)
-    fs.exists(p) && fs.getFileStatus(p).isDirectory
-  }
+  /** `p`'s status, or None if absent — one lookup, where `exists` and
+    * then `getFileStatus` would make two.
+    */
+  private def statusOf(p: HPath): Option[FileStatus] =
+    try Some(fsOf(p).getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => None }
 
   def fileSize(s: String): Long = { val p = hpath(s); fsOf(p).getFileStatus(p).getLen }
 
@@ -87,7 +104,10 @@ object Fs {
     }
   }
 
-  /** Write `content` durably at `dest` via tmp + rename-overwrite. */
+  /** Write `content` durably at `dest` via tmp + rename: a plain rename
+    * into an absent `dest`, the overwrite rename over an existing one or
+    * when the plain rename fails (see object doc).
+    */
   def writeAtomic(dest: String, content: String): Unit = {
     val d = hpath(dest); val fs = fsOf(d)
     if (d.getParent != null) fs.mkdirs(d.getParent)
@@ -95,7 +115,7 @@ object Fs {
     val out = fs.create(tmp, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    renameOverwrite(tmp.toString, dest)
+    if (fs.exists(d) || !fs.rename(tmp, d)) renameOverwrite(tmp.toString, dest)
   }
 
   def readString(s: String): Option[String] = {
@@ -125,33 +145,36 @@ object Fs {
   def readJson[A: Manifest](path: String): Option[A] =
     readString(path).map(Serialization.read[A](_))
 
-  /** Total bytes of regular files under `dir` (recursive; 0 if absent).
-    * One recursive listing — on object stores this is a flat LIST call,
-    * not a per-directory walk.
+  /** Total bytes of regular files under `dir` (recursive; 0 if absent),
+    * one LIST per directory.
     */
-  def dirBytes(dir: String): Long = {
-    val p = hpath(dir); val fs = fsOf(p)
-    if (!fs.exists(p)) 0L
-    else if (fs.getFileStatus(p).isFile) fs.getFileStatus(p).getLen
-    else {
-      var acc = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) acc += it.next().getLen
-      acc
+  def dirBytes(dir: String): Long =
+    statusOf(hpath(dir)) match {
+      case None => 0L
+      case Some(st) if st.isFile => st.getLen
+      case Some(_) => fileStatuses(dir).map(_.getLen).sum
     }
-  }
 
   /** Regular files under `p` (recursive), or `p` itself if a file. */
   def listFilesRecursive(s: String): Seq[String] = {
-    val p = hpath(s); val fs = fsOf(p)
-    if (!fs.exists(p)) Seq.empty
-    else if (fs.getFileStatus(p).isFile) Seq(p.toString)
-    else {
-      val buf = scala.collection.mutable.ListBuffer.empty[String]
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) buf += it.next().getPath.toString
-      buf.toSeq
+    val p = hpath(s)
+    statusOf(p) match {
+      case None => Seq.empty
+      case Some(st) if st.isFile => Seq(p.toString)
+      case Some(_) => fileStatuses(s).map(_.getPath.toString)
     }
+  }
+
+  /** Statuses of the regular files at or under `s`, depth-first in
+    * listing order — what `fs.listFiles(s, true)` yields, from one
+    * `listStatus` per directory (see the object doc). Throws
+    * `FileNotFoundException` if `s` is absent.
+    */
+  private[pipeline] def fileStatuses(s: String): Seq[FileStatus] = {
+    val p = hpath(s); val fs = fsOf(p)
+    def walk(dir: HPath): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap(st => if (st.isFile) Seq(st) else walk(st.getPath))
+    walk(p)
   }
 
   /** Immediate subdirectory NAMES of `dir` (empty if absent). */

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{functions, SparkSession}
 import org.json4s._
 import org.scalatest.BeforeAndAfterAll
@@ -389,6 +391,91 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
           "fedcba9876543210fedcba9876543210", 5120L)),
       Seq(Backup.BucketIdentity(2, "r1@1700000000000@41@5120"),
         Backup.BucketIdentity(3, "r\"2@1700000000001@7@900")))))
+  }
+
+  /** The files `fs.listFiles(s, true)` yields: the listing `Fs` and
+    * `CurationJob.inputIdentity` made before they walked `listStatus`.
+    */
+  private def listFilesReference(s: String): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
+    val p = Fs.hpath(s)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val buf = scala.collection.mutable.ListBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
+    while (it.hasNext) buf += it.next()
+    buf.toSeq
+  }
+
+  /** `CurationJob.inputIdentity` as computed from the `listFiles` loop. */
+  private def inputIdentityReference(input: String): String = {
+    var acc = 0L
+    val files = listFilesReference(input)
+    files.foreach { f =>
+      acc ^= TranscriptGen.sm64(f.getPath.toString.hashCode.toLong ^
+        (f.getLen * 0x9E3779B97F4A7C15L) ^ f.getModificationTime)
+    }
+    s"$input@n=${files.size},h=${java.lang.Long.toHexString(acc)}"
+  }
+
+  test("Fs listings equal the listFiles walk on a nested partitioned store") {
+    val dir = fsTmp("graft-fs-list") + "/store"
+    spark.range(60).selectExpr("id", "id % 3 AS a", "id % 2 AS b")
+      .write.partitionBy("a", "b").parquet(dir)
+    val onDisk = {
+      val s = Files.walk(Paths.get(dir.stripPrefix("file://")))
+      try s.iterator().asScala.map(_.getFileName.toString).toList finally s.close()
+    }
+    assert(onDisk.contains("b=1") && onDisk.contains("_SUCCESS") &&
+      onDisk.exists(_.endsWith(".crc")), s"store lacks nested dirs or sidecars: $onDisk")
+
+    val ref = listFilesReference(dir)
+    assert(ref.exists(_.getPath.getName == "_SUCCESS"))
+    assert(!ref.exists(_.getPath.getName.endsWith(".crc")))
+    assert(Fs.dirBytes(dir) == ref.map(_.getLen).sum)
+    val listed = Fs.listFilesRecursive(dir)
+    assert(listed.size == ref.size && listed.toSet == ref.map(_.getPath.toString).toSet)
+    assert(CurationJob.inputIdentity(spark, dir) == inputIdentityReference(dir))
+
+    // a single file: its own bytes, itself, and the listFiles identity
+    val file = listed.find(_.endsWith(".parquet")).get
+    assert(Fs.dirBytes(file) == listFilesReference(file).map(_.getLen).sum)
+    assert(Fs.listFilesRecursive(file) == Seq(file))
+    assert(CurationJob.inputIdentity(spark, file) == inputIdentityReference(file))
+
+    // a missing path: 0 bytes, no files, and an identity that fails loudly
+    val missing = s"$dir/absent"
+    assert(Fs.dirBytes(missing) == 0L)
+    assert(Fs.listFilesRecursive(missing) == Seq.empty)
+    intercept[java.io.IOException] { CurationJob.inputIdentity(spark, missing) }
+  }
+
+  test("writeAtomic commits into absent paths and over existing files") {
+    val root = fsTmp("graft-fs-commit")
+    def names(dir: String): Set[String] =
+      Option(new java.io.File(Fs.hpath(dir).toUri.getPath).list()).map(_.toSet).getOrElse(Set.empty)
+
+    // into an absent path whose parent is absent too
+    val fresh = s"$root/new/deeper/m.json"
+    Fs.writeAtomic(fresh, """{"v":1}""")
+    assert(Fs.readString(fresh).contains("""{"v":1}"""))
+    assert(names(s"$root/new/deeper") == Set("m.json", ".m.json.crc"))
+
+    // over an existing file: the new, longer content reads back through
+    // the checksummed filesystem (a stale .crc would fail the read)
+    val content = """{"v":2,"pad":"""" + "x" * 600 + "\"}"
+    Fs.writeAtomic(fresh, content)
+    assert(Fs.readString(fresh).contains(content))
+    assert(!Fs.md5(fresh).startsWith("unreadable:"))
+    assert(names(s"$root/new/deeper") == Set("m.json", ".m.json.crc"))
+
+    // re-committing every bucket of a store under a new configHash
+    // replaces each existing manifest
+    val outDir = s"$root/store"
+    val ds = TranscriptGen.dataset(spark, 8)
+    Checkpoint.run(ds, outDir, 2, runId = "c-1", groupSize = 2, configHash = "v1")
+    val run2 = Checkpoint.run(ds, outDir, 2, runId = "c-2", groupSize = 2, configHash = "v2")
+    assert(run2.map(_.partId).sorted == Seq(0, 1))
+    run2.foreach(m => assert(Checkpoint.readManifest(outDir, m.partId).contains(m)))
+    assert(names(s"$outDir/manifests") ==
+      Set("part-0.json", ".part-0.json.crc", "part-1.json", ".part-1.json.crc"))
   }
 
   test("readResult reads a store mixing all-nullable and required-column buckets") {
