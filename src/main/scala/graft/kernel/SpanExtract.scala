@@ -138,10 +138,8 @@ final class SpanTemplate(
   private[kernel] val requiredLits: Array[String] =
     identificationPatterns.map(SpanTemplates.requiredLiteralCI).toArray
 
-  /** fraction of identification patterns matching (templates.py:266-279) */
-  def matchesDocument(text: String): Double = matchesDocument(text, null)
-
-  /** `lowered` is a toLowerCase(ROOT) copy of `text` that
+  /** Fraction of identification patterns matching (templates.py:266-279).
+    * `lowered` is a toLowerCase(ROOT) copy of `text` that
     * [[SpanTemplates.identify]]'s case-fold guard has validated for literal
     * prefiltering, or null to run every regex unconditionally. Semantics
     * are identical either way (the literal is a necessary condition of the
@@ -354,8 +352,4 @@ object SpanTemplates {
     }
     best
   }
-
-  /** spans for a cleaned turn text: best-matching template's fields */
-  def extract(text: String): Seq[FieldSpan] =
-    identify(text).map(_.extractFields(text)).getOrElse(Seq.empty)
 }

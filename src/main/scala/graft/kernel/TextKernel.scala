@@ -49,13 +49,10 @@ final class TextKernel {
     "funcao" -> "função", "decisao" -> "decisão", "opcao" -> "opção",
     "situacao" -> "situação", "condicao" -> "condição")
   private val ocrCorrectionsMap: Map[String, String] = ocrCorrections.toMap
-  // spelling fast-path key table: keys bucketed by length for in-place
-  // comparison against the folded word buffer (compared EXACTLY, like the
-  // map lookup — uppercase-bearing keys are as unreachable there as here,
-  // since cleanWord is always lowercased first)
+  // the table's pairs by key length, for comparing a folded word in place
   private val spellMaxKeyLen: Int = ocrCorrections.map(_._1.length).max
-  private val spellKeysByLen: Array[Array[String]] = {
-    val byLen = ocrCorrections.map(_._1).groupBy(_.length)
+  private val spellByLen: Array[Array[(String, String)]] = {
+    val byLen = ocrCorrections.groupBy(_._1.length)
     Array.tabulate(spellMaxKeyLen + 1)(l => byLen.getOrElse(l, Seq.empty).toArray)
   }
 
@@ -70,60 +67,80 @@ final class TextKernel {
     "anexo" -> "Anexo", "apendice" -> "Apêndice")
 
   // ---- pattern table (text_processor.py:167-231); order matters ----
+  // Each pattern's necessary conditions, which skip its findall when the
+  // text falls short: `minRun`, the longest run of consecutive digits a
+  // match holds (a mandatory contiguous \d{n} group); `minDigits`, the
+  // digits a match holds; `literal`, a string every match contains.
+  // `anchored`: every match starts at a digit run's first digit or at the
+  // '(' before it ([[findAllDigitAnchored]]).
   private final case class PatternCfg(
       name: String,
       regex: Pattern,
       format: Option[Pattern],
       formatter: Option[Seq[Tpl]],
-      validator: Option[String => Boolean])
+      validator: Option[String => Boolean],
+      minRun: Int = 0,
+      minDigits: Int = 0,
+      literal: String = "",
+      anchored: Boolean = false)
 
   private val patternTable: Seq[PatternCfg] = Seq(
     PatternCfg("cpf",
       compile("""\b\d{3}\.?\d{3}\.?\d{3}-?\d{2}\b"""),
       Some(compile("""(\d{3})\.?(\d{3})\.?(\d{3})-?(\d{2})""")),
       Some(tpl("""\1.\2.\3-\4""")),
-      Some(Validators.cpf)),
+      Some(Validators.cpf),
+      minRun = 3, minDigits = 11, anchored = true),
     PatternCfg("cnpj",
       compile("""\b\d{2}\.?\d{3}\.?\d{3}/?\d{4}-?\d{2}\b"""),
       Some(compile("""(\d{2})\.?(\d{3})\.?(\d{3})/(\d{4})-?(\d{2})""")),
       Some(tpl("""\1.\2.\3/\4-\5""")),
-      Some(Validators.cnpj)),
+      Some(Validators.cnpj),
+      minRun = 4, minDigits = 14, anchored = true),
     PatternCfg("cep",
       compile("""\b\d{5}-?\d{3}\b"""),
       Some(compile("""(\d{5})-?(\d{3})""")),
       Some(tpl("""\1-\2""")),
-      None),
+      None,
+      minRun = 5, minDigits = 8, anchored = true),
     PatternCfg("phone",
       compile("""\b\(?\d{2}\)?\s?\d{4,5}-?\d{4}\b"""),
       Some(compile("""\(?(\d{2})\)?\s?(\d{4,5})-?(\d{4})""")),
       Some(tpl("""(\1) \2-\3""")),
-      None),
+      None,
+      minRun = 4, minDigits = 10, anchored = true),
     PatternCfg("date",
       compile("""\b\d{1,2}[\/\-\.]\d{1,2}[\/\-\.]\d{2,4}\b"""),
       Some(compile("""(\d{1,2})[\/\-\.](\d{1,2})[\/\-\.](\d{2,4})""")),
       Some(tpl("""\1/\2/\3""")),
-      Some(Validators.date)),
+      Some(Validators.date),
+      minDigits = 4, anchored = true),
     PatternCfg("time",
       compile("""\b\d{1,2}:\d{2}(:\d{2})?\b"""),
       Some(compile("""(\d{1,2}):(\d{2})(:\d{2})?""")),
       Some(tpl("""\1:\2\3""")),
-      Some(Validators.time)),
+      Some(Validators.time),
+      minDigits = 3, literal = ":", anchored = true),
     PatternCfg("currency",
       compile("""R\$\s?\d{1,3}(?:\.\d{3})*(?:,\d{2})?"""),
       Some(compile("""R\$\s?(\d{1,3}(?:\.\d{3})*)(?:,(\d{2}))?""")),
       Some(tpl("""R$ \1,\2""")),
-      None),
+      None,
+      minDigits = 1, literal = "R$"),
     PatternCfg("email",
       compile("""\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b"""),
-      None, None, Some(Validators.email)),
+      None, None, Some(Validators.email),
+      literal = "@"),
     PatternCfg("url",
       compile("""https?://[^\s<>"{}|\\^`\[\]]+"""),
-      None, None, None),
+      None, None, None,
+      literal = "://"),
     PatternCfg("processo_judicial",
       compile("""\b\d{7}-?\d{2}\.\d{4}\.\d{1}\.\d{2}\.\d{4}\b"""),
       Some(compile("""(\d{7})-?(\d{2})\.(\d{4})\.(\d{1})\.(\d{2})\.(\d{4})""")),
       Some(tpl("""\1-\2.\3.\4.\5.\6""")),
-      None))
+      None,
+      minRun = 7, minDigits = 20, anchored = true))
 
   // precompiled patterns for the cleanup stages
   private val pNonWord = compile("""[^\w]""")
@@ -134,58 +151,39 @@ final class TextKernel {
   // can never fall INSIDE a maximal `\w` run, so a match is always a
   // COMPLETE token — "every token containing X" for the first shape,
   // "every token that is digits plus exactly one X" for the second.
-  // These hand scanners produce the identical match list (same strings,
-  // same order, same duplicates) in one cheap pass per probe; the regex
-  // pass they replace was the single largest cost of this stage
+  // These scanners produce the identical match list (same strings, same
+  // order, same duplicates) from one [[WordRuns]] walk per probe;
+  // the regex pass they replace was the single largest cost of this stage
   // (measured 0.38 s of 0.49 s per 78k bench turns — the probes run on
   // up to ~90% of turns because 'l'/'0'/'g' are common). Equality with
   // the verbatim reference patterns is pinned by KernelPropertySpec over
   // the adversarial corpus including non-ASCII digits, combining marks,
-  // connector punctuation, join controls, and astral letters.
+  // connector punctuation, join controls, and astral letters. `w` is an
+  // ASCII char, so a char equal to it is a code point equal to it.
   private[kernel] def scanTokensContaining(text: String, w: Char): List[String] = {
     val out = ListBuffer.empty[String]
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val cp = text.codePointAt(i)
-      if (Py.isUWordCp(cp)) {
-        val start = i
-        var hasW = false
-        var cont = true
-        while (cont && i < n) {
-          val c2 = text.codePointAt(i)
-          if (Py.isUWordCp(c2)) {
-            if (c2 == w.toInt) hasW = true
-            i += Character.charCount(c2)
-          } else cont = false
-        }
-        if (hasW) out += text.substring(start, i)
-      } else i += Character.charCount(cp)
+    val runs = new WordRuns(text)
+    while (runs.next()) {
+      var i = runs.start
+      while (i < runs.end && text.charAt(i) != w) i += 1
+      if (i < runs.end) out += text.substring(runs.start, runs.end)
     }
     out.toList
   }
 
   private[kernel] def scanDigitRunsWithOne(text: String, w: Char): List[String] = {
     val out = ListBuffer.empty[String]
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val cp = text.codePointAt(i)
-      if (Py.isUWordCp(cp)) {
-        val start = i
-        var wCount = 0
-        var digitsOnly = true
-        var cont = true
-        while (cont && i < n) {
-          val c2 = text.codePointAt(i)
-          if (Py.isUWordCp(c2)) {
-            if (c2 == w.toInt) wCount += 1
-            else if (!Character.isDigit(c2)) digitsOnly = false
-            i += Character.charCount(c2)
-          } else cont = false
-        }
-        if (digitsOnly && wCount == 1) out += text.substring(start, i)
-      } else i += Character.charCount(cp)
+    val runs = new WordRuns(text)
+    while (runs.next()) {
+      var ws = 0
+      var digits = true
+      var i = runs.start
+      while (digits && i < runs.end) {
+        val cp = text.codePointAt(i)
+        if (cp == w) ws += 1 else digits = Character.isDigit(cp)
+        i += Character.charCount(cp)
+      }
+      if (digits && ws == 1) out += text.substring(runs.start, runs.end)
     }
     out.toList
   }
@@ -332,97 +330,81 @@ final class TextKernel {
     (text, corrections)
   }
 
-  /** _correct_spelling (text_processor.py:367-384). */
+  /** _correct_spelling (text_processor.py:367-384): `' '.join` of the
+    * `split()` words, each word whose `sub([^\w], "", lower(word))` is a
+    * table key replaced by [[preserveWordFormat]]'s correction. One walk
+    * over the words; the copy starts at the first character that changes,
+    * so a turn that changes nothing comes back as the same instance.
+    *
+    * A word is decided without allocating: its ASCII word chars, folded to
+    * lowercase, are compared in place with the keys of their count. A
+    * non-ASCII code point lowers as `Character.toLowerCase` does (what
+    * `lower` does per code point, but for İ and the final sigma); if that
+    * is a word char it survives the strip, and no key (all ASCII) can
+    * equal the word. Only a lowercase in ASCII (K U+212A → k, İ U+0130 →
+    * i + U+0307) sends the word to the reference's own strip and lookup.
+    * Pinned against the split-join reference by KernelPropertySpec.
+    */
   def correctSpelling(text: String): (String, Int) = {
-    // FAST PATH (exact no-op proof, one allocation-free scan): the stage
-    // returns `' '.join(split(text))` even with zero corrections, so it is
-    // the identity iff (a) whitespace is already exactly single interior
-    // ASCII spaces (the normal state after cleanText) AND (b) no word's
-    // stripNonWord(lower(word)) equals a correction key. (b) is proven by
-    // folding each word's ASCII chars in place against the key table
-    // (keys are pure ASCII, so a word containing a non-ASCII WORD char
-    // whose lowercase is non-ASCII can never match; non-ASCII caseless
-    // non-word chars are exactly what stripNonWord removes). Constructs
-    // the proof can't cover cheaply — a cased non-ASCII non-word char,
-    // whose lowercase form the slow path would strip differently, or a
-    // non-ASCII word char that lowercases to ASCII — fall through to the
-    // loop. 96% of bench turns take this path: no splitWs array, no
-    // per-word lower/strip allocations, no mkString rebuild.
-    locally {
-      val n = text.length
-      var i = 0
-      var ok = n > 0 && text.charAt(0) != ' ' && text.charAt(n - 1) != ' '
-      if (n == 0) ok = true
-      val buf = new Array[Char](spellMaxKeyLen)
-      var bufLen = 0
-      var cantMatch = false
-      var prevSpace = false
-      def wordEnds(): Unit = {
-        if (!cantMatch && bufLen > 0 && bufLen <= spellMaxKeyLen) {
-          val cands = spellKeysByLen(bufLen)
-          var k = 0
-          while (k < cands.length) {
-            val key = cands(k)
-            var j = 0
-            while (j < bufLen && buf(j) == key.charAt(j)) j += 1
-            if (j == bufLen) { ok = false; k = cands.length } // possible match
-            else k += 1
-          }
-        }
-        bufLen = 0
-        cantMatch = false
-      }
-      while (ok && i < n) {
-        val c = text.charAt(i)
-        if (c == ' ') {
-          if (prevSpace) ok = false
-          else { wordEnds(); prevSpace = true }
-          i += 1
-        } else {
-          prevSpace = false
-          if (c < 128) {
-            if (isPySpace(c)) ok = false
-            else {
-              val f = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-              if ((f >= 'a' && f <= 'z') || (f >= '0' && f <= '9') || f == '_') {
-                if (bufLen < spellMaxKeyLen) { buf(bufLen) = f; bufLen += 1 }
-                else cantMatch = true // longer than any key
-              } // else: ASCII non-word — stripNonWord removes it
-              i += 1
+    val out = new Rewrite(text)
+    val folded = new Array[Char](spellMaxKeyLen)
+    var corrections = 0
+    var space = false // a word precedes
+    var i = 0
+    while (i < text.length) {
+      if (isPySpace(text.charAt(i))) i += 1
+      else {
+        val start = i
+        var len = 0 // folded ASCII word chars; over spellMaxKeyLen: no key
+        var exact = false
+        while (i < text.length && !isPySpace(text.charAt(i))) {
+          val c = text.charAt(i)
+          if (c < 0x80) {
+            if (isUWordCp(c)) {
+              if (len < spellMaxKeyLen) folded(len) = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+              len += 1
             }
+            i += 1
           } else {
             val cp = text.codePointAt(i)
-            if (isWordCp(cp)) {
-              // lower() can fold a non-ASCII word char to ASCII (K U+212A
-              // → k, İ U+0130 → i + U+0307): only the slow path is exact
-              if (Character.toLowerCase(cp) < 128) ok = false
-              else cantMatch = true // its lowercase stays non-ASCII ≠ key
-            } else if (Character.toLowerCase(cp) != cp) ok = false // cased oddity
-            else if (isPySpace(c)) ok = false // non-ASCII whitespace
+            val lc = Character.toLowerCase(cp)
+            if (lc < 0x80) exact = true
+            else if (isUWordCp(lc)) len = spellMaxKeyLen + 1
             i += Character.charCount(cp)
           }
         }
-      }
-      if (ok) { wordEnds(); if (ok) return (text, 0) }
-    }
-    var corrections = 0
-    val words = splitWs(text)
-    var i = 0
-    while (i < words.length) {
-      val word = words(i)
-      val cleanWord = stripNonWord(lower(word))
-      ocrCorrectionsMap.get(cleanWord) match {
-        case Some(corr) =>
-          val corrected = preserveWordFormat(word, corr)
-          if (corrected != word) {
-            words(i) = corrected
-            corrections += 1
+        val correction =
+          if (exact)
+            ocrCorrectionsMap.getOrElse(subLiteral(pNonWord, "", lower(text.substring(start, i))), null)
+          else spellCorrection(folded, len)
+        val corrected =
+          if (correction == null) null
+          else {
+            val word = text.substring(start, i)
+            val c = preserveWordFormat(word, correction)
+            if (c != word) c else null
           }
-        case None =>
+        if (corrected == null) out.keep(start, i, space)
+        else { out.put(corrected, space); corrections += 1 }
+        space = true
       }
-      i += 1
     }
-    (words.mkString(" "), corrections)
+    (out.result, corrections)
+  }
+
+  /** The correction of the key equal to `folded[0, len)`, or null. */
+  private def spellCorrection(folded: Array[Char], len: Int): String = {
+    if (len > spellMaxKeyLen) return null
+    val pairs = spellByLen(len)
+    var k = 0
+    while (k < pairs.length) {
+      val key = pairs(k)._1
+      var j = 0
+      while (j < len && folded(j) == key.charAt(j)) j += 1
+      if (j == len) return pairs(k)._2
+      k += 1
+    }
+    null
   }
 
   /** _preserve_word_format (text_processor.py:386-403). */
@@ -444,19 +426,12 @@ final class TextKernel {
   def detectAndFormatPatterns(text0: String): (String, LinkedHashMap[String, ListBuffer[String]]) = {
     var text = text0
     val patternsFound = LinkedHashMap.empty[String, ListBuffer[String]]
-    // necessary-condition literal prefilters: each pattern regex cannot
-    // match without the corresponding literal, so a miss proves findall
-    // returns empty (identical semantics, ~10x fewer regex scans on
-    // pattern-free text)
-    var hasDigit = false
-    var hasColon = false
-    var hasAt = false
-    // longest run of CONSECUTIVE digits: each digit-bearing pattern's
-    // regex contains a mandatory contiguous \d{n} group, so a text whose
-    // longest digit run is shorter provably has no match — a stronger
-    // necessary condition than hasDigit that skips the regex scan for
-    // most short-number text. Counted by code point: \d and
-    // Character.isDigit(cp) are both Unicode Nd, astral digits included.
+    // The table's digit conditions, counted once on the input by code
+    // point (\d and Character.isDigit are both Unicode Nd, astral digits
+    // included). They hold for the rewritten text too: formatters only
+    // reinsert the matched digit groups around separators, never adding
+    // digits or joining two runs, so the digit count is invariant and
+    // every later run is a (possibly split) piece of an input run.
     var digitRun = 0
     var maxDigitRun = 0
     var digitCount = 0
@@ -464,55 +439,23 @@ final class TextKernel {
     while (i < text0.length) {
       val cp = text0.codePointAt(i)
       if (Character.isDigit(cp)) {
-        hasDigit = true
         digitCount += 1
         digitRun += 1
         if (digitRun > maxDigitRun) maxDigitRun = digitRun
-      } else {
-        digitRun = 0
-        if (cp == ':') hasColon = true
-        else if (cp == '@') hasAt = true
-      }
+      } else digitRun = 0
       i += Character.charCount(cp)
     }
-    val hasCurrency = hasDigit && text0.contains("R$")
-    val hasHttp = hasColon && text0.contains("http")
-    // Per-pattern necessary conditions (each regex contains a mandatory
-    // contiguous \d{n} group and a fixed minimum TOTAL digit count, and
-    // \d == Character.isDigit == Unicode Nd): a text short of either
-    // provably has no match, so the findall is skipped. Valid against the
-    // mutated text too: formatters only reinsert the matched digit groups
-    // around separators, never adding digits or joining two runs, so
-    // digitCount is invariant under the in-loop rewrites and every
-    // mutated run is a (possibly split) piece of an original run.
-    //
-    // Digit-run ANCHORS for the seven digit-opening patterns
-    // ([[digitRunStarts]] of the CURRENT text, recomputed lazily after a
-    // formatter mutation, since positions shift). See findAllDigitAnchored
-    // for why attempts only at these anchors (plus a preceding '(') are
-    // exhaustive.
+    // digit-run anchors of the CURRENT text, recomputed lazily after a
+    // formatter rewrite, since positions shift
     var runStarts: Array[Int] = null
     patternTable.foreach { cfg =>
-      val feasible = cfg.name match {
-        case "time"     => hasColon && digitCount >= 3 // \d{1,2}:\d{2}
-        case "currency" => hasCurrency
-        case "email"    => hasAt
-        case "url"      => hasHttp
-        case "cpf"      => maxDigitRun >= 3 && digitCount >= 11
-        case "cnpj"     => maxDigitRun >= 4 && digitCount >= 14
-        case "cep"      => maxDigitRun >= 5 && digitCount >= 8
-        case "phone"    => maxDigitRun >= 4 && digitCount >= 10
-        case "processo_judicial" => maxDigitRun >= 7 && digitCount >= 20
-        case _          => digitCount >= 4 // date \d{1,2}.\d{1,2}.\d{2,4}
-      }
-      val digitOpening = cfg.name != "currency" && cfg.name != "email" &&
-        cfg.name != "url"
+      val feasible = maxDigitRun >= cfg.minRun && digitCount >= cfg.minDigits &&
+        text.contains(cfg.literal)
       val matches =
         if (!feasible) Nil
-        else if (digitOpening) {
+        else if (cfg.anchored) {
           if (runStarts == null) runStarts = digitRunStarts(text)
-          findAllDigitAnchored(cfg.regex, text, runStarts,
-            parenPrefix = cfg.name == "phone")
+          findAllDigitAnchored(cfg.regex, text, runStarts)
         } else findAll(cfg.regex, text)
       if (matches.nonEmpty) {
         val bucket = ListBuffer.empty[String]
@@ -541,9 +484,9 @@ final class TextKernel {
     (text, patternsFound)
   }
 
-  /** [[Py.findAll]] (0-group form) for a pattern whose every match must
-    * start at a digit-run start — true for all seven digit-opening table
-    * patterns (`\b\d...` / phone's `\b\(?\d...`):
+  /** [[Py.findAll]] for a pattern whose every match starts at a digit-run
+    * start or at the '(' before one — true for all seven digit-opening
+    * table patterns (`\b\d...` / phone's `\b\(?\d...`):
     *
     *   - a match's first consumed char is a digit (or '(' for phone);
     *   - `\b` before a digit requires a non-word — hence non-digit —
@@ -552,7 +495,8 @@ final class TextKernel {
     *     after it likewise begins a run, so the start is runStart - 1;
     *   - every OTHER position the generic scan-loop would attempt either
     *     fails `\b` instantly (mid-run: digits on both sides) or fails
-    *     the first `\d` (non-digit, non-'(' char).
+    *     the first `\d` (non-digit, non-'(' char). A pattern that cannot
+    *     open with '(' fails at the paren too, as the generic scan does.
     *
     * The SAME matcher is therefore driven with region(anchor)+lookingAt at
     * each run start (and the '(' before it, earlier position first), in
@@ -564,8 +508,7 @@ final class TextKernel {
     * Equality with the generic engine is pinned by KernelPropertySpec.
     */
   private[kernel] def findAllDigitAnchored(
-      p: Pattern, text: String, runStarts: Array[Int],
-      parenPrefix: Boolean): List[String] = {
+      p: Pattern, text: String, runStarts: Array[Int]): List[String] = {
     val out = ListBuffer.empty[String]
     val m = p.matcher(text)
     m.useTransparentBounds(true)
@@ -586,7 +529,7 @@ final class TextKernel {
       val rs = runStarts(r)
       if (rs >= lastEnd) {
         var matched = false
-        if (parenPrefix && rs - 1 >= lastEnd && text.charAt(rs - 1) == '(') {
+        if (rs - 1 >= lastEnd && text.charAt(rs - 1) == '(') {
           m.region(rs - 1, n)
           if (m.lookingAt()) { emit(); lastEnd = m.end(); matched = true }
         }
@@ -617,49 +560,6 @@ final class TextKernel {
     }
     rs.result()
   }
-
-  /** `sub(pNonWord, "", s)` without the regex machinery for PURE-ASCII
-    * strings, where `\w` is exactly [A-Za-z0-9_] in every regex dialect:
-    * all-word ASCII tokens — the common case for whitespace-split words —
-    * return the same instance with no allocation, others are rebuilt with
-    * one scan. Any non-ASCII char falls back to the original regex sub
-    * (Unicode `\w` has edge classes — Nl, Other_Alphabetic — that a
-    * hand-rolled test could silently get wrong). One Matcher +
-    * StringBuilder per word removed from the spelling stage's hot loop.
-    */
-  private def stripNonWord(s: String): String = {
-    @inline def asciiWord(c: Char): Boolean =
-      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9') || c == '_'
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c >= 128) return subLiteral(pNonWord, "", s)
-      if (!asciiWord(c)) {
-        val sb = new java.lang.StringBuilder(s.length)
-        sb.append(s, 0, i)
-        var j = i + 1
-        while (j < s.length) {
-          val c2 = s.charAt(j)
-          if (c2 >= 128) return subLiteral(pNonWord, "", s)
-          if (asciiWord(c2)) sb.append(c2)
-          j += 1
-        }
-        return sb.toString
-      }
-      i += 1
-    }
-    s
-  }
-
-  /** Java `\w` under UNICODE_CHARACTER_CLASS (the regex `\b` word test).
-    * Delegates to [[Py.isUWordCp]], the single verified definition — a
-    * previous local formula used `isLetterOrDigit`, which misses `\p{Alpha}`
-    * chars outside the letter categories (Nl Roman numerals,
-    * Other_Alphabetic) and diverged from the engine on 366 code points
-    * (now pinned exhaustively by KernelPropertySpec).
-    */
-  private def isWordCp(cp: Int): Boolean = Py.isUWordCp(cp)
 
   /** _correct_abbreviations (text_processor.py:438-459): for each table
     * key in order, `findall(\bKEY\b, re.I)` over the current text, then one
@@ -733,24 +633,16 @@ final class TextKernel {
     */
   private def foreachFoldedRun(s: String, maxFold: Int)(f: (Int, Int, String) => Unit): Unit = {
     val fold = new java.lang.StringBuilder
-    val n = s.length
-    var i = 0
-    while (i < n) {
-      val cp = s.codePointAt(i)
-      if (isWordCp(cp)) {
-        val start = i
-        fold.setLength(0)
-        var cont = true
-        while (cont && i < n) {
-          val c = s.codePointAt(i)
-          if (isWordCp(c)) {
-            if (fold.length <= maxFold)
-              fold.appendCodePoint(Character.toLowerCase(Character.toUpperCase(c)))
-            i += Character.charCount(c)
-          } else cont = false
-        }
-        if (fold.length <= maxFold) f(start, i, fold.toString)
-      } else i += Character.charCount(cp)
+    val runs = new WordRuns(s)
+    while (runs.next()) {
+      fold.setLength(0)
+      var i = runs.start
+      while (i < runs.end && fold.length <= maxFold) {
+        val cp = s.codePointAt(i)
+        fold.appendCodePoint(Character.toLowerCase(Character.toUpperCase(cp)))
+        i += Character.charCount(cp)
+      }
+      if (fold.length <= maxFold) f(runs.start, runs.end, fold.toString)
     }
   }
 
@@ -767,8 +659,8 @@ final class TextKernel {
     var from = 0
     while (idx >= 0) {
       val end = idx + m.length
-      val beforeOk = idx == 0 || !isWordCp(text.codePointBefore(idx))
-      val afterOk = end >= text.length || !isWordCp(text.codePointAt(end))
+      val beforeOk = idx == 0 || !isUWordCp(text.codePointBefore(idx))
+      val afterOk = end >= text.length || !isUWordCp(text.codePointAt(end))
       if (beforeOk && afterOk) {
         sb.append(text, from, idx).append(repl)
         from = end
@@ -965,24 +857,52 @@ object Validators {
   }
 }
 
+/** The maximal `\w` runs of `s` in text order, walking by code point so
+  * astral word chars join runs: each `next()` that returns true leaves
+  * the next run in `[start, end)`. A cursor rather than a callback, so the
+  * kernel's three run scanners each get the walk inlined.
+  */
+private final class WordRuns(s: String) {
+  var start = 0
+  var end = 0
+
+  def next(): Boolean = {
+    var i = end
+    start = -1
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      if (Py.isUWordCp(cp)) { if (start < 0) start = i }
+      else if (start >= 0) { end = i; return true }
+      i += Character.charCount(cp)
+    }
+    end = s.length
+    start >= 0
+  }
+}
+
 /** The output of a pass that keeps some of `text`'s characters in order,
-  * each optionally preceded by one " ". No copy is made until the output
-  * departs from the input, so a pass that changes nothing returns `text`
-  * itself.
+  * or puts a replacement in place of some, each piece optionally preceded
+  * by one " ". No copy is made until the output departs from the input,
+  * so a pass that changes nothing returns `text` itself.
   */
 private final class Rewrite(text: String) {
   private var sb: java.lang.StringBuilder = null
   private var kept = 0 // while sb == null, the output so far is text[0, kept)
 
   /** Appends `text[i, next)`, preceded by one " " if `space`. */
-  def keep(i: Int, next: Int, space: Boolean): Unit = {
-    if (sb == null) {
-      val same = if (space) kept == i - 1 && text.charAt(kept) == ' ' else kept == i
-      if (same) { kept = next; return }
-      sb = new java.lang.StringBuilder(text.length + 16).append(text, 0, kept)
-    }
+  def keep(i: Int, next: Int, space: Boolean): Unit =
+    if (sb == null && (if (space) kept == i - 1 && text.charAt(kept) == ' ' else kept == i)) kept = next
+    else copy(space).append(text, i, next)
+
+  /** Appends `s`, which replaces input characters, preceded by one " " if
+    * `space`.
+    */
+  def put(s: String, space: Boolean): Unit = copy(space).append(s)
+
+  private def copy(space: Boolean): java.lang.StringBuilder = {
+    if (sb == null) sb = new java.lang.StringBuilder(text.length + 16).append(text, 0, kept)
     if (space) sb.append(' ')
-    sb.append(text, i, next)
+    sb
   }
 
   /** `substring(0, length)` is `text` itself. */

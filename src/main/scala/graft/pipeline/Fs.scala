@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
@@ -70,19 +71,14 @@ object Fs {
     */
   private def statusOf(p: HPath): Option[FileStatus] =
     try Some(fsOf(p).getFileStatus(p))
-    catch { case _: java.io.FileNotFoundException => None }
+    catch { case _: FileNotFoundException => None }
 
   def fileSize(s: String): Long = { val p = hpath(s); fsOf(p).getFileStatus(p).getLen }
 
-  def deleteIfExists(s: String): Unit = {
-    val p = hpath(s); val fs = fsOf(p)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
+  // `delete` returns false on an absent path
+  def deleteIfExists(s: String): Unit = { val p = hpath(s); fsOf(p).delete(p, false) }
 
-  def deleteTree(s: String): Unit = {
-    val p = hpath(s); val fs = fsOf(p)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+  def deleteTree(s: String): Unit = { val p = hpath(s); fsOf(p).delete(p, true) }
 
   /** Rename with overwrite — atomic where the FS provides it (see object
     * doc). `src` and `dst` must be on the same filesystem.
@@ -118,12 +114,12 @@ object Fs {
     if (fs.exists(d) || !fs.rename(tmp, d)) renameOverwrite(tmp.toString, dest)
   }
 
+  /** The file at `s` as UTF-8, or None if absent. */
   def readString(s: String): Option[String] = {
-    val p = hpath(s); val fs = fsOf(p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+    val p = hpath(s)
+    val opened = try Some(fsOf(p).open(p)) catch { case _: FileNotFoundException => None }
+    opened.map { in =>
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
       finally in.close()
     }
   }
@@ -179,9 +175,9 @@ object Fs {
 
   /** Immediate subdirectory NAMES of `dir` (empty if absent). */
   def listDirNames(dir: String): Seq[String] = {
-    val p = hpath(dir); val fs = fsOf(p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq
+    val p = hpath(dir)
+    try fsOf(p).listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq
+    catch { case _: FileNotFoundException => Seq.empty }
   }
 
   /** Copy one file (overwrites; creates parent dirs). */

@@ -15,6 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * A name is checked only when it occurs in exactly one `src/main` file,
   * so a reference can be attributed to its definition without a compiler.
+  * Overloads are one name to this check, so an overload that nothing calls
+  * passes as long as a sibling with the same name is used.
   * Mentions inside comments do not count; string literals do. The
   * allowlist holds entry points the build or a user calls by name, and
   * library entry points kept on purpose although no job runs them yet.

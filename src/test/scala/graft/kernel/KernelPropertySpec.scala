@@ -202,17 +202,17 @@ class KernelPropertySpec extends AnyFunSuite {
 
   test("digit-anchored findAll matches the generic engine on the table patterns") {
     // the verbatim digit-opening patterns from the table
-    // (text_processor.py:167-231) — anchored driving must yield the exact
-    // same match list as the plain scan
+    // (text_processor.py:167-231) — anchored driving, which also tries the
+    // '(' before each run (harmless for the six patterns that cannot open
+    // with one), must yield the exact same match list as the plain scan
     val table = Seq(
-      ("""\b\d{3}\.?\d{3}\.?\d{3}-?\d{2}\b""", false),
-      ("""\b\d{2}\.?\d{3}\.?\d{3}/?\d{4}-?\d{2}\b""", false),
-      ("""\b\d{5}-?\d{3}\b""", false),
-      ("""\b\(?\d{2}\)?\s?\d{4,5}-?\d{4}\b""", true),
-      ("""\b\d{1,2}[\/\-\.]\d{1,2}[\/\-\.]\d{2,4}\b""", false),
-      ("""\b\d{1,2}:\d{2}(:\d{2})?\b""", false),
-      ("""\b\d{7}-?\d{2}\.\d{4}\.\d{1}\.\d{2}\.\d{4}\b""", true)) // paren-driving a paren-less pattern must be harmless too
-      .map { case (r, paren) => (Py.compile(r), paren) }
+      """\b\d{3}\.?\d{3}\.?\d{3}-?\d{2}\b""",
+      """\b\d{2}\.?\d{3}\.?\d{3}/?\d{4}-?\d{2}\b""",
+      """\b\d{5}-?\d{3}\b""",
+      """\b\(?\d{2}\)?\s?\d{4,5}-?\d{4}\b""",
+      """\b\d{1,2}[\/\-\.]\d{1,2}[\/\-\.]\d{2,4}\b""",
+      """\b\d{1,2}:\d{2}(:\d{2})?\b""",
+      """\b\d{7}-?\d{2}\.\d{4}\.\d{1}\.\d{2}\.\d{4}\b""").map(Py.compile)
     val kernel = new TextKernel
     // U+1D7D8 MATHEMATICAL DOUBLE-STRUCK DIGIT ZERO: an astral Nd digit
     val z = new String(Character.toChars(0x1D7D8))
@@ -229,14 +229,14 @@ class KernelPropertySpec extends AnyFunSuite {
       "(" + z * 2 + ") " + z * 5 + "-" + z * 4, "1" + z + "2" + z + "3" + z)
     (adversarial ++ corpus).foreach { t =>
       val rs = kernel.digitRunStarts(t)
-      table.foreach { case (p, paren) =>
-        assert(kernel.findAllDigitAnchored(p, t, rs, paren) == Py.findAll(p, t),
+      table.foreach { p =>
+        assert(kernel.findAllDigitAnchored(p, t, rs) == Py.findAll(p, t),
           s"anchored findAll diverged for ${p.pattern} on: ${t.take(80)}")
       }
     }
     // the stage's own feasibility counts see astral digits too: the cep
     // regex finds one match in the first text and two in the second
-    val cep = table(2)._1
+    val cep = table(2)
     Seq(z * 5 + "-" + z * 3, "12345-678 " + z * 5 + "-" + z * 3).foreach { t =>
       val found = kernel.detectAndFormatPatterns(t)._2.get("cep").map(_.toList)
       assert(found.contains(Py.findAll(cep, t)), s"cep diverged on: $t")
@@ -327,9 +327,9 @@ class KernelPropertySpec extends AnyFunSuite {
     assert(seconds < 5.0, f"correctAbbreviations took $seconds%.1f s on ${text.length} chars")
   }
 
-  test("correctSpelling's no-op fast path matches the split-join reference") {
+  test("correctSpelling matches the split-join reference") {
     // the original stage body (text_processor.py:367-384 semantics, the
-    // correction table verbatim) — ground truth for the fast path
+    // correction table verbatim) — ground truth for the one-walk stage
     val table = Seq(
       "rn" -> "m", "cl" -> "d", "li" -> "h", "nn" -> "n", "oo" -> "o",
       "ii" -> "i",
@@ -361,14 +361,45 @@ class KernelPropertySpec extends AnyFunSuite {
     val adversarial = Seq(
       "", " ", "voce", "Voce", "VOCE", "voce.", "(voce)", "v_oce", "nao nao",
       "  double  space", "tab\there", "trailing ", " leading", "não ação",
-      "İ voce", "ſ nao", "voce nao", "l 0 O I S G B g", "l. (0)",
+      "İ voce", "ſ nao", "voce nao", "l 0 O I S G B g", "l. (0)",
       "informacao", "informacaoo", "…voce…", "🙂voce", "a_b c-d e.f",
       "rn cl li nn oo ii", "RN Cl lI", "x\nvoce", "٣ voce", "ǅvoce",
-      "K km", "\u212A km", "\u212Akm", "İi İI ii", "voce \u212A", "0̀ combining-on-digit", "word " * 30)
-    (adversarial ++ corpus).foreach { t =>
-      assert(kernel.correctSpelling(t) == ref(t),
-        s"correctSpelling fast path diverged on: ${t.take(80)}")
+      "K km", "\u212A km", "\u212Akm", "İi İI ii", "voce \u212A", "0̀ combining-on-digit", "word " * 30,
+      // fold anomalies mid-turn after ASCII words: K (U+212A) and İ lower
+      // to ASCII (the only two code points that do), ſ stays non-ASCII;
+      // Ⓝ (U+24C3, So) and Ⅰ (U+2160, Nl) are cased non-ASCII chars outside
+      // the letters, Σ lowers by context; ¹ is a caseless non-word char.
+      // Java's tables hold no cased non-word char: every code point whose
+      // toLowerCase differs is a `\w` char.
+      "texto simples aqui \u212Al nao", "texto simples aqui İi voce",
+      "texto simples aqui ſ nao ſl", "texto simples \u212Aoo Lİ",
+      "texto simples Ⓝao \u24C3 voce", "texto simples Ⅰ li Ⅰl",
+      "texto ΣΣ nao Σ", "texto ¹nao naoª voce¹",
+      // whitespace runs right after a corrected word
+      "nao\t\tvoce", "Voce\u00A0\u00A0nao", "nao\u2028\u2028x", "x nao\t",
+      "NAO \u00A0\t\u2028 Voce\u2029", "\u00A0nao")
+    // key words deep inside long generator turns, through cleanText and
+    // the confusion stage as process() feeds this stage
+    val long = (0 until 3).map { c =>
+      val sb = new java.lang.StringBuilder
+      var t = 0
+      while (sb.length < 34000) {
+        if (t > 0) sb.append('\n')
+        sb.append(graft.pipeline.TranscriptGen.turnText(c.toLong, t))
+        if (t % 40 == 17) sb.append(" Voce nao (informacao) CL. rn, OO")
+        t += 1
+      }
+      kernel.correctConfusedCharacters(kernel.cleanText(sb.toString))._1
     }
+    assert(long.forall(t => t.length >= 30000 && ref(t)._2 > 0))
+    (adversarial ++ corpus ++ long).foreach { t =>
+      val got = kernel.correctSpelling(t)
+      assert(got == ref(t), s"correctSpelling diverged on: ${t.take(80)}")
+      // a turn the stage leaves as it is comes back as the same instance
+      if (got._1 == t) assert(got._1 eq t, s"unchanged turn was copied: ${t.take(80)}")
+    }
+    val clean = "texto limpo sem nenhuma chave"
+    assert(kernel.correctSpelling(clean)._1 eq clean)
   }
 
   test("Py.isUWordCp equals the engine's \\w over the BMP and sampled astral planes") {

@@ -447,6 +447,26 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[java.io.IOException] { CurationJob.inputIdentity(spark, missing) }
   }
 
+  test("Fs deletes, reads and lists an absent path without failing") {
+    val root = fsTmp("graft-fs-absent")
+    val missing = s"$root/absent"
+    Fs.deleteIfExists(missing)
+    Fs.deleteTree(missing)
+    assert(Fs.readString(missing).isEmpty)
+    assert(Fs.listDirNames(missing).isEmpty)
+    assert(!Fs.exists(missing))
+
+    // and present ones as before
+    val file = s"$root/d/sub/f.json"
+    Fs.writeAtomic(file, "x")
+    assert(Fs.readString(file).contains("x"))
+    assert(Fs.listDirNames(s"$root/d") == Seq("sub"))
+    Fs.deleteIfExists(file)
+    assert(!Fs.exists(file) && Fs.exists(s"$root/d/sub"))
+    Fs.deleteTree(s"$root/d")
+    assert(!Fs.exists(s"$root/d"))
+  }
+
   test("writeAtomic commits into absent paths and over existing files") {
     val root = fsTmp("graft-fs-commit")
     def names(dir: String): Set[String] =
