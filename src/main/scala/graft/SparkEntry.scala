@@ -195,7 +195,6 @@ object SparkEntry {
 
     // ---- language-ID heuristic ----
     "q12_langid" -> ((s, dir) => {
-      // factored form of langId (which is langIdFromCounts∘markerCounts):
       // the tokenize-and-count aggregate is projected ONCE; the argmax
       // fold then references cheap struct-field extractions instead of
       // 2^|langs| inlined copies of the aggregate subtree
@@ -848,14 +847,11 @@ object SparkEntry {
         .select(col("conv_id"), col("num_pages"), col("pdf_bytes"),
           md5(col("pdf")).as("pdf_md5"))
     }),
-    // search-index derived tables (S10): conversations -> turns -> chunks.
-    // persistSource=false: this harness returns a lazy DataFrame, so no
-    // one could release the shared cache after the driver's action — the
-    // narrow extraction recomputes per consumer instead of leaking
+    // search-index derived tables (S10): conversations -> turns -> chunks
     "x13_search_index" -> ((s, dir) => {
       val scale = if (dir.contains("0.1")) 200 else 60
       val extracted = ExtractionJob.extract(TranscriptGen.dataset(s, scale))
-      val idx = graft.pipeline.SearchIndex.build(extracted, persistSource = false)
+      val idx = graft.pipeline.SearchIndex.build(extracted)
       idx.chunks
         .groupBy(col("conv_id"))
         .agg(count(lit(1)).as("n_chunks"),

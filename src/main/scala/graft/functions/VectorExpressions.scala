@@ -131,8 +131,8 @@ object VectorNative {
   }
 
   /** top-`nAssign` centroid list ids by cosine, ties broken by smaller
-    * list id — matches [[graft.operators.Similarity.nearestCentroids]]
-    * (stable sort by (-cos, id), take a) without materializing the sort.
+    * list id — the stable sort by (-cos, id), take a, without
+    * materializing the sort.
     */
   def ivfAssign(
       v: ArrayData, ids: Array[Int], cents: Array[Array[Float]],

@@ -94,9 +94,9 @@ object PdfDoc {
     * confidence gate, the blank/index-50 skip, the 200-char cap, and the
     * bottom-of-page break.
     */
-  def layout(page: Page, minConfidence: Double = MinConfidence): Seq[Line] = {
+  def layout(page: Page): Seq[Line] = {
     if (page.text == null || Py.strip(page.text).isEmpty) return Seq.empty
-    if (page.confidence < minConfidence) return Seq.empty
+    if (page.confidence < MinConfidence) return Seq.empty
     val lines = Py.splitOn(page.text, '\n')
     val h = if (lines.length > 1) PageH / lines.length else PageH
     val out = Seq.newBuilder[Line]
@@ -149,19 +149,13 @@ object PdfDoc {
 
   /** One page's uncompressed content stream: absolute text matrix per
     * line, y flipped from PyMuPDF's top-down coords to PDF's y-up space.
-    * `renderMode3` additionally sets text render mode 3 (neither fill nor
-    * stroke — the REAL variant's "more compatible" invisibility,
-    * OCR_Enhanced_with_Searchable_PDF_REAL.py:617-663, which passes
-    * render_mode=3 AND the white color together).
     */
-  private def contentStream(
-      page: Page, renderMode3: Boolean, minConfidence: Double): String = {
-    val drawn = layout(page, minConfidence)
+  private def contentStream(page: Page): String = {
+    val drawn = layout(page)
     if (drawn.isEmpty) ""
     else {
       val sb = new java.lang.StringBuilder(64 + drawn.size * 32)
       sb.append("BT\n/F1 ").append(num(FontSizePt)).append(" Tf\n1 1 1 rg\n")
-      if (renderMode3) sb.append("3 Tr\n")
       drawn.foreach { l =>
         sb.append("1 0 0 1 ").append(num(XInset)).append(' ')
           .append(num(PageH - l.yTop)).append(" Tm\n(")
@@ -174,13 +168,8 @@ object PdfDoc {
 
   /** Assemble a complete single-xref PDF 1.4 document. Object layout:
     * 1 Catalog, 2 Pages, 3 Font, then (Page, Contents) pairs per page.
-    * `renderMode3` and `minConfidence` mirror the REAL variant's knobs
-    * (its `confianca_minima` is caller-supplied; Hybrid_v1 pins 0.3).
     */
-  def render(
-      pages: Seq[Page],
-      renderMode3: Boolean = false,
-      minConfidence: Double = MinConfidence): Array[Byte] = {
+  def render(pages: Seq[Page]): Array[Byte] = {
     require(pages.nonEmpty, "a PDF needs at least one page")
     val n = pages.size
     val nObjs = 3 + 2 * n
@@ -217,7 +206,7 @@ object PdfDoc {
         .append(num(PageW)).append(' ').append(num(PageH))
         .append("] /Resources << /Font << /F1 3 0 R >> >> /Contents ")
         .append(streamId).append(" 0 R >>\n"); endObj()
-      val content = contentStream(page, renderMode3, minConfidence)
+      val content = contentStream(page)
       beginObj(streamId)
       // spec 7.3.8.1: an EOL before `endstream`, NOT counted in /Length
       sb.append("<< /Length ").append(content.length).append(" >>\nstream\n")
@@ -240,11 +229,8 @@ object PdfDoc {
   /** The full S7 stand-in: assembled extracted text -> artificial page
     * split -> searchable (invisible-text-layer) PDF bytes.
     */
-  def searchable(
-      text: String,
-      charsPerPage: Int = DefaultCharsPerPage,
-      renderMode3: Boolean = false): Array[Byte] = {
+  def searchable(text: String, charsPerPage: Int = DefaultCharsPerPage): Array[Byte] = {
     val t = if (text == null) "" else text
-    render(artificialSplit(t, numPages(t, charsPerPage)), renderMode3)
+    render(artificialSplit(t, numPages(t, charsPerPage)))
   }
 }

@@ -44,20 +44,18 @@ object Curation {
     * relative to the corpus, so the train postings are PRUNED with a
     * semi-join on the distinct TEST shingle keys BEFORE the per-shingle
     * aggregation — the corpus-side shuffle carries only shingles that can
-    * possibly contaminate, instead of the full corpus shingle space. With
-    * `broadcastTestKeys` (default) the prune is a broadcast semi-join
-    * inside the corpus scan: zero extra shuffle of train data. Results are
-    * identical to the unpruned plan: for every surviving shingle the
-    * train-side document set (and therefore the df cap) is computed over
-    * the FULL train side.
+    * possibly contaminate, instead of the full corpus shingle space. The
+    * prune is a broadcast semi-join inside the corpus scan: zero extra
+    * shuffle of train data. Results are identical to the unpruned plan:
+    * for every surviving shingle the train-side document set (and
+    * therefore the df cap) is computed over the FULL train side.
     *
     * Returns (test_id, train_id, common) pairs.
     */
   def contamination(
       train: DataFrame, trainId: String, trainText: String,
       test: DataFrame, testId: String, testText: String,
-      n: Int = 8, minCommon: Int = 2, maxDocFreq: Int = 1024,
-      broadcastTestKeys: Boolean = true): DataFrame = {
+      n: Int = 8, minCommon: Int = 2, maxDocFreq: Int = 1024): DataFrame = {
     val spark = train.sparkSession
     import spark.implicits._
     Dedup.requireIntegralId(train, trainId)
@@ -75,10 +73,7 @@ object Curation {
     // works) — recomputing the narrow shingle pass is cheaper than pinning
     // a cache no caller can release in a long-lived session
     val testPost = post(test, testId, testText, "test")
-    val testKeys0 = testPost.select(col("s")).distinct()
-    // set broadcastTestKeys=false if the benchmark suite's shingle set is
-    // too large for executor memory (falls back to a shuffled semi-join)
-    val testKeys = if (broadcastTestKeys) broadcast(testKeys0) else testKeys0
+    val testKeys = broadcast(testPost.select(col("s")).distinct())
 
     val trainPost = post(train, trainId, trainText, "train")
       .join(testKeys, Seq("s"), "left_semi")
@@ -93,29 +88,24 @@ object Curation {
       .where(col("common") >= minCommon)
   }
 
-  /** Deterministic sampling: keep a row iff its key hashes into the first
-    * `permille` of 1000 md5 buckets. Unlike Bernoulli `df.sample`, the
-    * decision is a pure function of the KEY — reproducible across runs,
-    * engines, partitionings and appends (a row's fate never changes when
-    * the corpus grows), and exactly mirrorable in the DuckDB oracle.
-    * Nested sampling: a 10‰ sample is a strict subset of a 100‰ sample.
-    */
-  def deterministicSample(df: DataFrame, keyCol: Column, permille: Int): DataFrame = {
-    require(permille >= 0 && permille <= 1000, "permille in [0, 1000]")
-    df.where(hashBucket(keyCol, 1000) < permille)
-  }
-
   /** Deterministic STRATIFIED sampling: per-stratum permille rates (e.g.
     * downsample the dominant language, keep the long tail whole) — the
     * curation move for rebalancing a training mix. Strata not listed keep
     * `defaultPermille`.
+    *
+    * A row is kept iff its key hashes into the first `rate` of 1000 md5
+    * buckets. Unlike Bernoulli `df.sample`, the decision is a pure
+    * function of the KEY — reproducible across runs, engines,
+    * partitionings and appends (a row's fate never changes when the
+    * corpus grows), and exactly mirrorable in the DuckDB oracle. Samples
+    * nest: a 10‰ sample is a strict subset of a 100‰ sample.
     */
   def stratifiedSample(
       df: DataFrame, strataCol: Column, keyCol: Column,
       rates: Map[String, Int], defaultPermille: Int = 1000): DataFrame = {
-    // same validation deterministicSample enforces: an out-of-range rate
-    // (e.g. 1500 intending oversampling) would otherwise silently clamp
-    // to keep-everything and ship a mis-specified mix unnoticed
+    // an out-of-range rate (e.g. 1500 intending oversampling) would
+    // otherwise silently clamp to keep-everything and ship a
+    // mis-specified mix unnoticed
     (rates.values.toSeq :+ defaultPermille).foreach(p =>
       require(p >= 0 && p <= 1000, s"permille rates must be in [0, 1000], got $p"))
     val rate = rates.foldLeft(lit(defaultPermille)) { case (acc, (stratum, p)) =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.TranscriptGen.sm64
@@ -98,16 +98,15 @@ object Dedup {
 
   // ---------- MinHash + LSH ----------
 
-  /** `verifyPruneMinBytes`: the verify step's candidate semi-join prune is
-    * SIZE-ADAPTIVE (see [[minHashNearDups]]); corpora whose optimizer-
-    * estimated input size is under this many bytes skip the prune. Not
-    * part of any semantic identity (results are independent of the plan
-    * shape), so it deliberately does not participate in config hashes.
-    */
   final case class MinHashParams(
       numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3,
-      threshold: Double = 0.6, maxBucket: Int = 64,
-      verifyPruneMinBytes: Long = 64L << 20)
+      threshold: Double = 0.6, maxBucket: Int = 64)
+
+  /** The verify step's candidate semi-join prune is SIZE-ADAPTIVE (see
+    * [[minHashNearDups]]): corpora whose optimizer-estimated input size is
+    * under this many bytes skip the prune.
+    */
+  private val VerifyPruneMinBytes = 64L << 20
 
   /** MinHash signature over a distinct shingle array (order never
     * matters: the fold is a per-hash min).
@@ -153,6 +152,22 @@ object Dedup {
       "cast would null non-numeric ids and silently corrupt dedup — " +
       "derive a numeric surrogate (e.g. xxhash64(id)) first")
   }
+
+  /** Candidate pairs inside each group of `keys`: the group's `elem`
+    * values are collected and sorted once, groups outside [2, `maxGroup`]
+    * are dropped (the skew guard), and UPPER-TRIANGLE expansion pairs
+    * element i only with the elements after it — half the intermediate
+    * structs of the n² emit-then-filter form, and `pr.a < pr.b` holds by
+    * construction. One shuffle on `keys`; returns the struct column `pr`.
+    */
+  private def groupPairs(
+      df: DataFrame, keys: Seq[Column], elem: Column, maxGroup: Int): DataFrame =
+    df.groupBy(keys: _*)
+      .agg(sort_array(collect_list(elem)).as("xs"))
+      .where(size(col("xs")).between(2, maxGroup))
+      .select(explode(expr(
+        "flatten(transform(xs, (a, i) -> transform(slice(xs, i + 2, size(xs)), " +
+          "b -> named_struct('a', a, 'b', b))))")).as("pr"))
 
   /** LSH band keys: FNV-seed fold of each band's signature rows. */
   def bandKeys(sig: Array[Long], bands: Int): Array[Long] = {
@@ -213,18 +228,8 @@ object Dedup {
     }.toDF("band", "key", "id")
 
     // bucket self-pairing with a width cap (protects against degenerate
-    // buckets — the skew guard); groupBy is one shuffle on (band, key).
-    // UPPER-TRIANGLE expansion: the bucket is sorted once, then element i
-    // pairs only with elements after it — half the intermediate structs of
-    // the n² emit-then-filter form, and id_a < id_b holds by construction
-    val pairs = banded
-      .groupBy("band", "key")
-      .agg(sort_array(collect_list("id")).as("ids"))
-      .where(size(col("ids")).between(2, p.maxBucket))
-      .select(explode(expr(
-        "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)), " +
-          "b -> named_struct('a', a, 'b', b))))"))
-        .as("pr"))
+    // buckets — the skew guard)
+    val pairs = groupPairs(banded, Seq(col("band"), col("key")), col("id"), p.maxBucket)
       .select(col("pr.a").as("id_a"), col("pr.b").as("id_b"))
       .distinct() // a pair can collide in several bands
 
@@ -232,7 +237,7 @@ object Dedup {
     // shape is SIZE-ADAPTIVE (the resolveClusters philosophy; results are
     // identical either way — the shape only decides where the kernel runs):
     //
-    //   - At scale (estimated input >= p.verifyPruneMinBytes) the shingle
+    //   - At scale (estimated input >= VerifyPruneMinBytes) the shingle
     //     kernel runs again ONLY for ids that appear in a candidate pair:
     //     a semi-join of the corpus against the exploded pair-id list
     //     prunes the scan BEFORE the kernel (near-dup candidate sets are
@@ -253,7 +258,7 @@ object Dedup {
     //     sides then recompute the narrow corpus kernel — bounded by the
     //     same size gate that chose this branch.
     val pruneVerify =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes >= p.verifyPruneMinBytes
+      df.queryExecution.optimizedPlan.stats.sizeInBytes >= VerifyPruneMinBytes
     val candSh =
       if (pruneVerify) {
         // no distinct(): left_semi deduplicates the build side, and
@@ -343,15 +348,9 @@ object Dedup {
       (0 until 4).iterator.map(c => (c, (sig >>> (c * 16)) & 0xffffL, id, sig))
     }.toDF("chunk", "key", "id", "sig")
 
-    // upper-triangle over the id-sorted bucket (ids are unique, so the
-    // struct sort orders by id and id_a < id_b holds by construction)
-    val pairs = banded
-      .groupBy("chunk", "key")
-      .agg(sort_array(collect_list(struct(col("id"), col("sig")))).as("xs"))
-      .where(size(col("xs")).between(2, maxBucket))
-      .select(explode(expr(
-        "flatten(transform(xs, (a, i) -> transform(slice(xs, i + 2, size(xs)), " +
-          "b -> named_struct('a', a, 'b', b))))")).as("pr"))
+    // ids are unique, so the struct sort orders by id and id_a < id_b
+    val pairs = groupPairs(banded, Seq(col("chunk"), col("key")),
+        struct(col("id"), col("sig")), maxBucket)
       .select(
         col("pr.a.id").as("id_a"), col("pr.a.sig").as("sig_a"),
         col("pr.b.id").as("id_b"), col("pr.b.sig").as("sig_b"))
@@ -416,18 +415,9 @@ object Dedup {
     // map-combinable agg over the shared exchange — one narrow row per doc.
     val sizes = postings.groupBy(col("id")).agg(count(lit(1)).as("n"))
 
-    // one shuffle on shingle hash; df-capped UPPER-TRIANGLE pair expansion
-    // inside the agg (bucket sorted once; element i pairs only with later
-    // elements — half the pairs of emit-all-then-filter; bare-long bucket
-    // elements sort and pair without per-element struct allocation)
-    val pairCommon = postings
-      .groupBy(col("s"))
-      .agg(sort_array(collect_list(col("id"))).as("ds"))
-      .where(size(col("ds")).between(2, maxDocFreq))
-      .select(explode(expr(
-        "flatten(transform(ds, (a, i) -> transform(slice(ds, i + 2, size(ds)), " +
-          "b -> named_struct('a', a, 'b', b))))"))
-        .as("pr"))
+    // one shuffle on shingle hash; df-capped pair expansion (bare-long
+    // bucket elements sort and pair without per-element struct allocation)
+    val pairCommon = groupPairs(postings, Seq(col("s")), col("id"), maxDocFreq)
       .groupBy(col("pr.a").as("id_a"), col("pr.b").as("id_b"))
       .agg(count(lit(1)).as("common"))
 
@@ -600,15 +590,8 @@ object Dedup {
         graft.functions.VectorFunctions.lshBucket(col("v"), planes))
       .select("id", "bucket", "v")
 
-    // upper-triangle over the id-sorted bucket (unique ids decide the
-    // struct order, so id_a < id_b by construction)
-    val pairs = sigs
-      .groupBy("bucket")
-      .agg(sort_array(collect_list(struct(col("id"), col("v")))).as("xs"))
-      .where(size(col("xs")).between(2, maxBucket))
-      .select(explode(expr(
-        "flatten(transform(xs, (a, i) -> transform(slice(xs, i + 2, size(xs)), " +
-          "b -> named_struct('a', a, 'b', b))))")).as("pr"))
+    // unique ids decide the struct order, so id_a < id_b
+    val pairs = groupPairs(sigs, Seq(col("bucket")), struct(col("id"), col("v")), maxBucket)
       .select(
         col("pr.a.id").as("id_a"), col("pr.a.v").as("v_a"),
         col("pr.b.id").as("id_b"), col("pr.b.v").as("v_b"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.kernel.TextKernel
+import graft.kernel.{Py, TextKernel}
 
 /** PII redaction for training-data pipelines: replace every DETECTED AND
   * VALIDATED pattern occurrence (CPF/CNPJ checksums, calendar-valid dates,
@@ -17,18 +17,16 @@ import graft.kernel.TextKernel
   */
 object Redact {
 
-  private def isWordCp(cp: Int): Boolean =
-    Character.isLetterOrDigit(cp) || cp == '_'
-
   /** Boundary-anchored literal pattern for a validated match: `\b` is added
-    * only on sides whose edge character is a word character (the detector's
-    * own `\b`s sit at word-char edges; a `\b` beside a non-word edge char —
+    * only on sides whose edge character is a word character under the
+    * compiled pattern's own `\w` ([[Py.isUWordCp]]; the detector's own
+    * `\b`s sit at word-char edges; a `\b` beside a non-word edge char —
     * e.g. the `/` closing a URL — would require an ADJACENT word char and
     * wrongly skip legitimate occurrences).
     */
   private def anchored(m: String): java.util.regex.Pattern = {
-    val pre = if (m.nonEmpty && isWordCp(m.codePointAt(0))) "\\b" else ""
-    val suf = if (m.nonEmpty && isWordCp(m.codePointBefore(m.length))) "\\b" else ""
+    val pre = if (m.nonEmpty && Py.isUWordCp(m.codePointAt(0))) "\\b" else ""
+    val suf = if (m.nonEmpty && Py.isUWordCp(m.codePointBefore(m.length))) "\\b" else ""
     java.util.regex.Pattern.compile(
       pre + java.util.regex.Pattern.quote(m) + suf,
       java.util.regex.Pattern.UNICODE_CHARACTER_CLASS)

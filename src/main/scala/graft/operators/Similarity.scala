@@ -8,9 +8,9 @@ import graft.pipeline.TranscriptGen.sm64
 /** Approximate-nearest-neighbor search over an embedding column
   * (Array[Float]).
   *
-  *   - `cosineTopK`: brute-force scan — dot products via `zip_with` +
-  *     `aggregate` column expressions (whole-stage codegen, no UDF). The
-  *     correctness baseline; at scale it is one pass + a TakeOrdered.
+  *   - [[cosineWithConst]]: brute-force scan — dot products via
+  *     `zip_with` + `aggregate` column expressions (whole-stage codegen,
+  *     no UDF); with an orderBy/limit it is one pass + a TakeOrdered (q16).
   *   - hyperplane-LSH bucketing (deterministic planes): the scale path —
   *     candidates restricted to the query's bucket (+ multiprobe flips).
   *
@@ -37,20 +37,6 @@ object Similarity {
     val qNorm = math.sqrt(q.map(x => x.toDouble * x.toDouble).sum)
     dotWithConst(vec, q) / (norm(vec) * lit(qNorm))
   }
-
-  /** Brute-force cosine top-k: full scan + TakeOrderedAndProject (no full
-    * sort shuffle; each partition keeps k, driver merges). Scoring uses the
-    * native fused-loop expression (graft.functions.CosineSimilarity) —
-    * measured 24× faster than the zip_with/aggregate chain at 2M×64f.
-    */
-  def cosineTopK(
-      df: DataFrame, idCol: String, vecCol: String,
-      query: Array[Float], k: Int): DataFrame =
-    df.select(
-      col(idCol).as("id"),
-      graft.functions.VectorFunctions.cosineConst(col(vecCol), query).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
 
   /** plain scala cosine (verification / UDF use) */
   def cosine(a: Array[Float], b: Array[Float]): Double = {
@@ -182,13 +168,6 @@ object Similarity {
     best
   }
 
-  /** Top-`a` nearest centroid list ids (ties by list id). */
-  def nearestCentroids(
-      v: Array[Float], cents: Array[(Int, Array[Float])], a: Int): Seq[Int] =
-    cents.map { case (l, c) => (l, cosine(v, c)) }
-      .sortBy { case (l, c) => (-c, l) }
-      .take(a).map(_._1).toSeq
-
   /** Assign every vector to its `nAssign` nearest centroid lists — the IVF
     * index build. `nAssign > 1` is soft/multi-assignment (each vector is
     * REPLICATED into its top-a lists): storage ×a buys recall on weakly
@@ -212,7 +191,7 @@ object Similarity {
     * the query, brute-force cosine only within them (a multi-assigned
     * point appearing in several probed lists is deduplicated by id).
     * Candidate fraction ≈ nAssign·nProbe/nList; recall measured vs
-    * `cosineTopK` in tests (recall@10 >= 0.9 gate at nList=16/nProbe=8).
+    * the exact top-k in tests (recall@10 >= 0.9 gate at nList=16/nProbe=8).
     * Centroids are k-means-trained ([[trainIvfCentroids]]), not sampled.
     */
   def ivfTopK(
@@ -238,7 +217,7 @@ object Similarity {
     * Recall/candidate-fraction trades off via (L, planesPerTable): for
     * near-dup targets (cos ≥ 0.9) a few planes retrieve with tiny candidate
     * sets; for mid-similarity top-k use more tables. Measured vs
-    * `cosineTopK` in tests.
+    * the exact top-k in tests.
     *
     * This form re-hashes every vector per query (one full scan) — the
     * correctness baseline for ad-hoc, index-less search. For repeated

@@ -35,20 +35,9 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "los", "las", "una", "pero", "como", "más"),
     "de" -> Seq("der", "die", "das", "und", "nicht", "ein", "ist", "mit"))
 
-  /** n-gram/stopword language-ID heuristic: argmax of marker hits with a
-    * minimum-evidence threshold of 2, ties broken by inventory order;
-    * otherwise "und". Mirrors the reference's language handling being a
-    * lookup/heuristic, not a model (tesseract_engine.py:351-375).
-    *
-    * Single pass: ONE `aggregate` over the token array accumulates all
-    * marker counts into a struct (the naive per-language fold re-split the
-    * text 2×|langs| times); the final argmax is a scalar when-ladder with
-    * identical tie semantics to the oracle SQL.
-    */
-  def langId(text: Column): Column = langIdFromCounts(markerCounts(text))
-
   /** ONE `aggregate` over the token array accumulating all marker counts
-    * into a struct. Project this into a column once and feed it to
+    * into a struct (a per-language fold would re-split the text
+    * 2×|langs| times). Project this into a column once and feed it to
     * [[langIdFromCounts]]: the argmax fold below references its input
     * 2^|langs| times (each fold step doubles the accumulator tree), so
     * inlining the aggregate there would replicate the expensive
@@ -64,9 +53,14 @@ object TextAnalysis {
       }: _*))
   }
 
-  /** The argmax when-ladder over a pre-projected [[markerCounts]] struct
-    * (identical tie semantics to the oracle SQL: strictly-greater keeps
-    * earlier languages, minimum evidence 2 via the (und, 1) seed).
+  /** n-gram/stopword language-ID heuristic over a pre-projected
+    * [[markerCounts]] struct: argmax of marker hits with a
+    * minimum-evidence threshold of 2, ties broken by inventory order;
+    * otherwise "und". Mirrors the reference's language handling being a
+    * lookup/heuristic, not a model (tesseract_engine.py:351-375). A scalar
+    * when-ladder with identical tie semantics to the oracle SQL:
+    * strictly-greater keeps earlier languages, minimum evidence 2 via the
+    * (und, 1) seed.
     */
   def langIdFromCounts(counts: Column): Column = {
     val hits = markers.map { case (lang, _) => lang -> counts.getField(lang) }

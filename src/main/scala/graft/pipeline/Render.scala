@@ -130,8 +130,7 @@ object Render {
     */
   def searchablePdf(
       extracted: Dataset[ExtractedTurn],
-      charsPerPage: Int = graft.kernel.PdfDoc.DefaultCharsPerPage,
-      renderMode3: Boolean = false): DataFrame = {
+      charsPerPage: Int = graft.kernel.PdfDoc.DefaultCharsPerPage): DataFrame = {
     val spark = extracted.sparkSession
     import spark.implicits._
     extracted
@@ -141,7 +140,7 @@ object Render {
         col("text_clean"), "\n\n", col("turn_idx")).as("doc"))
       .as[(String, String)]
       .mapPartitions(_.map { case (cid, doc) =>
-        val pdf = graft.kernel.PdfDoc.searchable(doc, charsPerPage, renderMode3)
+        val pdf = graft.kernel.PdfDoc.searchable(doc, charsPerPage)
         (cid, graft.kernel.PdfDoc.numPages(doc, charsPerPage), pdf.length.toLong, pdf)
       })
       .toDF("conv_id", "num_pages", "pdf_bytes", "pdf")

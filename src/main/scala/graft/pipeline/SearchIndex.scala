@@ -16,33 +16,19 @@ import graft.schema.ExtractedTurn
   *   - chunks: word-packed index chunks (F14 no-overlap variant,
   *     search_manager.py:326-346) via posexplode
   *
-  * All derive from one pass over the extracted dataset; chunking is a
-  * narrow map (no shuffle beyond the doc-level aggregation).
+  * All derive from the extracted dataset uncached: each table a consumer
+  * reads recomputes the narrow extraction, so nothing stays pinned in
+  * executor storage for a caller to release. Chunking is a narrow map (no
+  * shuffle beyond the doc-level aggregation).
   */
 object SearchIndex {
 
-  final case class IndexTables(
-      conversations: DataFrame, turns: DataFrame, chunks: DataFrame,
-      private val cached: DataFrame) {
-    /** release the shared cached extraction once all three are written */
-    def unpersist(): Unit = { cached.unpersist(); () }
-  }
+  final case class IndexTables(conversations: DataFrame, turns: DataFrame, chunks: DataFrame)
 
-  /** `persistSource = true` (the sink-writing production shape) caches the
-    * shared extraction projection so each table's write doesn't re-run the
-    * kernel lineage — the caller MUST call [[IndexTables.unpersist]] after
-    * the sinks are materialized. Pass `false` when no one can release the
-    * cache after the consuming action (e.g. a query harness that only
-    * returns a lazy DataFrame): the tables then recompute the narrow
-    * extraction per consumer instead of pinning executor storage.
-    */
-  def build(
-      extracted: Dataset[ExtractedTurn], chunkMaxLen: Int = 500,
-      persistSource: Boolean = true): IndexTables = {
-    val ok0 = extracted.where(col("success"))
-    val ok = if (persistSource) ok0.persist() else ok0
+  def build(extracted: Dataset[ExtractedTurn], chunkMaxLen: Int = 500): IndexTables = {
+    val ok = extracted.where(col("success"))
 
-    val conversations = ExtractionJob.assemble(ok) // reuses the cache
+    val conversations = ExtractionJob.assemble(ok)
       .withColumn("content_hash", md5(col("full_text")))
       .select("conv_id", "n_turns", "full_text", "content_hash",
         "avg_conf_delta", "total_patterns")
@@ -62,6 +48,6 @@ object SearchIndex {
         .withColumn("chunk_hash", md5(col("chunk_text")))
     }
 
-    IndexTables(conversations, turns, chunks, ok.toDF())
+    IndexTables(conversations, turns, chunks)
   }
 }

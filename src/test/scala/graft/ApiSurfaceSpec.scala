@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * passes as long as a sibling with the same name is used.
   * Mentions inside comments do not count; string literals do. The
   * allowlist holds entry points the build or a user calls by name, and
-  * library entry points kept on purpose although no job runs them yet.
+  * library entry points kept on purpose although no job runs them yet;
+  * every entry must still name a public definition, so a deleted name
+  * cannot linger in it.
   */
 class ApiSurfaceSpec extends AnyFunSuite {
 
@@ -28,10 +30,10 @@ class ApiSurfaceSpec extends AnyFunSuite {
     "main", "entry", "queries", "oracleSql", "Bench", "Verify", "GraftExtensions",
     // run-level metrics, to move into Checkpoint's Observation
     "extractObserved",
-    // documented library features no job runs yet
-    "Backup", "Daily", "Weekly", "loop",
-    "cosineTopK", "nearestCentroids", "appendToLshIndex", "appendToIvfIndex",
-    "langId", "deterministicSample", "ImageIODecoder")
+    // documented library features no job runs yet — each is an open
+    // keep-or-delete decision: wire it into a job or delete it
+    "Backup", "Daily", "Weekly", "loop", "appendToLshIndex", "appendToIvfIndex",
+    "ImageIODecoder")
 
   private def scalaFiles(dir: String, ext: String): Seq[Path] = {
     val root = Paths.get(dir)
@@ -98,19 +100,25 @@ class ApiSurfaceSpec extends AnyFunSuite {
 
   private def read(p: Path): String = stripComments(new String(Files.readAllBytes(p), UTF_8))
 
+  private lazy val main: Map[Path, String] = {
+    val m = scalaFiles("src/main/scala", ".scala").map(p => p -> read(p)).toMap
+    assert(m.size > 20, s"src/main/scala not found from ${Paths.get("").toAbsolutePath}")
+    m
+  }
+
+  /** (name, defining file) of every public definition in src/main */
+  private lazy val publicDefs: Seq[(String, Path)] = main.toSeq.flatMap { case (file, text) =>
+    Definition.findAllMatchIn(text)
+      .filterNot(m => m.group(1).contains("private") ||
+        m.group(1).contains("protected") || m.group(1).contains("override"))
+      .map(m => m.group(2) -> file)
+  }.distinct
+
   test("every public definition in src/main is used outside src/test") {
-    val main = scalaFiles("src/main/scala", ".scala").map(p => p -> read(p)).toMap
-    assert(main.size > 20, s"src/main/scala not found from ${Paths.get("").toAbsolutePath}")
     val production = (scalaFiles("tools", ".sc") ++ scalaFiles("perfbench/scala", ".scala"))
       .map(read)
     val tests = scalaFiles("src/test/scala", ".scala").map(read)
 
-    val publicDefs = main.toSeq.flatMap { case (file, text) =>
-      Definition.findAllMatchIn(text)
-        .filterNot(m => m.group(1).contains("private") ||
-          m.group(1).contains("protected") || m.group(1).contains("override"))
-        .map(m => m.group(2) -> file)
-    }.distinct
     val unused = publicDefs.collect {
       case (name, file)
           if !allowed(name) &&
@@ -124,6 +132,11 @@ class ApiSurfaceSpec extends AnyFunSuite {
     if (unused.nonEmpty)
       fail("public API no production code references (wire it into a job or delete it):\n  " +
         unused.mkString("\n  "))
+  }
+
+  test("every allowlist entry names a public definition in src/main") {
+    val stale = allowed -- publicDefs.map(_._1)
+    assert(stale.isEmpty, s"allowlist names no public definition (remove it): ${stale.toSeq.sorted}")
   }
 
   test("comment stripping keeps code and literals, drops comments") {

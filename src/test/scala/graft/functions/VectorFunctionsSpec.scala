@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, SimilarityOracle}
 
 class VectorFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -107,7 +107,7 @@ class VectorFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val arr = data(r.getLong(0).toInt)._2.toArray
       assert(r.getInt(1) == Similarity.bucketOf(arr, planes),
         s"lshBucket mismatch at id ${r.getLong(0)}")
-      assert(r.getSeq[Int](2) == Similarity.nearestCentroids(arr, cents, 3),
+      assert(r.getSeq[Int](2) == SimilarityOracle.nearestCentroids(arr, cents, 3),
         s"ivfAssign mismatch at id ${r.getLong(0)}")
     }
     // zero vector: every plane dot = 0 >= 0 -> all bits set; assignment

@@ -164,20 +164,8 @@ class PdfSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Latin-1 chars survive via octal escapes; the tab rides as octal too
     assert(streams(2) == Seq("único café — naïve\ttab".map(c => if (c > 0xFF) '?' else c)))
     assert(java.util.Arrays.equals(bytes, PdfDoc.render(pages)), "byte-deterministic")
-  }
-
-  test("REAL-variant knobs: render mode 3 emitted with the white fill; threshold caller-supplied") {
-    val pages = Seq(PdfDoc.Page("visible text", 0.5))
-    val tr3 = PdfDoc.render(pages, renderMode3 = true)
-    val doc = new String(tr3, ISO_8859_1)
-    assert(doc.contains("1 1 1 rg\n3 Tr\n"), "Tr 3 rides WITH the white fill (REAL.py:617-640)")
-    val (_, streams) = parsePdf(tr3)
-    assert(streams.head == Seq("visible text"), "text layer unaffected by render mode")
-    assert(!new String(PdfDoc.render(pages), ISO_8859_1).contains(" Tr\n"),
-      "Hybrid_v1 default: white fill only, no Tr")
-    // REAL's confianca_minima is caller-supplied: raise it above the page
-    val (_, gated) = parsePdf(PdfDoc.render(pages, minConfidence = 0.6))
-    assert(gated.head.isEmpty)
+    assert(!new String(bytes, ISO_8859_1).contains(" Tr\n"),
+      "Hybrid_v1: white fill only, no text render mode")
   }
 
   test("render: codepoints above U+00FF degrade to '?' (documented stand-in)") {

@@ -85,10 +85,10 @@ class Operators3Spec extends AnyFunSuite with BeforeAndAfterAll {
     checked("resolveClusters (distributed label-propagation path)") {
       val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
       assert(Dedup.resolveClusters(pairs, driverMaxPairs = 0L).count() == 6) }
-    checked("SearchIndex.build(persistSource = false) — the lazy-harness shape") {
+    checked("SearchIndex.build") {
       val extracted = graft.pipeline.ExtractionJob.extract(
         graft.pipeline.TranscriptGen.dataset(sp, 5))
-      val idx = graft.pipeline.SearchIndex.build(extracted, persistSource = false)
+      val idx = graft.pipeline.SearchIndex.build(extracted)
       assert(idx.chunks.count() > 0 && idx.conversations.count() > 0) }
   }
 
@@ -104,36 +104,46 @@ class Operators3Spec extends AnyFunSuite with BeforeAndAfterAll {
     val planSmall = qSmall.queryExecution.executedPlan.toString
     val smallScans = "MapPartitions graft\\.operators\\.Dedup".r
       .findAllMatchIn(planSmall).size
-    assert(smallScans <= 3,
-      s"small-corpus shape: expected <=3 Dedup mapPartitions, got $smallScans:\n$planSmall")
+    assert(smallScans <= 3 && !planSmall.contains("LeftSemi"),
+      s"small-corpus shape: expected <=3 Dedup mapPartitions, no prune:\n$planSmall")
     assert(!planSmall.contains("CartesianProduct") && !planSmall.contains("InMemoryTableScan"),
       s"no cartesian, no cached relation:\n$planSmall")
 
-    // ---- forced at-scale shape (verifyPruneMinBytes = 0): the verify
-    // step re-shingles CANDIDATE ids only, behind a semi-join prune. In
-    // the static plan the pairs subtree (holding the fused shingle→
-    // signature pass) appears three times — the two candidate sides and
-    // the pair join — and the candidate re-shingle twice, so <=5 Dedup
-    // mapPartitions NODES; at runtime AQE stage reuse collapses the three
-    // pairs copies onto one materialized shuffle (asserted below), so the
-    // corpus kernel still executes exactly once.
-    val q = Dedup.minHashNearDups(df, "doc_id", "text",
-      Dedup.MinHashParams(verifyPruneMinBytes = 0L))
-    val plan = q.queryExecution.executedPlan.toString
-    val shingleScans = "MapPartitions graft\\.operators\\.Dedup".r
-      .findAllMatchIn(plan).size
-    assert(shingleScans <= 5,
-      s"expected <=5 Dedup mapPartitions in the plan, got $shingleScans:\n$plan")
-    assert(!plan.contains("CartesianProduct") && !plan.contains("InMemoryTableScan"),
-      s"no cartesian, no cached relation:\n$plan")
-    val rowsPruned = q.collect() // drive AQE to the final plan
-    val finalPlan = q.queryExecution.executedPlan.toString
-    assert(finalPlan.contains("isFinalPlan=true"), finalPlan)
-    // the banding shuffle feeding all three pairs references must be
-    // materialized once and reused, not recomputed per reference
-    assert(finalPlan.contains("ReusedExchange") ||
-      "MapPartitions graft\\.operators\\.Dedup".r.findAllMatchIn(finalPlan).size <= 3,
-      s"banding subtree must be shared across its three consumers:\n$finalPlan")
+    // ---- forced at-scale shape: the same corpus read back from parquet
+    // with Spark's file-size estimate factor raised, so the optimizer's
+    // size estimate crosses the prune gate. The verify step re-shingles
+    // CANDIDATE ids only, behind a semi-join prune. In the static plan the
+    // pairs subtree (holding the fused shingle→signature pass) appears
+    // three times — the two candidate sides and the pair join — and the
+    // candidate re-shingle twice, so <=5 Dedup mapPartitions NODES; at
+    // runtime AQE stage reuse collapses the three pairs copies onto one
+    // materialized shuffle (asserted below), so the corpus kernel still
+    // executes exactly once.
+    val path = java.nio.file.Files.createTempDirectory("minhash-pruned").resolve("corpus").toString
+    df.write.parquet(path)
+    val factorKey = "spark.sql.sources.fileCompressionFactor"
+    val factor = sp.conf.get(factorKey)
+    sp.conf.set(factorKey, "1000000")
+    val rowsPruned = try {
+      val q = Dedup.minHashNearDups(sp.read.parquet(path), "doc_id", "text")
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("LeftSemi"), s"expected the candidate semi-join prune:\n$plan")
+      val shingleScans = "MapPartitions graft\\.operators\\.Dedup".r
+        .findAllMatchIn(plan).size
+      assert(shingleScans <= 5,
+        s"expected <=5 Dedup mapPartitions in the plan, got $shingleScans:\n$plan")
+      assert(!plan.contains("CartesianProduct") && !plan.contains("InMemoryTableScan"),
+        s"no cartesian, no cached relation:\n$plan")
+      val rows = q.collect() // drive AQE to the final plan
+      val finalPlan = q.queryExecution.executedPlan.toString
+      assert(finalPlan.contains("isFinalPlan=true"), finalPlan)
+      // the banding shuffle feeding all three pairs references must be
+      // materialized once and reused, not recomputed per reference
+      assert(finalPlan.contains("ReusedExchange") ||
+        "MapPartitions graft\\.operators\\.Dedup".r.findAllMatchIn(finalPlan).size <= 3,
+        s"banding subtree must be shared across its three consumers:\n$finalPlan")
+      rows
+    } finally sp.conf.set(factorKey, factor)
 
     // ---- the two shapes are RESULT-identical (the adaptive switch only
     // moves where the kernel runs, never what is computed)

@@ -101,7 +101,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = vecs.toDF("vec_id", "embedding")
     val q = vec(0L)
 
-    val top = Similarity.cosineTopK(df, "vec_id", "embedding", q, 10).collect()
+    val top = SimilarityOracle.cosineTopK(df, "vec_id", "embedding", q, 10).collect()
     // exact check vs local computation
     val localTop = vecs.map { case (id, v) =>
       (id, Similarity.cosine(v.toArray, q))
@@ -148,7 +148,8 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, "the cat and the dog of the house is in it"),
       (2L, "el la los las una pero como más palabras"),
       (3L, "xyzzy plugh quux")).toDF("id", "text")
-    val out = df.select(col("id"), TextAnalysis.langId(col("text")).as("l"))
+    val out = df.select(col("id"), TextAnalysis.markerCounts(col("text")).as("mc"))
+      .select(col("id"), TextAnalysis.langIdFromCounts(col("mc")).as("l"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out(1L) == "en")
     assert(out(2L) == "es")

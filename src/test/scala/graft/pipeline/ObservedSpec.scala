@@ -34,16 +34,6 @@ class ObservedSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a == b && a.nonEmpty)
   }
 
-  test("search index build: one cached pass shared by the three tables, unpersist releases it") {
-    val sp = spark
-    val extracted = ExtractionJob.extract(TranscriptGen.dataset(spark, 10))
-    val idx = SearchIndex.build(extracted)
-    assert(idx.turns.count() > 0 && idx.chunks.count() > 0 && idx.conversations.count() > 0)
-    assert(spark.sparkContext.getPersistentRDDs.nonEmpty, "extraction should be cached during build")
-    idx.unpersist()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "unpersist must release the cache")
-  }
-
   test("extractObserved: metrics collected during the consuming action match ground truth") {
     val sp = spark; import sp.implicits._
     val turns = TranscriptGen.dataset(spark, 12)
