@@ -1,7 +1,5 @@
 package graft.kernel
 
-import java.util.regex.Pattern
-
 /** Per-block content classifier.
   *
   * Port of `XMLOutputGenerator._detectar_tipo_documento`
@@ -42,53 +40,134 @@ object DocType {
 
   val Generic = "documento_generico"
 
-  /** Longest `.*`-separated pure-literal segment of a pattern — a
-    * mandatory substring of any match, so a `contains` miss proves the
-    * regex cannot match (prefilter; semantics unchanged). "" = no literal
-    * segment, always run the regex.
+  /** One `.*`-separated piece of a pattern: a set of equal-length literal
+    * alternatives (a `[..]` class expands to one literal per member), or
+    * `\d+`, which only the last piece may be.
     */
-  private def requiredLiteral(src: String): String = {
-    // a `.*`-separated literal segment is mandatory ONLY in a pattern with
-    // no alternation/optionality at any level — bail out ("" = no
-    // prefilter) if such metachars appear anywhere
-    if (src.exists(c => c == '|' || c == '?' || c == '(' || c == '{')) return ""
-    val lits = src.split("""\.\*""").filter(s =>
-      s.nonEmpty && s.forall(c => Character.isLetter(c) || c == ' '))
-    if (lits.isEmpty) "" else lits.maxBy(_.length)
+  private final class Segment(val alts: Array[String], val digits: Boolean) {
+    val length: Int = if (digits) 1 else alts(0).length
   }
 
-  /** `s1.*s2(.*sk)*` as `(?m)^(?>.*?s1)(?>.*?s2)….*sk`: the same lines
-    * match, in time linear in the text. The verbatim form retries `.*`
-    * from every occurrence of `s1` to the end of its line, which is
-    * quadratic when `s1` recurs and the rest never follows. The rewrite
-    * tries each line once, from its start, committed to the earliest
-    * occurrence of each segment in turn. That is exact because every
-    * segment but the last has a fixed length, so an earlier end never
-    * rules out a later match. `.` and multiline `^` share Java's line
-    * terminators, so a line means the same to both forms.
-    */
-  private def linear(src: String): String = {
-    val segs = src.split("""\.\*""", -1)
-    if (segs.length == 1) src
+  private def segment(src: String): Segment =
+    if (src == """\d+""") new Segment(Array.empty, digits = true)
     else {
-      require(segs.init.forall(s => !s.exists("*+?{|(".contains(_))),
-        s"not a fixed-length middle segment in $src")
-      segs.init.map(s => s"(?>.*?$s)").mkString("(?m)^", "", ".*" + segs.last)
+      var alts = Seq("")
+      var i = 0
+      while (i < src.length) {
+        val members =
+          if (src.charAt(i) == '[') {
+            val close = src.indexOf(']', i)
+            val m = src.substring(i + 1, close)
+            i = close + 1
+            m.toSeq
+          } else { i += 1; Seq(src.charAt(i - 1)) }
+        require(members.forall(c => Character.isLetter(c) || c == ' '), s"not a literal piece: $src")
+        alts = for (a <- alts; c <- members) yield a + c
+      }
+      new Segment(alts.toArray, digits = false)
     }
-  }
 
-  private val familiesWithLits: Seq[(String, Seq[(Pattern, String)])] =
+  private val familySegments: Seq[(String, Seq[Array[Segment]])] =
     families.map { case (name, srcs) =>
-      name -> srcs.map(src => (compile(linear(src)), requiredLiteral(src)))
-    }
-
-  /** Hits per family, in family order. */
-  private[kernel] def scores(lowered: String): Seq[(String, Int)] =
-    familiesWithLits.map { case (name, pats) =>
-      name -> pats.count { case (p, lit) =>
-        (lit.isEmpty || lowered.contains(lit)) && p.matcher(lowered).find()
+      name -> srcs.map { src =>
+        val segs = src.split("""\.\*""", -1).map(segment)
+        require(segs.init.forall(!_.digits), s"\\d+ before the last piece in $src")
+        segs
       }
     }
+
+  /** Java's `.` stops at these, so `s1.*s2` matches within one line. */
+  private def isLineEnd(c: Char): Boolean =
+    (c <= '\r' || c >= '\u0085') &&
+      (c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029')
+
+  /** The next occurrence of a segment at or after a position, remembered:
+    * an occurrence found from `from` answers every later query up to
+    * itself, so the queries of one text, which only move forward, scan it
+    * once.
+    */
+  private final class Occurrences(text: String, seg: Segment) {
+    private var from = Int.MaxValue
+    private var at = -1
+
+    def next(pos: Int): Int = {
+      if (pos < from || (at >= 0 && pos > at)) {
+        from = pos
+        at = if (seg.digits) nextDigit(pos) else nextLiteral(pos)
+      }
+      at
+    }
+
+    private def nextLiteral(pos: Int): Int = {
+      var best = -1
+      seg.alts.foreach { a =>
+        val j = text.indexOf(a, pos)
+        if (j >= 0 && (best < 0 || j < best)) best = j
+      }
+      best
+    }
+
+    private def nextDigit(pos: Int): Int = {
+      var i = pos
+      while (i < text.length) {
+        val cp = text.codePointAt(i)
+        if (Character.isDigit(cp)) return i
+        i += Character.charCount(cp)
+      }
+      -1
+    }
+  }
+
+  /** Whether `s1.*s2(.*sk)*` finds a match in `text`: some line holds an
+    * occurrence of each segment after the previous one. Committing to the
+    * earliest occurrence of each segment in turn is exact, because every
+    * segment but the last has a fixed length, so an earlier end never rules
+    * out a later match. Each segment's occurrences are searched once for
+    * the whole text, and the line ends are found once, so the search is
+    * linear however many lines repeat `s1` without the rest.
+    */
+  private def found(text: String, segs: Array[Segment], lineEnds: => Array[Int]): Boolean = {
+    val occ = segs.map(new Occurrences(text, _))
+    var from = 0
+    while (true) {
+      val i = occ(0).next(from)
+      if (i < 0) return false
+      if (segs.length == 1) return true
+      // the first line end after `i` (a segment starts at `i`, so no line
+      // end sits there and the search returns an insertion point)
+      val ends = lineEnds
+      val e = -java.util.Arrays.binarySearch(ends, i) - 1
+      val end = if (e < ends.length) ends(e) else text.length
+      var pos = i + segs(0).length
+      var k = 1
+      while (k < segs.length) {
+        val j = occ(k).next(pos)
+        if (j < 0) return false
+        if (j >= end) k = segs.length + 1
+        else { pos = j + segs(k).length; k += 1 }
+      }
+      if (k == segs.length) return true
+      from = end + 1
+    }
+    false
+  }
+
+  /** Hits per family, in family order. */
+  private[kernel] def scores(lowered: String): Seq[(String, Int)] = {
+    var ends: Array[Int] = null
+    def lineEnds: Array[Int] = {
+      if (ends == null) {
+        val b = Array.newBuilder[Int]
+        var i = 0
+        while (i < lowered.length) { if (isLineEnd(lowered.charAt(i))) b += i; i += 1 }
+        ends = b.result()
+      }
+      ends
+    }
+    familySegments.map { case (name, pats) =>
+      name -> pats.count(found(lowered, _, lineEnds))
+    }
+  }
 
   def classify(text: String): String = {
     // null degrades to the generic family (the kernel tier's null

@@ -154,24 +154,19 @@ object Py {
     * `\w` fails loudly there.
     */
   def isUWordCp(cp: Int): Boolean =
-    if (cp < 128) uWordAscii(cp)
-    else Character.isAlphabetic(cp) || Character.isDigit(cp) || {
+    if (cp < 256) uWordLatin1(cp) else uWordFormula(cp)
+
+  private[kernel] def uWordFormula(cp: Int): Boolean =
+    Character.isAlphabetic(cp) || Character.isDigit(cp) || {
       val t = Character.getType(cp)
       t == Character.NON_SPACING_MARK || t == Character.ENCLOSING_MARK ||
       t == Character.COMBINING_SPACING_MARK ||
       t == Character.CONNECTOR_PUNCTUATION
     } || cp == 0x200C || cp == 0x200D // ZWNJ/ZWJ = Join_Control
 
-  // ASCII fast table for the scanners' hot loops, derived from the same
-  // formula (never transcribed by hand)
-  private val uWordAscii: Array[Boolean] = Array.tabulate(128) { cp =>
-    Character.isAlphabetic(cp) || Character.isDigit(cp) || {
-      val t = Character.getType(cp)
-      t == Character.NON_SPACING_MARK || t == Character.ENCLOSING_MARK ||
-      t == Character.COMBINING_SPACING_MARK ||
-      t == Character.CONNECTOR_PUNCTUATION
-    }
-  }
+  // Latin-1 table for the scanners' hot loops (accented letters are common
+  // in Portuguese text), derived from the same formula, never transcribed
+  private[kernel] val uWordLatin1: Array[Boolean] = Array.tabulate(256)(uWordFormula)
 
   /** re.findall semantics: 0 groups → whole match; 1 group → that group
     * ("" when it did not participate); n groups → all groups concatenated

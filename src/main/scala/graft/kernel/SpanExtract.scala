@@ -128,22 +128,20 @@ final class SpanTemplate(
     identificationPatterns.map(p =>
       Pattern.compile(p, Py.IFLAGS | Pattern.MULTILINE))
 
-  /** Per-pattern required lowercase literal ("" = none provable): a
-    * case-insensitive regex match implies the lowered text contains this
-    * substring, so a `contains` miss on a pre-lowered copy skips the regex
-    * scan entirely — the same necessary-condition prefilter DocType's
-    * classifier uses, derived automatically by
-    * [[SpanTemplates.requiredLiteralCI]].
+  /** Per-pattern anchor `(lit, back)` ([[SpanTemplates.anchorCI]]): every
+    * match starts at most `back` chars before an occurrence of `lit` in the
+    * lowered text. ("", 0) = none provable.
     */
-  private[kernel] val requiredLits: Array[String] =
-    identificationPatterns.map(SpanTemplates.requiredLiteralCI).toArray
+  private[kernel] val anchors: Array[(String, Int)] =
+    identificationPatterns.map(SpanTemplates.anchorCI).toArray
 
   /** Fraction of identification patterns matching (templates.py:266-279).
     * `lowered` is a toLowerCase(ROOT) copy of `text` that
     * [[SpanTemplates.identify]]'s case-fold guard has validated for literal
-    * prefiltering, or null to run every regex unconditionally. Semantics
-    * are identical either way (the literal is a necessary condition of the
-    * match); only the number of regex scans changes.
+    * anchoring, or null to run every regex's own scan. With a copy, a
+    * pattern is tried with `lookingAt` only at the `back + 1` starts before
+    * each occurrence of its literal — every start a match can have — instead
+    * of at every position; the answer is the same either way.
     */
   private[kernel] def matchesDocument(text: String, lowered: String): Double =
     if (compiled.isEmpty) 0.0
@@ -151,13 +149,34 @@ final class SpanTemplate(
       var hits = 0
       var i = 0
       while (i < compiled.length) {
-        val lit = requiredLits(i)
-        if ((lowered == null || lit.isEmpty || lowered.contains(lit)) &&
-            compiled(i).matcher(text).find()) hits += 1
+        if (finds(i, text, lowered)) hits += 1
         i += 1
       }
       hits.toDouble / compiled.size
     }
+
+  private def finds(i: Int, text: String, lowered: String): Boolean = {
+    val m = compiled(i).matcher(text)
+    val (lit, back) = anchors(i)
+    if (lowered == null || lit.isEmpty) return m.find()
+    // transparent bounds: a region start still sees its true left
+    // neighbour; no anchoring bounds: a region start is not a `^`
+    m.useTransparentBounds(true)
+    m.useAnchoringBounds(false)
+    var next = 0 // the first start not tried yet
+    var q = lowered.indexOf(lit)
+    while (q >= 0) {
+      var p = math.max(q - back, next)
+      while (p <= q) {
+        m.region(p, text.length)
+        if (m.lookingAt()) return true
+        p += 1
+      }
+      next = q + 1
+      q = lowered.indexOf(lit, q + 1)
+    }
+    false
+  }
 
   def extractFields(text: String): Seq[FieldSpan] = {
     val out = ListBuffer.empty[FieldSpan]
@@ -219,21 +238,17 @@ object SpanTemplates {
   /** registration order matters for tie-breaks (templates.py:521-524) */
   val all: Seq[SpanTemplate] = Seq(invoice, businessCard, receipt)
 
-  /** Longest literal substring a CASE-INSENSITIVE match of `src` provably
-    * forces into the lowered text, or "" when none can be proven.
-    * Conservative single-pass parser over the regex source covering the
-    * identification-pattern inventory's shapes:
+  /** `(lit, back)` for a CASE-INSENSITIVE pattern `src`: every match
+    * starts at most `back` chars before an occurrence of the lowercase ASCII
+    * literal `lit`, or ("", 0) when none can be proven.
     *
-    *   - plain literal chars and escaped literal punct accumulate runs;
-    *   - class/boundary escapes (\w \d \s \b …), '.', '^', '$' break runs;
-    *   - a '?' or '*' quantifier drops its (optional) atom; '+' keeps it
-    *     (x+y still forces "xy": every match ends …xy); '{m,…}' keeps one
-    *     copy when m ≥ 1;
-    *   - top-level alternation: the result must be forced by EVERY branch
-    *     (longest branch-0 run contained in some run of each other
-    *     branch, e.g. fone|telefone → "fone");
-    *   - raw groups/classes/anything unrecognized ⇒ bail to "" (regexes
-    *     still run, just without the skip).
+    * Each top-level branch contributes its leading literal run: plain
+    * chars and escaped punctuation up to the first class escape, `.`,
+    * anchor, group, class or alternation, where a char made optional by
+    * `?`, `*` or `{0,…}` is left out and one under `+` or `{m≥1,…}` ends the
+    * run. `lit` is the longest substring of branch 0's run found in every
+    * branch's run, and `back` the largest offset at which it is found
+    * (`fone|telefone` → ("fone", 4), `cel\.|celular` → ("cel", 0)).
     *
     * The literal is only trusted over pre-lowered text that passed
     * [[identify]]'s case-fold guard, and only when pure ASCII: for ASCII
@@ -241,99 +256,58 @@ object SpanTemplates {
     * toLowerCase(c) == L except the three guarded fold anomalies
     * (İ U+0130 — length changes on lowering; ı U+0131; ſ U+017F).
     */
-  private[kernel] def requiredLiteralCI(src: String): String = {
-    def branchRuns(b: String): Option[Seq[String]] = {
-      val runs = ListBuffer.empty[String]
-      val cur = new StringBuilder
-      def flush(): Unit = { if (cur.nonEmpty) { runs += cur.toString; cur.clear() } }
+  private[kernel] def anchorCI(src: String): (String, Int) = {
+    def leadingRun(b: String): String = {
+      val run = new StringBuilder
       var i = 0
-      // consume a quantifier following an atom; returns 0 = none,
-      // 1 = keep-one ('+' or {m>=1,…}), 2 = optional ('?', '*', {0,…})
-      def quant(): Int = {
-        if (i >= b.length) return 0
-        b.charAt(i) match {
-          case '?' => i += 1; 2
-          case '*' => i += 1; 2
-          case '+' => i += 1; 1
-          case '{' =>
-            val close = b.indexOf('}', i)
-            if (close < 0) { i = b.length; 2 }
-            else {
-              val body = b.substring(i + 1, close)
-              val m = body.takeWhile(_.isDigit)
-              i = close + 1
-              if (i < b.length && (b.charAt(i) == '?' || b.charAt(i) == '+')) i += 1
-              if (m.nonEmpty && m.toInt >= 1) 1 else 2
-            }
-          case _ => 0
-        }
-      }
       while (i < b.length) {
         val c = b.charAt(i)
-        if (c == '\\') {
-          if (i + 1 >= b.length) return None
-          val e = b.charAt(i + 1)
-          i += 2
-          if ("wWdDsSbBAZzGhHvVR".indexOf(e) >= 0) { flush(); quant(); () }
-          else if (e.isDigit) return None // backreference
-          else quant() match {
-            case 2 => flush()
-            case 1 => cur += e; flush() // x+ may repeat before the next atom
-            case _ => cur += e
-          }
-        } else if (c == '(' || c == ')' || c == '[' || c == ']') return None
-        else if (c == '.') { i += 1; flush(); quant(); () }
-        else if (c == '^' || c == '$') { i += 1; flush() }
-        else if (c == '?' || c == '*' || c == '+' || c == '{') return None // orphan
-        else {
-          i += 1
-          quant() match {
-            case 2 => flush()
-            case 1 => cur += c; flush()
-            case _ => cur += c
-          }
-        }
+        val lit =
+          if (c == '\\' && i + 1 < b.length && !b.charAt(i + 1).isLetterOrDigit) { i += 2; b.charAt(i - 1) }
+          else if (c == '\\' || ".^$[](){}|*+?".indexOf(c) >= 0) return run.toString
+          else { i += 1; c }
+        if (i < b.length && (b.charAt(i) == '?' || b.charAt(i) == '*' || b.startsWith("{0", i)))
+          return run.toString
+        run += lit
+        if (i < b.length && (b.charAt(i) == '+' || b.charAt(i) == '{')) return run.toString
       }
-      flush()
-      Some(runs.toSeq)
+      run.toString
     }
-    // split top-level alternation ('\|' never splits; groups already bail)
+    // top-level branches; a '|' inside a group or class is left to the
+    // group's own bail-out in leadingRun
     val branches = ListBuffer.empty[String]
-    val cur = new StringBuilder
+    var depth = 0
+    var from = 0
     var i = 0
     while (i < src.length) {
-      val c = src.charAt(i)
-      if (c == '\\' && i + 1 < src.length) { cur += c; cur += src.charAt(i + 1); i += 2 }
-      else if (c == '|') { branches += cur.toString; cur.clear(); i += 1 }
-      else { cur += c; i += 1 }
+      src.charAt(i) match {
+        case '\\' => i += 1
+        case '(' | '[' => depth += 1
+        case ')' | ']' => depth -= 1
+        case '|' if depth == 0 => branches += src.substring(from, i); from = i + 1
+        case _ =>
+      }
+      i += 1
     }
-    branches += cur.toString
-    val allRuns = branches.map(branchRuns)
-    if (allRuns.exists(r => r.isEmpty || r.get.isEmpty)) return ""
-    // candidates: every substring of branch-0's runs, longest first — a
-    // literal forced by all branches need not be a whole run of any
-    // (cel\.|celular forces "cel", a proper substring of both)
-    val rest = allRuns.tail.map(_.get)
-    val chosen = allRuns.head.get
-      .flatMap(r => for {
-        s <- 0 until r.length; e <- (s + 1) to r.length
-      } yield r.substring(s, e))
-      .distinct.sortBy(-_.length)
-      .find(lit => rest.forall(_.exists(_.contains(lit))))
+    branches += src.substring(from)
+    val runs = branches.map(b => Py.lower(leadingRun(b)))
+    val first = runs.head
+    val lit = (first.length to 1 by -1).iterator
+      .flatMap(len => (0 to first.length - len).iterator.map(s => first.substring(s, s + len)))
+      .find(l => runs.forall(_.contains(l)))
       .getOrElse("")
-    val lowered = Py.lower(chosen)
-    if (lowered.forall(ch => ch < 128)) lowered else ""
+    if (lit.isEmpty || !lit.forall(_ < 128)) ("", 0)
+    else (lit, runs.map(_.indexOf(lit)).max)
   }
 
   /** best template with confidence >= its threshold, strictly improving —
     * TemplateManager.identify_document_type (templates.py:578-595).
     *
-    * One lowered copy of the text feeds every template's literal
-    * prefilter (the per-turn profile put the unfiltered 13-regex scan at
-    * ~30% of processTurn; DocType's prefiltered 21-regex classify runs
-    * 10× faster). The case-fold guard falls back to unfiltered matching
-    * for the three Unicode chars whose lowering diverges from the regex
-    * engine's per-char case folding against ASCII literals.
+    * One lowered copy of the text feeds every template's literal anchors
+    * ([[SpanTemplate.matchesDocument]]). The case-fold guard falls back to
+    * each regex's own scan for the three Unicode chars whose lowering
+    * diverges from the regex engine's per-char case folding against ASCII
+    * literals.
     */
   def identify(text: String): Option[SpanTemplate] = {
     val lowered = Py.lower(text)

@@ -35,6 +35,7 @@ final case class KernelResult(text: String, metrics: KernelMetrics)
   */
 final class TextKernel {
   import Py._
+  import TextKernel._
 
   // ---- ordered correction tables (text_processor.py:100-165) ----
   // Python dicts are insertion-ordered; order is semantically significant.
@@ -71,8 +72,9 @@ final class TextKernel {
   // text falls short: `minRun`, the longest run of consecutive digits a
   // match holds (a mandatory contiguous \d{n} group); `minDigits`, the
   // digits a match holds; `literal`, a string every match contains.
-  // `anchored`: every match starts at a digit run's first digit or at the
-  // '(' before it ([[findAllDigitAnchored]]).
+  // `starts`: where a match can start — at a digit run's first digit or
+  // the '(' before it ([[findAllDigitAnchored]]), at the local part before
+  // an '@' ([[findAllEmails]]), or anywhere.
   private final case class PatternCfg(
       name: String,
       regex: Pattern,
@@ -82,7 +84,7 @@ final class TextKernel {
       minRun: Int = 0,
       minDigits: Int = 0,
       literal: String = "",
-      anchored: Boolean = false)
+      starts: TextKernel.Starts = TextKernel.Anywhere)
 
   private val patternTable: Seq[PatternCfg] = Seq(
     PatternCfg("cpf",
@@ -90,37 +92,37 @@ final class TextKernel {
       Some(compile("""(\d{3})\.?(\d{3})\.?(\d{3})-?(\d{2})""")),
       Some(tpl("""\1.\2.\3-\4""")),
       Some(Validators.cpf),
-      minRun = 3, minDigits = 11, anchored = true),
+      minRun = 3, minDigits = 11, starts = TextKernel.DigitRuns),
     PatternCfg("cnpj",
       compile("""\b\d{2}\.?\d{3}\.?\d{3}/?\d{4}-?\d{2}\b"""),
       Some(compile("""(\d{2})\.?(\d{3})\.?(\d{3})/(\d{4})-?(\d{2})""")),
       Some(tpl("""\1.\2.\3/\4-\5""")),
       Some(Validators.cnpj),
-      minRun = 4, minDigits = 14, anchored = true),
+      minRun = 4, minDigits = 14, starts = TextKernel.DigitRuns),
     PatternCfg("cep",
       compile("""\b\d{5}-?\d{3}\b"""),
       Some(compile("""(\d{5})-?(\d{3})""")),
       Some(tpl("""\1-\2""")),
       None,
-      minRun = 5, minDigits = 8, anchored = true),
+      minRun = 5, minDigits = 8, starts = TextKernel.DigitRuns),
     PatternCfg("phone",
       compile("""\b\(?\d{2}\)?\s?\d{4,5}-?\d{4}\b"""),
       Some(compile("""\(?(\d{2})\)?\s?(\d{4,5})-?(\d{4})""")),
       Some(tpl("""(\1) \2-\3""")),
       None,
-      minRun = 4, minDigits = 10, anchored = true),
+      minRun = 4, minDigits = 10, starts = TextKernel.DigitRuns),
     PatternCfg("date",
       compile("""\b\d{1,2}[\/\-\.]\d{1,2}[\/\-\.]\d{2,4}\b"""),
       Some(compile("""(\d{1,2})[\/\-\.](\d{1,2})[\/\-\.](\d{2,4})""")),
       Some(tpl("""\1/\2/\3""")),
       Some(Validators.date),
-      minDigits = 4, anchored = true),
+      minDigits = 4, starts = TextKernel.DigitRuns),
     PatternCfg("time",
       compile("""\b\d{1,2}:\d{2}(:\d{2})?\b"""),
       Some(compile("""(\d{1,2}):(\d{2})(:\d{2})?""")),
       Some(tpl("""\1:\2\3""")),
       Some(Validators.time),
-      minDigits = 3, literal = ":", anchored = true),
+      minDigits = 3, literal = ":", starts = TextKernel.DigitRuns),
     PatternCfg("currency",
       compile("""R\$\s?\d{1,3}(?:\.\d{3})*(?:,\d{2})?"""),
       Some(compile("""R\$\s?(\d{1,3}(?:\.\d{3})*)(?:,(\d{2}))?""")),
@@ -130,7 +132,7 @@ final class TextKernel {
     PatternCfg("email",
       compile("""\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b"""),
       None, None, Some(Validators.email),
-      literal = "@"),
+      literal = "@", starts = TextKernel.AtSigns),
     PatternCfg("url",
       compile("""https?://[^\s<>"{}|\\^`\[\]]+"""),
       None, None, None,
@@ -140,61 +142,89 @@ final class TextKernel {
       Some(compile("""(\d{7})-?(\d{2})\.(\d{4})\.(\d{1})\.(\d{2})\.(\d{4})""")),
       Some(tpl("""\1-\2.\3.\4.\5.\6""")),
       None,
-      minRun = 7, minDigits = 20, anchored = true))
+      minRun = 7, minDigits = 20, starts = TextKernel.DigitRuns))
 
   // precompiled patterns for the cleanup stages
   private val pNonWord = compile("""[^\w]""")
   private val pStartPunct = compile("""^[^\w]*""")
   private val pEndPunct = compile("""[^\w]*$""")
-  // Single-char confusion probes. The reference's regexes are
-  // `\b\w*X\w*\b` (digit→alpha) and `\b\d*X\d*\b` (alpha→digit); `\b`
-  // can never fall INSIDE a maximal `\w` run, so a match is always a
-  // COMPLETE token — "every token containing X" for the first shape,
-  // "every token that is digits plus exactly one X" for the second.
-  // These scanners produce the identical match list (same strings, same
-  // order, same duplicates) from one [[WordRuns]] walk per probe;
-  // the regex pass they replace was the single largest cost of this stage
-  // (measured 0.38 s of 0.49 s per 78k bench turns — the probes run on
-  // up to ~90% of turns because 'l'/'0'/'g' are common). Equality with
-  // the verbatim reference patterns is pinned by KernelPropertySpec over
-  // the adversarial corpus including non-ASCII digits, combining marks,
-  // connector punctuation, join controls, and astral letters. `w` is an
-  // ASCII char, so a char equal to it is a code point equal to it.
-  private[kernel] def scanTokensContaining(text: String, w: Char): List[String] = {
-    val out = ListBuffer.empty[String]
-    val runs = new WordRuns(text)
-    while (runs.next()) {
-      var i = runs.start
-      while (i < runs.end && text.charAt(i) != w) i += 1
-      if (i < runs.end) out += text.substring(runs.start, runs.end)
-    }
-    out.toList
+
+  /** A single-char pair of the table as the reference probes it: `w` → `c`
+    * over every match of `\b\w*W\w*\b` (digit→alpha) or `\b\d*W\d*\b`
+    * (alpha→digit). `\b` never falls inside a maximal `\w` run, so a match
+    * is always a whole run: one holding W for the first shape, one of
+    * digits and exactly one W for the second. Pairs in neither direction
+    * are skipped, as in the reference.
+    */
+  private final class Probe(val w: Char, val c: Char, val digitToAlpha: Boolean) {
+    /** Whether the whole `\w` run `run` is a match the reference corrects
+      * (its `isdigit`/`isalpha` filter included).
+      */
+    def corrects(run: String): Boolean =
+      if (digitToAlpha) run.indexOf(w) >= 0 && !isDigitStr(run)
+      else {
+        var ws = 0
+        var digits = true
+        var i = 0
+        while (digits && i < run.length) {
+          val cp = run.codePointAt(i)
+          if (cp == w) ws += 1 else digits = Character.isDigit(cp)
+          i += Character.charCount(cp)
+        }
+        digits && ws == 1 && !isAlphaStr(run)
+      }
+
+    /** `ch` with `c` read as `w`: the view of a run that the probe's own
+      * rewrites cannot change.
+      */
+    def fold(ch: Char): Char = if (ch == c) w else ch
   }
 
-  private[kernel] def scanDigitRunsWithOne(text: String, w: Char): List[String] = {
-    val out = ListBuffer.empty[String]
-    val runs = new WordRuns(text)
-    while (runs.next()) {
-      var ws = 0
-      var digits = true
-      var i = runs.start
-      while (digits && i < runs.end) {
-        val cp = text.codePointAt(i)
-        if (cp == w) ws += 1 else digits = Character.isDigit(cp)
-        i += Character.charCount(cp)
-      }
-      if (digits && ws == 1) out += text.substring(runs.start, runs.end)
+  // the table split around its single-char pairs, which are consecutive
+  private val (pairsBefore, probes, pairsAfter) = {
+    val single = (p: (String, String)) => p._1.length == 1 && p._2.length == 1
+    val (before, rest) = ocrCorrections.span(!single(_))
+    val (singles, after) = rest.span(single)
+    require(!after.exists(single), "the single-char pairs must be consecutive")
+    val ps = singles.flatMap { case (wrong, correct) =>
+      val (w, c) = (wrong.charAt(0), correct.charAt(0))
+      if (Character.isDigit(w) && Character.isLetter(c)) Some(new Probe(w, c, digitToAlpha = true))
+      else if (Character.isLetter(w) && Character.isDigit(c)) Some(new Probe(w, c, digitToAlpha = false))
+      else None
     }
-    out.toList
+    (before, ps.toArray, after)
   }
+  private val probeChars: Array[Boolean] = {
+    val a = new Array[Boolean](128)
+    probes.foreach(p => a(p.w) = true)
+    a
+  }
+
+  /** The premise of [[correctProbes]]'s one walk: every probe maps an
+    * ASCII `\w` char to a `\w` char, so a rewrite never moves a run
+    * boundary, and no probe writes a later probe's char, so the runs a
+    * probe can touch are the input runs that hold its char. Asserted by
+    * KernelPropertySpec.
+    */
+  private[kernel] def probePremise: Boolean =
+    probes.indices.forall { k =>
+      val p = probes(k)
+      p.w < 128 && isUWordCp(p.w) && isUWordCp(p.c) &&
+        probes.drop(k + 1).forall(_.w != p.c)
+    }
 
   /** process_text (text_processor.py:233-313). Throws on empty input like
     * the reference (ZeroDivisionError analog); callers map that to an
     * error row. Use [[processSafe]] in pipelines.
+    *
+    * Throws [[TextKernel.Amplification]] when the text, after any stage, is
+    * longer than [[TextKernel.outputLimit]] of the input: the pattern and
+    * abbreviation stages check before they build the longer text.
     */
   def process(text0: String): KernelResult = {
     val originalText = text0
     val originalLength = pyLen(text0)
+    val limit = outputLimit(text0.length)
     val corrections = ListBuffer.empty[String]
 
     var text = cleanText(text0)
@@ -208,14 +238,15 @@ final class TextKernel {
     text = t3
     if (wordCorr > 0) corrections += s"correcao_ortografica_$wordCorr"
 
-    val (t4, patternsFound) = detectAndFormatPatterns(text)
+    val (t4, patternsFound) = detectAndFormatPatterns(text, limit)
     text = t4
 
-    val (t5, abbrevCorr) = correctAbbreviations(text)
+    val (t5, abbrevCorr) = correctAbbreviations(text, limit)
     text = t5
     if (abbrevCorr > 0) corrections += s"abreviacoes_$abbrevCorr"
 
     text = formatText(text)
+    if (text.length > limit) throw new Amplification(limit)
     corrections += "formatacao_final"
 
     text = validateConsistency(text)
@@ -288,46 +319,208 @@ final class TextKernel {
     out.result
   }
 
-  /** _correct_confused_characters (text_processor.py:332-365). */
+  /** _correct_confused_characters (text_processor.py:332-365): each pair
+    * of the table in order; a multi-char pair is one whole-text replace,
+    * counted on the replaced text as the reference does, and the
+    * single-char pairs are [[correctProbes]].
+    */
   def correctConfusedCharacters(text0: String): (String, Int) = {
     var text = text0
     var corrections = 0
-    ocrCorrections.foreach { case (wrong, correct) =>
-      if (wrong.length == 1 && correct.length == 1) {
-        // the probe regex \b\w*X\w*\b requires the literal char X — an
-        // indexOf miss proves zero matches, skipping the regex scan
-        if (text.indexOf(wrong.charAt(0)) < 0) {
-          // no occurrence: both probe directions are no-ops
-        } else if (Character.isDigit(wrong.charAt(0)) && Character.isLetter(correct.charAt(0))) {
-          val matches = scanTokensContaining(text, wrong.charAt(0))
-          matches.foreach { m =>
-            if (!isDigitStr(m)) {
-              val nm = m.replace(wrong, correct)
-              text = text.replace(m, nm)
-              corrections += 1
-            }
-          }
-        } else if (Character.isLetter(wrong.charAt(0)) && Character.isDigit(correct.charAt(0))) {
-          val matches = scanDigitRunsWithOne(text, wrong.charAt(0))
-          matches.foreach { m =>
-            if (!isAlphaStr(m)) {
-              val nm = m.replace(wrong, correct)
-              text = text.replace(m, nm)
-              corrections += 1
-            }
-          }
-        }
-        // NB: single-char pairs not matching either digit/alpha direction
-        // are silently skipped, as in the reference.
-      } else {
+    def replaceWords(pairs: Seq[(String, String)]): Unit =
+      pairs.foreach { case (wrong, correct) =>
         if (text.contains(wrong)) {
           text = text.replace(wrong, correct)
           // reference counts on the *already replaced* text
           corrections += count(text, correct) - count(text, wrong)
         }
       }
-    }
+    replaceWords(pairsBefore)
+    val (t, probed) = correctProbes(text)
+    text = t
+    corrections += probed
+    replaceWords(pairsAfter)
     (text, corrections)
+  }
+
+  /** The single-char pairs, in order. For each, the reference takes the
+    * probe's matches over the current text, in text order with duplicates,
+    * and for each match `m` replaces every occurrence of `m` in the whole
+    * text with `m.replace(w, c)`. The same bytes from one walk:
+    *
+    *   - a match is a whole `\w` run and the rewrites map `\w` chars to
+    *     `\w` chars ([[probePremise]]), so the runs keep their places and
+    *     every occurrence of a match lies inside one run: a replace acts on
+    *     each run alone, and runs with equal text end equal;
+    *   - a run can only change in a probe if it holds the probe's char
+    *     `w`, and only the input runs holding some probe char can (no probe
+    *     writes a later probe's char);
+    *   - under [[Probe.fold]], which the probe's rewrites leave unchanged,
+    *     a match that ever occurs in a run occurs in the run's fold at the
+    *     probe's start, so the whole match list replayed on the run equals
+    *     the list of those matches replayed ([[ProbeReplay]]).
+    *
+    * The text is rebuilt once, after the last probe.
+    */
+  private def correctProbes(text: String): (String, Int) = {
+    final class Run(val input: String) {
+      var text: String = input
+      var probe = -1 // the probe `corrects` was last decided for
+      var corrects = false
+    }
+    val starts = Array.newBuilder[Int]
+    val runs = ListBuffer.empty[Run]
+    val distinct = new java.util.HashMap[String, Run]()
+    val wr = new WordRuns(text)
+    while (wr.next()) {
+      var i = wr.start
+      while (i < wr.end && !(text.charAt(i) < 128 && probeChars(text.charAt(i)))) i += 1
+      if (i < wr.end) {
+        val s = text.substring(wr.start, wr.end)
+        var r = distinct.get(s)
+        if (r == null) { r = new Run(s); distinct.put(s, r) }
+        starts += wr.start
+        runs += r
+      }
+    }
+    if (runs.isEmpty) return (text, 0)
+    var corrections = 0
+    var k = 0
+    while (k < probes.length) {
+      val p = probes(k)
+      val ids = new java.util.HashMap[String, Integer]()
+      val order = Array.newBuilder[Int]
+      runs.foreach { r =>
+        if (r.probe != k) { r.probe = k; r.corrects = p.corrects(r.text) }
+        if (r.corrects) {
+          var id = ids.get(r.text)
+          if (id == null) { id = ids.size; ids.put(r.text, id) }
+          order += id
+        }
+      }
+      val list = order.result()
+      if (list.nonEmpty) {
+        corrections += list.length
+        val matches = new Array[String](ids.size)
+        ids.forEach((m, id) => matches(id) = m)
+        val replay = new ProbeReplay(p, matches, list)
+        distinct.values.forEach { r =>
+          if (r.text.indexOf(p.w) >= 0) r.text = replay(r.text)
+        }
+      }
+      k += 1
+    }
+    val out = text.toCharArray
+    var changed = false
+    val at = starts.result()
+    var j = 0
+    runs.foreach { r =>
+      if (r.text ne r.input) { r.text.getChars(0, r.text.length, out, at(j)); changed = true }
+      j += 1
+    }
+    (if (changed) new String(out) else text, corrections)
+  }
+
+  /** One probe's match list (`list`, ids into the distinct `matches`),
+    * replayed on one run at a time: `apply(run)` is the run after
+    * `run = run.replace(m, m.replace(w, c))` for every `m` of the list in
+    * order. Only the matches whose fold occurs in the run's fold can ever
+    * occur in it; they are found by hashing the run's windows of each match
+    * length. A match found absent stays absent until the run changes, so
+    * the replay jumps over its later places until then: the work is bounded
+    * by the run's changes, not by the list's duplicates.
+    */
+  private final class ProbeReplay(p: Probe, matches: Array[String], list: Array[Int]) {
+    private val fixed = matches.map(_.replace(p.w, p.c))
+    // each distinct match's places in the list, ascending
+    private val places = indicesById(list, matches.length)
+    private val lengths: Array[Int] = matches.map(_.length).distinct.sorted
+    private val pows: Array[Long] = Array.iterate(1L, lengths.last + 1)(_ * HashBase)
+    private val byHash = new scala.collection.mutable.LongMap[List[Int]]()
+    matches.indices.foreach { id =>
+      val m = matches(id)
+      val key = hashKey(m.length, foldHash(m, 0, m.length))
+      byHash(key) = id :: byHash.getOrElse(key, Nil)
+    }
+
+    private def hashKey(len: Int, h: Long): Long = h * 31 + len
+
+    private def foldHash(s: String, from: Int, to: Int): Long = {
+      var h = 0L
+      var i = from
+      while (i < to) { h = h * HashBase + p.fold(s.charAt(i)); i += 1 }
+      h
+    }
+
+    def apply(run: String): String = {
+      val cands = candidates(run)
+      if (cands.isEmpty) run else replay(run, cands)
+    }
+
+    /** The distinct matches whose fold occurs in `run`'s fold. */
+    private def candidates(run: String): Array[Int] = {
+      val n = run.length
+      val prefix = new Array[Long](n + 1)
+      var i = 0
+      while (i < n) { prefix(i + 1) = prefix(i) * HashBase + p.fold(run.charAt(i)); i += 1 }
+      var found = List.empty[Int]
+      lengths.foreach { len =>
+        var s = 0
+        while (s + len <= n) {
+          val ids = byHash.getOrNull(hashKey(len, prefix(s + len) - prefix(s) * pows(len)))
+          if (ids != null) ids.foreach { id =>
+            if (!found.contains(id) && foldEquals(run, s, matches(id))) found = id :: found
+          }
+          s += 1
+        }
+      }
+      found.toArray
+    }
+
+    private def foldEquals(run: String, at: Int, m: String): Boolean = {
+      var i = 0
+      while (i < m.length && p.fold(run.charAt(at + i)) == p.fold(m.charAt(i))) i += 1
+      i == m.length
+    }
+
+    private def replay(run0: String, cands: Array[Int]): String = {
+      var run = run0
+      val live = Array.fill(cands.length)(true)
+      val next = new Array[Int](cands.length) // each candidate's next place
+      var pos = -1 // the place replayed last
+      var done = false
+      while (!done) {
+        // the earliest place after `pos` of a live candidate
+        var best = -1
+        var bestPlace = Int.MaxValue
+        var j = 0
+        while (j < cands.length) {
+          if (live(j)) {
+            val pl = places(cands(j))
+            var q = next(j)
+            if (q < pl.length && pl(q) <= pos) {
+              q = java.util.Arrays.binarySearch(pl, q, pl.length, pos + 1)
+              if (q < 0) q = -q - 1
+              next(j) = q
+            }
+            if (q < pl.length && pl(q) < bestPlace) { best = j; bestPlace = pl(q) }
+          }
+          j += 1
+        }
+        if (best < 0) done = true
+        else {
+          pos = bestPlace
+          next(best) += 1
+          val id = cands(best)
+          if (run.indexOf(matches(id)) < 0) live(best) = false
+          else {
+            run = run.replace(matches(id), fixed(id))
+            java.util.Arrays.fill(live, true)
+          }
+        }
+      }
+      run
+    }
   }
 
   /** _correct_spelling (text_processor.py:367-384): `' '.join` of the
@@ -422,8 +615,21 @@ final class TextKernel {
     startPunct + formatted + endPunct
   }
 
-  /** _detect_and_format_patterns (text_processor.py:405-436). */
-  def detectAndFormatPatterns(text0: String): (String, LinkedHashMap[String, ListBuffer[String]]) = {
+  /** _detect_and_format_patterns (text_processor.py:405-436): for each
+    * pattern in order, `findall` over the current text; each valid match
+    * goes to the pattern's list in its formatted form, and for each whose
+    * form differs the whole text has every occurrence of the match replaced
+    * by the form. Those replaces are replayed in one rebuild per pattern
+    * ([[FormatReplay]]).
+    */
+  def detectAndFormatPatterns(text0: String): (String, LinkedHashMap[String, ListBuffer[String]]) =
+    detectAndFormatPatterns(text0, Long.MaxValue)
+
+  /** As above; throws [[TextKernel.Amplification]] before the text grows
+    * past `limit` chars.
+    */
+  private[kernel] def detectAndFormatPatterns(
+      text0: String, limit: Long): (String, LinkedHashMap[String, ListBuffer[String]]) = {
     var text = text0
     val patternsFound = LinkedHashMap.empty[String, ListBuffer[String]]
     // The table's digit conditions, counted once on the input by code
@@ -453,35 +659,74 @@ final class TextKernel {
         text.contains(cfg.literal)
       val matches =
         if (!feasible) Nil
-        else if (cfg.anchored) {
-          if (runStarts == null) runStarts = digitRunStarts(text)
-          findAllDigitAnchored(cfg.regex, text, runStarts)
-        } else findAll(cfg.regex, text)
+        else cfg.starts match {
+          case DigitRuns =>
+            if (runStarts == null) runStarts = digitRunStarts(text)
+            findAllDigitAnchored(cfg.regex, text, runStarts)
+          case AtSigns => findAllEmails(cfg.regex, text)
+          case Anywhere => findAll(cfg.regex, text)
+        }
       if (matches.nonEmpty) {
         val bucket = ListBuffer.empty[String]
         patternsFound(cfg.name) = bucket
+        val edits = ListBuffer.empty[(String, String)]
         matches.foreach { matchStr =>
           val valid = cfg.validator.forall(v => v(matchStr))
           if (valid) {
             (cfg.formatter, cfg.format) match {
               case (Some(fmt), Some(fmtPat)) =>
                 val formatted = sub(fmtPat, fmt, matchStr)
-                // replace(m, m) is the identity — skip the full-text scan +
-                // rebuild for already-well-formatted matches (the common
-                // case: "123.456.789-09" formats to itself)
-                if (formatted != matchStr) {
-                  text = text.replace(matchStr, formatted)
-                  runStarts = null // positions shifted — re-anchor lazily
-                }
+                if (formatted != matchStr) edits += matchStr -> formatted
                 bucket += formatted
               case _ =>
                 bucket += matchStr
             }
           }
         }
+        if (edits.nonEmpty) {
+          text = new FormatReplay(text, edits.toList, limit).result
+          runStarts = null // positions shifted — re-anchor lazily
+        }
       }
     }
     (text, patternsFound)
+  }
+
+  /** [[Py.findAll]] for the e-mail pattern, tried only where a match can
+    * start. Its local part `[A-Za-z0-9._%+-]+` runs to the first '@' after
+    * the start, since '@' is not in that class, and the engine backtracks
+    * that run only to retry the '@', which fails. So whether a start
+    * matches depends only on the `\b` there and on what follows the '@':
+    * the engine's leftmost match with a given '@' starts at the first `\b`
+    * in the class run that ends at the '@', at or after the previous
+    * match's end, or there is none. `lookingAt` there decides. Transparent
+    * bounds let `\b` read the true left neighbour. Equality with the
+    * generic engine is pinned by KernelPropertySpec.
+    */
+  private[kernel] def findAllEmails(p: Pattern, text: String): List[String] = {
+    @inline def local(c: Char) =
+      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
+        c == '.' || c == '_' || c == '%' || c == '+' || c == '-'
+    def boundary(i: Int) =
+      (i > 0 && isUWordCp(text.codePointBefore(i))) !=
+        (i < text.length && isUWordCp(text.codePointAt(i)))
+    val out = ListBuffer.empty[String]
+    val m = p.matcher(text)
+    m.useTransparentBounds(true)
+    m.useAnchoringBounds(false)
+    var lastEnd = 0
+    var at = text.indexOf('@')
+    while (at >= 0) {
+      var s = at
+      while (s > lastEnd && local(text.charAt(s - 1))) s -= 1
+      while (s < at && !boundary(s)) s += 1
+      if (s < at) {
+        m.region(s, text.length)
+        if (m.lookingAt()) { out += m.group(); lastEnd = m.end() }
+      }
+      at = text.indexOf('@', math.max(at + 1, lastEnd))
+    }
+    out.toList
   }
 
   /** [[Py.findAll]] for a pattern whose every match starts at a digit-run
@@ -586,9 +831,15 @@ final class TextKernel {
     * one increment per findall match. Pinned against the verbatim
     * findall/sub loop by KernelPropertySpec.
     */
-  def correctAbbreviations(text: String): (String, Int) = {
+  def correctAbbreviations(text: String): (String, Int) = correctAbbreviations(text, Long.MaxValue)
+
+  /** As above; throws [[TextKernel.Amplification]] before the text grows
+    * past `limit` chars.
+    */
+  private[kernel] def correctAbbreviations(text: String, limit: Long): (String, Int) = {
     final class Hit(val run: String, val repl: String, val key: Int) {
       var out: String = run
+      var count = 0L // occurrences in the text
     }
     val occurrences = ListBuffer.empty[(Int, Hit)]
     val distinct = new java.util.HashMap[String, Hit]()
@@ -608,15 +859,25 @@ final class TextKernel {
           distinct.put(run, h)
         }
         occurrences += start -> h
+        h.count += 1
         if (byKey(key) == null) byKey(key) = ListBuffer.empty
         byKey(key) += h
       }
     }
     if (occurrences.isEmpty) return (text, 0)
     distinct.values.forEach { h =>
-      byKey(h.key).foreach(m => h.out = replaceWordBounded(h.out, m.run, m.repl))
+      byKey(h.key).foreach { m =>
+        h.out = replaceWordBounded(h.out, m.run, m.repl)
+        // an expansion never shortens a run, so every occurrence ends at
+        // least this long
+        if (h.out.length * h.count > limit) throw new Amplification(limit)
+      }
     }
-    val sb = new java.lang.StringBuilder(text.length + 4 * occurrences.size)
+    val length = occurrences.foldLeft(text.length.toLong) { case (l, (_, h)) =>
+      l + h.out.length - h.run.length
+    }
+    if (length > limit) throw new Amplification(limit)
+    val sb = new java.lang.StringBuilder(length.toInt)
     var from = 0
     occurrences.foreach { case (start, h) =>
       sb.append(text, from, start).append(h.out)
@@ -756,6 +1017,47 @@ final class TextKernel {
     if (pyLen(processed) < origLen * 0.8) lengthFactor = -lengthFactor
     val total = correctionFactor + patternFactor + lengthFactor
     math.max(0.0, math.min(0.30, total))
+  }
+}
+
+object TextKernel {
+
+  /** The longest text a turn may grow to: [[TextKernel.process]] throws
+    * [[Amplification]] when a stage's output is longer than 8 × the input
+    * plus 1024 chars. A repeated match whose formatted form holds it again
+    * (phone's `"11) 99999-9999"` → `"(11) 99999-9999"`) or an expansion
+    * that holds its key (`r` → `R.`) re-expands every earlier expansion, so
+    * the output grows with the square of the repeats; long turns of the
+    * benchmark stay under 3 ×.
+    */
+  def outputLimit(inputChars: Int): Long = 8L * inputChars + 1024
+
+  final class Amplification(limit: Long)
+    extends RuntimeException(s"amplification: the text grew past $limit chars")
+
+  /** Where a table pattern's matches can start. */
+  private[kernel] sealed trait Starts
+  private[kernel] case object DigitRuns extends Starts
+  private[kernel] case object AtSigns extends Starts
+  private[kernel] case object Anywhere extends Starts
+
+  /** The base of the kernel's polynomial window hashes (mod 2^64). */
+  private[kernel] val HashBase = 1000003L
+
+  /** For each id in `[0, n)`, the indices of `ids` that hold it, ascending. */
+  private[kernel] def indicesById(ids: Array[Int], n: Int): Array[Array[Int]] = {
+    val counts = new Array[Int](n)
+    ids.foreach(id => counts(id) += 1)
+    val out = counts.map(c => new Array[Int](c))
+    java.util.Arrays.fill(counts, 0)
+    var i = 0
+    while (i < ids.length) {
+      val id = ids(i)
+      out(id)(counts(id)) = i
+      counts(id) += 1
+      i += 1
+    }
+    out
   }
 }
 
@@ -907,4 +1209,261 @@ private final class Rewrite(text: String) {
 
   /** `substring(0, length)` is `text` itself. */
   def result: String = if (sb != null) sb.toString else text.substring(0, kept)
+}
+
+/** The text after `text = text.replace(m, f)` for each edit `(m, f)` in
+  * order — the pattern stage's replaces — built once.
+  *
+  * A formatter keeps its match's digits in order and only changes the
+  * non-digits around them, and every match holds a digit, so the text's
+  * digits never change: digit `j` of the input is digit `j` of every later
+  * text, and only the gaps between digits are edited. An occurrence of `m`
+  * whose digits `D` start at digit `d` is then a place where `D` starts at
+  * `d` in the input's digits, gap `d` ends with the non-digits before `m`'s
+  * first digit, the gaps inside equal `m`'s, and the gap after its last
+  * digit starts with the non-digits after it. Those places are found once,
+  * by hashing the input's digit windows of each match's digit count, and
+  * whether each one holds is kept current: an edit rechecks only the
+  * places over the gaps it touched. So a new occurrence — one an earlier
+  * replace made, e.g. phone's `"11) 99999-9999"` → `"(11) 99999-9999"`,
+  * which holds its match again — is found without a scan of the text, and
+  * the replace of a match with no occurrence costs nothing.
+  *
+  * Each replace takes its occurrences left to right without overlap, as
+  * `String.replace` does. The text's length is tracked through the edits;
+  * past `limit` the replay throws [[TextKernel.Amplification]] before the
+  * text is built.
+  */
+private final class FormatReplay(text: String, edits: List[(String, String)], limit: Long) {
+
+  /** `s`'s digits (code points), and the non-digit gap before each one
+    * and after the last: gap `j` is `s[gapFrom(j), gapTo(j))`.
+    */
+  private final class Shape(s: String) {
+    val (digits, gapFrom, gapTo): (Array[Int], Array[Int], Array[Int]) = {
+      val ds = Array.newBuilder[Int]
+      val froms = Array.newBuilder[Int]
+      val tos = Array.newBuilder[Int]
+      var from = 0
+      var i = 0
+      while (i < s.length) {
+        val cp = s.codePointAt(i)
+        val next = i + Character.charCount(cp)
+        if (Character.isDigit(cp)) { froms += from; tos += i; ds += cp; from = next }
+        i = next
+      }
+      froms += from
+      tos += s.length
+      (ds.result(), froms.result(), tos.result())
+    }
+    def gaps: Array[String] = Array.tabulate(digits.length + 1)(j => s.substring(gapFrom(j), gapTo(j)))
+  }
+
+  private final class Edit(m: String, f: String) {
+    private val (mShape, fShape) = (new Shape(m), new Shape(f))
+    require(mShape.digits.nonEmpty && java.util.Arrays.equals(mShape.digits, fShape.digits),
+      s"a formatter changed its match's digits: $m -> $f")
+    val digits: Array[Int] = mShape.digits
+    val from: Array[String] = mShape.gaps // m's gaps
+    val to: Array[String] = fShape.gaps // f's gaps
+    val span: Int = digits.length
+    val grow: Int = f.length - m.length
+  }
+
+  private val input = new Shape(text)
+  private val digits = input.digits
+  private val n = digits.length
+  private val gaps = Array.tabulate(n + 1)(j => new Gap(text, input.gapFrom(j), input.gapTo(j)))
+
+  // the distinct edits, and the list as their ids
+  private val (distinct, order): (Array[Edit], Array[Int]) = {
+    val ids = new java.util.HashMap[String, Integer]()
+    val es = Array.newBuilder[Edit]
+    val order = edits.map { case (m, f) =>
+      var id = ids.get(m)
+      if (id == null) { id = ids.size; ids.put(m, id); es += new Edit(m, f) }
+      id.intValue
+    }
+    (es.result(), order.toArray)
+  }
+  private val maxSpan = distinct.map(_.span).max
+
+  // the places: candidate `c` is edit `placeEdit(c)` with its digits
+  // starting at digit `placeAt(c)`, ascending by `placeAt`
+  private val (placeEdit, placeAt): (Array[Int], Array[Int]) = {
+    val prefix = new Array[Long](n + 1)
+    var i = 0
+    while (i < n) { prefix(i + 1) = prefix(i) * TextKernel.HashBase + digits(i); i += 1 }
+    def window(ds: Array[Int]): Long = ds.foldLeft(0L)(_ * TextKernel.HashBase + _)
+    val spans = distinct.map(_.span).distinct.sorted
+    val pows = Array.iterate(1L, maxSpan + 1)(_ * TextKernel.HashBase)
+    val byHash = new scala.collection.mutable.LongMap[List[Int]]()
+    distinct.indices.foreach { id =>
+      val key = window(distinct(id).digits) * 31 + distinct(id).span
+      byHash(key) = id :: byHash.getOrElse(key, Nil)
+    }
+    val es = Array.newBuilder[Int]
+    val ats = Array.newBuilder[Int]
+    var d = 0
+    while (d < n) {
+      spans.foreach { len =>
+        if (d + len <= n) {
+          val ids = byHash.getOrNull((prefix(d + len) - prefix(d) * pows(len)) * 31 + len)
+          if (ids != null) ids.foreach { id =>
+            val ds = distinct(id).digits
+            var k = 0
+            while (k < len && digits(d + k) == ds(k)) k += 1
+            if (k == len) { es += id; ats += d }
+          }
+        }
+      }
+      d += 1
+    }
+    (es.result(), ats.result())
+  }
+  private val places = placeAt.length
+  // each edit's places, ascending
+  private val placesOf = TextKernel.indicesById(placeEdit, distinct.length)
+  private val holds = new Array[Boolean](places)
+  private val holding = new Array[Int](distinct.length) // holding places per edit
+  private var length: Long = text.length
+
+  private def occursAt(c: Int): Boolean = {
+    val e = distinct(placeEdit(c))
+    val d = placeAt(c)
+    val g = e.from
+    var ok = gaps(d).endsWith(g(0)) && gaps(d + e.span).startsWith(g(e.span))
+    var j = 1
+    while (ok && j < e.span) { ok = gaps(d + j).is(g(j)); j += 1 }
+    ok
+  }
+
+  private def recheck(c: Int): Unit = {
+    val h = occursAt(c)
+    if (h != holds(c)) {
+      holds(c) = h
+      holding(placeEdit(c)) += (if (h) 1 else -1)
+    }
+  }
+
+  private def replaceAt(c: Int): Unit = {
+    val e = distinct(placeEdit(c))
+    val d = placeAt(c)
+    gaps(d).replaceEnd(e.from(0).length, e.to(0))
+    var j = 1
+    while (j < e.span) { gaps(d + j).replaceStart(gaps(d + j).length, e.to(j)); j += 1 }
+    gaps(d + e.span).replaceStart(e.from(e.span).length, e.to(e.span))
+    length += e.grow
+    if (length > limit) throw new TextKernel.Amplification(limit)
+    // the places over gaps d .. d + span
+    var p = java.util.Arrays.binarySearch(placeAt, d - maxSpan)
+    if (p < 0) p = -p - 1
+    while (p > 0 && placeAt(p - 1) >= d - maxSpan) p -= 1
+    while (p < places && placeAt(p) <= d + e.span) { recheck(p); p += 1 }
+  }
+
+  val result: String = {
+    var c = 0
+    while (c < places) { recheck(c); c += 1 }
+    order.foreach { id =>
+      if (holding(id) > 0) {
+        // this replace's occurrences, left to right without overlap
+        val e = distinct(id)
+        val chosen = Array.newBuilder[Int]
+        var endGap = -1 // the last chosen occurrence ends in this gap ...
+        var endOff = 0 // ... at this offset
+        placesOf(id).foreach { c =>
+          if (holds(c)) {
+            val d = placeAt(c)
+            val startOff = gaps(d).length - e.from(0).length
+            if (d > endGap || (d == endGap && startOff >= endOff)) {
+              chosen += c
+              endGap = d + e.span
+              endOff = e.from(e.span).length
+            }
+          }
+        }
+        chosen.result().foreach(replaceAt)
+      }
+    }
+    val sb = new java.lang.StringBuilder(length.toInt)
+    var j = 0
+    while (j <= n) {
+      gaps(j).appendTo(sb)
+      if (j < n) sb.appendCodePoint(digits(j))
+      j += 1
+    }
+    sb.toString
+  }
+}
+
+/** The non-digit text between two digits as [[FormatReplay]] edits it:
+  * `text[a, b)` with chars put before and after it. An edit only ever
+  * replaces a prefix or a suffix, so the added chars sit in two builders,
+  * the leading one reversed, and an edit costs what it adds or removes.
+  */
+private final class Gap(text: String, private var a: Int, private var b: Int) {
+  private var lead: java.lang.StringBuilder = null // reversed
+  private var trail: java.lang.StringBuilder = null
+
+  private def leadLength = if (lead == null) 0 else lead.length
+  private def trailLength = if (trail == null) 0 else trail.length
+  def length: Int = leadLength + (b - a) + trailLength
+
+  private def charAt(i: Int): Char = {
+    val l = leadLength
+    if (i < l) lead.charAt(l - 1 - i)
+    else if (i < l + b - a) text.charAt(a + i - l)
+    else trail.charAt(i - l - (b - a))
+  }
+
+  private def holdsAt(at: Int, s: String): Boolean = {
+    var i = 0
+    while (i < s.length && charAt(at + i) == s.charAt(i)) i += 1
+    i == s.length
+  }
+
+  def startsWith(s: String): Boolean = s.length <= length && holdsAt(0, s)
+  def endsWith(s: String): Boolean = s.length <= length && holdsAt(length - s.length, s)
+  def is(s: String): Boolean = s.length == length && holdsAt(0, s)
+
+  /** Replaces the first `n` chars with `s`. */
+  def replaceStart(n: Int, s: String): Unit = {
+    var r = n
+    val l = math.min(r, leadLength)
+    if (l > 0) lead.setLength(lead.length - l)
+    r -= l
+    val m = math.min(r, b - a)
+    a += m
+    r -= m
+    if (r > 0) trail.delete(0, r)
+    if (s.nonEmpty) {
+      if (lead == null) lead = new java.lang.StringBuilder
+      var j = s.length - 1
+      while (j >= 0) { lead.append(s.charAt(j)); j -= 1 }
+    }
+  }
+
+  /** Replaces the last `n` chars with `s`. */
+  def replaceEnd(n: Int, s: String): Unit = {
+    var r = n
+    val t = math.min(r, trailLength)
+    if (t > 0) trail.setLength(trail.length - t)
+    r -= t
+    val m = math.min(r, b - a)
+    b -= m
+    r -= m
+    if (r > 0) lead.delete(0, r)
+    if (s.nonEmpty) {
+      if (trail == null) trail = new java.lang.StringBuilder
+      trail.append(s)
+    }
+  }
+
+  def appendTo(sb: java.lang.StringBuilder): Unit = {
+    var i = leadLength - 1
+    while (i >= 0) { sb.append(lead.charAt(i)); i -= 1 }
+    sb.append(text, a, b)
+    if (trail != null) sb.append(trail)
+  }
 }

@@ -36,7 +36,7 @@ object Checkpoint {
     * alters output: buckets committed under an older tag are invalidated
     * on resume instead of silently kept stale.
     */
-  val KernelConfigVersion: String = "graft-kernel-r2"
+  val KernelConfigVersion: String = "graft-kernel-r3"
 
   final case class Manifest(
       partId: Int,

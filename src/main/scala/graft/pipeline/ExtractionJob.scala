@@ -63,7 +63,9 @@ object ExtractionJob {
 
   /** Pure per-row transform — exposed for oracle tests. A turn the kernel
     * cannot process becomes one `success = false` row instead of a failed
-    * task: empty or null text, or any non-fatal exception, whose class name
+    * task: empty or null text; a text that grows past the kernel's output
+    * limit ([[TextKernel.outputLimit]]), with `error_message`
+    * "amplification"; or any other non-fatal exception, whose class name
     * is the `error_message` (the reference's `OCRResult.success` /
     * `error_message` contract).
     */
@@ -91,6 +93,7 @@ object ExtractionJob {
         case None => failedTurn(t, "empty or null text")
       }
     } catch {
+      case _: TextKernel.Amplification => failedTurn(t, "amplification")
       case NonFatal(e) => failedTurn(t, e.getClass.getName)
     }
 

@@ -1,5 +1,7 @@
 package graft.kernel
 
+import scala.collection.mutable.ListBuffer
+
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -169,35 +171,86 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("confusion-probe token scanners match the verbatim reference regexes") {
-    // the original probe patterns, compiled exactly as the kernel used to
-    // (text_processor.py:332-365 shapes) — the ground truth the scanners
-    // must reproduce: same match strings, same order, same duplicates
+  /** The reference's `_correct_confused_characters` loop (text_processor.py:
+    * 332-365) verbatim on the regex engine, table copied from the kernel:
+    * per single-char pair, findall of the probe over the current text, then
+    * one whole-text replace per match; per multi-char pair, one replace
+    * counted on the replaced text.
+    */
+  private def confusedLoop(t0: String): (String, Int) = {
     import java.util.regex.Pattern
-    def digitToAlpha(w: Char) =
-      Py.compile("""\b\w*""" + Pattern.quote(w.toString) + """\w*\b""")
-    def alphaToDigit(w: Char) =
-      Py.compile("""\b\d*""" + Pattern.quote(w.toString) + """\d*\b""")
+    val table = Seq(
+      "rn" -> "m", "cl" -> "d", "li" -> "h", "nn" -> "n", "oo" -> "o",
+      "ii" -> "i",
+      "0" -> "o", "O" -> "0", "l" -> "1", "I" -> "1", "S" -> "5", "G" -> "6",
+      "B" -> "8", "g" -> "9",
+      "voce" -> "você", "nao" -> "não", "estao" -> "estão", "entao" -> "então",
+      "coracao" -> "coração", "posicao" -> "posição",
+      "informacao" -> "informação", "atencao" -> "atenção",
+      "funcao" -> "função", "decisao" -> "decisão", "opcao" -> "opção",
+      "situacao" -> "situação", "condicao" -> "condição")
+    var text = t0
+    var corrections = 0
+    table.foreach { case (wrong, correct) =>
+      if (wrong.length == 1 && correct.length == 1) {
+        val (w, c) = (wrong.charAt(0), correct.charAt(0))
+        val (probe, keep) =
+          if (Character.isDigit(w) && Character.isLetter(c))
+            ("""\b\w*""" + Pattern.quote(wrong) + """\w*\b""", (m: String) => !Py.isDigitStr(m))
+          else if (Character.isLetter(w) && Character.isDigit(c))
+            ("""\b\d*""" + Pattern.quote(wrong) + """\d*\b""", (m: String) => !Py.isAlphaStr(m))
+          else (null, null)
+        if (probe != null) Py.findAll(Py.compile(probe), text).foreach { m =>
+          if (keep(m)) {
+            text = text.replace(m, m.replace(wrong, correct))
+            corrections += 1
+          }
+        }
+      } else if (text.contains(wrong)) {
+        text = text.replace(wrong, correct)
+        corrections += Py.count(text, correct) - Py.count(text, wrong)
+      }
+    }
+    (text, corrections)
+  }
+
+  // short random texts over the probes' chars, their targets, digits,
+  // word joiners and separators: where the replays interact
+  private def randomTexts(alphabet: IndexedSeq[String], n: Int, maxLen: Int, seed: Long): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map(_ => Seq.fill(1 + rnd.nextInt(maxLen))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+  }
+
+  test("confusion-probe token scanners match the verbatim reference regexes") {
+    // the stage's one walk against the reference loop on its own regex
+    // probes: same text, same count, including nested and overlapping
+    // tokens, repeated matches and matches that recur after a replace
     val kernel = new TextKernel
+    assert(kernel.probePremise, "a probe moves a run boundary or writes a later probe's char")
     val adversarial = Seq(
       "", "0", "l", "5l5", "l5l", "ll", "0l0", "a0b 00 x_0 _0_",
       "5O5O", "O", "xO1", "1O", "O1", "a O b", "1 l 2", "l.l,l",
       "v0ce c0m 1nf0", "tel: 4002-8922 l1nha", "٣l٤ ٠0٠",   // Arabic-Indic digits
-      "él0 combining", "a‍0 zwj a‌0 zwnj",   // marks + join controls
+      "él0 combining", "a‍0 zwj a‌0 zwnj",   // marks + join controls
       "𝔞0𝔟 astral", "𝟘l astral-digit", "ǅ0 titlecase",
       "_0_ __ l_1", "über0 açã0 ação", "日本語0 漢l字",
       "0̀ grave-on-digit", "a-0-b a.0.b (0) [l5]",
-      "trailing0", "0leading", "many 0s 0 0 0 dup dup0 dup0")
-    (adversarial ++ corpus).foreach { t =>
-      Seq('0').foreach { w =>
-        assert(kernel.scanTokensContaining(t, w) == Py.findAll(digitToAlpha(w), t),
-          s"digit→alpha scanner diverged for '$w' on: ${t.take(80)}")
-      }
-      Seq('O', 'l', 'I', 'S', 'G', 'B', 'g').foreach { w =>
-        assert(kernel.scanDigitRunsWithOne(t, w) == Py.findAll(alphaToDigit(w), t),
-          s"alpha→digit scanner diverged for '$w' on: ${t.take(80)}")
-      }
+      "trailing0", "0leading", "many 0s 0 0 0 dup dup0 dup0",
+      // a match that holds an earlier one, and chains of duplicates
+      "o0 o0 o00", "x10 x100 ax10 x1000 x10", "o00 o0 o0", "0o0 o0o0 o0",
+      "1O 1O1O", "1O1O 1O", "5l 5l5l 55l", "l1 1l l1l1", "g9 9g 9g9g 99g",
+      "0O O0 0O0O", "rn0 rn 0rn", "voce0 v0ce", "0g 0l 0O 0S 0B 0G 0I",
+      "x10 " * 3 + "x100 " * 2)
+    val random = randomTexts(
+      Vector("0", "o", "O", "l", "1", "I", "S", "5", "G", "6", "B", "8", "g", "9",
+        "a", "x", "_", " ", " ", ".", "٣", "\u0301"), 20000, 10, 3)
+    val generated = (0 until 300).map(t => graft.pipeline.TranscriptGen.turnText(5L, t))
+    val distinct = (1 to 2000).map(i => s"x${i}0").mkString(" ")
+    (adversarial ++ random ++ corpus ++ generated :+ distinct).foreach { t =>
+      assert(kernel.correctConfusedCharacters(t) == confusedLoop(t),
+        s"confusion stage diverged on: ${t.take(80)}")
     }
+    assert(kernel.correctConfusedCharacters("o0 o0 o00") == ("oo oo ooo", 3))
   }
 
   test("digit-anchored findAll matches the generic engine on the table patterns") {
@@ -241,6 +294,128 @@ class KernelPropertySpec extends AnyFunSuite {
       val found = kernel.detectAndFormatPatterns(t)._2.get("cep").map(_.toList)
       assert(found.contains(Py.findAll(cep, t)), s"cep diverged on: $t")
     }
+  }
+
+  /** The reference's `_detect_and_format_patterns` loop (text_processor.py:
+    * 405-436) verbatim on the regex engine, table copied from the kernel:
+    * per pattern, findall over the current text, then per valid match its
+    * formatted form, and one whole-text replace of the match by the form.
+    */
+  private def patternLoop(t0: String): (String, Seq[(String, Seq[String])]) = {
+    type Fmt = Option[(String, String)]
+    val table: Seq[(String, String, Fmt, Option[String => Boolean])] = Seq(
+      ("cpf", """\b\d{3}\.?\d{3}\.?\d{3}-?\d{2}\b""",
+        Some("""(\d{3})\.?(\d{3})\.?(\d{3})-?(\d{2})""" -> """\1.\2.\3-\4"""), Some(Validators.cpf)),
+      ("cnpj", """\b\d{2}\.?\d{3}\.?\d{3}/?\d{4}-?\d{2}\b""",
+        Some("""(\d{2})\.?(\d{3})\.?(\d{3})/(\d{4})-?(\d{2})""" -> """\1.\2.\3/\4-\5"""), Some(Validators.cnpj)),
+      ("cep", """\b\d{5}-?\d{3}\b""", Some("""(\d{5})-?(\d{3})""" -> """\1-\2"""), None),
+      ("phone", """\b\(?\d{2}\)?\s?\d{4,5}-?\d{4}\b""",
+        Some("""\(?(\d{2})\)?\s?(\d{4,5})-?(\d{4})""" -> """(\1) \2-\3"""), None),
+      ("date", """\b\d{1,2}[\/\-\.]\d{1,2}[\/\-\.]\d{2,4}\b""",
+        Some("""(\d{1,2})[\/\-\.](\d{1,2})[\/\-\.](\d{2,4})""" -> """\1/\2/\3"""), Some(Validators.date)),
+      ("time", """\b\d{1,2}:\d{2}(:\d{2})?\b""",
+        Some("""(\d{1,2}):(\d{2})(:\d{2})?""" -> """\1:\2\3"""), Some(Validators.time)),
+      ("currency", """R\$\s?\d{1,3}(?:\.\d{3})*(?:,\d{2})?""",
+        Some("""R\$\s?(\d{1,3}(?:\.\d{3})*)(?:,(\d{2}))?""" -> """R$ \1,\2"""), None),
+      ("email", """\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b""", None, Some(Validators.email)),
+      ("url", """https?://[^\s<>"{}|\\^`\[\]]+""", None, None),
+      ("processo_judicial", """\b\d{7}-?\d{2}\.\d{4}\.\d{1}\.\d{2}\.\d{4}\b""",
+        Some("""(\d{7})-?(\d{2})\.(\d{4})\.(\d{1})\.(\d{2})\.(\d{4})""" -> """\1-\2.\3.\4.\5.\6"""), None))
+    var text = t0
+    val found = ListBuffer.empty[(String, Seq[String])]
+    table.foreach { case (name, regex, fmt, validator) =>
+      val matches = Py.findAll(Py.compile(regex), text)
+      if (matches.nonEmpty) {
+        val bucket = ListBuffer.empty[String]
+        matches.foreach { m =>
+          if (validator.forall(_(m))) fmt match {
+            case Some((fp, tpl)) =>
+              val formatted = Py.sub(Py.compile(fp), tpl, m)
+              text = text.replace(m, formatted)
+              bucket += formatted
+            case None => bucket += m
+          }
+        }
+        found += name -> bucket.toList
+      }
+    }
+    (text, found.toList)
+  }
+
+  private def patternStage(kernel: TextKernel, t: String): (String, Seq[(String, Seq[String])]) = {
+    val (text, found) = kernel.detectAndFormatPatterns(t)
+    (text, found.toList.map { case (k, v) => k -> v.toList })
+  }
+
+  test("pattern stage matches the verbatim replace loop") {
+    // 52998224725 and 11222333000181 pass the check-digit validators
+    val kernel = new TextKernel
+    val adversarial = Seq(
+      "", "cep 12345678 cep 12345678 12345-678", "12345678 9912345678 123456789",
+      "cpf 52998224725 e 529.982.247-25 e 529982247-25 e 52998224725",
+      "11.222.333/0001-81 11222333/000181 11222333000181",
+      // phone's form holds its match: repeats grow the text
+      "tel (11) 99999-9999 " * 5, "11) 99999-9999 11)99999-9999 (11)99999-9999",
+      "11 99999-9999 11999999999 (11) 99999-9999 11 999999999",
+      "x 11) 99999-9999 x 11)99999-9999 11) 99999-9999",
+      // currency's form adds a comma that a repeat then finds again
+      "R$1.000 R$ 1.000 R$1.000,00 R$ 5 R$5,00 R$ 1.000", "R$ 1.000 " * 4,
+      "R$1.000.000,00R$1.000", "R$ 123.456.789",
+      "01-02-2023 1.2.2023 01/02/23 1-2-2023 01-02-2023",
+      "1234567-89.2023.8.26.0100 123456789.2023.8.26.0100 123456789.2023.8.26.0100",
+      "12:34 12:34:56 25:99", "a.b%c+d@x.com e+f@y.org", "mail a@b.cd http://x.y/z",
+      "٣٤٥٦٧٨٩٠ ١٢٣٤٥٦٧٨", "(" * 5 + "11) 99999-9999",
+      // occurrences of one match that overlap: the leftmost wins
+      "cep 11111111 e 1111111111111111 e 111111111", "12121212 121212121212121212",
+      "11 1111-1111 111111111111111111111", "R$ 1.000 R$ 1.000.000.000")
+    val random = randomTexts(
+      Vector("1", "12", "123", "1234", "12345", "99999", "9999", "11", "529", "982",
+        "247", "25", "0001", "81", "2023", "01", "02", "52998224725", "12345678",
+        ".", "-", "/", "(", ")", " ", " ", ":", "R$", "R$ ", ",", "00", "@", "a",
+        "b.cd", "x", "cep ", "tel ", "\u00A0", "٣"), 20000, 12, 5)
+    val generated = (0 until 300).map(t => graft.pipeline.TranscriptGen.turnText(9L, t))
+    val distinctCeps = (0 until 2000).map(i => s"cep ${10000000 + i}").mkString(" ")
+    (adversarial ++ random ++ corpus ++ generated :+ distinctCeps).foreach { t =>
+      assert(patternStage(kernel, t) == patternLoop(t), s"pattern stage diverged on: ${t.take(80)}")
+    }
+    assert(kernel.detectAndFormatPatterns("tel (11) 99999-9999 " * 3)._1 ==
+      "tel ((((11) 99999-9999 " * 3)
+  }
+
+  test("e-mail probe matches the generic engine") {
+    val kernel = new TextKernel
+    val email = Py.compile("""\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b""")
+    val adversarial = Seq(
+      "", "@", "a@b.cd", "a.b%c+d-e_f@x.y.com", ".a@b.cd", "%a@b.cd", "-a@b.cd",
+      "_a@b.cd", "ça@b.cd", "é.a@b.cd", "a\u0301@b.cd", "日本a@b.cd", "𝔞a@b.cd",
+      "a@b@c.de", "a@b.cd@e.fg", "x.@y.zz", "a@b.c", "a@b.c1", "a@-.cd",
+      "a@b.cd.ef gh@ij.kl", "a@b.cdé", "a@b.c|d", "a@b.|d", "..@a.bc",
+      "a@@b.cd", "a @b.cd", "a.@b.cd.", "1@2.34", "+@a.bc", "a+@b.cd%",
+      ("a." * 200) + "@b.cd", ("a." * 200) + "x", "a@" * 50 + "b.cd")
+    val random = randomTexts(
+      Vector("a", "Z", "9", ".", "_", "%", "+", "-", "@", " ", "ç", "cd", "|", "\u0301"), 20000, 14, 7)
+    (adversarial ++ random ++ corpus).foreach { t =>
+      assert(kernel.findAllEmails(email, t) == Py.findAll(email, t), s"e-mail probe diverged on: $t")
+    }
+  }
+
+  test("a turn past the output limit becomes one amplification row") {
+    import graft.schema.Turn
+    val kernel = new TextKernel
+    // 80k chars; without the limit the pattern stage grows it to 16.1M
+    val text = "tel (11) 99999-9999 " * 4000
+    val t0 = System.nanoTime()
+    val row = graft.pipeline.ExtractionJob.processTurn(kernel, Turn("c", 0, "user", text, "ocr", null))
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(!row.success && row.error_message.contains("amplification"))
+    assert(row.original_length == text.length && row.text_clean.isEmpty)
+    assert(seconds < 2.0, f"the amplified turn took $seconds%.1f s")
+    // the abbreviation stage's own growth (`R$` → `R.$` re-expanded)
+    intercept[TextKernel.Amplification](kernel.process("R$ 1.000,00 " * 3000))
+    // within the limit nothing changes
+    val ok = "tel (11) 99999-9999 " * 20
+    assert(kernel.process(ok).text.length <= TextKernel.outputLimit(ok.length))
+    assert(graft.pipeline.ExtractionJob.processTurn(kernel, Turn("c", 0, "user", ok, "ocr", null)).success)
   }
 
   /** The reference's `_correct_abbreviations` loop (text_processor.py:
@@ -420,22 +595,33 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("identify's literal prefilter is a sound necessary condition") {
-    // the parser derives the expected literals for the inventory's shapes
-    assert(SpanTemplates.requiredLiteralCI("""nota\s+fiscal""") == "fiscal")
-    assert(SpanTemplates.requiredLiteralCI("""@\w+\.\w+""") == "@")
-    assert(SpanTemplates.requiredLiteralCI("""\(\d{2}\)\s*\d{4,5}\-?\d{4}""") == "(")
-    assert(SpanTemplates.requiredLiteralCI("""cel\.|celular""") == "cel")
-    assert(SpanTemplates.requiredLiteralCI("""fone|telefone""") == "fone")
-    // every built-in identification pattern must yield a non-empty literal
-    // (the prefilter's whole point — a pattern edit that defeats the
-    // parser silently reverts that template to unfiltered scanning)
-    SpanTemplates.all.foreach { t =>
-      assert(t.requiredLits.forall(_.nonEmpty),
-        s"template ${t.name} has a pattern with no derivable literal: " +
-          t.requiredLits.mkString("[", ", ", "]"))
+  test("Py.isUWordCp's Latin-1 table equals its formula") {
+    (0 until 256).foreach { cp =>
+      assert(Py.uWordLatin1(cp) == Py.uWordFormula(cp), f"Latin-1 table diverged at U+$cp%04X")
     }
-    // prefiltered and unfiltered matching agree on pattern-bearing text in
+    assert(Py.isUWordCp('ç') && Py.isUWordCp('ª') && Py.isUWordCp('µ') && !Py.isUWordCp('×') && !Py.isUWordCp('\u00A0'))
+  }
+
+  test("identify's literal prefilter is a sound necessary condition") {
+    // the parser derives the expected anchors for the inventory's shapes
+    assert(SpanTemplates.anchorCI("""nota\s+fiscal""") == ("nota", 0))
+    assert(SpanTemplates.anchorCI("""@\w+\.\w+""") == ("@", 0))
+    assert(SpanTemplates.anchorCI("""\(\d{2}\)\s*\d{4,5}\-?\d{4}""") == ("(", 0))
+    assert(SpanTemplates.anchorCI("""cel\.|celular""") == ("cel", 0))
+    assert(SpanTemplates.anchorCI("""fone|telefone""") == ("fone", 4))
+    assert(SpanTemplates.anchorCI("""ab?c""") == ("a", 0))
+    assert(SpanTemplates.anchorCI("""ab+c""") == ("ab", 0))
+    assert(SpanTemplates.anchorCI("""\w+x""") == ("", 0))
+    assert(SpanTemplates.anchorCI("""(a|b)c""") == ("", 0))
+    // every built-in identification pattern must yield a non-empty anchor
+    // (the anchoring's whole point — a pattern edit that defeats the
+    // parser silently reverts that template to scanning every position)
+    SpanTemplates.all.foreach { t =>
+      assert(t.anchors.forall(_._1.nonEmpty),
+        s"template ${t.name} has a pattern with no derivable anchor: " +
+          t.anchors.mkString("[", ", ", "]"))
+    }
+    // anchored and unanchored matching agree on pattern-bearing text in
     // assorted cases, on the property corpus, and on the fold-guard chars
     val bearing = Seq(
       "Nota Fiscal no 123", "NOTA   FISCAL", "emitiu nfe ontem", "NFE",
@@ -444,7 +630,21 @@ class KernelPropertySpec extends AnyFunSuite {
       "cel. 99999", "CELULAR novo", "fone 3222", "TELEFONE fixo",
       "cupom fiscal 77", "CUPOM FISCAL", "recibo anexo", "COMPROVANTE",
       "total pago hoje", "TOTAL PAGO", "fıscal dotless", "ſtotal long-s",
-      "İstanbul nota fiscal", "")
+      "İstanbul nota fiscal", "",
+      // anchors at the text's edges and overlapping themselves
+      "fone", "telefone", "xtelefone", "lefone", "efone", "telefonefone",
+      "cel", "cel.", "celula", "a@b", "@x.y", "(11)98765-4321", "((11) 9876-4321",
+      // case folds: K (U+212A) lowers to k, İ (U+0130) lowers to two chars
+      "TELEFONE \u212A", "\u212A telefone İ", "İ CELULAR", "nota fiscal \u212A",
+      "İİ fone İ", "CUPOM\u00A0FISCAL", "Total\u2003Pago", "valor\ntotal")
+    assert(SpanTemplates.businessCard.matchesDocument("telefone", "telefone") == 0.25)
+    // a literal that sits later in one branch than in another
+    val later = new SpanTemplate("later", Seq("""telefone|fonex""", """\d\d|x\d"""), Seq.empty)
+    assert(later.anchors.toSeq == Seq(("fone", 4), ("", 0)))
+    Seq("telefone", "TELEFONE", "xtelefone fonex", "fonex", "tele fone").foreach { text =>
+      assert(later.matchesDocument(text, Py.lower(text)) == later.matchesDocument(text, null), text)
+    }
+    assert(later.matchesDocument("telefone", "telefone") == 0.5)
     (bearing ++ corpus).foreach { text =>
       SpanTemplates.all.foreach { t =>
         val lowered = Py.lower(text)
@@ -533,8 +733,16 @@ class KernelPropertySpec extends AnyFunSuite {
         words(rnd.nextInt(words.length)) + seps(rnd.nextInt(seps.length))).mkString
     } ++ Seq("processo\r\nnúmero", "processo número", "oab\u2028 1", "oab x 1",
       "quadro\ngeral credores", "quadro geral\u0085credores", "quadro credores geral",
-      "garantiareal", "valor crédito\nvalor", "vara cível tribunal justiça")
-    texts.foreach { t =>
+      "garantiareal", "valor crédito\nvalor", "vara cível tribunal justiça",
+      "oab x\n1", "oab \uD835\uDFD8", "oab \u0663", "processo\u2029número", "processo\rnúmero\n",
+      "quadro geral\r\ncredores quadro geral credores", "processo " * 50 + "\nnúmero processo x número")
+    // kernel outputs joined by "\n\n", as the conversation assembly does
+    val kernel = new TextKernel
+    val assembled = (0 until 20).map { c =>
+      (0 until 30).map(t => kernel.process(graft.pipeline.TranscriptGen.turnText(c.toLong, t)).text)
+        .mkString("\n\n")
+    }
+    (texts ++ assembled ++ corpus).foreach { t =>
       val lowered = Py.lower(t)
       assert(DocType.scores(lowered) == ref(lowered), s"DocType scores diverged on: $t")
     }
