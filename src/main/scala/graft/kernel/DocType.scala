@@ -46,6 +46,10 @@ object DocType {
     */
   private final class Segment(val alts: Array[String], val digits: Boolean) {
     val length: Int = if (digits) 1 else alts(0).length
+
+    def occursIn(text: String): Boolean =
+      if (digits) text.codePoints.anyMatch(cp => Character.isDigit(cp))
+      else alts.exists(text.contains(_))
   }
 
   private def segment(src: String): Segment =
@@ -81,30 +85,22 @@ object DocType {
     (c <= '\r' || c >= '\u0085') &&
       (c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029')
 
-  /** The next occurrence of a segment at or after a position, remembered:
-    * an occurrence found from `from` answers every later query up to
-    * itself, so the queries of one text, which only move forward, scan it
-    * once.
+  /** The next occurrence of one literal alternative of a segment (`lit`),
+    * or of a digit (`lit == null`), at or after a position, remembered: an
+    * occurrence found from `from` answers every later query up to itself,
+    * and an absent one every later query, so the queries of one text,
+    * which only move forward, scan it once.
     */
-  private final class Occurrences(text: String, seg: Segment) {
+  private final class Occurrences(text: String, lit: String) {
     private var from = Int.MaxValue
     private var at = -1
 
     def next(pos: Int): Int = {
       if (pos < from || (at >= 0 && pos > at)) {
         from = pos
-        at = if (seg.digits) nextDigit(pos) else nextLiteral(pos)
+        at = if (lit == null) nextDigit(pos) else text.indexOf(lit, pos)
       }
       at
-    }
-
-    private def nextLiteral(pos: Int): Int = {
-      var best = -1
-      seg.alts.foreach { a =>
-        val j = text.indexOf(a, pos)
-        if (j >= 0 && (best < 0 || j < best)) best = j
-      }
-      best
     }
 
     private def nextDigit(pos: Int): Int = {
@@ -118,21 +114,37 @@ object DocType {
     }
   }
 
+  /** The next occurrence of a segment: the earliest of its alternatives'. */
+  private def next(alts: Array[Occurrences], pos: Int): Int = {
+    var best = -1
+    alts.foreach { o =>
+      val j = o.next(pos)
+      if (j >= 0 && (best < 0 || j < best)) best = j
+    }
+    best
+  }
+
   /** Whether `s1.*s2(.*sk)*` finds a match in `text`: some line holds an
     * occurrence of each segment after the previous one. Committing to the
     * earliest occurrence of each segment in turn is exact, because every
     * segment but the last has a fixed length, so an earlier end never rules
-    * out a later match. Each segment's occurrences are searched once for
-    * the whole text, and the line ends are found once, so the search is
-    * linear however many lines repeat `s1` without the rest.
+    * out a later match. After a first check that every segment occurs,
+    * each alternative of each segment is searched once for the whole
+    * text, and the line ends are found once, so the search is linear
+    * however many lines repeat `s1` without the rest.
     */
   private def found(text: String, segs: Array[Segment], lineEnds: => Array[Int]): Boolean = {
-    val occ = segs.map(new Occurrences(text, _))
+    // most texts miss some segment: found with nothing allocated
+    if (!segs.forall(_.occursIn(text))) return false
+    if (segs.length == 1) return true
+    val occ = segs.map { seg =>
+      if (seg.digits) Array(new Occurrences(text, null))
+      else seg.alts.map(new Occurrences(text, _))
+    }
     var from = 0
     while (true) {
-      val i = occ(0).next(from)
+      val i = next(occ(0), from)
       if (i < 0) return false
-      if (segs.length == 1) return true
       // the first line end after `i` (a segment starts at `i`, so no line
       // end sits there and the search returns an insertion point)
       val ends = lineEnds
@@ -141,7 +153,7 @@ object DocType {
       var pos = i + segs(0).length
       var k = 1
       while (k < segs.length) {
-        val j = occ(k).next(pos)
+        val j = next(occ(k), pos)
         if (j < 0) return false
         if (j >= end) k = segs.length + 1
         else { pos = j + segs(k).length; k += 1 }

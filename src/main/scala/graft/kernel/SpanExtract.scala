@@ -156,15 +156,16 @@ final class SpanTemplate(
     }
 
   private def finds(i: Int, text: String, lowered: String): Boolean = {
-    val m = compiled(i).matcher(text)
     val (lit, back) = anchors(i)
-    if (lowered == null || lit.isEmpty) return m.find()
+    if (lowered == null || lit.isEmpty) return compiled(i).matcher(text).find()
+    var q = lowered.indexOf(lit)
+    if (q < 0) return false
+    val m = compiled(i).matcher(text)
     // transparent bounds: a region start still sees its true left
     // neighbour; no anchoring bounds: a region start is not a `^`
     m.useTransparentBounds(true)
     m.useAnchoringBounds(false)
     var next = 0 // the first start not tried yet
-    var q = lowered.indexOf(lit)
     while (q >= 0) {
       var p = math.max(q - back, next)
       while (p <= q) {

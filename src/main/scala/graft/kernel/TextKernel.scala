@@ -217,9 +217,10 @@ final class TextKernel {
     * the reference (ZeroDivisionError analog); callers map that to an
     * error row. Use [[processSafe]] in pipelines.
     *
-    * Throws [[TextKernel.Amplification]] when the text, after any stage, is
-    * longer than [[TextKernel.outputLimit]] of the input: the pattern and
-    * abbreviation stages check before they build the longer text.
+    * Throws [[TextKernel.Amplification]] when the pattern or abbreviation
+    * stage would make its text longer than [[TextKernel.outputLimit]] of
+    * that stage's input (each checks before it builds the longer text), or
+    * when the processed text is longer than the limit of the turn's input.
     */
   def process(text0: String): KernelResult = {
     val originalText = text0
@@ -238,10 +239,10 @@ final class TextKernel {
     text = t3
     if (wordCorr > 0) corrections += s"correcao_ortografica_$wordCorr"
 
-    val (t4, patternsFound) = detectAndFormatPatterns(text, limit)
+    val (t4, patternsFound) = detectAndFormatPatterns(text)
     text = t4
 
-    val (t5, abbrevCorr) = correctAbbreviations(text, limit)
+    val (t5, abbrevCorr) = correctAbbreviations(text)
     text = t5
     if (abbrevCorr > 0) corrections += s"abreviacoes_$abbrevCorr"
 
@@ -355,6 +356,10 @@ final class TextKernel {
     *   - a run can only change in a probe if it holds the probe's char
     *     `w`, and only the input runs holding some probe char can (no probe
     *     writes a later probe's char);
+    *   - a probe corrects only runs holding both a digit and a non-digit
+    *     (a digit `w` in a run not all digits, or a letter `w` among
+    *     digits), and only a corrected run changes, so only the input runs
+    *     holding both can;
     *   - under [[Probe.fold]], which the probe's rewrites leave unchanged,
     *     a match that ever occurs in a run occurs in the run's fold at the
     *     probe's start, so the whole match list replayed on the run equals
@@ -373,9 +378,21 @@ final class TextKernel {
     val distinct = new java.util.HashMap[String, Run]()
     val wr = new WordRuns(text)
     while (wr.next()) {
+      var probe = false
+      var digit = false
+      var other = false
       var i = wr.start
-      while (i < wr.end && !(text.charAt(i) < 128 && probeChars(text.charAt(i)))) i += 1
-      if (i < wr.end) {
+      while (i < wr.end && !(probe && digit && other)) {
+        val c = text.charAt(i)
+        if (c < 128) {
+          if (probeChars(c)) probe = true
+          if (c >= '0' && c <= '9') digit = true else other = true
+        } else if (Character.isSurrogate(c)) { digit = true; other = true } // astral: either
+        else if (Character.isDigit(c)) digit = true
+        else other = true
+        i += 1
+      }
+      if (probe && digit && other) {
         val s = text.substring(wr.start, wr.end)
         var r = distinct.get(s)
         if (r == null) { r = new Run(s); distinct.put(s, r) }
@@ -620,16 +637,11 @@ final class TextKernel {
     * goes to the pattern's list in its formatted form, and for each whose
     * form differs the whole text has every occurrence of the match replaced
     * by the form. Those replaces are replayed in one rebuild per pattern
-    * ([[FormatReplay]]).
+    * ([[FormatReplay]]), which throws [[TextKernel.Amplification]] before
+    * the text grows past [[TextKernel.outputLimit]] of the stage's input.
     */
-  def detectAndFormatPatterns(text0: String): (String, LinkedHashMap[String, ListBuffer[String]]) =
-    detectAndFormatPatterns(text0, Long.MaxValue)
-
-  /** As above; throws [[TextKernel.Amplification]] before the text grows
-    * past `limit` chars.
-    */
-  private[kernel] def detectAndFormatPatterns(
-      text0: String, limit: Long): (String, LinkedHashMap[String, ListBuffer[String]]) = {
+  def detectAndFormatPatterns(text0: String): (String, LinkedHashMap[String, ListBuffer[String]]) = {
+    val limit = outputLimit(text0.length)
     var text = text0
     val patternsFound = LinkedHashMap.empty[String, ListBuffer[String]]
     // The table's digit conditions, counted once on the input by code
@@ -829,14 +841,12 @@ final class TextKernel {
     *
     * `corrections` is the number of runs matched, like the reference's
     * one increment per findall match. Pinned against the verbatim
-    * findall/sub loop by KernelPropertySpec.
+    * findall/sub loop by KernelPropertySpec. Throws
+    * [[TextKernel.Amplification]] before the text grows past
+    * [[TextKernel.outputLimit]] of the input.
     */
-  def correctAbbreviations(text: String): (String, Int) = correctAbbreviations(text, Long.MaxValue)
-
-  /** As above; throws [[TextKernel.Amplification]] before the text grows
-    * past `limit` chars.
-    */
-  private[kernel] def correctAbbreviations(text: String, limit: Long): (String, Int) = {
+  def correctAbbreviations(text: String): (String, Int) = {
+    val limit = outputLimit(text.length)
     final class Hit(val run: String, val repl: String, val key: Int) {
       var out: String = run
       var count = 0L // occurrences in the text
@@ -1022,9 +1032,11 @@ final class TextKernel {
 
 object TextKernel {
 
-  /** The longest text a turn may grow to: [[TextKernel.process]] throws
-    * [[Amplification]] when a stage's output is longer than 8 × the input
-    * plus 1024 chars. A repeated match whose formatted form holds it again
+  /** The longest text a stage or a turn may grow to: 8 × its input plus
+    * 1024 chars. The pattern and abbreviation stages throw
+    * [[Amplification]] before their output passes it, and
+    * [[TextKernel.process]] when the processed text passes the limit of
+    * the turn's input. A repeated match whose formatted form holds it again
     * (phone's `"11) 99999-9999"` → `"(11) 99999-9999"`) or an expansion
     * that holds its key (`r` → `R.`) re-expands every earlier expansion, so
     * the output grows with the square of the repeats; long turns of the

@@ -36,7 +36,9 @@ object Redact {
     * the text as-is (canonical formatting applied first, like the
     * reference's in-place reformat). Replacement is boundary-anchored so a
     * validated match embedded in a longer token (which the kernel's
-    * `\b`-anchored detector never matched) is left intact.
+    * `\b`-anchored detector never matched) is left intact. Throws
+    * [[TextKernel.Amplification]] when the canonical formatting would grow
+    * the text past [[TextKernel.outputLimit]] of its length.
     */
   def redactText(kernel: TextKernel, text: String): (String, Map[String, Int]) = {
     val (formatted, found) = kernel.detectAndFormatPatterns(text)
@@ -66,7 +68,11 @@ object Redact {
 
   final case class Redacted(id: Long, text_redacted: String, redactions: Map[String, Int])
 
-  /** Distributed form: pooled kernel per partition (narrow map). */
+  /** Distributed form: pooled kernel per partition (narrow map). A text
+    * the kernel's output limit stops ([[TextKernel.Amplification]]) gets a
+    * null `text_redacted` and no counts: neither redacted nor passed
+    * through unredacted.
+    */
   def redact(df: DataFrame, idCol: String, textCol: String): Dataset[Redacted] = {
     Dedup.requireIntegralId(df, idCol) // same silent-null-cast trap as dedup
     val spark = df.sparkSession
@@ -76,8 +82,12 @@ object Redact {
       .mapPartitions { it =>
         val kernel = new TextKernel
         it.map { case (id, text) =>
-          val (red, counts) = redactText(kernel, Option(text).getOrElse(""))
-          Redacted(id, red, counts)
+          try {
+            val (red, counts) = redactText(kernel, Option(text).getOrElse(""))
+            Redacted(id, red, counts)
+          } catch {
+            case _: TextKernel.Amplification => Redacted(id, null, Map.empty)
+          }
         }
       }
   }

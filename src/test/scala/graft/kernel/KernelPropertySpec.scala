@@ -243,7 +243,7 @@ class KernelPropertySpec extends AnyFunSuite {
       "x10 " * 3 + "x100 " * 2)
     val random = randomTexts(
       Vector("0", "o", "O", "l", "1", "I", "S", "5", "G", "6", "B", "8", "g", "9",
-        "a", "x", "_", " ", " ", ".", "٣", "\u0301"), 20000, 10, 3)
+        "a", "x", "_", " ", " ", ".", "٣", "\uD835\uDFD8", "\u0301"), 20000, 10, 3)
     val generated = (0 until 300).map(t => graft.pipeline.TranscriptGen.turnText(5L, t))
     val distinct = (1 to 2000).map(i => s"x${i}0").mkString(" ")
     (adversarial ++ random ++ corpus ++ generated :+ distinct).foreach { t =>
@@ -469,10 +469,19 @@ class KernelPropertySpec extends AnyFunSuite {
     }
     val generated = (0 until 200).map(t => graft.pipeline.TranscriptGen.turnText(7L, t))
     val texts = adversarial ++ corpus ++ staged ++ generated
+    // the stage gives the loop's text, or throws when that text is past
+    // the output limit of its input (`"R$ 1.000,00 " × 250`: each `R`
+    // gains one '.' per match of `r`, 65k chars from 3k)
+    var amplified = 0
     texts.foreach { t =>
-      assert(kernel.correctAbbreviations(t) == abbreviationLoop(t),
-        s"abbreviation stage diverged on: ${t.take(80)}")
+      val want = abbreviationLoop(t)
+      if (want._1.length > TextKernel.outputLimit(t.length)) {
+        intercept[TextKernel.Amplification](kernel.correctAbbreviations(t))
+        amplified += 1
+      } else
+        assert(kernel.correctAbbreviations(t) == want, s"abbreviation stage diverged on: ${t.take(80)}")
     }
+    assert(amplified == 1)
     // bounded replace vs the verbatim case-sensitive \bm\b subLiteral
     val ms = Seq("dr", "Dr", "DR", "r", "Km", "KKm", "anexo", "Nº")
     texts.foreach { t =>
@@ -495,11 +504,22 @@ class KernelPropertySpec extends AnyFunSuite {
     val text = sb.toString
     assert(text.length > 1000000)
     val kernel = new TextKernel
-    val t0 = System.nanoTime()
-    val (out, corrections) = kernel.correctAbbreviations(text)
-    val seconds = (System.nanoTime() - t0) / 1e9
-    assert(corrections > 0 && out.length > text.length)
-    assert(seconds < 5.0, f"correctAbbreviations took $seconds%.1f s on ${text.length} chars")
+    def timed[A](f: => A): (A, Double) = {
+      val t0 = System.nanoTime()
+      val r = f
+      (r, (System.nanoTime() - t0) / 1e9)
+    }
+    // each of its thousands of `r`, `dr`, `sr`… runs gains one '.' per
+    // match of its key, so the loop's text grows with the square of the
+    // matches, past the output limit: the stage stops before building it
+    val (_, stopped) = timed(intercept[TextKernel.Amplification](kernel.correctAbbreviations(text)))
+    assert(stopped < 5.0, f"correctAbbreviations took $stopped%.1f s on ${text.length} chars")
+    // as many matches of keys whose expansions do not match again
+    val plain = "n sa pca apendice anexo palavra " * (text.length / 32)
+    val ((out, corrections), seconds) = timed(kernel.correctAbbreviations(plain))
+    assert(corrections == 5 * (text.length / 32) && out.length > plain.length)
+    assert(out.startsWith("nº s.a. pça. apêndice anexo palavra nº"))
+    assert(seconds < 5.0, f"correctAbbreviations took $seconds%.1f s on ${plain.length} chars")
   }
 
   test("correctSpelling matches the split-join reference") {
@@ -751,12 +771,29 @@ class KernelPropertySpec extends AnyFunSuite {
   test("DocType.classify is linear on a recurring first segment with no second") {
     // the verbatim `processo.*n[uú]mero` retried `.*` to the end of the
     // line from every "processo": 70 s on this input on a 4-vCPU VM
-    Seq("processo ", "tribunal ").foreach { w =>
-      val text = w * 32000
+    // and lines holding each chained pattern's segments, first
+    // alternatives only, last segment first (`numero processo`): every
+    // line starts a search for the rest that only a later line answers,
+    // and a class's other alternatives (`número`) never occur, so neither
+    // may be searched for again from every line
+    val reversed = DocType.families.flatMap(_._2).filter(_.contains(".*")).flatMap { src =>
+      val line = src.split("""\.\*""").reverse.map(_.replace("""\d+""", "1")
+        .replaceAll("""\[(.)[^\]]*\]""", "$1")).mkString(" ")
+      Seq(line + "\n", line + "\n\n", line + "\r\n")
+    }
+    assert(reversed.contains("numero processo\n\n"))
+    def seconds(text: String): Double = {
       val t0 = System.nanoTime()
       assert(DocType.classify(text) == DocType.Generic)
-      val seconds = (System.nanoTime() - t0) / 1e9
-      assert(seconds < 1.0, f"classify took $seconds%.2f s on ${text.length} chars of '$w'")
+      (System.nanoTime() - t0) / 1e9
+    }
+    (Seq("processo ", "tribunal ") ++ reversed).foreach { w =>
+      seconds(w * 3200) // warm-up
+      val small = seconds(w * 3200)
+      val big = seconds(w * 32000)
+      // 10× the lines: linear is 10× the time, quadratic 100×
+      assert(big < 1.0 && big <= 30 * math.max(small, 1e-3),
+        f"classify took $small%.3f s on 3,200 and $big%.3f s on 32,000 of '$w'")
     }
   }
 

@@ -179,7 +179,7 @@ class KernelScalingSpec extends AnyFunSuite {
 
   test("every pattern processTurn reaches is linear on an input built from its literals") {
     val kernel = new TextKernel
-    val patterns = reachablePatterns(Seq(kernel, Validators, SpanTemplates, DocType))
+    val patterns = reachablePatterns(Seq(kernel, Validators, SpanTemplates))
     assert(patterns.size >= 40, s"only ${patterns.size} patterns found")
     // one long input per pattern: its shape without the closing literal;
     // and one word as long as the input

@@ -615,6 +615,20 @@ class Operators2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(4L)._1 == "texto sem pii nenhum" && got(4L)._2.isEmpty)
   }
 
+  test("redaction: a text the kernel's output limit stops is nulled, not passed through") {
+    val sp = spark; import sp.implicits._
+    // each repeat re-grows every earlier phone (`"(((("`): 16.1M chars
+    // from these 80k without the limit
+    val df = Seq(
+      (1L, "tel (11) 99999-9999 " * 4000),
+      (2L, "tel (11) 99999-9999 " * 3)).toDF("doc_id", "text")
+    val t0 = System.nanoTime()
+    val got = Redact.redact(df, "doc_id", "text").collect().map(r => r.id -> r).toMap
+    assert((System.nanoTime() - t0) / 1e9 < 30.0)
+    assert(got(1L).text_redacted == null && got(1L).redactions.isEmpty)
+    assert(got(2L).text_redacted.contains("[PHONE]"))
+  }
+
   test("redaction is boundary-anchored: a match embedded in a longer token stays intact") {
     val sp = spark; import sp.implicits._
     // the standalone valid CPF is detected; the SAME digits embedded in
