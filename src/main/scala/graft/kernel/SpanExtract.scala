@@ -1,6 +1,6 @@
 package graft.kernel
 
-import java.util.regex.Pattern
+import java.util.regex.{Matcher, Pattern}
 import scala.collection.mutable.ListBuffer
 
 /** An extracted field with its character-offset span into the cleaned text.
@@ -50,10 +50,17 @@ final class FieldExtractor(
     case _                  => Seq.empty
   }
 
+  // each pattern, and whether its scan is the '@'-anchored probe
+  private val scans: Seq[(Pattern, Boolean)] =
+    patterns.map(p => p -> FieldExtractor.atSignAnchored(p))
+
   def extract(text: String): Option[FieldSpan] = {
-    patterns.foreach { p =>
+    scans.foreach { case (p, atSigns) =>
       val m = p.matcher(text)
-      while (m.find()) {
+      val find: () => Boolean =
+        if (atSigns) { val probe = new FieldExtractor.AtSignProbe(m, text); () => probe.find() }
+        else () => m.find()
+      while (find()) {
         processMatch(m).foreach { value =>
           if (value.nonEmpty && validate(value)) {
             return Some(FieldSpan(name, value,
@@ -110,6 +117,69 @@ final class FieldExtractor(
     val context = lower(fullText.substring(ctxStart, ctxEnd))
     if (contextKeywords.exists(context.contains)) conf += 0.05
     math.min(1.0, math.max(0.0, conf))
+  }
+}
+
+object FieldExtractor {
+
+  // a match of a pattern opening with this consumes a run of e-mail
+  // local-part chars, then an '@'
+  private val LocalPartOpen = "([a-zA-Z0-9._%+-]+@"
+
+  /** Whether every match of `p` starts in the run of [[localChar]]s that
+    * ends at an '@', so [[AtSignProbe]] finds what `find()` does: `p` is
+    * case-insensitive (which [[localChar]] assumes), opens with
+    * `LocalPartOpen` and holds no back-reference, so nothing after the
+    * '@' depends on where the run was entered.
+    */
+  private[kernel] def atSignAnchored(p: Pattern): Boolean =
+    (p.flags & Py.IFLAGS) == Py.IFLAGS && p.pattern.startsWith(LocalPartOpen) &&
+      !p.pattern.matches("""(?s).*\\[1-9k].*""")
+
+  /** `[a-zA-Z0-9._%+-]` under [[Py.IFLAGS]]: the ASCII members, and the
+    * four code points whose case fold is an ASCII letter (İ ı ſ K).
+    * KernelPropertySpec checks it against the class on every code point.
+    */
+  private[kernel] def localChar(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
+      c == '.' || c == '_' || c == '%' || c == '+' || c == '-' ||
+      c == '\u0130' || c == '\u0131' || c == '\u017F' || c == '\u212A'
+
+  /** `m.find()` for an [[atSignAnchored]] pattern, tried only where a
+    * match can start. The local-part run takes every char up to the first
+    * '@', since '@' is not in its class, and the engine backtracks it only
+    * to retry the '@', which fails; so a start in the run ending at an '@'
+    * matches exactly when the first start there does, and a start in no
+    * such run never matches. The leftmost match with a given '@' thus
+    * starts where that run starts, but not before the previous match's
+    * end, or there is none: `lookingAt` there decides. Transparent bounds
+    * keep any lookaround reading the true neighbours. The run ending at a
+    * later '@' starts after this one, so the '@'s are visited in the order
+    * of their matches; an '@' inside the previous match has no start
+    * left. Equality with `find()` is pinned by KernelPropertySpec.
+    */
+  private[kernel] final class AtSignProbe(m: Matcher, text: String) {
+    m.useTransparentBounds(true)
+    m.useAnchoringBounds(false)
+    private var lastEnd = 0
+    private var at = text.indexOf('@')
+
+    def find(): Boolean = {
+      while (at >= 0) {
+        val a = at
+        var s = a
+        while (s > lastEnd && localChar(text.charAt(s - 1))) s -= 1
+        at = text.indexOf('@', a + 1)
+        if (s < a) {
+          m.region(s, text.length)
+          if (m.lookingAt()) {
+            lastEnd = m.end()
+            return true
+          }
+        }
+      }
+      false
+    }
   }
 }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.Fs
 import graft.pipeline.TranscriptGen.sm64
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -275,7 +276,7 @@ object Similarity {
     */
   def writeIvfIndex(index: DataFrame, path: String): Unit =
     clusterForWrite(index, Seq("ivf_list"))
-      .write.mode("overwrite").partitionBy("ivf_list").parquet(path)
+      .write.options(Fs.writeOptions).mode("overwrite").partitionBy("ivf_list").parquet(path)
 
   /** Incrementally extend a materialized IVF index with NEW vectors using
     * the index's ORIGINAL trained centroids (retraining would silently
@@ -302,7 +303,7 @@ object Similarity {
     // invariant; an observe below it is not reliably collected)
     clusterForWrite(add, Seq("ivf_list"))
       .observe(obs, coalesce(count(lit(1)), lit(0L)).as("n"))
-      .write.mode("append").partitionBy("ivf_list").parquet(path)
+      .write.options(Fs.writeOptions).mode("append").partitionBy("ivf_list").parquet(path)
     obs.get.apply("n") match {
       case n: Long => n; case n: Number => n.longValue(); case _ => 0L
     }
@@ -382,7 +383,7 @@ object Similarity {
     */
   def writeLshIndex(index: DataFrame, path: String): Unit =
     clusterForWrite(index, Seq("table", "bucket"))
-      .write.mode("overwrite").partitionBy("table", "bucket").parquet(path)
+      .write.options(Fs.writeOptions).mode("overwrite").partitionBy("table", "bucket").parquet(path)
 
   /** Incrementally extend a materialized LSH index with NEW vectors — the
     * engine analog of the reference's incremental cache upsert
@@ -423,7 +424,7 @@ object Similarity {
     // invariant; an observe below it is not reliably collected)
     clusterForWrite(add, Seq("table", "bucket"))
       .observe(obs, coalesce(count(lit(1)), lit(0L)).as("n"))
-      .write.mode("append").partitionBy("table", "bucket").parquet(path)
+      .write.options(Fs.writeOptions).mode("append").partitionBy("table", "bucket").parquet(path)
     obs.get.apply("n") match {
       case n: Long => n; case n: Number => n.longValue(); case _ => 0L
     }

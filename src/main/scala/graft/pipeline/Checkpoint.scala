@@ -157,7 +157,7 @@ object Checkpoint {
         val subset =
           if (todo.size == numBuckets) all
           else all.where(col("part_id").isin(todo: _*))
-        subset.write.partitionBy("part_id").parquet(staging)
+        subset.write.options(Fs.writeOptions).partitionBy("part_id").parquet(staging)
         Some(spark.read.option("basePath", staging).parquet(staging))
       }
 
@@ -178,6 +178,7 @@ object Checkpoint {
           .as(s"rows_$k"))
       extracted.observe(obs, rowCountAggs.head, rowCountAggs.tail: _*)
         .write
+        .options(Fs.writeOptions)
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("part_id")

@@ -153,7 +153,7 @@ object CurationJob {
         val df = compute
         val obs = org.apache.spark.sql.Observation(s"curation-$stage-$runId")
         val observed = df.observe(obs, coalesce(count(lit(1)), lit(0L)).as("rows"))
-        val writer = observed.write.mode("overwrite")
+        val writer = observed.write.options(Fs.writeOptions).mode("overwrite")
         (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
          else writer).parquet(stageDataDir(outDir, stage))
         val rows = obs.get.apply("rows") match {
@@ -293,7 +293,7 @@ object CurationJob {
       val src = data("exact")
       val pairsPath = s"$outDir/stages/neardup/pairs"
       Dedup.minHashNearDups(src, "doc_id", "text", p)
-        .write.mode("overwrite").parquet(pairsPath)
+        .write.options(Fs.writeOptions).mode("overwrite").parquet(pairsPath)
       val losers = Dedup.resolveClusters(spark.read.parquet(pairsPath))
         .where(col("id") =!= col("keep_id"))
         .select(col("id").as("doc_id"))

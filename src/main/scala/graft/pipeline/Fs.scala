@@ -1,10 +1,16 @@
 package graft.pipeline
 
-import java.io.FileNotFoundException
+import java.io.{FileNotFoundException, IOException}
+import java.net.URI
 import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, FileUtil, Options, Path => HPath}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, FileUtil, LocalFileSystem,
+  Options, Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.ReflectionUtils
 import org.apache.spark.sql.SparkSession
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
@@ -17,18 +23,30 @@ import org.json4s.jackson.Serialization
   * src/utils/cache_manager.py:79-97 assumed one local disk; a Spark
   * deployment cannot).
   *
+  * Local disk (`file://`) goes through [[Local]]: Hadoop's checksummed
+  * local filesystem, whose raw layer sets permissions in-process. Without
+  * `libhadoop`, the stock `RawLocalFileSystem.setPermission` forks
+  * `chmod`, and it runs on every create (data file and `.crc`) and every
+  * mkdir. Layout, `.crc` sidecars and permission bits are unchanged. `Fs`
+  * uses it wherever the stock filesystem would be a `LocalFileSystem`,
+  * and every pipeline `DataFrameWriter` passes [[writeOptions]].
+  *
   * Commit semantics by filesystem — `writeAtomic` writes a tmp file
   * next to `dest`, then renames it into place:
-  *   - `dest` absent (the first commit of a bucket or stage): a plain
-  *     `FileSystem.rename`, atomic on HDFS and under POSIX `rename(2)`.
-  *     It fails rather than replaces when `dest` appeared meanwhile, and
-  *     then the overwrite rename below takes over.
-  *   - `dest` present (a stale manifest re-committed): HDFS / local
-  *     `file://` use `FileContext.rename(OVERWRITE)`, so a reader sees the
-  *     old manifest or the new one, never a partial file. It is kept off
-  *     the first-commit path because it reads the link status of both
-  *     paths and of their `.crc` sidecars, and on a local filesystem
-  *     without `libhadoop` each such read forks a process.
+  *   - `file://`: [[Local]]'s `rename`, whether or not `dest` exists. It
+  *     renames the data file with `File.renameTo`, POSIX `rename(2)`,
+  *     which replaces an existing file atomically, so a reader sees the
+  *     old manifest or the new one, never a partial file. Then it renames
+  *     the `.crc`: the same two steps, in the same order, as
+  *     `FileContext.rename(OVERWRITE)` takes through `ChecksumFs`
+  *     (`ChecksumFileSystem.rename` and `ChecksumFs.renameInternal` in
+  *     Hadoop 3.4.2), without its link-status reads.
+  *   - Other filesystems, `dest` absent (the first commit of a bucket or
+  *     stage): a plain `FileSystem.rename`, atomic on HDFS. It fails
+  *     rather than replaces when `dest` appeared meanwhile, and then the
+  *     overwrite rename below takes over.
+  *   - Other filesystems, `dest` present (a stale manifest re-committed):
+  *     HDFS uses `FileContext.rename(OVERWRITE)`, atomic.
   *   - Object stores without an `AbstractFileSystem` binding (e.g. s3a)
   *     replace by delete + rename (copy-based on S3). The window only
   *     ever exposes "manifest ABSENT", and every reader here treats a
@@ -53,14 +71,88 @@ import org.json4s.jackson.Serialization
   */
 object Fs {
 
+  /** The raw local filesystem with `setPermission` in-process: one
+    * `chmod(2)` through `java.nio`. It defers to the stock forked `chmod`
+    * where `java.nio` cannot match it: a sticky bit, a directory holding
+    * setuid/setgid (`chmod 0755` keeps those on a directory, `chmod(2)`
+    * with nine bits would clear them), or a store without POSIX
+    * attributes.
+    */
+  private[pipeline] class Raw extends RawLocalFileSystem {
+    override def setPermission(p: HPath, perm: FsPermission): Unit = {
+      val file = pathToFile(p).toPath
+      try {
+        val mode = Files.getAttribute(file, "unix:mode").asInstanceOf[Int]
+        val setIdDir = (mode & 0xF000) == 0x4000 && (mode & 0xC00) != 0
+        if (perm.getStickyBit || setIdDir) super.setPermission(p, perm)
+        else Files.setPosixFilePermissions(file, posix(perm.toShort))
+      } catch {
+        case _: UnsupportedOperationException | _: IllegalArgumentException =>
+          super.setPermission(p, perm)
+      }
+    }
+  }
+
+  // PosixFilePermission's order, OWNER_READ … OTHERS_EXECUTE, is mode
+  // bits 8 down to 0
+  private val PosixBits = PosixFilePermission.values
+
+  private def posix(mode: Int): java.util.Set[PosixFilePermission] = {
+    val out = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+    var i = 0
+    while (i < 9) {
+      if ((mode & (0x100 >> i)) != 0) out.add(PosixBits(i))
+      i += 1
+    }
+    out
+  }
+
+  /** Hadoop's checksummed local filesystem over [[Raw]]; see the object
+    * doc.
+    */
+  final class Local extends LocalFileSystem(new Raw)
+
+  /** `DataFrameWriter` options that write `file://` output through
+    * [[Local]]. Spark merges writer options into the write job's Hadoop
+    * configuration, which the driver-side committer and every task read.
+    * The cache bypass is needed because Hadoop's `FileSystem` cache keys
+    * on scheme, authority and user, not on the class. Both keys name only
+    * the `file` scheme, so they do nothing on HDFS or an object store.
+    */
+  val writeOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[Local].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  private lazy val defaultConf = new Configuration()
+
   def conf: Configuration =
     SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
+      .getOrElse(defaultConf)
 
   def hpath(s: String): HPath = new HPath(s)
 
-  private def fsOf(p: HPath): FileSystem = p.getFileSystem(conf)
+  // the last Local built, reused while the configuration is the same one
+  @volatile private var local: Local = _
+
+  /** `p`'s filesystem: a [[Local]] where the stock one is a
+    * `LocalFileSystem`.
+    */
+  private[pipeline] def fsOf(p: HPath): FileSystem = {
+    val c = conf
+    p.getFileSystem(c) match {
+      case _: LocalFileSystem =>
+        val l = local
+        if (l != null && (l.getConf eq c)) l
+        else {
+          val fresh = ReflectionUtils.newInstance(classOf[Local], c)
+          fresh.initialize(URI.create("file:///"), c)
+          local = fresh
+          fresh
+        }
+      case fs => fs
+    }
+  }
 
   def exists(s: String): Boolean = { val p = hpath(s); fsOf(p).exists(p) }
 
@@ -85,25 +177,25 @@ object Fs {
     */
   def renameOverwrite(src: String, dst: String): Unit = {
     val s = hpath(src); val d = hpath(dst)
-    try {
-      val fc = FileContext.getFileContext(fsOf(d).getUri, conf)
-      fc.rename(s, d, Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        // no AbstractFileSystem binding (object stores): non-atomic
-        // overwrite, but the only observable intermediate state is
-        // "dst absent" = not-committed — safe for every caller here
-        val fs = fsOf(d)
-        if (fs.exists(d)) fs.delete(d, false)
-        if (!fs.rename(s, d))
-          throw new java.io.IOException(s"rename $src -> $dst failed")
+    fsOf(d) match {
+      case fs: Local => rename(fs, s, d)
+      case fs =>
+        try FileContext.getFileContext(fs.getUri, conf).rename(s, d, Options.Rename.OVERWRITE)
+        catch {
+          case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+            // no AbstractFileSystem binding (object stores): non-atomic
+            // overwrite, but the only observable intermediate state is
+            // "dst absent" = not-committed — safe for every caller here
+            if (fs.exists(d)) fs.delete(d, false)
+            rename(fs, s, d)
+        }
     }
   }
 
-  /** Write `content` durably at `dest` via tmp + rename: a plain rename
-    * into an absent `dest`, the overwrite rename over an existing one or
-    * when the plain rename fails (see object doc).
-    */
+  private def rename(fs: FileSystem, s: HPath, d: HPath): Unit =
+    if (!fs.rename(s, d)) throw new IOException(s"rename $s -> $d failed")
+
+  /** Write `content` durably at `dest` via tmp + rename (see object doc). */
   def writeAtomic(dest: String, content: String): Unit = {
     val d = hpath(dest); val fs = fsOf(d)
     if (d.getParent != null) fs.mkdirs(d.getParent)
@@ -111,7 +203,10 @@ object Fs {
     val out = fs.create(tmp, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    if (fs.exists(d) || !fs.rename(tmp, d)) renameOverwrite(tmp.toString, dest)
+    fs match {
+      case _: Local => rename(fs, tmp, d)
+      case _ => if (fs.exists(d) || !fs.rename(tmp, d)) renameOverwrite(tmp.toString, dest)
+    }
   }
 
   /** The file at `s` as UTF-8, or None if absent. */
@@ -186,7 +281,7 @@ object Fs {
     val sfs = fsOf(s); val dfs = fsOf(d)
     if (d.getParent != null) dfs.mkdirs(d.getParent)
     if (!FileUtil.copy(sfs, s, dfs, d, false, true, conf))
-      throw new java.io.IOException(s"copy $src -> $dst failed")
+      throw new IOException(s"copy $src -> $dst failed")
   }
 
   /** Streaming md5 of a file. A file that cannot be read back cleanly
@@ -208,7 +303,7 @@ object Fs {
       } finally in.close()
       md.digest().map("%02x".format(_)).mkString
     } catch {
-      case e: java.io.IOException => s"unreadable:${e.getClass.getSimpleName}"
+      case e: IOException => s"unreadable:${e.getClass.getSimpleName}"
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.pipeline.ExtractionJob
+import graft.pipeline.{ExtractionJob, Fs}
 import graft.schema.Turn
 
 /** Structured-Streaming surface of the extraction engine — the reference's
@@ -41,6 +41,7 @@ object StreamingExtract {
     ExtractionJob.extract(batch)
       .withColumn("batch_id", lit(batchId))
       .write
+      .options(Fs.writeOptions)
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")

@@ -399,6 +399,50 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("Business Card e-mail field probe matches the generic find loop") {
+    val src = """([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,})"""
+    val email = java.util.regex.Pattern.compile(src, Py.IFLAGS | java.util.regex.Pattern.MULTILINE)
+    assert(SpanTemplates.businessCard.fields.exists(_.name == "email"))
+    assert(FieldExtractor.atSignAnchored(email))
+    assert(!FieldExtractor.atSignAnchored(java.util.regex.Pattern.compile(src)), "case-sensitive")
+    assert(!FieldExtractor.atSignAnchored(
+      java.util.regex.Pattern.compile(src + """\1""", Py.IFLAGS)), "back-reference")
+    // the probe's class test is the engine's, on every code point
+    val cls = java.util.regex.Pattern.compile("[a-zA-Z0-9._%+-]", Py.IFLAGS)
+    (0 to Character.MAX_CODE_POINT).foreach { cp =>
+      val s = new String(Character.toChars(cp))
+      val isLocal = s.length == 1 && FieldExtractor.localChar(s.charAt(0))
+      assert(isLocal == cls.matcher(s).matches(), f"class test diverged at U+$cp%04X")
+    }
+    def generic(t: String) = {
+      val m = email.matcher(t)
+      val out = ListBuffer.empty[(Int, Int, String)]
+      while (m.find()) out += ((m.start(), m.end(), m.group(1)))
+      out.toList
+    }
+    def probed(t: String) = {
+      val m = email.matcher(t)
+      val probe = new FieldExtractor.AtSignProbe(m, t)
+      val out = ListBuffer.empty[(Int, Int, String)]
+      while (probe.find()) out += ((m.start(), m.end(), m.group(1)))
+      out.toList
+    }
+    // ſ, K (U+212A), ı and İ fold to ASCII letters, so they are local
+    // chars under IFLAGS; Å and é are not
+    val adversarial = Seq(
+      "", "@", "a@b.cd", "a.b%c+d-e_f@x.y.com", "ſ@b.cd", "aK@b.cd", "K@K.KK",
+      "ı@b.cd", "İ@b.cd", "xKſ@ſ.ſſ", "é@b.cd", "éa@b.cd", "Å@b.cd", "日本a@b.cd",
+      "𝔞a@b.cd", "a@b@c.de", "a@b.cd@e.fg", "a@b.cd.ef gh@ij.kl", "a@b.c", "a@-.cd",
+      "a@@b.cd", "a @b.cd", "+@a.bc", "a@b.cd%e@f.gh", "a@b.cdx@y.zz", "ab@c.d1x@y.zz",
+      ("a." * 200) + "@b.cd", ("a" * 300) + "x", "a@" * 50 + "b.cd", "Ka@b.CD\nk@b.cd")
+    val random = randomTexts(
+      Vector("a", "Z", "9", ".", "%", "+", "-", "@", " ", "\n", "é", "ſ", "K", "ı", "cd", "@b.cd"),
+      20000, 14, 11)
+    (adversarial ++ random ++ corpus).foreach { t =>
+      assert(probed(t) == generic(t), s"e-mail field probe diverged on: $t")
+    }
+  }
+
   test("a turn past the output limit becomes one amplification row") {
     import graft.schema.Turn
     val kernel = new TextKernel

@@ -479,7 +479,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(names(s"$root/new/deeper") == Set("m.json", ".m.json.crc"))
 
     // over an existing file: the new, longer content reads back through
-    // the checksummed filesystem (a stale .crc would fail the read)
+    // the checksummed filesystem (a stale .crc would fail the read); on
+    // file:// the commit is Fs.Local's rename, rename(2) for the data file
+    // and then for its .crc
+    assert(Fs.fsOf(Fs.hpath(fresh)).isInstanceOf[Fs.Local])
     val content = """{"v":2,"pad":"""" + "x" * 600 + "\"}"
     Fs.writeAtomic(fresh, content)
     assert(Fs.readString(fresh).contains(content))
@@ -496,6 +499,128 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     run2.foreach(m => assert(Checkpoint.readManifest(outDir, m.partId).contains(m)))
     assert(names(s"$outDir/manifests") ==
       Set("part-0.json", ".part-0.json.crc", "part-1.json", ".part-1.json.crc"))
+  }
+
+  /** Mode bits (permissions, sticky, setuid/setgid) of a local path. */
+  private def modeOf(p: java.nio.file.Path): Int =
+    Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xFFF
+
+  /** Every path under `root` (not `root` itself), by kind. */
+  private def treeModes(root: String): Seq[(String, Boolean, Int)] = {
+    val r = Paths.get(Fs.hpath(root).toUri.getPath)
+    val s = Files.walk(r)
+    try s.iterator().asScala.filter(_ != r)
+      .map(p => (r.relativize(p).toString, Files.isDirectory(p), modeOf(p))).toList
+    finally s.close()
+  }
+
+  test("Fs.Local gives files, dirs and .crc the stock LocalFileSystem's permissions") {
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem}
+    val hc = spark.sparkContext.hadoopConfiguration
+    val saved = hc.get("fs.permissions.umask-mode")
+    try Seq("022", "077").foreach { umask =>
+      hc.set("fs.permissions.umask-mode", umask)
+      val root = fsTmp(s"graft-fs-perm-$umask")
+      // the stock filesystem (forks chmod) writes the reference tree
+      val stock = FileSystem.newInstance(new java.net.URI("file:///"), hc)
+      assert(stock.isInstanceOf[LocalFileSystem] && !stock.isInstanceOf[Fs.Local])
+      stock.mkdirs(Fs.hpath(s"$root/stock/d/e"))
+      val out = stock.create(Fs.hpath(s"$root/stock/d/e/f.json"))
+      try out.write('x') finally out.close()
+      stock.close()
+      val ref = treeModes(s"$root/stock").map { case (rel, _, mode) => rel -> mode }.toMap
+      val dirMode = ref("d"); val fileMode = ref("d/e/f.json")
+      assert(ref("d/e/.f.json.crc") == fileMode)
+      assert(dirMode == (0x1FF & ~Integer.parseInt(umask, 8)), s"umask $umask: dir ${dirMode.toOctalString}")
+      // the same tree through Fs: mkdirs, a fresh and an overwriting
+      // writeAtomic, copyFile
+      Fs.mkdirs(s"$root/fs/d/e")
+      Fs.writeAtomic(s"$root/fs/d/e/f.json", "x")
+      Fs.writeAtomic(s"$root/fs/d/e/f.json", "xy")
+      Fs.copyFile(s"$root/fs/d/e/f.json", s"$root/fs/d/g/f.json")
+      val viaFs = treeModes(s"$root/fs")
+      assert(viaFs.map(_._1).toSet ==
+        Set("d", "d/e", "d/g", "d/e/f.json", "d/e/.f.json.crc", "d/g/f.json", "d/g/.f.json.crc"))
+      viaFs.foreach { case (rel, isDir, mode) =>
+        assert(mode == (if (isDir) dirMode else fileMode), s"umask $umask: $rel ${mode.toOctalString}")
+      }
+      // a Checkpoint.run: staging, dynamic-overwrite parquet, _SUCCESS,
+      // manifests; its write tasks go through Fs.Raw
+      val written = org.apache.hadoop.fs.FileSystem.getStatistics("file", classOf[Fs.Raw])
+      val before = written.getBytesWritten
+      val store = s"$root/store"
+      Checkpoint.run(TranscriptGen.dataset(spark, 6), store, 2, runId = s"p-$umask", groupSize = 1)
+      assert(written.getBytesWritten - before >= Fs.dirBytes(s"$store/data"))
+      val inStore = treeModes(store)
+      assert(inStore.exists(_._1.endsWith(".parquet")) && inStore.exists(_._1.endsWith(".crc")) &&
+        inStore.exists(_._1.endsWith("part-0.json")))
+      inStore.foreach { case (rel, isDir, mode) =>
+        assert(mode == (if (isDir) dirMode else fileMode), s"umask $umask: $rel ${mode.toOctalString}")
+      }
+    } finally {
+      if (saved == null) hc.unset("fs.permissions.umask-mode")
+      else hc.set("fs.permissions.umask-mode", saved)
+    }
+  }
+
+  test("Fs.Raw leaves a sticky bit and a setgid directory to the stock chmod") {
+    import org.apache.hadoop.fs.RawLocalFileSystem
+    import org.apache.hadoop.fs.permission.FsPermission
+    def raw(fs: RawLocalFileSystem) = { fs.initialize(new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration); fs }
+    val ours = raw(new Fs.Raw); val stock = raw(new RawLocalFileSystem)
+    def perm(octal: String) = new FsPermission(Integer.parseInt(octal, 8).toShort)
+    def dir(mode: String) = {
+      val d = Files.createTempDirectory("graft-fs-mode")
+      assert(new ProcessBuilder("chmod", mode, d.toString).start().waitFor() == 0)
+      d
+    }
+    // a sticky bit: java.nio cannot set it, the fallback does
+    val sticky = dir("0755")
+    ours.setPermission(Fs.hpath(sticky.toUri.toString), perm("1750"))
+    assert(modeOf(sticky) == Integer.parseInt("1750", 8), modeOf(sticky).toOctalString)
+    // chmod keeps a directory's setgid; so does the fallback
+    Seq(ours, stock).foreach { fs =>
+      val setgid = dir("2755")
+      fs.setPermission(Fs.hpath(setgid.toUri.toString), perm("0700"))
+      assert(modeOf(setgid) == Integer.parseInt("2700", 8), s"$fs: ${modeOf(setgid).toOctalString}")
+    }
+    // plain bits in-process, equal to the stock chmod
+    Seq("0600", "0644", "0751", "0000").foreach { p =>
+      val a = dir("0777"); val b = dir("0777")
+      ours.setPermission(Fs.hpath(a.toUri.toString), perm(p))
+      stock.setPermission(Fs.hpath(b.toUri.toString), perm(p))
+      assert(modeOf(a) == modeOf(b) && modeOf(a) == Integer.parseInt(p, 8))
+    }
+  }
+
+  test("Fs.writeOptions resolve file:// to Fs.Local in a write job's configuration") {
+    import org.apache.hadoop.fs.FileSystem
+    val uri = new java.net.URI("file:///")
+    // what Spark's newHadoopConfWithOptions builds for a writer's options
+    val jobConf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    Fs.writeOptions.foreach { case (k, v) => jobConf.set(k, v) }
+    assert(FileSystem.get(uri, jobConf).isInstanceOf[Fs.Local])
+    assert(FileSystem.get(uri, jobConf) ne FileSystem.get(uri, jobConf), "cache bypassed")
+    // and the session's own cached filesystem stays the stock one
+    assert(!FileSystem.get(uri, spark.sparkContext.hadoopConfiguration).isInstanceOf[Fs.Local])
+    assert(Fs.writeOptions.keySet.forall(_.startsWith("fs.file.")))
+  }
+
+  test("dynamic partition overwrites through Fs.Local leave no staging or _temporary") {
+    val outDir = fsTmp("graft-dyn-clean")
+    val ds = TranscriptGen.dataset(spark, 8)
+    Checkpoint.run(ds, s"$outDir/store", 4, runId = "d-1", groupSize = 2)
+    Checkpoint.run(ds, s"$outDir/store", 4, runId = "d-2", groupSize = 2, configHash = "v2")
+    val sp = spark; import sp.implicits._
+    val batch = ds.limit(20).as[Turn]
+    graft.streaming.StreamingExtract.writeBatch(batch, 0L, s"$outDir/stream")
+    graft.streaming.StreamingExtract.writeBatch(batch, 0L, s"$outDir/stream")
+    graft.streaming.StreamingExtract.writeBatch(batch, 1L, s"$outDir/stream")
+    val names = treeModes(outDir).map(_._1)
+    assert(names.exists(_.contains("part_id=")) && names.exists(_.contains("batch_id=1")))
+    val left = names.filter(n => n.split('/').exists(c => c.startsWith(".spark-staging") || c == "_temporary"))
+    assert(left.isEmpty, s"left behind: $left")
+    assert(spark.read.parquet(s"$outDir/stream").count() == 40)
   }
 
   test("readResult reads a store mixing all-nullable and required-column buckets") {
