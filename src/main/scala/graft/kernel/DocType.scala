@@ -185,8 +185,12 @@ object DocType {
     // null degrades to the generic family (the kernel tier's null
     // convention, like Sections/Chunker): a null text row reaching
     // classifyConversations must not kill the task
-    if (text == null) return Generic
-    val hits = scores(lower(text))
+    if (text == null) Generic else classifyLowered(lower(text))
+  }
+
+  /** [[classify]] of a text given its lowered copy, `Py.lower(text)`. */
+  private[graft] def classifyLowered(lowered: String): String = {
+    val hits = scores(lowered)
     val maxScore = hits.map(_._2).max
     if (maxScore >= 2) hits.find(_._2 == maxScore).get._1
     else Generic

@@ -168,20 +168,16 @@ object Py {
   // in Portuguese text), derived from the same formula, never transcribed
   private[kernel] val uWordLatin1: Array[Boolean] = Array.tabulate(256)(uWordFormula)
 
-  /** re.findall semantics: 0 groups → whole match; 1 group → that group
-    * ("" when it did not participate); n groups → all groups concatenated
-    * (the reference only ever joins tuples, text_processor.py:419-420).
+  /** The item `re.findall` returns for `m`'s current match: 0 groups →
+    * whole match; 1 group → that group ("" when it did not participate);
+    * n groups → all groups concatenated (the reference only ever joins
+    * tuples, text_processor.py:419-420).
     */
-  def findAll(p: Pattern, s: String): List[String] = {
-    val m = p.matcher(s)
-    val out = ListBuffer.empty[String]
+  private[kernel] def findallItem(m: Matcher): String = {
     val g = m.groupCount()
-    while (m.find()) {
-      if (g == 0) out += m.group()
-      else if (g == 1) out += Option(m.group(1)).getOrElse("")
-      else out += (1 to g).map(i => Option(m.group(i)).getOrElse("")).mkString
-    }
-    out.toList
+    if (g == 0) m.group()
+    else if (g == 1) Option(m.group(1)).getOrElse("")
+    else (1 to g).map(i => Option(m.group(i)).getOrElse("")).mkString
   }
 
   /** A re.sub replacement template: literal pieces and \N group refs. */

@@ -28,8 +28,9 @@ final class FieldExtractor(
     validationRegex: Option[String] = None) {
   import Py._
 
-  private val patterns: Seq[Pattern] =
-    patternStrs.map(p => Pattern.compile(p, IFLAGS | Pattern.MULTILINE))
+  // each pattern with the scan that finds its matches
+  private[kernel] val scans: Seq[Scan] =
+    patternStrs.map(p => new Scan(Pattern.compile(p, IFLAGS | Pattern.MULTILINE)))
   private val validation: Option[Pattern] =
     validationRegex.map(r => Pattern.compile(r))
 
@@ -50,17 +51,15 @@ final class FieldExtractor(
     case _                  => Seq.empty
   }
 
-  // each pattern, and whether its scan is the '@'-anchored probe
-  private val scans: Seq[(Pattern, Boolean)] =
-    patterns.map(p => p -> FieldExtractor.atSignAnchored(p))
-
-  def extract(text: String): Option[FieldSpan] = {
-    scans.foreach { case (p, atSigns) =>
-      val m = p.matcher(text)
-      val find: () => Boolean =
-        if (atSigns) { val probe = new FieldExtractor.AtSignProbe(m, text); () => probe.find() }
-        else () => m.find()
-      while (find()) {
+  /** The first valid match. `lowered` is the text's lowered copy that
+    * passed [[SpanTemplates.identify]]'s case-fold guard, or null
+    * ([[Scan.cursor]]).
+    */
+  def extract(text: String, lowered: String): Option[FieldSpan] = {
+    scans.foreach { scan =>
+      val c = scan.cursor(text, lowered)
+      while (c.find()) {
+        val m = c.m
         processMatch(m).foreach { value =>
           if (value.nonEmpty && validate(value)) {
             return Some(FieldSpan(name, value,
@@ -144,42 +143,248 @@ object FieldExtractor {
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
       c == '.' || c == '_' || c == '%' || c == '+' || c == '-' ||
       c == '\u0130' || c == '\u0131' || c == '\u017F' || c == '\u212A'
+}
 
-  /** `m.find()` for an [[atSignAnchored]] pattern, tried only where a
-    * match can start. The local-part run takes every char up to the first
-    * '@', since '@' is not in its class, and the engine backtracks it only
-    * to retry the '@', which fails; so a start in the run ending at an '@'
-    * matches exactly when the first start there does, and a start in no
-    * such run never matches. The leftmost match with a given '@' thus
-    * starts where that run starts, but not before the previous match's
-    * end, or there is none: `lookingAt` there decides. Transparent bounds
-    * keep any lookaround reading the true neighbours. The run ending at a
-    * later '@' starts after this one, so the '@'s are visited in the order
-    * of their matches; an '@' inside the previous match has no start
-    * left. Equality with `find()` is pinned by KernelPropertySpec.
+/** One template pattern with the scan its matches are found by: `find()`,
+  * unless a probe proves where every match starts and tries `lookingAt`
+  * only there —
+  *
+  *   - an [[FieldExtractor.atSignAnchored]] pattern at the local-part run
+  *     before each '@' ([[AtSignProbe]]);
+  *   - a pattern with a [[SpanTemplates.anchorCI]] literal at the starts
+  *     before each occurrence of it ([[LiteralProbe]]);
+  *   - a [[SuffixRuns]] pattern at the first start of each class run that
+  *     holds a suffix ([[SuffixRunProbe]]).
+  *
+  * The last two read the lowered copy that passed
+  * [[SpanTemplates.identify]]'s case-fold guard; without one they fall back
+  * to `find()`.
+  */
+private[kernel] final class Scan(val pattern: Pattern) {
+  private val caseInsensitive = (pattern.flags & Py.IFLAGS) == Py.IFLAGS
+  private val atSigns = FieldExtractor.atSignAnchored(pattern)
+
+  /** `(lit, back)` of [[SpanTemplates.anchorCI]]; ("", 0) for none. */
+  val anchor: (String, Int) =
+    if (caseInsensitive) SpanTemplates.anchorCI(pattern.pattern) else ("", 0)
+  private val suffixRuns: Option[SuffixRuns] =
+    if (caseInsensitive) SuffixRuns.of(pattern) else None
+
+  /** Whether `pattern` matches in `text`; `lowered` as for [[cursor]]. */
+  def finds(text: String, lowered: String): Boolean =
+    if (lowered != null && anchor._1.nonEmpty && lowered.indexOf(anchor._1) < 0) false
+    else cursor(text, lowered).find()
+
+  /** `pattern`'s matches in `text`, in the order `find()` gives them.
+    * `lowered` is `text`'s guarded lowered copy, or null.
     */
-  private[kernel] final class AtSignProbe(m: Matcher, text: String) {
-    m.useTransparentBounds(true)
-    m.useAnchoringBounds(false)
-    private var lastEnd = 0
-    private var at = text.indexOf('@')
-
-    def find(): Boolean = {
-      while (at >= 0) {
-        val a = at
-        var s = a
-        while (s > lastEnd && localChar(text.charAt(s - 1))) s -= 1
-        at = text.indexOf('@', a + 1)
-        if (s < a) {
-          m.region(s, text.length)
-          if (m.lookingAt()) {
-            lastEnd = m.end()
-            return true
-          }
-        }
-      }
-      false
+  def cursor(text: String, lowered: String): Cursor =
+    if (atSigns) new AtSignProbe(pattern, text)
+    else if (lowered == null) new FindCursor(pattern, text)
+    else if (anchor._1.nonEmpty) new LiteralProbe(pattern, text, lowered, anchor._1, anchor._2)
+    else suffixRuns match {
+      case Some(sr) => new SuffixRunProbe(pattern, text, lowered, sr)
+      case None => new FindCursor(pattern, text)
     }
+}
+
+/** A walk over a pattern's matches in a text: each `find()` that returns
+  * true leaves the next match in `m`. The matcher is made at the first
+  * try, so a probe that finds no place to try makes none. A probe's
+  * matcher has transparent bounds, so a region start still sees its true
+  * left neighbour, and no anchoring bounds, so a region start is not a
+  * `^`.
+  */
+private[kernel] abstract class Cursor(pattern: Pattern, text: String) {
+  private var matcher: Matcher = null
+
+  def m: Matcher = {
+    if (matcher == null) {
+      matcher = pattern.matcher(text)
+      matcher.useTransparentBounds(true)
+      matcher.useAnchoringBounds(false)
+    }
+    matcher
+  }
+
+  def find(): Boolean
+
+  /** Whether a match starts at `s`. */
+  protected def matchesAt(s: Int): Boolean = {
+    m.region(s, text.length)
+    m.lookingAt()
+  }
+}
+
+private[kernel] final class FindCursor(pattern: Pattern, text: String) extends Cursor(pattern, text) {
+  def find(): Boolean = m.find()
+}
+
+/** `find()` for an [[FieldExtractor.atSignAnchored]] pattern. The
+  * local-part run takes every char up to the first '@', since '@' is not
+  * in its class, and the engine backtracks it only to retry the '@', which
+  * fails; so a start in the run ending at an '@' matches exactly when the
+  * first start there does, and a start in no such run never matches. The
+  * leftmost match with a given '@' thus starts where that run starts, but
+  * not before the previous match's end, or there is none: `lookingAt`
+  * there decides. The run ending at a later '@' starts after this one, so
+  * the '@'s are visited in the order of their matches; an '@' inside the
+  * previous match has no start left. Equality with `find()` is pinned by
+  * KernelPropertySpec.
+  */
+private[kernel] final class AtSignProbe(pattern: Pattern, text: String) extends Cursor(pattern, text) {
+  private var lastEnd = 0
+  private var at = text.indexOf('@')
+
+  def find(): Boolean = {
+    while (at >= 0) {
+      val a = at
+      var s = a
+      while (s > lastEnd && FieldExtractor.localChar(text.charAt(s - 1))) s -= 1
+      at = text.indexOf('@', a + 1)
+      if (s < a && matchesAt(s)) {
+        lastEnd = m.end()
+        return true
+      }
+    }
+    false
+  }
+}
+
+/** `find()` for a case-insensitive pattern whose every match starts at most
+  * `back` chars before an occurrence of the ASCII literal `lit`
+  * ([[SpanTemplates.anchorCI]]), found in the guarded `lowered` copy: each
+  * start in `[q - back, q]` of each occurrence `q`, ascending, once, and
+  * none before the previous match's end. Equality with `find()` is pinned
+  * by KernelPropertySpec.
+  */
+private[kernel] final class LiteralProbe(
+    pattern: Pattern, text: String, lowered: String, lit: String, back: Int)
+  extends Cursor(pattern, text) {
+  private var next = 0 // the first start not tried yet
+  private var q = lowered.indexOf(lit)
+
+  def find(): Boolean = {
+    while (q >= 0) {
+      var s = math.max(q - back, next)
+      while (s <= q) {
+        if (matchesAt(s)) {
+          next = math.max(m.end(), s + 1)
+          if (q < next) q = lowered.indexOf(lit, next)
+          return true
+        }
+        s += 1
+      }
+      next = q + 1
+      q = lowered.indexOf(lit, q + 1)
+    }
+    false
+  }
+}
+
+/** A case-insensitive pattern shaped `([S][C]+(?:A1|A2|…)T)`: a char of
+  * class `S`, a run of class `C` (`S` a subset of `C`), one of the literal
+  * suffixes `Ai`, and a tail `T` that is empty or `\.?`, as Business
+  * Card's `company`. Both classes are read off the pattern's own engine,
+  * on every BMP char; astral code points are in neither (pinned by
+  * KernelPropertySpec), so a char walk sees the engine's runs.
+  */
+private[kernel] final class SuffixRuns(start: Array[Boolean], run: Array[Boolean], val suffixes: Array[String]) {
+  def starts(c: Char): Boolean = start(c)
+  def inRun(c: Char): Boolean = run(c)
+}
+
+private[kernel] object SuffixRuns {
+  private val Shape = """\(\[([^\]]+)\]\[([^\]]+)\]\+\(\?:([^()]+)\)(\\\.\?)?\)""".r
+
+  /** `p`'s classes and lowered suffixes, when `p` has the shape. */
+  def of(p: Pattern): Option[SuffixRuns] = p.pattern match {
+    case Shape(s, c, alts, _) =>
+      val suffixes = alts.split('|').map(literal)
+      if (suffixes.exists(l => l == null || l.isEmpty || !l.forall(_ < 128))) None
+      else {
+        val (start, run) = (members(s"[$s]", p.flags), members(s"[$c]", p.flags))
+        if (start.indices.exists(i => start(i) && !run(i))) None
+        else Some(new SuffixRuns(start, run, suffixes.map(Py.lower)))
+      }
+    case _ => None
+  }
+
+  /** `src` with its escaped punctuation unescaped, or null if it holds any
+    * other regex syntax.
+    */
+  private def literal(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    while (i < src.length) {
+      val c = src.charAt(i)
+      if (c == '\\' && i + 1 < src.length && !src.charAt(i + 1).isLetterOrDigit) { out += src.charAt(i + 1); i += 2 }
+      else if (c == '\\' || ".^$[](){}|*+?".indexOf(c) >= 0) return null
+      else { out += c; i += 1 }
+    }
+    out.toString
+  }
+
+  /** The BMP chars the class `cls` matches under `flags`. */
+  private def members(cls: String, flags: Int): Array[Boolean] = {
+    val m = Pattern.compile(cls, flags).matcher("")
+    Array.tabulate(0x10000)(c => m.reset(String.valueOf(c.toChar)).matches())
+  }
+}
+
+/** `find()` for a [[SuffixRuns]] pattern. From a start `s` the `C` run
+  * takes every char up to the end `r` of the maximal `C` run holding `s`
+  * (`S` is a subset of `C`), and gives them back one by one looking for a
+  * suffix: a match from `s` is there exactly when a suffix occurs at some
+  * `k` in `[s + 2, r]`, which holds for every earlier start in the run if
+  * it holds for `s`. So the leftmost match in a run, if any, starts at its
+  * first `S` char, and a run whose first start fails holds none. A suffix
+  * at `k` can only serve the run holding `k - 1`, so the runs tried are
+  * those, found from each suffix occurrence in the guarded `lowered` copy,
+  * each once. After a match no later suffix sits in its run, since the
+  * engine took the last one. Equality with `find()` is pinned by
+  * KernelPropertySpec.
+  */
+private[kernel] final class SuffixRunProbe(pattern: Pattern, text: String, lowered: String, sr: SuffixRuns)
+  extends Cursor(pattern, text) {
+  private val suffixes = sr.suffixes
+  // each suffix's next occurrence at or after `from` (Int.MaxValue: none)
+  private val next = Array.fill(suffixes.length)(-1)
+  private var from = 0 // no match starts, and no untried run ends, before this
+
+  private def nextOccurrence(): Int = {
+    var best = Int.MaxValue
+    var i = 0
+    while (i < suffixes.length) {
+      if (next(i) < from) {
+        val q = lowered.indexOf(suffixes(i), from)
+        next(i) = if (q < 0) Int.MaxValue else q
+      }
+      best = math.min(best, next(i))
+      i += 1
+    }
+    best
+  }
+
+  def find(): Boolean = {
+    while (from <= text.length) {
+      val k = nextOccurrence()
+      if (k == Int.MaxValue) return false
+      // the run [a, r) holding k - 1 (or starting at k, when k - 1 is no
+      // member or is before `from`)
+      var a = k
+      while (a > from && sr.inRun(text.charAt(a - 1))) a -= 1
+      var r = k
+      while (r < text.length && sr.inRun(text.charAt(r))) r += 1
+      var s = a
+      while (s < r && !sr.starts(text.charAt(s))) s += 1
+      from = r + 1
+      if (s < r && matchesAt(s)) {
+        from = math.max(from, m.end())
+        return true
+      }
+    }
+    false
   }
 }
 
@@ -194,16 +399,14 @@ final class SpanTemplate(
     val fields: Seq[FieldExtractor],
     val confidenceThreshold: Double = 0.8) {
 
-  private val compiled: Seq[Pattern] =
-    identificationPatterns.map(p =>
-      Pattern.compile(p, Py.IFLAGS | Pattern.MULTILINE))
+  private[kernel] val scans: Array[Scan] =
+    identificationPatterns.map(p => new Scan(Pattern.compile(p, Py.IFLAGS | Pattern.MULTILINE))).toArray
 
   /** Per-pattern anchor `(lit, back)` ([[SpanTemplates.anchorCI]]): every
     * match starts at most `back` chars before an occurrence of `lit` in the
     * lowered text. ("", 0) = none provable.
     */
-  private[kernel] val anchors: Array[(String, Int)] =
-    identificationPatterns.map(SpanTemplates.anchorCI).toArray
+  private[kernel] def anchors: Array[(String, Int)] = scans.map(_.anchor)
 
   /** Fraction of identification patterns matching (templates.py:266-279).
     * `lowered` is a toLowerCase(ROOT) copy of `text` that
@@ -214,45 +417,16 @@ final class SpanTemplate(
     * of at every position; the answer is the same either way.
     */
   private[kernel] def matchesDocument(text: String, lowered: String): Double =
-    if (compiled.isEmpty) 0.0
-    else {
-      var hits = 0
-      var i = 0
-      while (i < compiled.length) {
-        if (finds(i, text, lowered)) hits += 1
-        i += 1
-      }
-      hits.toDouble / compiled.size
-    }
+    if (scans.isEmpty) 0.0
+    else scans.count(_.finds(text, lowered)).toDouble / scans.length
 
-  private def finds(i: Int, text: String, lowered: String): Boolean = {
-    val (lit, back) = anchors(i)
-    if (lowered == null || lit.isEmpty) return compiled(i).matcher(text).find()
-    var q = lowered.indexOf(lit)
-    if (q < 0) return false
-    val m = compiled(i).matcher(text)
-    // transparent bounds: a region start still sees its true left
-    // neighbour; no anchoring bounds: a region start is not a `^`
-    m.useTransparentBounds(true)
-    m.useAnchoringBounds(false)
-    var next = 0 // the first start not tried yet
-    while (q >= 0) {
-      var p = math.max(q - back, next)
-      while (p <= q) {
-        m.region(p, text.length)
-        if (m.lookingAt()) return true
-        p += 1
-      }
-      next = q + 1
-      q = lowered.indexOf(lit, q + 1)
-    }
-    false
-  }
+  /** The fields found, each its extractor's first valid match. */
+  def extractFields(text: String): Seq[FieldSpan] = extractFields(text, Py.lower(text))
 
-  def extractFields(text: String): Seq[FieldSpan] = {
-    val out = ListBuffer.empty[FieldSpan]
-    fields.foreach(f => f.extract(text).foreach(out += _))
-    out.toSeq
+  /** [[extractFields]] given `lowered`, `Py.lower(text)`. */
+  def extractFields(text: String, lowered: String): Seq[FieldSpan] = {
+    val lw = SpanTemplates.guarded(text, lowered)
+    fields.flatMap(_.extract(text, lw))
   }
 }
 
@@ -373,19 +547,16 @@ object SpanTemplates {
 
   /** best template with confidence >= its threshold, strictly improving —
     * TemplateManager.identify_document_type (templates.py:578-595).
-    *
-    * One lowered copy of the text feeds every template's literal anchors
-    * ([[SpanTemplate.matchesDocument]]). The case-fold guard falls back to
-    * each regex's own scan for the three Unicode chars whose lowering
-    * diverges from the regex engine's per-char case folding against ASCII
-    * literals.
     */
-  def identify(text: String): Option[SpanTemplate] = {
-    val lowered = Py.lower(text)
-    val lw =
-      if (lowered.length == text.length &&
-        lowered.indexOf('ı') < 0 && lowered.indexOf('ſ') < 0) lowered
-      else null
+  def identify(text: String): Option[SpanTemplate] = identify(text, Py.lower(text))
+
+  /** [[identify]] given `lowered`, `Py.lower(text)`. One lowered copy of
+    * the text feeds every template's literal anchors
+    * ([[SpanTemplate.matchesDocument]]), and the identified template's
+    * field scans ([[SpanTemplate.extractFields]]).
+    */
+  def identify(text: String, lowered: String): Option[SpanTemplate] = {
+    val lw = guarded(text, lowered)
     var best: Option[SpanTemplate] = None
     var bestConf = 0.0
     all.foreach { t =>
@@ -397,4 +568,15 @@ object SpanTemplates {
     }
     best
   }
+
+  /** `lowered` if literal probes may read it in place of `text`, else
+    * null. The case-fold guard: the three Unicode chars whose lowering
+    * diverges from the regex engine's per-char case folding against ASCII
+    * literals (İ, which lowers to two chars, ı and ſ) send every pattern to
+    * its own scan.
+    */
+  private[kernel] def guarded(text: String, lowered: String): String =
+    if (lowered.length == text.length &&
+      lowered.indexOf('ı') < 0 && lowered.indexOf('ſ') < 0) lowered
+    else null
 }

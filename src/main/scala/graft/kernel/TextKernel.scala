@@ -74,7 +74,8 @@ final class TextKernel {
   // digits a match holds; `literal`, a string every match contains.
   // `starts`: where a match can start — at a digit run's first digit or
   // the '(' before it ([[findAllDigitAnchored]]), at the local part before
-  // an '@' ([[findAllEmails]]), or anywhere.
+  // an '@' ([[findAllEmails]]), or at `literal`, which every match opens
+  // with ([[findAllAtLiteral]]).
   private final case class PatternCfg(
       name: String,
       regex: Pattern,
@@ -84,7 +85,9 @@ final class TextKernel {
       minRun: Int = 0,
       minDigits: Int = 0,
       literal: String = "",
-      starts: TextKernel.Starts = TextKernel.Anywhere)
+      starts: TextKernel.Starts) {
+    val lead: Int = TextKernel.leadDigits(regex.pattern)
+  }
 
   private val patternTable: Seq[PatternCfg] = Seq(
     PatternCfg("cpf",
@@ -128,7 +131,7 @@ final class TextKernel {
       Some(compile("""R\$\s?(\d{1,3}(?:\.\d{3})*)(?:,(\d{2}))?""")),
       Some(tpl("""R$ \1,\2""")),
       None,
-      minDigits = 1, literal = "R$"),
+      minDigits = 1, literal = "R$", starts = TextKernel.AtLiteral),
     PatternCfg("email",
       compile("""\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b"""),
       None, None, Some(Validators.email),
@@ -136,7 +139,7 @@ final class TextKernel {
     PatternCfg("url",
       compile("""https?://[^\s<>"{}|\\^`\[\]]+"""),
       None, None, None,
-      literal = "://"),
+      literal = "http", starts = TextKernel.AtLiteral),
     PatternCfg("processo_judicial",
       compile("""\b\d{7}-?\d{2}\.\d{4}\.\d{1}\.\d{2}\.\d{4}\b"""),
       Some(compile("""(\d{7})-?(\d{2})\.(\d{4})\.(\d{1})\.(\d{2})\.(\d{4})""")),
@@ -639,72 +642,91 @@ final class TextKernel {
     * by the form. Those replaces are replayed in one rebuild per pattern
     * ([[FormatReplay]]), which throws [[TextKernel.Amplification]] before
     * the text grows past [[TextKernel.outputLimit]] of the stage's input.
+    *
+    * The input is walked once, into its [[DigitIndex]]. A formatter only
+    * reinserts its match's digit groups around separators, never adding a
+    * digit or joining two runs, so every later text has the same digits and
+    * only their gaps change: each replay returns the index of the text it
+    * builds. The table's digit conditions are counted on the input's index
+    * (every later run is a piece of an input run), and the digit-anchored
+    * scans take their run starts from the current one. The validators and
+    * formatters are pure, so each is run once per distinct match.
     */
   def detectAndFormatPatterns(text0: String): (String, LinkedHashMap[String, ListBuffer[String]]) = {
     val limit = outputLimit(text0.length)
-    var text = text0
+    var index = DigitIndex(text0)
+    val maxRun = index.maxRun
     val patternsFound = LinkedHashMap.empty[String, ListBuffer[String]]
-    // The table's digit conditions, counted once on the input by code
-    // point (\d and Character.isDigit are both Unicode Nd, astral digits
-    // included). They hold for the rewritten text too: formatters only
-    // reinsert the matched digit groups around separators, never adding
-    // digits or joining two runs, so the digit count is invariant and
-    // every later run is a (possibly split) piece of an input run.
-    var digitRun = 0
-    var maxDigitRun = 0
-    var digitCount = 0
-    var i = 0
-    while (i < text0.length) {
-      val cp = text0.codePointAt(i)
-      if (Character.isDigit(cp)) {
-        digitCount += 1
-        digitRun += 1
-        if (digitRun > maxDigitRun) maxDigitRun = digitRun
-      } else digitRun = 0
-      i += Character.charCount(cp)
-    }
-    // digit-run anchors of the CURRENT text, recomputed lazily after a
-    // formatter rewrite, since positions shift
-    var runStarts: Array[Int] = null
     patternTable.foreach { cfg =>
-      val feasible = maxDigitRun >= cfg.minRun && digitCount >= cfg.minDigits &&
-        text.contains(cfg.literal)
-      val matches =
-        if (!feasible) Nil
-        else cfg.starts match {
-          case DigitRuns =>
-            if (runStarts == null) runStarts = digitRunStarts(text)
-            findAllDigitAnchored(cfg.regex, text, runStarts)
-          case AtSigns => findAllEmails(cfg.regex, text)
-          case Anywhere => findAll(cfg.regex, text)
-        }
+      val feasible = maxRun >= cfg.minRun && index.count >= cfg.minDigits &&
+        index.text.contains(cfg.literal)
+      val matches = if (feasible) matchesOf(cfg, index) else Nil
       if (matches.nonEmpty) {
         val bucket = ListBuffer.empty[String]
         patternsFound(cfg.name) = bucket
         val edits = ListBuffer.empty[(String, String)]
+        val forms = new java.util.HashMap[String, Option[String]]() // None: invalid
         matches.foreach { matchStr =>
-          val valid = cfg.validator.forall(v => v(matchStr))
-          if (valid) {
-            (cfg.formatter, cfg.format) match {
-              case (Some(fmt), Some(fmtPat)) =>
-                val formatted = sub(fmtPat, fmt, matchStr)
-                if (formatted != matchStr) edits += matchStr -> formatted
-                bucket += formatted
-              case _ =>
-                bucket += matchStr
-            }
+          val form = forms.computeIfAbsent(matchStr, formOf(cfg, _))
+          form.foreach { formatted =>
+            if (formatted != matchStr) edits += matchStr -> formatted
+            bucket += formatted
           }
         }
-        if (edits.nonEmpty) {
-          text = new FormatReplay(text, edits.toList, limit).result
-          runStarts = null // positions shifted — re-anchor lazily
-        }
+        if (edits.nonEmpty) index = new FormatReplay(index, edits.toList, limit).result
       }
     }
-    (text, patternsFound)
+    (index.text, patternsFound)
   }
 
-  /** [[Py.findAll]] for the e-mail pattern, tried only where a match can
+  /** `m`'s entry in its pattern's list, or None when the validator rejects it. */
+  private def formOf(cfg: PatternCfg, m: String): Option[String] =
+    if (!cfg.validator.forall(v => v(m))) None
+    else (cfg.formatter, cfg.format) match {
+      case (Some(fmt), Some(fmtPat)) => Some(sub(fmtPat, fmt, m))
+      case _ => Some(m)
+    }
+
+  /** `re.findall` of `cfg`'s regex over `index.text`, tried only where a
+    * match can start.
+    */
+  private def matchesOf(cfg: PatternCfg, index: DigitIndex): List[String] = cfg.starts match {
+    case DigitRuns => findAllDigitAnchored(cfg.regex, index, cfg.lead)
+    case AtSigns => findAllEmails(cfg.regex, index.text)
+    case AtLiteral => findAllAtLiteral(cfg.regex, index.text, cfg.literal)
+  }
+
+  /** The pattern stage's own scan of `p` when `p` is a table regex, as a
+    * function of the text: each pattern run the way the stage runs it, for
+    * KernelScalingSpec.
+    */
+  private[kernel] def tableScan(p: Pattern): Option[String => List[String]] =
+    patternTable.find(_.regex eq p).map(cfg => (text: String) => matchesOf(cfg, DigitIndex(text)))
+
+  /** `re.findall` for a pattern whose every match opens with `lit`, tried
+    * only at the occurrences of `lit`: the engine's next match is the one at
+    * the first occurrence, at or after the previous match's end, where
+    * `lookingAt` succeeds. Transparent bounds let a lookaround read the true
+    * neighbours. Equality with the generic engine is pinned by
+    * KernelPropertySpec.
+    */
+  private[kernel] def findAllAtLiteral(p: Pattern, text: String, lit: String): List[String] = {
+    val out = ListBuffer.empty[String]
+    val m = p.matcher(text)
+    m.useTransparentBounds(true)
+    m.useAnchoringBounds(false)
+    var at = text.indexOf(lit)
+    while (at >= 0) {
+      m.region(at, text.length)
+      if (m.lookingAt()) {
+        out += findallItem(m)
+        at = text.indexOf(lit, math.max(m.end(), at + 1))
+      } else at = text.indexOf(lit, at + 1)
+    }
+    out.toList
+  }
+
+  /** `re.findall` for the e-mail pattern, tried only where a match can
     * start. Its local part `[A-Za-z0-9._%+-]+` runs to the first '@' after
     * the start, since '@' is not in that class, and the engine backtracks
     * that run only to retry the '@', which fails. So whether a start
@@ -741,7 +763,7 @@ final class TextKernel {
     out.toList
   }
 
-  /** [[Py.findAll]] for a pattern whose every match starts at a digit-run
+  /** `re.findall` for a pattern whose every match starts at a digit-run
     * start or at the '(' before one — true for all seven digit-opening
     * table patterns (`\b\d...` / phone's `\b\(?\d...`):
     *
@@ -762,35 +784,39 @@ final class TextKernel {
     * region-edge `\b` read the true neighbors; anchoring bounds are off so
     * a region start is not treated as `^` (the table patterns use neither
     * `^` nor `$`, but correctness must not depend on that).
-    * Equality with the generic engine is pinned by KernelPropertySpec.
+    *
+    * A pattern that opens `\b\(?\d{n}` ([[TextKernel.leadDigits]] `lead`
+    * = n > 0) needs n digits in the run it starts at, and its `\b` needs a
+    * non-word char before a digit start and a word char before a '('
+    * start: the other starts are skipped untried. Equality with the
+    * generic engine is pinned by KernelPropertySpec.
     */
-  private[kernel] def findAllDigitAnchored(
-      p: Pattern, text: String, runStarts: Array[Int]): List[String] = {
+  private[kernel] def findAllDigitAnchored(p: Pattern, index: DigitIndex, lead: Int): List[String] = {
     val out = ListBuffer.empty[String]
+    val text = index.text
+    val runStarts = index.runStarts
+    val runLengths = index.runLengths
     val m = p.matcher(text)
     m.useTransparentBounds(true)
     m.useAnchoringBounds(false)
     val n = text.length
-    // re.findall group semantics, exactly as Py.findAll emits them (the
+    def wordBefore(i: Int) = i > 0 && isUWordCp(text.codePointBefore(i))
+    // re.findall group semantics ([[Py.findallItem]]: the
     // time pattern's optional (:\d{2})? group makes findall return the
     // CAPTURE, not the whole match — a reference quirk both drivers must
     // share)
-    val g = m.groupCount()
-    def emit(): Unit =
-      if (g == 0) out += m.group()
-      else if (g == 1) out += Option(m.group(1)).getOrElse("")
-      else out += (1 to g).map(i => Option(m.group(i)).getOrElse("")).mkString
+    def emit(): Unit = out += findallItem(m)
     var lastEnd = 0
     var r = 0
     while (r < runStarts.length) {
       val rs = runStarts(r)
-      if (rs >= lastEnd) {
+      if (rs >= lastEnd && runLengths(r) >= lead) {
         var matched = false
-        if (rs - 1 >= lastEnd && text.charAt(rs - 1) == '(') {
+        if (rs - 1 >= lastEnd && text.charAt(rs - 1) == '(' && (lead == 0 || wordBefore(rs - 1))) {
           m.region(rs - 1, n)
           if (m.lookingAt()) { emit(); lastEnd = m.end(); matched = true }
         }
-        if (!matched) {
+        if (!matched && (lead == 0 || !wordBefore(rs))) {
           m.region(rs, n)
           if (m.lookingAt()) { emit(); lastEnd = m.end() }
         }
@@ -798,24 +824,6 @@ final class TextKernel {
       r += 1
     }
     out.toList
-  }
-
-  /** UTF-16 offset of each maximal digit run's first digit, walking by
-    * code point so astral Nd digits (`\d` matches code points) start and
-    * continue runs.
-    */
-  private[kernel] def digitRunStarts(text: String): Array[Int] = {
-    val rs = Array.newBuilder[Int]
-    var prevDigit = false
-    var i = 0
-    while (i < text.length) {
-      val cp = text.codePointAt(i)
-      val d = Character.isDigit(cp)
-      if (d && !prevDigit) rs += i
-      prevDigit = d
-      i += Character.charCount(cp)
-    }
-    rs.result()
   }
 
   /** _correct_abbreviations (text_processor.py:438-459): for each table
@@ -1047,11 +1055,19 @@ object TextKernel {
   final class Amplification(limit: Long)
     extends RuntimeException(s"amplification: the text grew past $limit chars")
 
+  /** `n` when every match of the regex `src` opens with `\b`, an optional
+    * '(' and `n` ≥ 1 digits (`\b\(?\d{n…}`, `\b\d`), else 0.
+    */
+  private[kernel] def leadDigits(src: String): Int =
+    LeadDigits.findPrefixMatchOf(src).fold(0)(m => Option(m.group(1)).fold(1)(_.toInt))
+
+  private val LeadDigits = """\\b(?:\\\(\?)?\\d(?:\{(\d+)|(?![?*{]))""".r
+
   /** Where a table pattern's matches can start. */
   private[kernel] sealed trait Starts
   private[kernel] case object DigitRuns extends Starts
   private[kernel] case object AtSigns extends Starts
-  private[kernel] case object Anywhere extends Starts
+  private[kernel] case object AtLiteral extends Starts
 
   /** The base of the kernel's polynomial window hashes (mod 2^64). */
   private[kernel] val HashBase = 1000003L
@@ -1196,35 +1212,136 @@ private final class WordRuns(s: String) {
 
 /** The output of a pass that keeps some of `text`'s characters in order,
   * or puts a replacement in place of some, each piece optionally preceded
-  * by one " ". No copy is made until the output departs from the input,
-  * so a pass that changes nothing returns `text` itself.
+  * by one " ". Kept characters that continue the input are held as one
+  * pending run and copied with one append when the output departs from the
+  * input; no copy is made until then, so a pass that changes nothing
+  * returns `text` itself.
   */
 private final class Rewrite(text: String) {
   private var sb: java.lang.StringBuilder = null
-  private var kept = 0 // while sb == null, the output so far is text[0, kept)
+  // the pending run `text[from, to)` follows sb's content (while sb == null
+  // it is the whole output, and from == 0); after a put there is none:
+  // from = to = -2, which no piece `i` continues (`to == i`, `to == i - 1`)
+  private var from = 0
+  private var to = 0
 
   /** Appends `text[i, next)`, preceded by one " " if `space`. */
   def keep(i: Int, next: Int, space: Boolean): Unit =
-    if (sb == null && (if (space) kept == i - 1 && text.charAt(kept) == ' ' else kept == i)) kept = next
-    else copy(space).append(text, i, next)
+    if (if (space) to == i - 1 && text.charAt(to) == ' ' else to == i) to = next
+    else {
+      flush(space)
+      from = i
+      to = next
+    }
 
   /** Appends `s`, which replaces input characters, preceded by one " " if
     * `space`.
     */
-  def put(s: String, space: Boolean): Unit = copy(space).append(s)
+  def put(s: String, space: Boolean): Unit = {
+    flush(space).append(s)
+    from = -2
+    to = -2
+  }
 
-  private def copy(space: Boolean): java.lang.StringBuilder = {
-    if (sb == null) sb = new java.lang.StringBuilder(text.length + 16).append(text, 0, kept)
+  /** Appends the pending run, then " " if `space`; returns sb. */
+  private def flush(space: Boolean): java.lang.StringBuilder = {
+    if (sb == null) sb = new java.lang.StringBuilder(text.length + 16)
+    if (from < to) sb.append(text, from, to)
     if (space) sb.append(' ')
     sb
   }
 
   /** `substring(0, length)` is `text` itself. */
-  def result: String = if (sb != null) sb.toString else text.substring(0, kept)
+  def result: String =
+    if (sb == null) text.substring(0, to)
+    else flush(space = false).toString
+}
+
+/** `text`'s digits (code points: `\d` and `Character.isDigit` are both
+  * Unicode Nd, astral digits included), digit `j` at `at(j)`, and the
+  * non-digit gap before each one and after the last: gap `j` is
+  * `text[gapFrom(j), gapTo(j))`.
+  */
+private[kernel] final class DigitIndex(val text: String, val digits: Array[Int], val at: Array[Int]) {
+
+  def count: Int = digits.length
+
+  def gapFrom(j: Int): Int = if (j == 0) 0 else at(j - 1) + Character.charCount(digits(j - 1))
+
+  def gapTo(j: Int): Int = if (j == count) text.length else at(j)
+
+  def gap(j: Int): String = text.substring(gapFrom(j), gapTo(j))
+
+  /** Digit `j` continues a run when its gap is empty. */
+  private def continues(j: Int): Boolean = j > 0 && gapFrom(j) == at(j)
+
+  /** The length of the longest run of consecutive digits. */
+  def maxRun: Int = {
+    var best = 0
+    var run = 0
+    var j = 0
+    while (j < count) {
+      run = if (continues(j)) run + 1 else 1
+      if (run > best) best = run
+      j += 1
+    }
+    best
+  }
+
+  /** UTF-16 offset of each maximal digit run's first digit, and the
+    * run's digit count.
+    */
+  lazy val (runStarts, runLengths): (Array[Int], Array[Int]) = {
+    var runs = 0
+    var j = 0
+    while (j < count) { if (!continues(j)) runs += 1; j += 1 }
+    val rs = new Array[Int](runs)
+    val ls = new Array[Int](runs)
+    var r = -1
+    j = 0
+    while (j < count) {
+      if (!continues(j)) { r += 1; rs(r) = at(j) }
+      ls(r) += 1
+      j += 1
+    }
+    (rs, ls)
+  }
+}
+
+private[kernel] object DigitIndex {
+  /** One walk of `s` by code point. */
+  def apply(s: String): DigitIndex = {
+    var digits = new Array[Int](16)
+    var at = new Array[Int](16)
+    var n = 0
+    def add(cp: Int, i: Int): Unit = {
+      if (n == digits.length) {
+        digits = java.util.Arrays.copyOf(digits, 2 * n)
+        at = java.util.Arrays.copyOf(at, 2 * n)
+      }
+      digits(n) = cp
+      at(n) = i
+      n += 1
+    }
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c < 0x80) { // below U+0080 only '0'-'9' are digits
+        if (c >= '0' && c <= '9') add(c, i)
+        i += 1
+      } else {
+        val cp = s.codePointAt(i)
+        if (Character.isDigit(cp)) add(cp, i)
+        i += Character.charCount(cp)
+      }
+    }
+    new DigitIndex(s, java.util.Arrays.copyOf(digits, n), java.util.Arrays.copyOf(at, n))
+  }
 }
 
 /** The text after `text = text.replace(m, f)` for each edit `(m, f)` in
-  * order — the pattern stage's replaces — built once.
+  * order — the pattern stage's replaces — built once, as the
+  * [[DigitIndex]] of the text built.
   *
   * A formatter keeps its match's digits in order and only changes the
   * non-digits around them, and every match holds a digit, so the text's
@@ -1239,53 +1356,31 @@ private final class Rewrite(text: String) {
   * places over the gaps it touched. So a new occurrence — one an earlier
   * replace made, e.g. phone's `"11) 99999-9999"` → `"(11) 99999-9999"`,
   * which holds its match again — is found without a scan of the text, and
-  * the replace of a match with no occurrence costs nothing.
+  * the replace of a match with no occurrence costs nothing. Only the gaps
+  * a place covers can change; they alone get a [[Gap]], and the rest are
+  * copied from the input in runs when the text is built.
   *
   * Each replace takes its occurrences left to right without overlap, as
   * `String.replace` does. The text's length is tracked through the edits;
   * past `limit` the replay throws [[TextKernel.Amplification]] before the
   * text is built.
   */
-private final class FormatReplay(text: String, edits: List[(String, String)], limit: Long) {
-
-  /** `s`'s digits (code points), and the non-digit gap before each one
-    * and after the last: gap `j` is `s[gapFrom(j), gapTo(j))`.
-    */
-  private final class Shape(s: String) {
-    val (digits, gapFrom, gapTo): (Array[Int], Array[Int], Array[Int]) = {
-      val ds = Array.newBuilder[Int]
-      val froms = Array.newBuilder[Int]
-      val tos = Array.newBuilder[Int]
-      var from = 0
-      var i = 0
-      while (i < s.length) {
-        val cp = s.codePointAt(i)
-        val next = i + Character.charCount(cp)
-        if (Character.isDigit(cp)) { froms += from; tos += i; ds += cp; from = next }
-        i = next
-      }
-      froms += from
-      tos += s.length
-      (ds.result(), froms.result(), tos.result())
-    }
-    def gaps: Array[String] = Array.tabulate(digits.length + 1)(j => s.substring(gapFrom(j), gapTo(j)))
-  }
+private final class FormatReplay(input: DigitIndex, edits: List[(String, String)], limit: Long) {
 
   private final class Edit(m: String, f: String) {
-    private val (mShape, fShape) = (new Shape(m), new Shape(f))
-    require(mShape.digits.nonEmpty && java.util.Arrays.equals(mShape.digits, fShape.digits),
+    private val (mIndex, fIndex) = (DigitIndex(m), DigitIndex(f))
+    require(mIndex.digits.nonEmpty && java.util.Arrays.equals(mIndex.digits, fIndex.digits),
       s"a formatter changed its match's digits: $m -> $f")
-    val digits: Array[Int] = mShape.digits
-    val from: Array[String] = mShape.gaps // m's gaps
-    val to: Array[String] = fShape.gaps // f's gaps
+    val digits: Array[Int] = mIndex.digits
     val span: Int = digits.length
+    val from: Array[String] = Array.tabulate(span + 1)(mIndex.gap) // m's gaps
+    val to: Array[String] = Array.tabulate(span + 1)(fIndex.gap) // f's gaps
     val grow: Int = f.length - m.length
   }
 
-  private val input = new Shape(text)
+  private val text = input.text
   private val digits = input.digits
   private val n = digits.length
-  private val gaps = Array.tabulate(n + 1)(j => new Gap(text, input.gapFrom(j), input.gapTo(j)))
 
   // the distinct edits, and the list as their ids
   private val (distinct, order): (Array[Edit], Array[Int]) = {
@@ -1314,19 +1409,34 @@ private final class FormatReplay(text: String, edits: List[(String, String)], li
       val key = window(distinct(id).digits) * 31 + distinct(id).span
       byHash(key) = id :: byHash.getOrElse(key, Nil)
     }
+    // most digits open no edit's window: those whose pair with the next
+    // digit opens none, both ASCII, are passed over unhashed
+    def pair(a: Int, b: Int): Int = if (a <= '9' && b <= '9') (a - '0') * 10 + (b - '0') else -1
+    val pairs = new Array[Boolean](100)
+    var unpaired = false // an edit of one digit, or one opening with a non-ASCII digit
+    distinct.foreach { e =>
+      val p = if (e.span > 1) pair(e.digits(0), e.digits(1)) else -1
+      if (p >= 0) pairs(p) = true else unpaired = true
+    }
     val es = Array.newBuilder[Int]
     val ats = Array.newBuilder[Int]
     var d = 0
     while (d < n) {
-      spans.foreach { len =>
-        if (d + len <= n) {
-          val ids = byHash.getOrNull((prefix(d + len) - prefix(d) * pows(len)) * 31 + len)
-          if (ids != null) ids.foreach { id =>
-            val ds = distinct(id).digits
-            var k = 0
-            while (k < len && digits(d + k) == ds(k)) k += 1
-            if (k == len) { es += id; ats += d }
+      val p = if (d + 1 < n) pair(digits(d), digits(d + 1)) else -1
+      if (unpaired || p < 0 || pairs(p)) {
+        var s = 0
+        while (s < spans.length) {
+          val len = spans(s)
+          if (d + len <= n) {
+            val ids = byHash.getOrNull((prefix(d + len) - prefix(d) * pows(len)) * 31 + len)
+            if (ids != null) ids.foreach { id =>
+              val ds = distinct(id).digits
+              var k = 0
+              while (k < len && digits(d + k) == ds(k)) k += 1
+              if (k == len) { es += id; ats += d }
+            }
           }
+          s += 1
         }
       }
       d += 1
@@ -1339,6 +1449,20 @@ private final class FormatReplay(text: String, edits: List[(String, String)], li
   private val holds = new Array[Boolean](places)
   private val holding = new Array[Int](distinct.length) // holding places per edit
   private var length: Long = text.length
+
+  // gaps d .. d + span of each place `c`, the only ones an edit touches;
+  // null for every other gap
+  private val gaps: Array[Gap] = {
+    val g = new Array[Gap](n + 1)
+    var c = 0
+    while (c < places) {
+      val d = placeAt(c)
+      var j = d + distinct(placeEdit(c)).span
+      while (j >= d && g(j) == null) { g(j) = new Gap(text, input.gapFrom(j), input.gapTo(j)); j -= 1 }
+      c += 1
+    }
+    g
+  }
 
   private def occursAt(c: Int): Boolean = {
     val e = distinct(placeEdit(c))
@@ -1374,9 +1498,10 @@ private final class FormatReplay(text: String, edits: List[(String, String)], li
     while (p < places && placeAt(p) <= d + e.span) { recheck(p); p += 1 }
   }
 
-  val result: String = {
+  val result: DigitIndex = {
     var c = 0
     while (c < places) { recheck(c); c += 1 }
+    var replaced = false
     order.foreach { id =>
       if (holding(id) > 0) {
         // this replace's occurrences, left to right without overlap
@@ -1396,16 +1521,33 @@ private final class FormatReplay(text: String, edits: List[(String, String)], li
           }
         }
         chosen.result().foreach(replaceAt)
+        replaced = true
       }
     }
+    if (!replaced) input else build()
+  }
+
+  /** The edited text and its index. The input between two edited gaps —
+    * digits and untouched gaps — is copied with one append, and a digit
+    * moves by what was added before it.
+    */
+  private def build(): DigitIndex = {
     val sb = new java.lang.StringBuilder(length.toInt)
+    val at = new Array[Int](n)
+    var pending = 0 // input text[pending, …) is still to be copied
     var j = 0
     while (j <= n) {
-      gaps(j).appendTo(sb)
-      if (j < n) sb.appendCodePoint(digits(j))
+      val g = gaps(j)
+      if (g != null) {
+        sb.append(text, pending, input.gapFrom(j))
+        g.appendTo(sb)
+        pending = input.gapTo(j)
+      }
+      if (j < n) at(j) = input.at(j) + sb.length - pending
       j += 1
     }
-    sb.toString
+    sb.append(text, pending, text.length)
+    new DigitIndex(sb.toString, digits, at)
   }
 }
 

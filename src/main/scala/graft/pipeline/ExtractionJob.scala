@@ -73,14 +73,15 @@ object ExtractionJob {
     try {
       kernel.processSafe(t.text) match {
         case Some(res) =>
-          val tpl = SpanTemplates.identify(res.text)
-          val spans = tpl.map(_.extractFields(res.text)).getOrElse(Seq.empty)
+          val lowered = Py.lower(res.text)
+          val tpl = SpanTemplates.identify(res.text, lowered)
+          val spans = tpl.map(_.extractFields(res.text, lowered)).getOrElse(Seq.empty)
             .map(f => Span(f.name, f.value, f.confidence, f.start, f.end, f.raw))
           ExtractedTurn(
             conv_id = t.conv_id, turn_idx = t.turn_idx, role = t.role,
             tool = t.tool,
             text_clean = res.text,
-            doc_type = DocType.classify(res.text),
+            doc_type = DocType.classifyLowered(lowered),
             template = tpl.map(_.name),
             spans = spans,
             patterns = res.metrics.patternsFound.map { case (k, v) => k -> v },

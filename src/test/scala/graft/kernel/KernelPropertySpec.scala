@@ -41,6 +41,16 @@ class KernelPropertySpec extends AnyFunSuite {
 
   private val corpus = samples(200)
 
+  /** `re.findall` on the generic engine: every `find()`, as
+    * [[Py.findallItem]]. The oracle of the kernel's anchored scans.
+    */
+  private def findAll(p: java.util.regex.Pattern, s: String): List[String] = {
+    val m = p.matcher(s)
+    val out = ListBuffer.empty[String]
+    while (m.find()) out += Py.findallItem(m)
+    out.toList
+  }
+
   test("kernel never throws; output metrics are consistent") {
     val kernel = new TextKernel
     corpus.foreach { text =>
@@ -200,7 +210,7 @@ class KernelPropertySpec extends AnyFunSuite {
           else if (Character.isLetter(w) && Character.isDigit(c))
             ("""\b\d*""" + Pattern.quote(wrong) + """\d*\b""", (m: String) => !Py.isAlphaStr(m))
           else (null, null)
-        if (probe != null) Py.findAll(Py.compile(probe), text).foreach { m =>
+        if (probe != null) findAll(Py.compile(probe), text).foreach { m =>
           if (keep(m)) {
             text = text.replace(m, m.replace(wrong, correct))
             corrections += 1
@@ -280,11 +290,20 @@ class KernelPropertySpec extends AnyFunSuite {
       "12:34", "1:23", ":123:", "x:12:34:x",
       z * 5 + "-" + z * 3, "12345-678 " + z * 5 + "-" + z * 3,
       "(" + z * 2 + ") " + z * 5 + "-" + z * 4, "1" + z + "2" + z + "3" + z)
-    (adversarial ++ corpus).foreach { t =>
-      val rs = kernel.digitRunStarts(t)
+    // each pattern's lead digits, and none for a lead that may be empty
+    assert(table.map(p => TextKernel.leadDigits(p.pattern)) == Seq(3, 2, 5, 2, 1, 1, 7))
+    assert(Seq("""\b\d*1""", """\b\d?1""", """\b\d{0,2}1""", """\d{3}""", """\b\w\d""", """\b\d\d""")
+      .map(TextKernel.leadDigits) == Seq(0, 0, 0, 0, 0, 1))
+    val random = randomTexts(
+      Vector("1", "12", "123", "12345", "1234567", "(", ")", " ", "-", ".", "/", ":", "a", "_", "é",
+        "\u0301", "٣", z), 20000, 12, 31)
+    (adversarial ++ random ++ corpus).foreach { t =>
+      val index = DigitIndex(t)
       table.foreach { p =>
-        assert(kernel.findAllDigitAnchored(p, t, rs) == Py.findAll(p, t),
+        assert(kernel.findAllDigitAnchored(p, index, TextKernel.leadDigits(p.pattern)) == findAll(p, t),
           s"anchored findAll diverged for ${p.pattern} on: ${t.take(80)}")
+        assert(kernel.findAllDigitAnchored(p, index, 0) == findAll(p, t),
+          s"unfiltered anchored findAll diverged for ${p.pattern} on: ${t.take(80)}")
       }
     }
     // the stage's own feasibility counts see astral digits too: the cep
@@ -292,7 +311,7 @@ class KernelPropertySpec extends AnyFunSuite {
     val cep = table(2)
     Seq(z * 5 + "-" + z * 3, "12345-678 " + z * 5 + "-" + z * 3).foreach { t =>
       val found = kernel.detectAndFormatPatterns(t)._2.get("cep").map(_.toList)
-      assert(found.contains(Py.findAll(cep, t)), s"cep diverged on: $t")
+      assert(found.contains(findAll(cep, t)), s"cep diverged on: $t")
     }
   }
 
@@ -324,7 +343,7 @@ class KernelPropertySpec extends AnyFunSuite {
     var text = t0
     val found = ListBuffer.empty[(String, Seq[String])]
     table.foreach { case (name, regex, fmt, validator) =>
-      val matches = Py.findAll(Py.compile(regex), text)
+      val matches = findAll(Py.compile(regex), text)
       if (matches.nonEmpty) {
         val bucket = ListBuffer.empty[String]
         matches.foreach { m =>
@@ -382,6 +401,49 @@ class KernelPropertySpec extends AnyFunSuite {
       "tel ((((11) 99999-9999 " * 3)
   }
 
+  test("pattern replay returns the digit index of the text it builds") {
+    // each formatted table pattern's replaces on the pattern stage's test
+    // texts, replayed from the input's index: the text is the verbatim
+    // replace loop's, and the index is a fresh walk's
+    val formatted = Seq(
+      """\b\d{3}\.?\d{3}\.?\d{3}-?\d{2}\b""" -> ("""(\d{3})\.?(\d{3})\.?(\d{3})-?(\d{2})""", """\1.\2.\3-\4"""),
+      """\b\d{2}\.?\d{3}\.?\d{3}/?\d{4}-?\d{2}\b""" ->
+        ("""(\d{2})\.?(\d{3})\.?(\d{3})/(\d{4})-?(\d{2})""", """\1.\2.\3/\4-\5"""),
+      """\b\d{5}-?\d{3}\b""" -> ("""(\d{5})-?(\d{3})""", """\1-\2"""),
+      """\b\(?\d{2}\)?\s?\d{4,5}-?\d{4}\b""" -> ("""\(?(\d{2})\)?\s?(\d{4,5})-?(\d{4})""", """(\1) \2-\3"""),
+      """\b\d{1,2}[\/\-\.]\d{1,2}[\/\-\.]\d{2,4}\b""" ->
+        ("""(\d{1,2})[\/\-\.](\d{1,2})[\/\-\.](\d{2,4})""", """\1/\2/\3"""),
+      """R\$\s?\d{1,3}(?:\.\d{3})*(?:,\d{2})?""" -> ("""R\$\s?(\d{1,3}(?:\.\d{3})*)(?:,(\d{2}))?""", """R$ \1,\2"""))
+      .map { case (p, (f, t)) => (Py.compile(p), Py.compile(f), t) }
+    val z = new String(Character.toChars(0x1D7D8))
+    val adversarial = Seq(
+      "cep 12345678 cep 12345678 12345-678", "tel (11) 99999-9999 " * 5,
+      "11) 99999-9999 11)99999-9999 (11)99999-9999", "R$1.000 R$ 1.000 R$1.000,00 R$ 5 R$5,00 R$ 1.000",
+      "01-02-2023 1.2.2023 01/02/23", "cep 11111111 e 1111111111111111 e 111111111",
+      "12345678" + z + "12345678", z * 5 + "-" + z * 3 + " " + z * 8, "1" * 8, "12345678")
+    val random = randomTexts(
+      Vector("1", "12", "123", "1234", "12345", "99999", "11", "2023", "01", ".", "-", "/", "(", ")", " ",
+        "R$", ",", "a", "\u00A0", z), 20000, 12, 23)
+    val generated = (0 until 300).map(t => graft.pipeline.TranscriptGen.turnText(23L, t))
+    def same(a: DigitIndex, b: DigitIndex): Boolean =
+      a.text == b.text && a.digits.sameElements(b.digits) && a.at.sameElements(b.at) &&
+        a.runStarts.sameElements(b.runStarts) && a.maxRun == b.maxRun
+    var replayed = 0
+    (adversarial ++ random ++ corpus ++ generated).foreach { t =>
+      formatted.foreach { case (p, fp, tpl) =>
+        val edits = findAll(p, t).map(m => m -> Py.sub(fp, tpl, m)).filter { case (m, f) => m != f }
+        if (edits.nonEmpty) {
+          val got = new FormatReplay(DigitIndex(t), edits, Long.MaxValue).result
+          val want = edits.foldLeft(t) { case (text, (m, f)) => text.replace(m, f) }
+          assert(got.text == want, s"replay of ${p.pattern} diverged on: ${t.take(80)}")
+          assert(same(got, DigitIndex(got.text)), s"replay index of ${p.pattern} diverged on: ${t.take(80)}")
+          replayed += 1
+        }
+      }
+    }
+    assert(replayed > 5000)
+  }
+
   test("e-mail probe matches the generic engine") {
     val kernel = new TextKernel
     val email = Py.compile("""\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b""")
@@ -395,8 +457,23 @@ class KernelPropertySpec extends AnyFunSuite {
     val random = randomTexts(
       Vector("a", "Z", "9", ".", "_", "%", "+", "-", "@", " ", "ç", "cd", "|", "\u0301"), 20000, 14, 7)
     (adversarial ++ random ++ corpus).foreach { t =>
-      assert(kernel.findAllEmails(email, t) == Py.findAll(email, t), s"e-mail probe diverged on: $t")
+      assert(kernel.findAllEmails(email, t) == findAll(email, t), s"e-mail probe diverged on: $t")
     }
+  }
+
+  /** `(start, end, group 1 or the match)` of each match a cursor finds. */
+  private def matchList(c: Cursor): List[(Int, Int, String)] = {
+    val out = ListBuffer.empty[(Int, Int, String)]
+    while (c.find()) out += ((c.m.start(), c.m.end(), c.m.group(math.min(1, c.m.groupCount))))
+    out.toList
+  }
+
+  /** [[matchList]] of the generic `find()` loop. */
+  private def findList(p: java.util.regex.Pattern, t: String): List[(Int, Int, String)] = {
+    val m = p.matcher(t)
+    val out = ListBuffer.empty[(Int, Int, String)]
+    while (m.find()) out += ((m.start(), m.end(), m.group(math.min(1, m.groupCount))))
+    out.toList
   }
 
   test("Business Card e-mail field probe matches the generic find loop") {
@@ -414,19 +491,8 @@ class KernelPropertySpec extends AnyFunSuite {
       val isLocal = s.length == 1 && FieldExtractor.localChar(s.charAt(0))
       assert(isLocal == cls.matcher(s).matches(), f"class test diverged at U+$cp%04X")
     }
-    def generic(t: String) = {
-      val m = email.matcher(t)
-      val out = ListBuffer.empty[(Int, Int, String)]
-      while (m.find()) out += ((m.start(), m.end(), m.group(1)))
-      out.toList
-    }
-    def probed(t: String) = {
-      val m = email.matcher(t)
-      val probe = new FieldExtractor.AtSignProbe(m, t)
-      val out = ListBuffer.empty[(Int, Int, String)]
-      while (probe.find()) out += ((m.start(), m.end(), m.group(1)))
-      out.toList
-    }
+    def generic(t: String) = findList(email, t)
+    def probed(t: String) = matchList(new AtSignProbe(email, t))
     // ſ, K (U+212A), ı and İ fold to ASCII letters, so they are local
     // chars under IFLAGS; Å and é are not
     val adversarial = Seq(
@@ -441,6 +507,134 @@ class KernelPropertySpec extends AnyFunSuite {
     (adversarial ++ random ++ corpus).foreach { t =>
       assert(probed(t) == generic(t), s"e-mail field probe diverged on: $t")
     }
+  }
+
+  test("currency and URL literal-start scans match the generic engine") {
+    val kernel = new TextKernel
+    val currency = Py.compile("""R\$\s?\d{1,3}(?:\.\d{3})*(?:,\d{2})?""")
+    val url = Py.compile("""https?://[^\s<>"{}|\\^`\[\]]+""")
+    val z = new String(Character.toChars(0x1D7D8)) // an astral Nd digit
+    val adversarial = Seq(
+      "", "R$", "R$ ", "R$1", "R$ 1", "R$1.000", "R$ 1.000,00", "R$1.000.000,00R$1.000",
+      "R$R$1", "R$R$ 1", "R$ R$ 1,00", "RR$1", "R$$1", "r$1", "R$\u00A01", "R$\t1",
+      "R$1,0", "R$1.00", "R$12.345.6", "R$" + z, "R$ ٣٤", "R$1" * 50, "R$ " * 50 + "1",
+      "http", "http:", "http://", "http://a", "https://a.b/c?d=e", "httphttp://x",
+      "hhttp://x", "http://x http://y", "http://x\"y", "http://x<y>z", "http://a|b",
+      "http://é", "HTTP://x", "http://" + z, "https://http://x", "http://x" * 20,
+      "ver http://x.com/e\u0301 e http://x.com/e\u0301z fim")
+    val random = randomTexts(
+      Vector("R$", "R", "$", " ", "1", "12", "123", ".", ",", "00", "000", "http", "s", "://",
+        "x", "/", "<", "\"", "\u00A0", "٣", z), 20000, 12, 13)
+    val generated = (0 until 300).map(t => graft.pipeline.TranscriptGen.turnText(13L, t))
+    (adversarial ++ random ++ corpus ++ generated).foreach { t =>
+      assert(kernel.findAllAtLiteral(currency, t, "R$") == findAll(currency, t), s"currency scan diverged on: $t")
+      assert(kernel.findAllAtLiteral(url, t, "http") == findAll(url, t), s"URL scan diverged on: $t")
+    }
+    // the table runs the same patterns the same way
+    val (_, found) = kernel.detectAndFormatPatterns("pago R$1.000 em http://x.y/z")
+    assert(found("currency").toList == List("R$ 1.000,") && found("url").toList == List("http://x.y/z"))
+  }
+
+  // texts where the fold anomalies meet the field literals: İ lowers to
+  // two chars, ı and ſ stay non-ASCII but fold to i and s, K (U+212A)
+  // lowers to k
+  private val foldTexts = Seq(
+    "CNPJ 11.222.333/0001-81", "cnpj: 11222333000181", "Cnpj:11.222.333/0001-81 cnpj 1",
+    "cnpj\u212A 11.222.333/0001-81", "\u212Acnpj 11222333000181", "total: R$ 12,00",
+    "TOTAL R$ 1.500,00 total 3", "valor total: 99", "VALOR\tTOTAL:R$5", "data de emissão: 01/02/2023",
+    "DATA DE EMISSAO 1-2-23", "emitida em 01/02/2023", "número: 123", "NÚMERO 42", "nf: 77",
+    "NF:1 nf 2", "nota fiscal: 5", "pago: R$ 3", "PAGO 4,50", "ıtotal 1", "nota fıscal 3",
+    "ſnf 1", "nf ſ 1", "İ cnpj 11.222.333/0001-81", "total İ 12", "n\u0307umero 1", "")
+
+  test("field literal probes match the generic find loop") {
+    // every ASCII letter's case-insensitive matches lower to it, but for
+    // the three chars the guard sends to the generic scan
+    ('a' to 'z').foreach { l =>
+      val ci = java.util.regex.Pattern.compile(java.util.regex.Pattern.quote(l.toString), Py.IFLAGS)
+      (0 to 0xFFFF).foreach { c =>
+        val s = c.toChar.toString
+        if (ci.matcher(s).matches())
+          assert(Py.lower(s) == l.toString || "\u0130\u0131\u017F".contains(c.toChar),
+            f"U+$c%04X matches '$l' but lowers to ${Py.lower(s)}")
+      }
+    }
+    val anchored = SpanTemplates.all.flatMap(_.fields).flatMap(_.scans).filter(_.anchor._1.nonEmpty)
+    assert(anchored.map(_.anchor._1).distinct.sorted ==
+      Seq("cnpj", "data", "emitida", "n", "nf", "nota", "pago", "total", "valor"))
+    val random = randomTexts(
+      Vector("cnpj", "CNPJ", "total", "TOTAL", "nf", "NF", "n", "número", "numero", "valor", "data de emissão",
+        "emitida em", "nota fiscal", "pago", " ", ":", "R$", "$", "1", "11.222.333/0001-81", "01/02/2023",
+        "12,00", "\n", "\u212A", "\u0130", "\u0131", "\u017F", "ú", "\uD835\uDFD8"), 20000, 10, 17)
+    val kernel = new TextKernel
+    val generated = (0 until 300).map(t => kernel.process(graft.pipeline.TranscriptGen.turnText(17L, t)).text)
+    var probed = 0
+    (foldTexts ++ random ++ corpus ++ generated).foreach { t =>
+      val lw = SpanTemplates.guarded(t, Py.lower(t))
+      if (lw == null) assert(Seq('\u0130', '\u0131', '\u017F').exists(c => t.indexOf(c) >= 0), t)
+      else probed += 1
+      anchored.foreach { scan =>
+        assert(matchList(scan.cursor(t, lw)) == findList(scan.pattern, t),
+          s"literal probe of ${scan.pattern.pattern} diverged on: ${t.take(80)}")
+      }
+    }
+    assert(probed > 10000)
+    // literals that recur inside a match, and a literal later in one
+    // branch than in the other
+    val synthetic = Seq("""ab\w*""", """fone\w*|telefone""", """a\.b[\w.]*""")
+      .map(p => new Scan(java.util.regex.Pattern.compile(p, Py.IFLAGS | java.util.regex.Pattern.MULTILINE)))
+    assert(synthetic.map(_.anchor) == Seq(("ab", 0), ("fone", 4), ("a.b", 0)))
+    randomTexts(Vector("ab", "a", "b", "fone", "tele", ".", " ", "\n", "x", "A", "B"), 20000, 10, 29).foreach { t =>
+      val lw = SpanTemplates.guarded(t, Py.lower(t))
+      synthetic.foreach { scan =>
+        assert(matchList(scan.cursor(t, lw)) == findList(scan.pattern, t),
+          s"literal probe of ${scan.pattern.pattern} diverged on: $t")
+      }
+    }
+  }
+
+  test("Business Card company probe matches the generic find loop") {
+    val company = SpanTemplates.businessCard.fields.find(_.name == "company").get.scans.head
+    val sr = SuffixRuns.of(company.pattern).get
+    assert(sr.suffixes.toSeq == Seq("ltda", "s.a.", "inc", "corp"))
+    // the probe's classes are the engine's, on every code point: astral
+    // code points are in neither
+    val start = java.util.regex.Pattern.compile("[A-Z]", company.pattern.flags)
+    val run = java.util.regex.Pattern.compile("""[a-zA-Z\s&]""", company.pattern.flags)
+    (0 to Character.MAX_CODE_POINT).foreach { cp =>
+      val s = new String(Character.toChars(cp))
+      val one = s.length == 1
+      assert((one && sr.starts(s.charAt(0))) == start.matcher(s).matches(), f"start class diverged at U+$cp%04X")
+      assert((one && sr.inRun(s.charAt(0))) == run.matcher(s).matches(), f"run class diverged at U+$cp%04X")
+    }
+    assert(SuffixRuns.of(java.util.regex.Pattern.compile("""([A-Z][a-z]+(?:Ltda|S\.A\.)\.?)""", Py.IFLAGS)).isDefined)
+    assert(SuffixRuns.of(java.util.regex.Pattern.compile("""([a-z\s][A-Z]+(?:Ltda)\.?)""", Py.IFLAGS)).isEmpty,
+      "a start outside the run class")
+    assert(SuffixRuns.of(java.util.regex.Pattern.compile("""([A-Z][a-z]+(?:Lt+da)\.?)""", Py.IFLAGS)).isEmpty,
+      "a suffix that is not a literal")
+    val adversarial = Seq(
+      "", "Acme Ltda", "ACME LTDA.", "acme s.a.", "Acme S.A.. x", "Acme S.A.Ltda Beta Inc",
+      "Inc", "Inc Inc", "A Inc", "AInc", "A.Inc", "x Inc", "& Inc", " Inc", "1 Acme Corp 2 Beta Corp.",
+      "Acme Inc e Beta Ltda e Gama S.A.", "Acme S.A", "Acme S. A.", "S.A.", "AS.A.", "A S.A.",
+      "Ltda Ltda Ltda", "LtdaLtda", "inc." * 30, "a " * 300 + "Inc", "a " * 300, "Inc " * 100,
+      "Acme\nLtda", "Acme\u00A0Ltda", "Acme\u2028Corp", "Ação Ltda", "Açme Ltda", "日本 Inc",
+      "\u212Acme Corp", "Acme \u212Aorp", "\u212A Inc", "\u0130nc Acme Inc", "Acme \u0131nc", "\u017F.a. Acme S.A.",
+      "Acme \u017F.A.", "Ab Corp" + "\uD835\uDD1E" + "Cd Inc", "x@y.com Acme Ltda (11) 98765-4321")
+    val random = randomTexts(
+      Vector("A", "a", "Z", " ", "&", ".", "Ltda", "ltda", "S.A.", "s.a", "Inc", "INC", "Corp", "corp",
+        "\n", "1", "ç", "\u212A", "\u0130", "\u0131", "\u017F", "\u00A0", "\uD835\uDD1E"), 30000, 12, 19)
+    val kernel = new TextKernel
+    val generated = (0 until 300).map(t => kernel.process(graft.pipeline.TranscriptGen.turnText(19L, t)).text)
+    var probed = 0
+    (adversarial ++ random ++ corpus ++ generated).foreach { t =>
+      val lw = SpanTemplates.guarded(t, Py.lower(t))
+      if (lw != null) {
+        probed += 1
+        assert(matchList(new SuffixRunProbe(company.pattern, t, lw, sr)) == findList(company.pattern, t),
+          s"company probe diverged on: ${t.take(80)}")
+      }
+      assert(matchList(company.cursor(t, lw)) == findList(company.pattern, t), s"company scan diverged on: ${t.take(80)}")
+    }
+    assert(probed > 10000)
   }
 
   test("a turn past the output limit becomes one amplification row") {
@@ -481,7 +675,7 @@ class KernelPropertySpec extends AnyFunSuite {
     var text = t0
     var corrections = 0
     table.foreach { case (key, fullForm) =>
-      Py.findAll(Py.compileI("""\b""" + Pattern.quote(key) + """\b"""), text).foreach { m =>
+      findAll(Py.compileI("""\b""" + Pattern.quote(key) + """\b"""), text).foreach { m =>
         val repl =
           if (Py.isUpperStr(m)) Py.upper(fullForm)
           else if (Py.isTitleStr(m)) fullForm

@@ -49,7 +49,6 @@ class KernelScalingSpec extends AnyFunSuite {
     // distinct `x<i>0` tokens: one whole-text replace per token in the
     // confusion stage (117k chars took 617 ms); distinct unformatted CEPs:
     // one whole-text replace per CEP in the pattern stage (208k: 2.39 s)
-    val kernel = new TextKernel
     val shapes = Seq[(String, Int => String)](
       "distinct x<i>0 tokens" -> (i => s"x${i}0 "),
       "distinct unformatted CEPs" -> (i => s"cep ${10000000 + i} "))
@@ -165,27 +164,31 @@ class KernelScalingSpec extends AnyFunSuite {
 
   // Patterns known to be superlinear, by source, with what shows it (best
   // of 2 on a 4-vCPU VM). They are left out of the pairwise check below.
-  private val knownSuperlinear: Map[String, String] = Map(
-    // Business Card's `company` field, case-insensitive: from every letter
-    // the class run takes the rest of the letters and spaces, then gives
-    // them back one by one looking for the suffix. Reached once a short
-    // header identifies the turn as a business card.
-    """([A-Z][a-zA-Z\s&]+(?:Ltda|S\.A\.|Inc|Corp)\.?)""" ->
-      "\"a \" × n: 9.5 ms at 1k chars, 951 ms at 10k")
+  private val knownSuperlinear: Map[String, String] = Map.empty
 
-  /** `p`'s scan as the program runs it: a field pattern anchored at its
-    * '@' through the extractor's probe, any other through `find()`.
+  private val kernel = new TextKernel
+  // each template pattern's scan, by pattern
+  private val templateScans: Map[Pattern, Scan] =
+    SpanTemplates.all.flatMap(t => t.scans ++ t.fields.flatMap(_.scans)).map(s => s.pattern -> s).toMap
+
+  /** `p`'s scan as the program runs it: a table pattern through the
+    * pattern stage's own scan, a template pattern through its [[Scan]] over
+    * the text's guarded lowered copy, any other through `find()`.
     */
-  private def scan(p: Pattern, text: String): Unit = {
-    val m = p.matcher(text)
-    if (FieldExtractor.atSignAnchored(p)) {
-      val probe = new FieldExtractor.AtSignProbe(m, text)
-      while (probe.find()) ()
-    } else while (m.find()) ()
-  }
+  private def scan(p: Pattern, text: String): Unit =
+    kernel.tableScan(p) match {
+      case Some(f) => f(text)
+      case None => templateScans.get(p) match {
+        case Some(s) =>
+          val c = s.cursor(text, SpanTemplates.guarded(text, Py.lower(text)))
+          while (c.find()) ()
+        case None =>
+          val m = p.matcher(text)
+          while (m.find()) ()
+      }
+    }
 
   test("every pattern processTurn reaches is linear on an input built from its literals") {
-    val kernel = new TextKernel
     val patterns = reachablePatterns(Seq(kernel, Validators, SpanTemplates))
     assert(patterns.size >= 40, s"only ${patterns.size} patterns found")
     // one long input per pattern: its shape without the closing literal;
