@@ -171,9 +171,7 @@ private[kernel] final class Scan(val pattern: Pattern) {
     if (caseInsensitive) SuffixRuns.of(pattern) else None
 
   /** Whether `pattern` matches in `text`; `lowered` as for [[cursor]]. */
-  def finds(text: String, lowered: String): Boolean =
-    if (lowered != null && anchor._1.nonEmpty && lowered.indexOf(anchor._1) < 0) false
-    else cursor(text, lowered).find()
+  def finds(text: String, lowered: String): Boolean = cursor(text, lowered).find()
 
   /** `pattern`'s matches in `text`, in the order `find()` gives them.
     * `lowered` is `text`'s guarded lowered copy, or null.
@@ -314,15 +312,8 @@ private[kernel] object SuffixRuns {
     * other regex syntax.
     */
   private def literal(src: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < src.length) {
-      val c = src.charAt(i)
-      if (c == '\\' && i + 1 < src.length && !src.charAt(i + 1).isLetterOrDigit) { out += src.charAt(i + 1); i += 2 }
-      else if (c == '\\' || ".^$[](){}|*+?".indexOf(c) >= 0) return null
-      else { out += c; i += 1 }
-    }
-    out.toString
+    val (lit, end) = SpanTemplates.literalPrefix(src)
+    if (end == src.length) lit else null
   }
 
   /** The BMP chars the class `cls` matches under `flags`. */
@@ -402,12 +393,6 @@ final class SpanTemplate(
   private[kernel] val scans: Array[Scan] =
     identificationPatterns.map(p => new Scan(Pattern.compile(p, Py.IFLAGS | Pattern.MULTILINE))).toArray
 
-  /** Per-pattern anchor `(lit, back)` ([[SpanTemplates.anchorCI]]): every
-    * match starts at most `back` chars before an occurrence of `lit` in the
-    * lowered text. ("", 0) = none provable.
-    */
-  private[kernel] def anchors: Array[(String, Int)] = scans.map(_.anchor)
-
   /** Fraction of identification patterns matching (templates.py:266-279).
     * `lowered` is a toLowerCase(ROOT) copy of `text` that
     * [[SpanTemplates.identify]]'s case-fold guard has validated for literal
@@ -483,6 +468,22 @@ object SpanTemplates {
   /** registration order matters for tie-breaks (templates.py:521-524) */
   val all: Seq[SpanTemplate] = Seq(invoice, businessCard, receipt)
 
+  /** The literal that the regex source `src` opens with: its plain chars
+    * and escaped punctuation, unescaped, up to the first other syntax, and
+    * the offset in `src` where that syntax (or the end) is.
+    */
+  private[kernel] def literalPrefix(src: String): (String, Int) = {
+    val out = new StringBuilder
+    var i = 0
+    while (i < src.length) {
+      val c = src.charAt(i)
+      if (c == '\\' && i + 1 < src.length && !src.charAt(i + 1).isLetterOrDigit) { out += src.charAt(i + 1); i += 2 }
+      else if (c == '\\' || ".^$[](){}|*+?".indexOf(c) >= 0) return (out.toString, i)
+      else { out += c; i += 1 }
+    }
+    (out.toString, i)
+  }
+
   /** `(lit, back)` for a CASE-INSENSITIVE pattern `src`: every match
     * starts at most `back` chars before an occurrence of the lowercase ASCII
     * literal `lit`, or ("", 0) when none can be proven.
@@ -502,21 +503,13 @@ object SpanTemplates {
     * (İ U+0130 — length changes on lowering; ı U+0131; ſ U+017F).
     */
   private[kernel] def anchorCI(src: String): (String, Int) = {
+    // the literal prefix, without its last char when a quantifier makes
+    // that char optional
     def leadingRun(b: String): String = {
-      val run = new StringBuilder
-      var i = 0
-      while (i < b.length) {
-        val c = b.charAt(i)
-        val lit =
-          if (c == '\\' && i + 1 < b.length && !b.charAt(i + 1).isLetterOrDigit) { i += 2; b.charAt(i - 1) }
-          else if (c == '\\' || ".^$[](){}|*+?".indexOf(c) >= 0) return run.toString
-          else { i += 1; c }
-        if (i < b.length && (b.charAt(i) == '?' || b.charAt(i) == '*' || b.startsWith("{0", i)))
-          return run.toString
-        run += lit
-        if (i < b.length && (b.charAt(i) == '+' || b.charAt(i) == '{')) return run.toString
-      }
-      run.toString
+      val (lit, end) = literalPrefix(b)
+      if (end < b.length && (b.charAt(end) == '?' || b.charAt(end) == '*' || b.startsWith("{0", end)))
+        lit.dropRight(1)
+      else lit
     }
     // top-level branches; a '|' inside a group or class is left to the
     // group's own bail-out in leadingRun

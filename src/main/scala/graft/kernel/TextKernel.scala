@@ -76,71 +76,80 @@ final class TextKernel {
   // the '(' before it ([[findAllDigitAnchored]]), at the local part before
   // an '@' ([[findAllEmails]]), or at `literal`, which every match opens
   // with ([[findAllAtLiteral]]).
-  private final case class PatternCfg(
-      name: String,
-      regex: Pattern,
-      format: Option[Pattern],
-      formatter: Option[Seq[Tpl]],
-      validator: Option[String => Boolean],
-      minRun: Int = 0,
-      minDigits: Int = 0,
-      literal: String = "",
-      starts: TextKernel.Starts) {
+  private[kernel] final class PatternCfg(
+      val name: String,
+      val regex: Pattern,
+      val format: Option[Pattern],
+      val formatter: Option[Seq[Tpl]],
+      val validator: Option[String => Boolean],
+      val minRun: Int = 0,
+      val minDigits: Int = 0,
+      val literal: String = "",
+      val starts: TextKernel.Starts) {
     val lead: Int = TextKernel.leadDigits(regex.pattern)
+
+    /** `re.findall` of `regex` over `index.text`, tried only where a match
+      * can start.
+      */
+    def matches(index: DigitIndex): List[String] = starts match {
+      case DigitRuns => findAllDigitAnchored(regex, index, lead)
+      case AtSigns => findAllEmails(regex, index.text)
+      case AtLiteral => findAllAtLiteral(regex, index.text, literal)
+    }
   }
 
-  private val patternTable: Seq[PatternCfg] = Seq(
-    PatternCfg("cpf",
+  private[kernel] val patternTable: Seq[PatternCfg] = Seq(
+    new PatternCfg("cpf",
       compile("""\b\d{3}\.?\d{3}\.?\d{3}-?\d{2}\b"""),
       Some(compile("""(\d{3})\.?(\d{3})\.?(\d{3})-?(\d{2})""")),
       Some(tpl("""\1.\2.\3-\4""")),
       Some(Validators.cpf),
       minRun = 3, minDigits = 11, starts = TextKernel.DigitRuns),
-    PatternCfg("cnpj",
+    new PatternCfg("cnpj",
       compile("""\b\d{2}\.?\d{3}\.?\d{3}/?\d{4}-?\d{2}\b"""),
       Some(compile("""(\d{2})\.?(\d{3})\.?(\d{3})/(\d{4})-?(\d{2})""")),
       Some(tpl("""\1.\2.\3/\4-\5""")),
       Some(Validators.cnpj),
       minRun = 4, minDigits = 14, starts = TextKernel.DigitRuns),
-    PatternCfg("cep",
+    new PatternCfg("cep",
       compile("""\b\d{5}-?\d{3}\b"""),
       Some(compile("""(\d{5})-?(\d{3})""")),
       Some(tpl("""\1-\2""")),
       None,
       minRun = 5, minDigits = 8, starts = TextKernel.DigitRuns),
-    PatternCfg("phone",
+    new PatternCfg("phone",
       compile("""\b\(?\d{2}\)?\s?\d{4,5}-?\d{4}\b"""),
       Some(compile("""\(?(\d{2})\)?\s?(\d{4,5})-?(\d{4})""")),
       Some(tpl("""(\1) \2-\3""")),
       None,
       minRun = 4, minDigits = 10, starts = TextKernel.DigitRuns),
-    PatternCfg("date",
+    new PatternCfg("date",
       compile("""\b\d{1,2}[\/\-\.]\d{1,2}[\/\-\.]\d{2,4}\b"""),
       Some(compile("""(\d{1,2})[\/\-\.](\d{1,2})[\/\-\.](\d{2,4})""")),
       Some(tpl("""\1/\2/\3""")),
       Some(Validators.date),
       minDigits = 4, starts = TextKernel.DigitRuns),
-    PatternCfg("time",
+    new PatternCfg("time",
       compile("""\b\d{1,2}:\d{2}(:\d{2})?\b"""),
       Some(compile("""(\d{1,2}):(\d{2})(:\d{2})?""")),
       Some(tpl("""\1:\2\3""")),
       Some(Validators.time),
       minDigits = 3, literal = ":", starts = TextKernel.DigitRuns),
-    PatternCfg("currency",
+    new PatternCfg("currency",
       compile("""R\$\s?\d{1,3}(?:\.\d{3})*(?:,\d{2})?"""),
       Some(compile("""R\$\s?(\d{1,3}(?:\.\d{3})*)(?:,(\d{2}))?""")),
       Some(tpl("""R$ \1,\2""")),
       None,
       minDigits = 1, literal = "R$", starts = TextKernel.AtLiteral),
-    PatternCfg("email",
+    new PatternCfg("email",
       compile("""\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b"""),
       None, None, Some(Validators.email),
       literal = "@", starts = TextKernel.AtSigns),
-    PatternCfg("url",
+    new PatternCfg("url",
       compile("""https?://[^\s<>"{}|\\^`\[\]]+"""),
       None, None, None,
       literal = "http", starts = TextKernel.AtLiteral),
-    PatternCfg("processo_judicial",
+    new PatternCfg("processo_judicial",
       compile("""\b\d{7}-?\d{2}\.\d{4}\.\d{1}\.\d{2}\.\d{4}\b"""),
       Some(compile("""(\d{7})-?(\d{2})\.(\d{4})\.(\d{1})\.(\d{2})\.(\d{4})""")),
       Some(tpl("""\1-\2.\3.\4.\5.\6""")),
@@ -660,7 +669,7 @@ final class TextKernel {
     patternTable.foreach { cfg =>
       val feasible = maxRun >= cfg.minRun && index.count >= cfg.minDigits &&
         index.text.contains(cfg.literal)
-      val matches = if (feasible) matchesOf(cfg, index) else Nil
+      val matches = if (feasible) cfg.matches(index) else Nil
       if (matches.nonEmpty) {
         val bucket = ListBuffer.empty[String]
         patternsFound(cfg.name) = bucket
@@ -686,22 +695,6 @@ final class TextKernel {
       case (Some(fmt), Some(fmtPat)) => Some(sub(fmtPat, fmt, m))
       case _ => Some(m)
     }
-
-  /** `re.findall` of `cfg`'s regex over `index.text`, tried only where a
-    * match can start.
-    */
-  private def matchesOf(cfg: PatternCfg, index: DigitIndex): List[String] = cfg.starts match {
-    case DigitRuns => findAllDigitAnchored(cfg.regex, index, cfg.lead)
-    case AtSigns => findAllEmails(cfg.regex, index.text)
-    case AtLiteral => findAllAtLiteral(cfg.regex, index.text, cfg.literal)
-  }
-
-  /** The pattern stage's own scan of `p` when `p` is a table regex, as a
-    * function of the text: each pattern run the way the stage runs it, for
-    * KernelScalingSpec.
-    */
-  private[kernel] def tableScan(p: Pattern): Option[String => List[String]] =
-    patternTable.find(_.regex eq p).map(cfg => (text: String) => matchesOf(cfg, DigitIndex(text)))
 
   /** `re.findall` for a pattern whose every match opens with `lit`, tried
     * only at the occurrences of `lit`: the engine's next match is the one at
@@ -1409,34 +1402,19 @@ private final class FormatReplay(input: DigitIndex, edits: List[(String, String)
       val key = window(distinct(id).digits) * 31 + distinct(id).span
       byHash(key) = id :: byHash.getOrElse(key, Nil)
     }
-    // most digits open no edit's window: those whose pair with the next
-    // digit opens none, both ASCII, are passed over unhashed
-    def pair(a: Int, b: Int): Int = if (a <= '9' && b <= '9') (a - '0') * 10 + (b - '0') else -1
-    val pairs = new Array[Boolean](100)
-    var unpaired = false // an edit of one digit, or one opening with a non-ASCII digit
-    distinct.foreach { e =>
-      val p = if (e.span > 1) pair(e.digits(0), e.digits(1)) else -1
-      if (p >= 0) pairs(p) = true else unpaired = true
-    }
     val es = Array.newBuilder[Int]
     val ats = Array.newBuilder[Int]
     var d = 0
     while (d < n) {
-      val p = if (d + 1 < n) pair(digits(d), digits(d + 1)) else -1
-      if (unpaired || p < 0 || pairs(p)) {
-        var s = 0
-        while (s < spans.length) {
-          val len = spans(s)
-          if (d + len <= n) {
-            val ids = byHash.getOrNull((prefix(d + len) - prefix(d) * pows(len)) * 31 + len)
-            if (ids != null) ids.foreach { id =>
-              val ds = distinct(id).digits
-              var k = 0
-              while (k < len && digits(d + k) == ds(k)) k += 1
-              if (k == len) { es += id; ats += d }
-            }
+      spans.foreach { len =>
+        if (d + len <= n) {
+          val ids = byHash.getOrNull((prefix(d + len) - prefix(d) * pows(len)) * 31 + len)
+          if (ids != null) ids.foreach { id =>
+            val ds = distinct(id).digits
+            var k = 0
+            while (k < len && digits(d + k) == ds(k)) k += 1
+            if (k == len) { es += id; ats += d }
           }
-          s += 1
         }
       }
       d += 1

@@ -871,13 +871,21 @@ class KernelPropertySpec extends AnyFunSuite {
     assert(SpanTemplates.anchorCI("""ab+c""") == ("ab", 0))
     assert(SpanTemplates.anchorCI("""\w+x""") == ("", 0))
     assert(SpanTemplates.anchorCI("""(a|b)c""") == ("", 0))
+    assert(SpanTemplates.anchorCI("""a\.?b""") == ("a", 0))
+    assert(SpanTemplates.anchorCI("""ab{0,2}c""") == ("a", 0))
+    assert(SpanTemplates.anchorCI("""ab{2}c""") == ("ab", 0))
+    // the literal prefix both parsers share: unescaped, and where it ends
+    assert(SpanTemplates.literalPrefix("""S\.A\.""") == ("S.A.", 6))
+    assert(SpanTemplates.literalPrefix("""ab\dc""") == ("ab", 2))
+    assert(SpanTemplates.literalPrefix("""a\-b+""") == ("a-b", 4))
+    assert(SpanTemplates.literalPrefix("") == ("", 0))
     // every built-in identification pattern must yield a non-empty anchor
     // (the anchoring's whole point — a pattern edit that defeats the
     // parser silently reverts that template to scanning every position)
     SpanTemplates.all.foreach { t =>
-      assert(t.anchors.forall(_._1.nonEmpty),
+      assert(t.scans.forall(_.anchor._1.nonEmpty),
         s"template ${t.name} has a pattern with no derivable anchor: " +
-          t.anchors.mkString("[", ", ", "]"))
+          t.scans.map(_.anchor).mkString("[", ", ", "]"))
     }
     // anchored and unanchored matching agree on pattern-bearing text in
     // assorted cases, on the property corpus, and on the fold-guard chars
@@ -898,7 +906,7 @@ class KernelPropertySpec extends AnyFunSuite {
     assert(SpanTemplates.businessCard.matchesDocument("telefone", "telefone") == 0.25)
     // a literal that sits later in one branch than in another
     val later = new SpanTemplate("later", Seq("""telefone|fonex""", """\d\d|x\d"""), Seq.empty)
-    assert(later.anchors.toSeq == Seq(("fone", 4), ("", 0)))
+    assert(later.scans.map(_.anchor).toSeq == Seq(("fone", 4), ("", 0)))
     Seq("telefone", "TELEFONE", "xtelefone fonex", "fonex", "tele fone").foreach { text =>
       assert(later.matchesDocument(text, Py.lower(text)) == later.matchesDocument(text, null), text)
     }

@@ -176,8 +176,8 @@ class KernelScalingSpec extends AnyFunSuite {
     * the text's guarded lowered copy, any other through `find()`.
     */
   private def scan(p: Pattern, text: String): Unit =
-    kernel.tableScan(p) match {
-      case Some(f) => f(text)
+    kernel.patternTable.find(_.regex eq p) match {
+      case Some(cfg) => cfg.matches(DigitIndex(text))
       case None => templateScans.get(p) match {
         case Some(s) =>
           val c = s.cursor(text, SpanTemplates.guarded(text, Py.lower(text)))
